@@ -4,7 +4,7 @@ capabilities of the reference video-streaming-analytics lakehouse
 
 Layout:
   session.py   - SparkSession factory (AQE, Kryo, UTC, shuffle tuning)
-  sources/     - readers (parquet batch + file streams) and partitioned sinks
+  sources/     - readers (parquet batch + file streams), txlog stream source
   functions/   - scalar function helpers incl. Snowflake-dialect mappings
   operators/   - dedup, data-quality, merge/upsert, text, similarity ops
   plans/       - the query catalog: relational core + the 11 analytics views

@@ -4,9 +4,8 @@ The ANN family (``similarity.py``) trains its IVF coarse centroids on
 a bounded driver-side SAMPLE — correct and cheap, but a sample can
 miss distribution mass at 100 TB. This module is the full-corpus
 trainer: the standard driver-coordinated iterative-aggregate loop
-(same shape as BPE training and the logistic-regression trainer —
-model = k·d floats of driver state, per-iteration work = one
-distributed pass):
+(same shape as BPE training — model = k·d floats of driver state,
+per-iteration work = one distributed pass):
 
 1. Deterministic seeding: the ``k`` vectors whose ``md5(seed|id)`` is
    smallest — a content-hash choice (sampling.py's trick), so the init

@@ -3,9 +3,9 @@
 The reference performs MERGE via Delta (``spark-jobs/etl_framework.py:
 639-647``; generic builder ``delta-lake/delta_setup.py:636-668``). This
 engine implements the same semantics as a pure DataFrame composition —
-``unionByName`` + source-precedence keep-one — so it runs on plain
-parquet (the test harness) and swaps to ``DeltaTable.merge`` when
-delta-spark is on the classpath.
+``unionByName`` + source-precedence keep-one — over any two frames.
+Versioned tables get the same semantics at file granularity from
+:meth:`~.txlog.TxTable.merge`.
 
 Semantics of ``merge_upsert(target, source, keys)``:
   * key matched in both  → source row wins (whenMatchedUpdateAll)
@@ -13,9 +13,9 @@ Semantics of ``merge_upsert(target, source, keys)``:
   * key only in target   → kept
 
 Scale note: this is one shuffle on the merge keys (the union is
-partition-local). With Delta the same operation additionally prunes
-non-matching files; at 100 TB you'd partition the target on a coarse
-key (e.g. event date) so MERGE touches only recent partitions.
+partition-local). ``TxTable.merge`` additionally skips files holding no
+matched key; at 100 TB you'd partition the target on a coarse key
+(e.g. event date) so MERGE touches only recent partitions.
 """
 
 from __future__ import annotations

@@ -52,7 +52,7 @@ and ``change_feed`` spans the evolution.
 Scale notes (the parts that matter at 100 TB):
   * Readers prune FILES from the log — partition values and min/max
     stats filter the file list BEFORE Spark ever lists or opens
-    anything. Combined with :func:`~.maintenance.zorder_by`-style
+    anything. Combined with ``optimize(zorder_cols=...)`` Morton
     clustering this is the same data-skipping story as Delta/Iceberg.
   * The log is O(commits) but snapshot resolution is NOT O(all
     commits): every ``checkpoint_interval`` commits the replayed state
@@ -113,6 +113,7 @@ from .manifest import (
     entries_to_arrow,
     prune_columnar,
 )
+from .util import local_relation
 
 _LOG_DIR = "_txlog"
 _CDC_DIR = "_change_data"
@@ -413,6 +414,42 @@ def _data_files(root: str) -> list[str]:
     return sorted(out)
 
 
+def _lossy_partition_types(spark: SparkSession, schema: StructType,
+                           files: list[str], part_cols: list[str]) -> set:
+    """Partition columns whose INFERRED type loses directory values.
+
+    Partition discovery types a column from its directory names, so
+    ``day=01`` infers INT and reads back ``1``. A column keeps its
+    inferred type only when casting every directory value to it and
+    back to string reproduces the value exactly; the columns returned
+    here must be adopted as STRING. NULL partitions
+    (``__HIVE_DEFAULT_PARTITION__``) carry no value and don't vote.
+    One bounded job over the distinct directory values."""
+    types = {f.name: f.dataType for f in schema.fields}
+    pairs = set()
+    for rel in files:
+        for seg in os.path.dirname(rel).split(os.sep):
+            k, eq, raw = seg.partition("=")
+            if eq and k in part_cols and types.get(k) != StringType():
+                v = urllib.parse.unquote(raw)
+                if v != "__HIVE_DEFAULT_PARTITION__":
+                    pairs.add((k, v))
+    if not pairs:
+        return set()
+    vals = local_relation(spark, sorted(pairs), "k string, v string")
+    cols = sorted({k for k, _ in pairs})
+    val = F.col("v")
+    row = vals.agg(*[
+        F.min(F.when(
+            F.col("k") == c,
+            F.coalesce(val.try_cast(types[c]).cast("string") == val,
+                       F.lit(False)).cast("int"),
+        )).alias(f"_rt{i}")
+        for i, c in enumerate(cols)
+    ]).collect()[0]
+    return {c for i, c in enumerate(cols) if row[f"_rt{i}"] == 0}
+
+
 # ---------------------------------------------------------------------------
 # bloom-filter file index (Delta's bloom filter index analog)
 #
@@ -643,11 +680,102 @@ def _prune(snap: Snapshot, predicates) -> list[dict]:
 
 
 # ---------------------------------------------------------------------------
+# Z-order (Morton) clustering for TxTable.optimize(zorder_cols=...)
+
+
+def _rank_surrogate(df: DataFrame, col: str) -> "F.Column":
+    """Order-preserving numeric surrogate for any orderable column, so
+    quantile bucketing works uniformly: numerics pass through,
+    timestamps/dates become epoch numbers, strings fold their first 8
+    characters into an int64 (lexicographic order preserved for ASCII —
+    the same prefix treatment Delta's Z-ORDER applies)."""
+    t = dict(df.dtypes)[col].lower()
+    c = F.col(col)
+    if t.startswith("timestamp"):
+        return F.unix_micros(c.cast("timestamp")).cast("double")
+    if t == "date":
+        return F.unix_date(c).cast("double")
+    if t in ("string", "varchar"):
+        return F.aggregate(
+            F.sequence(F.lit(1), F.lit(8)),
+            F.lit(0).cast("long"),
+            lambda acc, i: acc * 256
+            + F.coalesce(F.ascii(c.substr(i, F.lit(1))), F.lit(0)).cast(
+                "long"
+            ),
+        ).cast("double")
+    return c.cast("double")
+
+
+def _zvalue(df: DataFrame, cols: list[str], bits: int = 8) -> "F.Column":
+    """Morton (Z-curve) value: per-column rank buckets, bits interleaved.
+
+    Each column is reduced to a per-column bucket by ranking its
+    order-preserving numeric surrogate against approximate quantile
+    cutpoints — ONE multi-column ``approxQuantile`` pass for all
+    columns, with relativeError sized to the bucket width so adjacent
+    cutpoints don't collapse (rank-based, so skewed columns bucket as
+    evenly as uniform ones; a percent_rank window would funnel the
+    table through a single-partition sort). Bucket bits are then
+    interleaved MSB-first: z = b1[7] b2[7] b1[6] b2[6] ... Sorting by z
+    gives every column locality, unlike a lexicographic sort which
+    gives trailing columns none.
+
+    Bit budget: bits is capped at 63 // len(cols) so the interleaved
+    value never reaches the int64 sign bit (which would sort the top
+    half of the leading column FIRST and silently destroy clustering).
+    """
+    bits = max(1, min(bits, 63 // max(1, len(cols))))
+    n_buckets = 1 << bits
+    probs = [i / n_buckets for i in range(1, n_buckets)]
+    surrogates = {c: _rank_surrogate(df, c) for c in cols}
+    proj = df.select(
+        *[s.alias(f"_zq{i}") for i, s in enumerate(surrogates.values())]
+    )
+    all_cuts = proj.approxQuantile(
+        [f"_zq{i}" for i in range(len(cols))], probs, 1.0 / (2 * n_buckets)
+    )
+    def fold_for(s):
+        # closure (NOT a default arg: pyspark reads lambda arity to pick
+        # the 2- vs 3-parameter HOF form)
+        return lambda acc, x: acc + F.when(s >= x, 1).otherwise(0).cast(
+            "long"
+        )
+
+    buckets = []
+    for (c, surrogate), cuts in zip(surrogates.items(), all_cuts):
+        cuts = sorted(set(cuts))
+        # bucket = #cutpoints <= value (map-side fold over a literal
+        # array; distinct cutpoints keep it <= 2^bits-1 comparisons)
+        b = F.aggregate(
+            F.lit(cuts), F.lit(0).cast("long"), fold_for(surrogate)
+        )
+        # Rescale to the FULL bit range: a low-cardinality column dedups
+        # to few cutpoints, and raw counts {1..k} live in the low bits —
+        # the interleave would then be dominated by high-cardinality
+        # columns. Spreading over [0, 2^bits-1] keeps every column's
+        # split in the TOP interleaved bits.
+        b = F.call_function(
+            "div", b * F.lit(n_buckets - 1), F.lit(max(1, len(cuts)))
+        )
+        buckets.append(b)
+    one = F.lit(1).cast("long")
+    z = F.lit(0).cast("long")
+    for bit in range(bits - 1, -1, -1):
+        for b in buckets:
+            z = F.shiftleft(z, 1).bitwiseOR(
+                F.shiftright(b, bit).bitwiseAND(one)
+            )
+    return z
+
+
+# ---------------------------------------------------------------------------
 # the table API
 
 
 class TxTable:
-    """Versioned parquet table — the native stand-in for ``DeltaTable``."""
+    """Versioned parquet table — the repo's one table format (Delta Lake's
+    role in the reference)."""
 
     #: consolidate the replayed log into a parquet manifest every N
     #: commits (Delta's default checkpoint interval is also 10). Set to
@@ -738,7 +866,10 @@ class TxTable:
 
         Hive-partitioned layouts are adopted too: partition columns are
         inferred from the directory names (their values come from the
-        path at read time, exactly like fresh partitioned writes).
+        path at read time, exactly like fresh partitioned writes). A
+        column keeps its inferred type only when that type reproduces
+        every directory value (:func:`_lossy_partition_types`), so
+        ``day=01`` stays the string ``'01'``.
         """
         t = cls(spark, path)
         if _list_versions(t.root):
@@ -750,8 +881,6 @@ class TxTable:
             raise FileNotFoundError(
                 f"no parquet data files to adopt under {t.root}"
             )
-        df = spark.read.option("basePath", t.root).parquet(t.root)
-        schema = df.schema
         # partition columns derived from the paths UP FRONT: they must
         # be excluded from bloom indexing (their inferred types can
         # differ from the stored directory strings)
@@ -762,6 +891,15 @@ class TxTable:
                     k = seg.partition("=")[0]
                     if k not in part_cols:
                         part_cols.append(k)
+        df = spark.read.option("basePath", t.root).parquet(t.root)
+        restring = _lossy_partition_types(spark, df.schema, files, part_cols)
+        if restring:
+            df = spark.read.option("basePath", t.root).schema(StructType([
+                StructField(f.name, StringType(), f.nullable)
+                if f.name in restring else f
+                for f in df.schema.fields
+            ])).parquet(t.root)
+        schema = df.schema
         # One scan collects numRecords + min/max column stats for every
         # adopted file (same auto-indexing as fresh writes), so log-side
         # file skipping works immediately — not only after a rewrite.
@@ -2351,12 +2489,12 @@ class TxTable:
                  predicates=None) -> int:
         """OPTIMIZE as a versioned commit (D1/D2 on the log): rewrite
         the live snapshot into ``target_files`` files — optionally
-        Morton-clustered on ``zorder_cols`` via the same
-        :func:`.maintenance._zvalue` curve the swap-based
-        :func:`.maintenance.zorder_by` uses — and commit add/remove with
-        ``dataChange=false``, so pre-compaction versions stay
-        time-travelable and the change feed correctly sees NO row
-        changes (Delta marks compaction commits the same way).
+        Morton-clustered on ``zorder_cols`` (:func:`_zvalue`: every
+        listed column gets min/max locality, not just the leading one)
+        — and commit add/remove with ``dataChange=false``, so
+        pre-compaction versions stay time-travelable and the change
+        feed correctly sees NO row changes (Delta marks compaction
+        commits the same way).
 
         ``predicates`` scopes the rewrite to the files the log proves
         CAN match (partition values / stats / bloom — the same pruning
@@ -2376,8 +2514,6 @@ class TxTable:
             1, self.spark.sparkContext.defaultParallelism // 4
         )
         if zorder_cols:
-            from .maintenance import _zvalue
-
             zcol = "_z__morton_tmp"
             while zcol in df.columns:
                 zcol += "_"

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 
@@ -17,50 +16,23 @@ class ScaleGuardrailError(ValueError):
 
 
 def require_local_dir(path: str) -> str:
-    """Validate that ``path`` is a local-filesystem directory path.
+    """Validate that ``path`` is a local-filesystem directory path and
+    return it without a ``file://`` prefix.
 
-    The parquet fallbacks for table maintenance swap directories with
-    ``os.rename`` — local-FS-only semantics. Object stores (s3://,
-    hdfs://, ...) have no atomic directory rename; those deployments
-    must use the Delta path instead, so refuse loudly rather than
-    corrupt a table.
+    The streaming sinks open their target as a :class:`~.txlog.TxTable`
+    through the default file-based commit log, whose put-if-absent is
+    ``os.link`` — local-FS-only semantics. Object stores (s3://,
+    hdfs://, ...) need a registered CommitStore with conditional PUT,
+    so refuse loudly rather than corrupt a table.
     """
     scheme = path.split("://", 1)[0] if "://" in path else ""
     if scheme not in ("", "file"):
         raise ValueError(
-            f"parquet table-swap fallback is local-FS-only, got scheme "
-            f"{scheme!r} for {path!r}; use the Delta code path for "
-            f"object-store tables"
+            f"streaming table sink is local-FS-only, got scheme "
+            f"{scheme!r} for {path!r}; object-store tables need a "
+            f"TxTable with a registered put-if-absent CommitStore"
         )
     return path.removeprefix("file://")
-
-
-def atomic_swap_dir(live_path: str, tmp_path: str) -> None:
-    """Replace directory ``live_path`` with ``tmp_path`` crash-safely.
-
-    Ordering matters: the live table is *renamed aside* first
-    (``<live>__old``), the new data renamed into place, and only then is
-    the old copy deleted. A crash between any two steps leaves the table
-    recoverable (either still live, or intact at ``<live>__old``) —
-    unlike rmtree-then-move, which has a window where the data is gone.
-    ``os.rename`` is atomic on a local filesystem (same-FS assumed; see
-    :func:`require_local_dir`).
-    """
-    live = require_local_dir(live_path).rstrip("/")
-    tmp = require_local_dir(tmp_path).rstrip("/")
-    # The aside name starts with "_" AND contains no "=" so that if a
-    # crash leaves it behind INSIDE a table root (the partitioned-merge
-    # case swaps partition dirs under the live table), Spark's file
-    # listing ignores it — the filter drops "_"-prefixed names only
-    # when they don't look like partition dirs ("=" present), so
-    # "_day=X__old" would still be parsed as a phantom partition column.
-    head, tail = os.path.split(live)
-    old = os.path.join(head, "_" + tail.replace("=", "~") + "__old")
-    shutil.rmtree(old, ignore_errors=True)  # leftover from a prior crash
-    if os.path.exists(live):
-        os.rename(live, old)
-    os.rename(tmp, live)
-    shutil.rmtree(old, ignore_errors=True)
 
 
 def local_relation(spark, rows, schema: str) -> DataFrame:

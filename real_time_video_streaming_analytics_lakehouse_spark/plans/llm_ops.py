@@ -1482,8 +1482,10 @@ def ann_topk(
     # deterministic, and the shared codebook-sample memo is keyed on
     # the immutable DataFrame object (a concurrent double-compute of
     # the same deterministic sample is wasted work, not a wrong
-    # answer). Single-arm calls skip the pool (the scale probe's
-    # attribution mode stays sequential).
+    # answer). Wrapping with the session (not the bare builder) carries
+    # the caller's SparkSession.addTag tags onto the pool's jobs.
+    # Single-arm calls skip the pool (the scale probe's attribution
+    # mode stays sequential).
     if len(arms) > 1:
         from concurrent.futures import ThreadPoolExecutor
 
@@ -1491,7 +1493,7 @@ def ann_topk(
 
         with ThreadPoolExecutor(max_workers=len(arms)) as pool:
             futures = [
-                pool.submit(inheritable_thread_target(builders[a]))
+                pool.submit(inheritable_thread_target(spark)(builders[a]))
                 for a in arms
             ]
             parts = [f.result() for f in futures]

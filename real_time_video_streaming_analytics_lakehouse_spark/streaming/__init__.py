@@ -7,7 +7,6 @@ from .pipelines import (
     kafka_stream,
     parse_kafka_events,
     run_available_now,
-    run_merge_stream,
     run_merge_stream_versioned,
     run_cms_stream,
     run_quarantine_stream,
@@ -25,7 +24,6 @@ __all__ = [
     "kafka_stream",
     "parse_kafka_events",
     "run_available_now",
-    "run_merge_stream",
     "run_merge_stream_versioned",
     "run_cms_stream",
     "run_quarantine_stream",

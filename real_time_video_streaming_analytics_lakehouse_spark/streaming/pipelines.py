@@ -297,106 +297,6 @@ def dedup_stream_within_watermark(
     )
 
 
-def run_merge_stream(
-    result: DataFrame,
-    target_path: str,
-    checkpoint_path: str,
-    keys: list[str],
-    precedence_col: str,
-    partition_col: str | None = None,
-) -> "StreamingQuery":
-    """Stream → MERGE-upsert sink via ``foreachBatch`` (the reference's
-    ``run_streaming`` + MERGE load path, etl_framework.py:490-524 +
-    635-655): each micro-batch is upserted into the parquet target with
-    batch rows winning on key conflict; within-batch duplicates keep the
-    highest ``precedence_col``. With delta-spark present the same batch
-    function would call ``DeltaTable.merge`` instead of rewriting.
-
-    With ``partition_col`` set, the target is hive-partitioned on that
-    column and each micro-batch rewrites ONLY the partitions its rows
-    touch: read target WHERE partition IN (batch partitions) — partition
-    pruning keeps the scan proportional to the batch — merge, write the
-    merged partitions to a tmp dir, and atomically swap just those
-    partition directories. ``partition_col`` must be stable per key
-    (e.g. a date derived from the keyed entity's creation time), or an
-    updated row's old version survives in its former partition.
-
-    Without ``partition_col`` the sink DELEGATES to
-    :func:`run_merge_stream_versioned`: the target becomes a native
-    transaction-log table whose MERGE rewrites only the files holding
-    matched keys (read it back with ``TxTable(spark, path).read()``).
-    The former whole-target-rewrite fallback was removed in round 4 —
-    it was bounded-gold-only and the versioned sink strictly supersedes
-    it (file-granular, exactly-once via txnAppId/txnVersion, versioned
-    history).
-    """
-    if partition_col is None:
-        return run_merge_stream_versioned(
-            result, target_path, checkpoint_path, keys, precedence_col
-        )
-
-    from ..operators.dedup import dedup_keep_latest
-    from ..operators.merge import merge_upsert
-    from ..operators.util import atomic_swap_dir, require_local_dir
-
-    spark = result.sparkSession
-    # Use the NORMALIZED path everywhere below: require_local_dir
-    # accepts file:// URIs and returns the stripped local path —
-    # os.path.exists on the raw URI is always False, which would send
-    # every micro-batch down the "first batch" overwrite path and
-    # silently discard previously merged keys.
-    target_path = require_local_dir(target_path)
-
-    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        batch = dedup_keep_latest(batch_df, keys, precedence_col)
-        tmp = target_path.rstrip("/") + f"__b{batch_id}"
-        if not os.path.exists(target_path):
-            batch.write.mode("overwrite").partitionBy(partition_col).parquet(
-                target_path
-            )
-            return
-        # Bounded driver read: one value per partition touched this batch.
-        touched = [
-            r[0] for r in batch.select(partition_col).distinct().collect()
-        ]
-        # isin() never matches NULL — match the null partition
-        # explicitly or its previously-upserted rows would be dropped
-        # when the swap replaces __HIVE_DEFAULT_PARTITION__.
-        pcol = F.col(partition_col)
-        pred = pcol.isin([v for v in touched if v is not None])
-        if any(v is None for v in touched):
-            pred = pred | pcol.isNull()
-        # Explicit schema, not inference: partition discovery would
-        # type a directory like day=01 as INT (value 1), and the
-        # rewrite would emit day=1 alongside the stale day=01 —
-        # fragmenting the partition and rewriting stored values. The
-        # batch carries the authoritative column types.
-        existing = (
-            spark.read.schema(batch.schema).parquet(target_path).filter(pred)
-        )
-        merged = merge_upsert(existing, batch, keys)
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
-        # Swap exactly the partition dirs the writer produced; untouched
-        # partitions of the live table are never read or replaced.
-        for entry in os.listdir(tmp):
-            if entry.startswith(f"{partition_col}="):
-                atomic_swap_dir(
-                    os.path.join(target_path, entry), os.path.join(tmp, entry)
-                )
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    return (
-        result.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def run_merge_stream_versioned(
     result: DataFrame,
     table_path: str,
@@ -411,7 +311,7 @@ def run_merge_stream_versioned(
     a native transaction-log table (:class:`~..operators.txlog.TxTable`)
     as one atomic commit stamped with ``txnAppId``/``txnVersion`` —
     Delta's idempotent-write contract, which the reference leans on via
-    checkpointed ``foreachBatch`` + ``DeltaTable.merge``
+    checkpointed ``foreachBatch`` + Delta MERGE
     (etl_framework.py:490-524, delta_setup.py:636-668).
 
     Exactly-once: Structured Streaming replays a micro-batch whose
@@ -439,6 +339,13 @@ def run_merge_stream_versioned(
     aggregation) needs: each micro-batch delivers the aggregates whose
     value changed, and the keyed MERGE makes re-delivery idempotent —
     the bronze→silver hop of the reference's medallion wiring.
+
+    The sink merges into an existing table and creates an unpartitioned
+    one only when ``table_path`` holds nothing. For a partitioned
+    target, create it first with ``TxTable.create(..., partition_by=
+    [...])``: a batch rewrites only the files holding its keys, so
+    partitions it does not touch keep their files. A log-less directory of parquet files is adopted as
+    version 0 (:meth:`~..operators.txlog.TxTable.bootstrap`).
     """
     from ..operators.dedup import dedup_keep_latest
     from ..operators.txlog import TxTable
@@ -456,9 +363,9 @@ def run_merge_stream_versioned(
                 tx = TxTable.create(spark, table_path, batch.schema)
             except FileExistsError:
                 # A log-less target that already holds parquet is a
-                # PRE-TXLOG table (written before the versioned sink
-                # existed, or by the removed whole-rewrite fallback):
-                # adopt its files as version 0 so the accumulated rows
+                # PRE-TXLOG table (plain or hive-partitioned parquet
+                # written by an older sink or a batch job): adopt its
+                # files as version 0 so the accumulated rows
                 # stay visible instead of becoming invisible strays
                 # that VACUUM would silently delete.
                 tx = TxTable.bootstrap(spark, table_path)

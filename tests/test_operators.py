@@ -1367,6 +1367,53 @@ def test_cosine_pairs_vector_ceiling(spark):
     assert normal  # the threshold pairs exist at anchor scale
 
 
+def test_ann_topk_pool_jobs_carry_session_tags(spark):
+    """ann_topk builds its arms on a thread pool. Every SQL job it
+    starts, including those from pool threads, carries the caller's
+    SparkSession.addTag tag, so per-tag attribution sees the whole
+    query, and wrapping the pool target warns nothing."""
+    import warnings
+
+    from real_time_video_streaming_analytics_lakehouse_spark.plans.llm_ops import ann_topk
+
+    from .conftest import SF_DIR
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    tag, group = "ann-tag-probe", "ann-tag-probe-group"
+    sc.setJobGroup(group, "job tag inheritance probe")
+    spark.addTag(tag)
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            ann_topk(spark, SF_DIR).collect()
+    finally:
+        spark.removeTag(tag)
+        sc.setJobGroup("", "")
+    assert not [w for w in caught
+                if "Tags will not be inherited" in str(w.message)]
+    jsc.listenerBus().waitUntilEmpty(60_000)
+    jobs = jsc.statusStore().jobsList(None)
+    tag_sets = []
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        if job.jobGroup().isDefined() and job.jobGroup().get() == group:
+            tags = job.jobTags()
+            tag_sets.append([tags.apply(k) for k in range(tags.size())])
+    # session-managed (SQL) jobs; file-listing jobs outside any SQL
+    # execution never carry session tags, on any thread
+    sql_jobs = [ts for ts in tag_sets
+                if any(x.startswith("spark-session-") for x in ts)]
+    assert sql_jobs
+    untagged = [ts for ts in sql_jobs
+                if not any(x.endswith("-" + tag) for x in ts)]
+    assert not untagged, untagged
+    # the tags come from more than the calling thread: pool jobs count
+    threads = {x.split("-thread-", 1)[1][:36]
+               for ts in sql_jobs for x in ts if x.endswith("-" + tag)}
+    assert len(threads) > 1
+
+
 def test_ann_and_sessionize_arm_subsets_match_fused_runs(spark):
     """Round-14 completion of the per-arm pattern: the two remaining
     fused entries (ann_topk's four ANN methods, sessionize_rollup's

@@ -17,7 +17,7 @@ from real_time_video_streaming_analytics_lakehouse_spark.streaming import (
     anomaly_stream,
     dedup_stream,
     run_available_now,
-    run_merge_stream,
+    run_merge_stream_versioned,
     stream_events_from_files,
     user_activity_stream,
 )
@@ -212,9 +212,8 @@ def test_quarantine_stream_splits_good_and_bad(spark, tmp_path):
 def test_run_merge_stream_upserts_per_batch(spark, tmp_path):
     """foreachBatch MERGE sink: later micro-batches update matching keys
     and insert new ones; final target holds exactly the latest row per
-    key (the reference's streaming run + MERGE load path). Unpartitioned
-    targets route to the versioned transaction-log sink (round 4), so
-    the result reads back through TxTable."""
+    key (the reference's streaming run + MERGE load path), read back
+    through TxTable."""
     src_dir = str(tmp_path / "merge_src")
     t = dt.datetime(2024, 1, 1, 12, 0, 0)
     batches = [
@@ -234,8 +233,8 @@ def test_run_merge_stream_upserts_per_batch(spark, tmp_path):
         spark, src_dir, spark.read.parquet(src_dir).schema, max_files_per_trigger=1
     )
     target = f"{tmp_path}/merge_target"
-    q = run_merge_stream(src, target, f"{tmp_path}/merge_ckpt",
-                         keys=["event_id"], precedence_col="ts")
+    q = run_merge_stream_versioned(src, target, f"{tmp_path}/merge_ckpt",
+                                   keys=["event_id"], precedence_col="ts")
     q.awaitTermination(120)
     from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import TxTable
 
@@ -246,9 +245,8 @@ def test_run_merge_stream_upserts_per_batch(spark, tmp_path):
 
 def test_run_merge_stream_accepts_file_uri_target(spark, tmp_path):
     """A file:// target URI must behave identically to a plain path:
-    the sink normalizes it before its os.path.exists checks, so batch 2
-    MERGES into batch 1's keys instead of silently taking the
-    first-batch overwrite path every time."""
+    the sink normalizes it before its table-exists check, so batch 2
+    MERGES into batch 1's table instead of creating a fresh one."""
     src_dir = str(tmp_path / "uri_src")
     t = dt.datetime(2024, 1, 1, 12, 0, 0)
     batches = [
@@ -263,7 +261,7 @@ def test_run_merge_stream_accepts_file_uri_target(spark, tmp_path):
     src = stream_events_from_files(
         spark, src_dir, spark.read.parquet(src_dir).schema, max_files_per_trigger=1
     )
-    q = run_merge_stream(
+    q = run_merge_stream_versioned(
         src, f"file://{tmp_path}/uri_target", f"{tmp_path}/uri_ckpt",
         keys=["event_id"], precedence_col="ts",
     )
@@ -319,9 +317,16 @@ def test_late_data_dropped_after_watermark(spark, tmp_path):
 
 
 def test_run_merge_stream_partitioned_rewrites_only_touched(spark, tmp_path):
-    """With partition_col, a micro-batch touching one partition rewrites
-    only that partition dir: the untouched partition's data file is the
-    same inode afterwards (VERDICT #6)."""
+    """A partitioned target (TxTable created with partition_by) under
+    the streaming MERGE sink: a micro-batch touching one partition
+    rewrites only files there. The untouched partition's file stays in
+    the snapshot at every later version, and no commit removes it."""
+    from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import (
+        TxTable,
+        _list_versions,
+        _read_commit,
+    )
+
     src_dir = str(tmp_path / "pmerge_src")
     t = dt.datetime(2024, 1, 1, 12, 0, 0)
     d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
@@ -339,33 +344,32 @@ def test_run_merge_stream_partitioned_rewrites_only_touched(spark, tmp_path):
         for f in set(glob.glob(f"{src_dir}/*.parquet")) - before:
             os.utime(f, (1700000000 + i * 100, 1700000000 + i * 100))
     target = f"{tmp_path}/pmerge_target"
-
-    # Drain batch 1 only (maxFilesPerTrigger=1 + two separate runs keeps
-    # batch boundaries deterministic via the checkpoint).
     schema = spark.read.parquet(src_dir).schema
+    tx = TxTable.create(spark, target, schema, partition_by=["day"])
 
-    def drain(n_files):
+    def drain():
+        # maxFilesPerTrigger=1 + a shared checkpoint keeps batch
+        # boundaries deterministic across the two runs
         src = stream_events_from_files(
-            spark, src_dir, schema, max_files_per_trigger=n_files
+            spark, src_dir, schema, max_files_per_trigger=1
         )
-        q = run_merge_stream(src, target, f"{tmp_path}/pmerge_ckpt",
-                             keys=["event_id"], precedence_col="ts",
-                             partition_col="day")
+        q = run_merge_stream_versioned(
+            src, target, f"{tmp_path}/pmerge_ckpt",
+            keys=["event_id"], precedence_col="ts",
+        )
         q.awaitTermination(120)
 
-    drain(1)  # processes both files as two sequential micro-batches
-    p1 = f"{target}/day=2024-01-01"
-    p2 = f"{target}/day=2024-01-02"
-    assert os.path.isdir(p1) and os.path.isdir(p2)
-    out = {r["event_id"]: r["value"]
-           for r in spark.read.parquet(target).collect()}
+    drain()  # processes both files as two sequential micro-batches
+    out = {r["event_id"]: r["value"] for r in tx.read().collect()}
     assert out == {1: 1.0, 2: 20.0, 3: 3.0}
-
-    # day=2024-01-01 was only written by batch 1: its file survived
-    # batch 2 untouched (same inode => not rewritten).
-    files1 = sorted(glob.glob(f"{p1}/*.parquet"))
-    assert files1
-    inode_before = os.stat(files1[0]).st_ino
+    snap = tx.snapshot()
+    assert snap.partition_by == ["day"]
+    untouched = [
+        p for p, f in snap.files.items()
+        if f["partitionValues"] == {"day": "2024-01-01"}
+    ]
+    assert len(untouched) == 1 and untouched[0].startswith("day=2024-01-01/")
+    v_seeded = snap.version
 
     # batch 3: update partition day=2024-01-02 again
     rows3 = [Row(event_id=3, day=d2, ts=t + dt.timedelta(minutes=2),
@@ -374,11 +378,19 @@ def test_run_merge_stream_partitioned_rewrites_only_touched(spark, tmp_path):
     spark.createDataFrame(rows3).coalesce(1).write.mode("append").parquet(src_dir)
     for f in set(glob.glob(f"{src_dir}/*.parquet")) - before:
         os.utime(f, (1700000300, 1700000300))
-    drain(1)
-    assert os.stat(sorted(glob.glob(f"{p1}/*.parquet"))[0]).st_ino == inode_before
-    out = {r["event_id"]: r["value"]
-           for r in spark.read.parquet(target).collect()}
+    drain()
+    out = {r["event_id"]: r["value"] for r in tx.read().collect()}
     assert out == {1: 1.0, 2: 20.0, 3: 30.0}
+
+    versions = _list_versions(tx.root)
+    assert versions[-1] == v_seeded + 1  # one commit per micro-batch
+    commits = {v: _read_commit(tx.root, v) for v in versions}
+    added = next(v for v, c in commits.items()
+                 if untouched[0] in {a["path"] for a in c["add"]})
+    for c in commits.values():
+        assert untouched[0] not in c.get("remove", [])
+    for v in range(added, versions[-1] + 1):
+        assert untouched[0] in tx.snapshot(version=v).files
 
 
 def test_run_merge_stream_rejects_object_store_paths(spark, tmp_path):
@@ -544,8 +556,11 @@ def test_stream_monitor_survives_failing_restart_factory(spark, tmp_path):
 
 
 def test_run_merge_stream_null_partition_rows_survive(spark, tmp_path):
-    """Rows in the NULL partition must merge, not be overwritten: isin()
-    never matches NULL, so the null partition needs explicit handling."""
+    """Rows in the NULL partition of a partitioned target must merge,
+    not be overwritten: a later batch into the same NULL partition
+    keeps the earlier batch's rows."""
+    from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import TxTable
+
     src_dir = str(tmp_path / "nmerge_src")
     t = dt.datetime(2024, 1, 1, 12, 0, 0)
     batches = [
@@ -561,17 +576,17 @@ def test_run_merge_stream_null_partition_rows_survive(spark, tmp_path):
         for f in set(glob.glob(f"{src_dir}/*.parquet")) - before:
             os.utime(f, (1700000000 + i * 100, 1700000000 + i * 100))
     target = f"{tmp_path}/nmerge_target"
+    src_schema = spark.read.parquet(src_dir).schema
+    tx = TxTable.create(spark, target, src_schema, partition_by=["day"])
     src = stream_events_from_files(
-        spark, src_dir, spark.read.parquet(src_dir).schema,
-        max_files_per_trigger=1,
+        spark, src_dir, src_schema, max_files_per_trigger=1,
     )
-    q = run_merge_stream(src, target, f"{tmp_path}/nmerge_ckpt",
-                         keys=["event_id"], precedence_col="ts",
-                         partition_col="day")
+    q = run_merge_stream_versioned(src, target, f"{tmp_path}/nmerge_ckpt",
+                                   keys=["event_id"], precedence_col="ts")
     q.awaitTermination(120)
-    out = {r["event_id"]: r["value"]
-           for r in spark.read.parquet(target).collect()}
-    assert out == {1: 1.0, 2: 2.0}  # event 1 must NOT be dropped
+    rows = tx.read().collect()
+    assert {r["event_id"]: r["value"] for r in rows} == {1: 1.0, 2: 2.0}
+    assert all(r["day"] is None for r in rows)
 
 
 def test_user_activity_sliding_windows_stream(spark, tmp_path):
@@ -672,8 +687,8 @@ def test_run_merge_stream_versioned_bootstraps_pre_txlog_target(
     src = stream_events_from_files(
         spark, src_dir, spark.read.parquet(src_dir).schema
     )
-    q = run_merge_stream(src, target, f"{tmp_path}/upg_ckpt",
-                         keys=["event_id"], precedence_col="ts")
+    q = run_merge_stream_versioned(src, target, f"{tmp_path}/upg_ckpt",
+                                   keys=["event_id"], precedence_col="ts")
     q.awaitTermination(120)
     tx = TxTable(spark, target)
     out = {r["event_id"]: (r["event_type"], r["value"])
@@ -685,6 +700,57 @@ def test_run_merge_stream_versioned_bootstraps_pre_txlog_target(
     }
     # the adopted files are tracked: version 0 is the bootstrap commit
     assert tx.history().collect()[-1].operation == "BOOTSTRAP"
+
+
+def test_run_merge_stream_versioned_bootstraps_partitioned_old_sink_target(
+    spark, tmp_path
+):
+    """Upgrade path for a hive-partitioned target left by a directory-
+    swap sink: `day STRING` partitions day=01 and the NULL partition,
+    plus a `_day~01__old` crash leftover. Adoption must keep day as the
+    string '01' (inference alone types it INT 1), keep the NULL-
+    partition rows, and never adopt the leftover's files."""
+    import shutil
+
+    from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import TxTable
+
+    target = str(tmp_path / "pupg_target")
+    t = dt.datetime(2024, 1, 1, 12, 0, 0)
+    schema = "event_id BIGINT, day STRING, ts TIMESTAMP, value DOUBLE"
+    spark.createDataFrame(
+        [(1, "01", t, 1.0), (4, "01", t, 4.0), (9, None, t, 9.0)], schema
+    ).write.partitionBy("day").parquet(target)
+    # crash leftover of a partition swap: a stale copy holding a row
+    # (event 5) that must not reappear
+    shutil.copytree(f"{target}/day=01", f"{target}/_day~01__old")
+    spark.createDataFrame([(5, "01", t, 5.0)], schema).write.parquet(
+        f"{target}/_day~01__old/extra"
+    )
+    src_dir = str(tmp_path / "pupg_src")
+    spark.createDataFrame(
+        [(1, "01", t + dt.timedelta(minutes=1), 10.0),
+         (3, "02", t, 3.0)], schema
+    ).write.parquet(src_dir)
+    src = stream_events_from_files(
+        spark, src_dir, spark.read.parquet(src_dir).schema
+    )
+    q = run_merge_stream_versioned(src, target, f"{tmp_path}/pupg_ckpt",
+                                   keys=["event_id"], precedence_col="ts")
+    q.awaitTermination(120)
+    tx = TxTable(spark, target)
+    assert tx.snapshot().schema["day"].dataType.simpleString() == "string"
+    got = sorted(
+        (r["event_id"], r["day"], r["value"]) for r in tx.read().collect()
+    )
+    assert got == [
+        (1, "01", 10.0),  # merged in place, day stays '01'
+        (3, "02", 3.0),   # inserted
+        (4, "01", 4.0),   # untouched row of the adopted partition
+        (9, None, 9.0),   # NULL-partition row survives adoption
+    ]
+    assert tx.history().collect()[-1].operation == "BOOTSTRAP"
+    assert not [p for p in tx.snapshot(version=0).files
+                if p.startswith("_")]
 
 
 def test_bronze_to_silver_chain_on_native_log(spark, tmp_path):
@@ -823,12 +889,13 @@ def test_streaming_asof_enrichment_matches_batch(spark, tmp_path):
 def test_run_merge_stream_preserves_numeric_looking_string_partitions(
     spark, tmp_path
 ):
-    """Regression: the partitioned merge sink reads its target with the
-    batch's explicit schema. Partition-type inference would retype a
-    string partition value like '01' as INT 1, so the rewrite emitted
-    day=1 alongside the stale day=01 — fragmenting the partition and
-    rewriting stored values. Two sequential batches over day='01' must
+    """A STRING partition value that looks numeric ('01') must never be
+    retyped: partition-type inference would read it back as INT 1, and
+    a rewrite would then emit day=1 beside the stale day=01. Two
+    sequential batches over day='01' into a partitioned target must
     update in place, keep ONE partition dir, and keep the value '01'."""
+    from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import TxTable
+
     src_dir = str(tmp_path / "numpart_src")
     t = dt.datetime(2024, 1, 1, 12, 0, 0)
     batches = [
@@ -845,15 +912,17 @@ def test_run_merge_stream_preserves_numeric_looking_string_partitions(
             os.utime(f, (1700000000 + i * 100, 1700000000 + i * 100))
     target = f"{tmp_path}/numpart_target"
     schema = spark.read.parquet(src_dir).schema
+    tx = TxTable.create(spark, target, schema, partition_by=["day"])
     src = stream_events_from_files(spark, src_dir, schema,
                                    max_files_per_trigger=1)
-    q = run_merge_stream(src, target, f"{tmp_path}/numpart_ckpt",
-                         keys=["event_id"], precedence_col="ts",
-                         partition_col="day")
+    q = run_merge_stream_versioned(src, target, f"{tmp_path}/numpart_ckpt",
+                                   keys=["event_id"], precedence_col="ts")
     q.awaitTermination(120)
     part_dirs = [d for d in os.listdir(target) if d.startswith("day=")]
     assert part_dirs == ["day=01"], part_dirs
-    rows = spark.read.schema(schema).parquet(target).collect()
+    assert {f["partitionValues"]["day"]
+            for f in tx.snapshot().files.values()} == {"01"}
+    rows = tx.read().collect()
     assert [(r["event_id"], r["day"], r["value"]) for r in rows] == [
         (1, "01", 10.0)
     ]

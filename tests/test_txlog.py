@@ -18,6 +18,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampType,
 )
 
 from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import (
@@ -295,24 +296,63 @@ def test_optimize_zorder_clusters_minmax(spark, tmp_path):
     assert sum(hi - lo for lo, hi in spans) < 1000 * 2
 
 
-def test_maintenance_routes_to_txlog(spark, tmp_path):
-    from real_time_video_streaming_analytics_lakehouse_spark.operators import maintenance
+def test_optimize_zorder_gives_locality_to_every_column(spark, tmp_path):
+    """True Morton interleaving: after OPTIMIZE ZORDER BY (a, b), EVERY
+    file's min/max span is narrow for BOTH columns. A lexicographic
+    sort gives column b the full domain span in every file; the Z-curve
+    bounds both, which is what makes log-side min/max pruning work on
+    b-only predicates."""
+    schema = StructType([StructField("a", LongType()),
+                         StructField("b", LongType())])
+    t = TxTable.create(spark, str(tmp_path / "zo2"), schema)
+    # 64x64 uniform grid, shuffled across 8 input files
+    rows = [(i % 64, (i * 37) % 64) for i in range(4096)]
+    t.write(spark.createDataFrame(rows, schema).repartition(8))
+    t.optimize(zorder_cols=["a", "b"], target_files=16)
+    files = list(t.snapshot().files.values())
+    assert len(files) >= 8
+    assert t.read().count() == 4096
+    spans = {
+        c: [int(f["stats"][c]["max"]) - int(f["stats"][c]["min"])
+            for f in files]
+        for c in ("a", "b")
+    }
+    # 16 files over a 64x64 grid: each Z-tile spans ~1/4 of each axis.
+    # Lexicographic layout would put ~full-span (63) b in every file.
+    assert sum(spans["a"]) / len(files) < 40
+    assert sum(spans["b"]) / len(files) < 40
 
-    t = TxTable.create(spark, str(tmp_path / "r"), SCHEMA)
-    t.write(_df(spark, [(1, "a", 1)]))
-    t.write(_df(spark, [(2, "a", 2)]), mode="overwrite")
-    h = maintenance.table_history(spark, t.root)
-    assert [r.version for r in h.collect()] == [2, 1, 0]
-    maintenance.vacuum(spark, t.root, retention_hours=0)
-    with pytest.raises(VacuumedFileError):
-        t.read(version=1).count()
-    # plain dir without a log still raises clearly
-    plain = str(tmp_path / "plain")
-    _df(spark, [(1, "a", 1)]).write.parquet(plain)
-    with pytest.raises(NotImplementedError):
-        maintenance.vacuum(spark, plain)
-    with pytest.raises(NotImplementedError):
-        maintenance.table_history(spark, plain)
+
+def test_optimize_zorder_supports_string_and_timestamp_columns(spark, tmp_path):
+    """Non-numeric Z-ORDER keys (the common case: event_type, ts) work
+    via order-preserving surrogates: the string column ends up
+    clustered, most files holding few distinct values."""
+    import datetime as dt
+
+    schema = StructType([
+        StructField("event_type", StringType()),
+        StructField("ts", TimestampType()),
+        StructField("v", LongType()),
+    ])
+    t = TxTable.create(spark, str(tmp_path / "zo3"), schema)
+    rows = [
+        (["alpha", "bravo", "carol", "delta"][i % 4],
+         dt.datetime(2024, 1, 1) + dt.timedelta(minutes=i), i)
+        for i in range(2000)
+    ]
+    t.write(spark.createDataFrame(rows, schema).repartition(4))
+    t.optimize(zorder_cols=["event_type", "ts"], target_files=8)
+    assert t.read().count() == 2000
+    paths = [os.path.join(t.root, p) for p in t.snapshot().files]
+    assert len(paths) >= 4
+    distincts = [
+        r["d"] for r in spark.read.parquet(*paths)
+        .groupBy(F.input_file_name())
+        .agg(F.countDistinct("event_type").alias("d"))
+        .collect()
+    ]
+    assert len(distincts) == len(paths)
+    assert sum(distincts) / len(distincts) < 4
 
 
 def test_txn_version_tracks_app_commits(spark, table):
