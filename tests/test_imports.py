@@ -1,6 +1,9 @@
 """Import resolution without Spark: every relative ``from .x import y``
 in the package — module-level or lazily inside a function — must name
-a module that exists and defines ``y``.
+a module that exists and defines ``y``. The same holds for every
+``from x import y`` in ``tools/`` whose ``x`` is a sibling tool module,
+``perfbench`` or the package, and no tool or test imports the retired
+``bench`` script.
 
 A lazy import runs only when its one code path does, so a dangling one
 (its target moved or deleted) would otherwise fail only in production.
@@ -12,15 +15,14 @@ from __future__ import annotations
 import ast
 from pathlib import Path
 
-PKG = (
-    Path(__file__).resolve().parents[1]
-    / "real_time_video_streaming_analytics_lakehouse_spark"
-)
+ROOT = Path(__file__).resolve().parents[1]
+PKG = ROOT / "real_time_video_streaming_analytics_lakehouse_spark"
+TOOLS = ROOT / "tools"
 
 
-def _module_file(parts: list[str]) -> Path | None:
-    """Source file of the package-relative module ``parts``."""
-    base = PKG.joinpath(*parts)
+def _module_file(parts: list[str], root: Path = PKG) -> Path | None:
+    """Source file of the module ``parts``, relative to ``root``."""
+    base = root.joinpath(*parts)
     for cand in (base.with_suffix(".py"), base / "__init__.py"):
         if cand.is_file():
             return cand
@@ -100,3 +102,63 @@ def test_lazy_imports_are_walked():
     }
     assert ("operators.util", "require_local_dir") in lazy
     assert ("operators.txlog", "TxTable") in lazy
+
+
+def _tool_imports():
+    """(tool file, line, module, imported name, module root) for every
+    absolute ``from x import y`` in ``tools/`` whose ``x`` is a sibling
+    tool module, ``perfbench`` or the package."""
+    siblings = {p.stem for p in TOOLS.glob("*.py")}
+    for path in sorted(TOOLS.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.ImportFrom) or node.level:
+                continue
+            top = node.module.split(".")[0]
+            if top in siblings:
+                root = TOOLS
+            elif top in ("perfbench", PKG.name):
+                root = ROOT
+            else:
+                continue  # stdlib or third party
+            for alias in node.names:
+                yield path, node.lineno, node.module, alias.name, root
+
+
+def test_tool_imports_resolve():
+    checked = set()
+    missing = []
+    for path, line, module, name, root in _tool_imports():
+        checked.add((path.name, module, name))
+        where = f"tools/{path.name}:{line}"
+        parts = module.split(".")
+        src = _module_file(parts, root)
+        if src is None:
+            missing.append(f"{where}: no module {module}")
+            continue
+        if name == "*" or _module_file(parts + [name], root) is not None:
+            continue
+        if name not in _bound_names(ast.parse(src.read_text()).body):
+            missing.append(f"{where}: {module} does not define {name!r}")
+    assert not missing, "\n".join(missing)
+    # the walk reaches sibling-tool, perfbench and lazy package imports
+    assert ("arm_probe.py", "scale_probe", "timed_noop") in checked
+    assert ("scale_probe.py", "perfbench.layers", "attribute") in checked
+    assert ("stream_anchor.py", PKG.name + ".streaming.pipelines",
+            "run_registry_ingest") in checked
+
+
+def test_nothing_imports_bench():
+    """The benchmark is ``perfbench/run.py``; the ``bench`` script it
+    replaced is gone, so no tool or test may import it."""
+    offenders = []
+    for path in sorted([*TOOLS.glob("*.py"), *(ROOT / "tests").glob("*.py")]):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and not node.level:
+                mods = [node.module]
+            else:
+                continue
+            if any(m.split(".")[0] == "bench" for m in mods):
+                offenders.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert not offenders, offenders

@@ -66,7 +66,7 @@ def test_scale_probe_x3_tier_stamp_invalidates_stale_cache(tmp_path,
     # pre-stamp "ok" flag (rounds <= 9 format) -> stale, must rebuild
     (out / "_READY").write_text("ok\n")
     try:
-        scale_probe._materialize_x3(None, "unused", str(out))
+        scale_probe._materialize_tier(None, "unused", str(out), copies=3)
         raise AssertionError("stale tier was reused instead of rebuilt")
     except _Rebuilt:
         pass
@@ -75,15 +75,17 @@ def test_scale_probe_x3_tier_stamp_invalidates_stale_cache(tmp_path,
 
     # current stamp -> reused without touching Spark or the builder
     out.mkdir(exist_ok=True)
-    (out / "_READY").write_text(scale_probe._x3_stamp() + "\n")
-    assert scale_probe._materialize_x3(None, "unused", str(out)) == str(out)
+    (out / "_READY").write_text(scale_probe._tier_stamp(3) + "\n")
+    assert scale_probe._materialize_tier(
+        None, "unused", str(out), copies=3
+    ) == str(out)
 
     # any parameter drift (stamp text differs) -> rebuild again
     (out / "_READY").write_text(
-        scale_probe._x3_stamp().replace('"offset"', '"off"') + "\n"
+        scale_probe._tier_stamp(3).replace('"offset"', '"off"') + "\n"
     )
     try:
-        scale_probe._materialize_x3(None, "unused", str(out))
+        scale_probe._materialize_tier(None, "unused", str(out), copies=3)
         raise AssertionError("drifted tier was reused instead of rebuilt")
     except _Rebuilt:
         pass
@@ -144,3 +146,40 @@ def test_scale_probe_out_merge_is_per_query_deep(tmp_path):
     assert out["flagged_superlinear"] == ["q_light"]
     # foreign sections survive
     assert out["maintenance"] == {"other_probe_section": True}
+
+
+def test_scale_probe_group_work_attributes_one_job_group(monkeypatch):
+    """The probes' task time is the work of one Spark job group: other
+    groups' and ungrouped jobs stay out, a stage two of the group's jobs
+    share counts once, and skipped stages count for nothing."""
+    import scale_probe
+
+    jobs = [
+        {"jobId": 1, "jobGroup": "g", "stageIds": [10, 11]},
+        {"jobId": 2, "jobGroup": "g", "stageIds": [11, 12]},
+        {"jobId": 3, "jobGroup": "other", "stageIds": [13]},
+        {"jobId": 4, "stageIds": [14]},
+    ]
+
+    def stage(sid, run_ms, status="COMPLETE"):
+        return {"stageId": sid, "status": status,
+                "executorRunTime": run_ms, "numTasks": 2}
+
+    stages = {10: [stage(10, 1000)], 11: [stage(11, 500)],
+              12: [stage(12, 9000, "SKIPPED")], 13: [stage(13, 7000)],
+              14: [stage(14, 7000)]}
+
+    class _FakeRest:
+        def __init__(self, spark):
+            pass
+
+        def jobs_and_stages(self):
+            return jobs, stages
+
+    monkeypatch.setattr(scale_probe, "SparkRest", _FakeRest)
+    tot, attempts = scale_probe.group_work(None, "g")
+    assert tot["jobs"] == 2
+    assert tot["stages"] == 2
+    assert tot["task_s"] == 1.5
+    assert tot["tasks"] == 4
+    assert [a["stageId"] for a in attempts] == [10, 11]

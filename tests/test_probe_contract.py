@@ -1,15 +1,8 @@
-"""Pins the committed measurement tools' contention-gate contracts
-(round 16, VERDICT r15 What's-wrong #1/#2).
+"""Source pins for the committed measurement tools' output contracts.
 
-The bench gained its gate in round 15 and test_bench_contract pins it;
-these tests do the same for tools/arm_probe.py and
-tools/stream_anchor.py so a refactor cannot silently revert either
-tool to wall-only, reader-interprets-the-refs output. Source pins (not
-subprocess runs): the tools' full runs cost minutes and materialize
-multi-GB tiers — the contract here is that the gating CODE stays
-wired, which a source assertion checks in milliseconds; the semantics
-of the shared band/classifier are covered by test_bench_contract's
-``test_degraded_pass_detection_and_band``.
+Source assertions, not subprocess runs: the tools' full runs cost
+minutes and materialize multi-GB tiers, and the contract here is that
+the code recording each section stays wired.
 """
 
 from __future__ import annotations
@@ -23,33 +16,11 @@ def _src(name: str) -> str:
     return open(os.path.join(_TOOLS, name)).read()
 
 
-def test_arm_probe_contention_gate_is_wired():
-    src = _src("arm_probe.py")
-    # shared band, not a private copy that can drift
-    assert "MEM_REF_MT_QUIET_MAX" in src
-    # bounded retry loop + per-entry self-report fields
-    assert "MAX_ARM_RETRIES" in src
-    assert '"degraded": not quiet' in src
-    assert '"arm_retries": arm_retries' in src
-    assert '"ref_mem_mt": windows' in src
-
-
-def test_arm_probe_accumulates_refs_on_merge():
-    # ADVICE r15: a subset re-measure must append its refs history,
-    # never overwrite surviving entries' host context
-    src = _src("arm_probe.py")
-    assert "refs_runs" in src
-    assert 'sec["refs_runs"].append({"queries": names, "refs": refs})' in src
-
-
 def test_stream_anchor_classifies_sections():
     src = _src("stream_anchor.py")
-    assert "MEM_REF_MT_QUIET_MAX" in src
-    assert "_window_degraded" in src
-    assert 'out["degraded"] = degraded' in src
-    # VERDICT r15 #6: the incremental registry drain must record
-    # per-micro-batch trigger durations from the progress log
-    assert "registry_incremental" in src or "registry_" in src
+    # the incremental registry drain must record per-micro-batch
+    # trigger durations from the progress log
+    assert "registry_incremental" in src
     assert "triggerExecution" in src
 
 

@@ -1,55 +1,29 @@
-"""Per-ARM scale attribution for the fused catalog entries.
+"""Per-arm scale attribution for the fused catalog entries.
 
-The round-13 lesson (VERDICT r12 #5 → r13 #1): a fused multi-arm query
-measured as one wall hides an individual arm's super-linearity — the
-`ngram_jaccard_top_pairs` stop-shingle cap's df² pathology sat invisible
-inside the fused ×30 number until the arms were measured separately.
-This probe generalizes that ad-hoc round-13 measurement into committed
-method (the tools/stream_anchor.py precedent): every fused entry with an
-``arms=`` knob is timed PER ARM at sf0.1 and on the synthetic ×N tier
-(default ×30), with Spark job counts, using the exact timed-noop runner
-the main scale probe uses.
+A fused multi-arm query measured as one wall can hide one arm's
+super-linearity, so every fused entry with an ``arms=`` knob is timed
+per arm at sf0.1 and on the synthetic ×N full-schema tier (default ×30)
+with :func:`scale_probe.timed_noop`, the timed unit the scale probe
+uses. Each entry carries min-of-N wall and executor task seconds
+(``task_sec``) per tier and the max Spark job count.
 
 For the stacked-row entries (hash_dedup_candidates,
 embedding_dedup_clusters, ngram_jaccard_top_pairs) an arm is one slice
 of the output; for doc_dedup_fingerprints and text_quality the arms are
-COLUMN FAMILIES over a shared base, so the probe also times the base
+column families over a shared base, so the probe also times the base
 alone — a family's attributable cost is (family − base), since every
-family run carries the base scan/joins.
-
-Round 15 (VERDICT r14 What's-wrong #1): each per-arm entry also carries
-``task_sec`` per tier (executor task time via the same REST stage
-watermark bench.py uses) and the section records the bench reference
-vectors (cpu / memory-bandwidth probes) sampled around the run — so an
-arm row is interpretable on a host that can silently lose 25–50 %
-throughput to hypervisor contention: wall up + task flat + mem_ref_mt
-spiking = host, not plan. Default runs bumped 2 → 3 to match the
-bench/scale-probe min-of-N methodology.
-
-Round 16 (VERDICT r15 What's-wrong #1): the probe now ACTS on those
-references the way bench.py does instead of leaving interpretation to
-the reader. Each arm's measurement window is bracketed by
-``mem_ref_mt_sec`` samples; when both sides of every window for an arm
-exceed the committed quiet band (``bench.MEM_REF_MT_QUIET_MAX``), the
-probe re-measures that arm (one extra run over both tiers per retry,
-bounded by ``MAX_ARM_RETRIES``) until one window ran quiet — so the
-min-of-N walls have a defensible member — and every entry carries its
-own ``degraded`` flag plus the raw ``ref_mem_mt`` brackets. A
-round-15-style contaminated re-measure (refs 0.138–0.258 during the
-stopcap/minhash rows) is now machine-flagged in the artifact itself.
+family run carries the base scan and joins.
 
 Usage::
 
     python tools/arm_probe.py [--runs N] [--copies N] [--out SCALING.json]
                               [queries ...]
 
-Writes/merges a top-level ``arm_split_x{N}`` section into ``--out``
-(scale_probe's merge preserves sections it does not own; per-query
-entries carry their own ``runs`` so a subset re-measure cannot
-misattribute a prior run's metadata — ADVICE r14). The ngram exact arm
-is EXCLUDED by default (super-linear by contract, needs ~48g driver
-memory at ×30 — round-13 measured it once at 307.5 s); pass
-``ngram_jaccard_top_pairs`` explicitly to re-measure the stopcap arm.
+Writes or merges a top-level ``arm_split_x{N}`` section into ``--out``;
+entries from earlier invocations survive a subset re-measure, and each
+entry carries its own ``runs``. The ngram exact arm is excluded (it is
+super-linear by contract and needs ~48g driver memory at ×30); pass
+``ngram_jaccard_top_pairs`` explicitly to measure its stopcap arm.
 """
 
 from __future__ import annotations
@@ -62,17 +36,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# task-time attribution reads the status REST API -> UI on for this
-# session (must be set before the session is built)
-os.environ.setdefault("SPARK_GRAFT_UI", "true")
-
 from scale_probe import SF_DIRS, _materialize_tier, timed_noop  # noqa: E402
 
-from bench import (  # noqa: E402
-    MEM_REF_MT_QUIET_MAX,
-    TaskTimeWatermark,
-    ref_vector,
-)
 from real_time_video_streaming_analytics_lakehouse_spark.plans import (  # noqa: E402
     events_views,
     llm_ops,
@@ -93,25 +58,19 @@ SPECS: dict[str, list[tuple[str, ...]]] = {
         ("ivfpq_persisted",),
     ],
     "sessionize_rollup": [("gap_lag",), ("native_window",)],
-    # round 15 (VERDICT r14 What's-wrong #3): text_quality's column
-    # families over the shared checkpointed scan — attribute a family
-    # as (family - base); the catalog plan itself stays fused.
+    # text_quality's column families over the shared checkpointed scan
+    # — attribute a family as (family - base); the catalog plan itself
+    # stays fused.
     "text_quality": [
         (), ("lang_id",), ("lm",), ("repetition",), ("tfidf",),
         ("bm25",), ("gate_exact",), ("gate_approx",),
     ],
     # stopcap only: the exact arm is super-linear BY CONTRACT (all
     # pairs over duplicate-saturated input) and needs ~48g driver
-    # memory at x30 — measured once in round 13 (SCALING.json
+    # memory at x30 — measured once (SCALING.json
     # ngram_arm_split_x30), not worth re-paying per probe run.
     "ngram_jaccard_top_pairs": [("stopcap",)],
 }
-
-#: extra measurement windows (one run over both tiers each) the
-#: contention gate may add per arm — bounded like bench.py's
-#: MAX_CONTENTION_RETRIES so a persistently noisy host cannot turn a
-#: probe run into a spin loop.
-MAX_ARM_RETRIES = 2
 
 #: measured by default — ngram needs explicit selection (see above).
 DEFAULT_QUERIES = [
@@ -149,10 +108,11 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"no arm spec for: {sorted(unknown)}")
 
+    # task time reads the status REST API -> UI on for this session
+    # (must be set before the session is built)
+    os.environ.setdefault("SPARK_GRAFT_UI", "true")
     spark = get_spark("arm_probe")
     spark.sparkContext.setLogLevel("ERROR")
-    wm = TaskTimeWatermark(spark)
-    refs = [ref_vector()]
     base_dir = SF_DIRS[-1][1]  # sf0.1
     sf_equiv = f"{0.1 * args.copies:.1f}"
     tier_dir = _materialize_tier(
@@ -164,7 +124,6 @@ def main() -> None:
         lambda: llm_ops.hash_dedup_candidates(spark, base_dir),
         "warmup",
     )
-    refs.append(ref_vector())
 
     xkey = f"x{args.copies}"
     report: dict[str, dict[str, dict]] = {}
@@ -176,59 +135,16 @@ def main() -> None:
             best: dict[str, float] = {}
             task_best: dict[str, float] = {}
             jobs: dict[str, int] = {}
-
-            min_window: dict[str, int] = {}
-
-            def _measure(n_runs: int, window_idx: int) -> None:
-                for _ in range(n_runs):
-                    for tier, d in (("0.1", base_dir), (xkey, tier_dir)):
-                        wm.advance()
-                        el, j = timed_noop(
-                            spark,
-                            lambda: fn(spark, d, arms=arms),
-                            f"{name}[{label}] @ {d}",
-                        )
-                        task_ms = wm.delta_ms()
-                        if tier not in best or el < best[tier]:
-                            best[tier] = el
-                            min_window[tier] = window_idx
-                        if task_ms is not None:
-                            t = round(task_ms / 1000.0, 3)
-                            if (
-                                tier not in task_best
-                                or t < task_best[tier]
-                            ):
-                                task_best[tier] = t
-                        jobs[tier] = max(jobs.get(tier, 0), j)
-
-            # Contention gate (round 16, VERDICT r15 What's-wrong #1):
-            # a measurement window is the refs bracket around a batch
-            # of runs; retry (bounded, one run per retry) until one
-            # window has BOTH brackets inside the quiet band, so the
-            # min-of-N walls have a defensible member — the bench.py
-            # rule applied per arm. Each window re-samples its OWN
-            # before-bracket: the previous window's after-sample may be
-            # the very spike that flagged it, and reusing it would make
-            # the first retry provably unable to certify quiet (review
-            # finding, round 16).
-            windows: list[list[float]] = []
-            arm_retries = 0
-            while True:
-                refs.append(ref_vector())
-                before = refs[-1]["mem_ref_mt_sec"]
-                _measure(args.runs if not windows else 1, len(windows))
-                refs.append(ref_vector())
-                after = refs[-1]["mem_ref_mt_sec"]
-                windows.append([before, after])
-                if max(before, after) <= MEM_REF_MT_QUIET_MAX:
-                    break
-                if arm_retries >= MAX_ARM_RETRIES:
-                    break
-                arm_retries += 1
-            win_flags = [
-                max(w) > MEM_REF_MT_QUIET_MAX for w in windows
-            ]
-            quiet = not all(win_flags)
+            for _ in range(args.runs):
+                for tier, d in (("0.1", base_dir), (xkey, tier_dir)):
+                    el, j, task = timed_noop(
+                        spark,
+                        lambda: fn(spark, d, arms=arms),
+                        f"{name}[{label}] @ {d}",
+                    )
+                    best[tier] = min(best.get(tier, el), el)
+                    task_best[tier] = min(task_best.get(tier, task), task)
+                    jobs[tier] = max(jobs.get(tier, 0), j)
             entry = {
                 "0.1": best["0.1"],
                 xkey: best[xkey],
@@ -236,50 +152,23 @@ def main() -> None:
                 "jobs": jobs["0.1"],
                 f"jobs_{xkey}": jobs[xkey],
                 "runs": args.runs,
-                "arm_retries": arm_retries,
-                "degraded": not quiet,
-                # bench-style min provenance (review finding, round
-                # 16): an entry can be degraded:false yet have a
-                # minimum supplied by a flagged window — disclose it.
-                "min_from_degraded": any(
-                    win_flags[w] for w in min_window.values()
-                ),
-                "ref_mem_mt": windows,
+                "task_sec": task_best["0.1"],
+                f"task_sec_{xkey}": task_best[xkey],
             }
-            if task_best:
-                entry["task_sec"] = task_best.get("0.1")
-                entry[f"task_sec_{xkey}"] = task_best.get(xkey)
             report[name][label] = entry
             print(json.dumps({name: {label: entry}}))
 
     section = f"arm_split_{xkey}"
     note = (
-        "per-arm walls via the arms= knobs (VERDICT r13 #1); min-of-N "
-        "per entry ('runs' key), jobs = max; doc_dedup_fingerprints "
-        "and text_quality arms are column families over a shared base "
-        "— attribute a family as (family - base); task_sec = executor "
-        "task time (REST stage watermark, min over the same runs); "
-        "each entry self-reports its contention context (round 16, "
-        "VERDICT r15 #1/#2): 'ref_mem_mt' = [before, after] "
-        "mem_ref_mt_sec brackets per measurement window (each window "
-        "re-samples its own before-bracket), 'arm_retries' = bounded "
-        "quiet-window retries fired, 'degraded' = no window ran with "
-        "both brackets inside bench.MEM_REF_MT_QUIET_MAX, "
-        "'min_from_degraded' = some tier's reported min wall came "
-        "from a flagged window — a degraded or min_from_degraded "
-        "wall should not be compared round-over-round; "
-        "'refs'/'refs_queries' = the LATEST invocation's full "
-        "bench.ref_vector() samples, 'refs_runs' = the per-invocation "
-        "history (appended on merge, ADVICE r15)"
+        "per-arm walls via the arms= knobs; min-of-N per entry ('runs' "
+        "key), jobs = max; doc_dedup_fingerprints and text_quality arms "
+        "are column families over a shared base — attribute a family as "
+        "(family - base); task_sec = executor task time of the run's "
+        "Spark job group (status REST API, min over the same runs); "
+        "keys this note does not describe (host-probe 'refs*', "
+        "'degraded', 'ref_mem_mt') come from earlier invocations"
     )
-    out_obj = {
-        section: {
-            "note": note,
-            "queries": report,
-            "refs": refs,
-            "refs_queries": names,
-        }
-    }
+    out_obj = {section: {"note": note, "queries": report}}
     if args.out:
         prior = {}
         if os.path.exists(args.out):
@@ -288,42 +177,10 @@ def main() -> None:
                     prior = json.load(f)
             except (OSError, json.JSONDecodeError):
                 prior = {}
+        # a subset re-measure keeps the entries it did not re-measure
         sec = prior.setdefault(section, {})
-        # per-entry metadata travels WITH the entry (ADVICE r14): a
-        # subset re-measure must not rewrite section-level fields that
-        # describe surviving entries from earlier invocations — the
-        # note is method description (update freely), the refs are
-        # labeled with the queries they covered, and 'runs' lives in
-        # each entry.
         sec["note"] = note
         sec["queries"] = {**sec.get("queries", {}), **report}
-        # ADVICE r15: a subset re-measure must not DESTROY the host
-        # context of surviving entries from earlier invocations —
-        # refs/refs_queries describe only the latest invocation, and
-        # the appended refs_runs history keeps every prior invocation's
-        # reference vectors next to the entries they covered. (Since
-        # round 16 each entry also embeds its own ref_mem_mt brackets,
-        # so even refs-less legacy merges stay attributable.)
-        sec.setdefault("refs_runs", [])
-        if sec.get("refs") and sec.get("refs_queries") and not any(
-            r.get("refs") == sec["refs"] for r in sec["refs_runs"]
-        ):
-            # preserve the pre-round-16 single-slot refs as the first
-            # history record before overwriting them
-            sec["refs_runs"].append(
-                {"queries": sec["refs_queries"], "refs": sec["refs"]}
-            )
-        sec["refs_runs"].append({"queries": names, "refs": refs})
-        sec["refs"] = refs
-        sec["refs_queries"] = names
-        # retire the section-level 'runs' — but first backfill it into
-        # any SURVIVING pre-round-15 entries so their run count is not
-        # lost when the section key goes (review finding, round 15)
-        legacy_runs = sec.pop("runs", None)
-        if legacy_runs is not None:
-            for arms_d in sec["queries"].values():
-                for entry_d in arms_d.values():
-                    entry_d.setdefault("runs", legacy_runs)
         with open(args.out, "w") as f:
             f.write(json.dumps(prior) + "\n")
     print(json.dumps(out_obj))

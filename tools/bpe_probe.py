@@ -17,7 +17,7 @@ over the ``documents`` table at sf0.1 and on the synthetic ×3/×10/×30
 full-schema tiers (scale_probe's generator — content-perturbed copies,
 word-multiset preserved, so the word-type table grows sub-linearly the
 way real corpus growth grows it), min-of-``--runs`` wall + max jobs
-per tier, stamped with the bench reference vectors (VERDICT r14 #1).
+per tier.
 
 Expected shape: jobs IDENTICAL at every tier; wall growing far slower
 than data (the merge loop's share is flat; only the initial scan and
@@ -45,7 +45,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from scale_probe import SF_DIRS, _materialize_tier  # noqa: E402
 
-from bench import ref_vector  # noqa: E402
 from real_time_video_streaming_analytics_lakehouse_spark.operators.bpe import train_bpe  # noqa: E402
 from real_time_video_streaming_analytics_lakehouse_spark.session import get_spark  # noqa: E402
 from real_time_video_streaming_analytics_lakehouse_spark.sources.readers import load_table  # noqa: E402
@@ -83,7 +82,6 @@ def main() -> None:
     spark = get_spark("bpe_probe")
     spark.sparkContext.setLogLevel("ERROR")
     base_dir = SF_DIRS[-1][1]  # sf0.1
-    refs = [ref_vector()]
 
     tiers: list[tuple[str, str]] = [("0.1", base_dir)]
     for c in args.copies:
@@ -94,12 +92,10 @@ def main() -> None:
                 spark, base_dir, f"/tmp/spark_graft_sf{sf_equiv}_full", c
             ),
         ))
-    refs.append(ref_vector())
 
     # warm-up: one full train at the base tier absorbs JVM/codegen and
     # the parquet footer caches
     _timed_train(spark, base_dir, args.merges)
-    refs.append(ref_vector())
 
     report: dict[str, dict] = {}
     for _ in range(args.runs):
@@ -110,7 +106,6 @@ def main() -> None:
             row["jobs"] = max(row.get("jobs", 0), jobs)
             row["merges_learned"] = learned
             print(json.dumps({tier: row}))
-        refs.append(ref_vector())
 
     base_wall = report["0.1"]["wall_sec"]
     for tier, row in report.items():
@@ -122,14 +117,12 @@ def main() -> None:
             "distributed train_bpe (num_merges=%d, min_frequency=2) "
             "over documents at sf0.1 and the synthetic xN tiers; "
             "min-of-%d wall, jobs = max (must be ~constant across "
-            "tiers: ∝ num_merges, not corpus size); 'refs' = "
-            "bench.ref_vector() samples around the run"
+            "tiers: ∝ num_merges, not corpus size)"
             % (args.merges, args.runs)
         ),
         "merges": args.merges,
         "runs": args.runs,
         "tiers": report,
-        "refs": refs,
     }
     out_obj = {"bpe_train_scale": section}
     if args.out:

@@ -218,13 +218,6 @@ def main() -> None:
     spark = get_spark("maintenance_probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # host-reference samples bracketing every tier (round 15 — same
-    # context stamp as bench/arm_probe/stream_anchor/scale_probe, so a
-    # ms-scale resolve/prune figure from a contended window is
-    # identifiable as such)
-    from bench import ref_vector
-
-    refs = [ref_vector()]
     tiers = [int(x) for x in args.tiers.split(",")]
     results = []
     for n in tiers:
@@ -243,7 +236,6 @@ def main() -> None:
         r = probe_tier(spark, root, n, runs=args.runs)
         print(json.dumps({"tier_done": r}), file=sys.stderr, flush=True)
         results.append(r)
-        refs.append(ref_vector())
 
     report = {
         "metric": "maintenance_plane_seconds",
@@ -251,7 +243,6 @@ def main() -> None:
         "rows_per_file": ROWS_PER_FILE,
         "dv_every": DV_EVERY,
         "tiers": results,
-        "refs": refs,
     }
     text = json.dumps(report)
     if args.out:

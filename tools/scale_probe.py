@@ -2,9 +2,11 @@
 
 Runs the full catalog at several scale factors (default sf0.001 /
 sf0.01 / sf0.1 — two decades of data growth), takes min-of-N wall
-clock per (query, sf) like bench.py, and reports each query's growth
-ratio over the top decade: ``r = t(sf_hi) / t(sf_mid)`` for 10× the
-data. Linear work scales at r ≤ 10; a quadratic plan shows r → 100.
+clock per (query, sf), and reports each query's growth ratio over the
+top decade: ``r = t(sf_hi) / t(sf_mid)`` for 10× the data. Linear work
+scales at r ≤ 10; a quadratic plan shows r → 100. Each query also
+carries its Spark job count and executor task seconds (``task_sec``,
+min over the runs) at sf0.1 and on the synthetic tier.
 
 Honest limitation: fixed per-query overhead (planning, job launch,
 small-file constants — ~0.2-0.5 s at these sizes) DEFLATES r, so the
@@ -23,7 +25,8 @@ Usage::
 Prints one JSON object: per-query seconds at each sf, the top-decade
 ratio, and the flagged list (ratio > threshold after subtracting the
 measured per-query floor). The committed SCALING.md narrates the
-latest run.
+latest run. The session runs with the Spark UI on: task time comes
+from its status REST API.
 """
 
 from __future__ import annotations
@@ -37,6 +40,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.layers import SparkRest, attribute, empty_totals
 from real_time_video_streaming_analytics_lakehouse_spark.plans import CATALOG
 from real_time_video_streaming_analytics_lakehouse_spark.session import get_spark
 
@@ -216,33 +220,35 @@ def _tier_stamp(copies: int) -> str:
     }, sort_keys=True)
 
 
-# round-9 API names kept for tests/callers
-def _materialize_x3(spark, base_dir: str, out_dir: str) -> str:
-    return _materialize_tier(spark, base_dir, out_dir, copies=3)
-
-
-def _x3_stamp() -> str:
-    return _tier_stamp(3)
-
-
 _probe_seq = 0
 
 
-def timed_noop(spark, build, label: str) -> tuple[float, int]:
+def group_work(spark, group: str) -> tuple[dict, list[dict]]:
+    """Executor work of Spark job group ``group``: the totals
+    :func:`perfbench.layers.attribute` sums (``jobs``, ``task_s``,
+    ``cpu_s``, shuffle bytes, ...) and the group's non-skipped stage
+    attempts. One REST read, taken after the listener bus has seen every
+    job end, so the last stage's metrics are in. Jobs started from
+    threads that inherit the caller's local properties (thread pools
+    wrapped with ``inheritable_thread_target``, broadcast and subquery
+    threads) carry the group too."""
+    jobs, stages = SparkRest(spark).jobs_and_stages()
+    mine = [j for j in jobs if j.get("jobGroup") == group]
+    tot = attribute(mine, stages, label_of=lambda j: "u").get(
+        "u", empty_totals()
+    )
+    stage_ids = sorted({sid for j in mine for sid in j.get("stageIds", [])})
+    attempts = [
+        a for sid in stage_ids for a in stages.get(sid, [])
+        if a.get("status") != "SKIPPED"
+    ]
+    return tot, attempts
+
+
+def drain_in_group(spark, build, label: str) -> tuple[float, str]:
     """Build a DataFrame via ``build()`` and drain it to a noop sink
-    inside a unique job group; return (wall seconds, Spark JOB count).
-
-    The job count is the round-9 forensics metric: driver job
-    round-trips — not data volume — were the catalog's dominant noise
-    amplifier (iterative queries launching many tiny jobs float with
-    per-core-speed spread). A query whose job count GROWS with data
-    size has a driver loop whose trip count depends on the data
-    (e.g. diameter-bound label propagation) — the shape that multiplies
-    scheduler latency at 100×. Counted immediately after the run so
-    `spark.ui.retainedJobs` eviction can't undercount.
-
-    Round 14: factored out of ``_timed_run`` so tools/arm_probe.py
-    measures per-ARM builders with the identical method."""
+    inside a fresh Spark job group; return (wall seconds, the group).
+    Wall covers plan construction and execution."""
     global _probe_seq
     _probe_seq += 1
     group = f"scale-probe-{_probe_seq}"
@@ -254,11 +260,22 @@ def timed_noop(spark, build, label: str) -> tuple[float, int]:
         el = round(time.perf_counter() - start, 3)
     finally:
         sc.setJobGroup("", "")
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    return el, jobs
+    return el, group
 
 
-def _timed_run(spark, name: str, sf_dir: str) -> tuple[float, int]:
+def timed_noop(spark, build, label: str) -> tuple[float, int, float]:
+    """The probes' timed unit: :func:`drain_in_group`, then the group's
+    work from :func:`group_work`. Returns (wall seconds, Spark job
+    count, executor task seconds). A job count that grows with data
+    size marks a driver loop whose trip count depends on the data.
+    Needs the Spark UI (``SPARK_GRAFT_UI=true`` before the session
+    starts)."""
+    el, group = drain_in_group(spark, build, label)
+    tot, _ = group_work(spark, group)
+    return el, tot["jobs"], round(tot["task_s"], 3)
+
+
+def _timed_run(spark, name: str, sf_dir: str) -> tuple[float, int, float]:
     return timed_noop(
         spark,
         lambda: CATALOG[name].fn(spark, sf_dir),
@@ -288,36 +305,34 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown queries: {sorted(unknown)}")
 
+    # task time reads the status REST API -> UI on for this session
+    # (must be set before the session is built)
+    os.environ.setdefault("SPARK_GRAFT_UI", "true")
     spark = get_spark("scale_probe")
     spark.sparkContext.setLogLevel("ERROR")
-    # host-reference samples around every pass (round 15, VERDICT r14
-    # What's-wrong #1 — the same context stamp bench.py and the other
-    # tools carry, so a ratio from a contended window is identifiable)
-    from bench import ref_vector
-
-    refs = [ref_vector()]
     # warm-up absorbs JVM/codegen startup
     CATALOG["event_type_rank"].fn(spark, SF_DIRS[0][1]).write.format(
         "noop"
     ).mode("overwrite").save()
-    refs.append(ref_vector())
 
     timings: dict[str, dict[str, float]] = {n: {} for n in names}
     jobs_hi: dict[str, int] = {}
+    task_hi: dict[str, float] = {}
     for _ in range(args.runs):
         for sf, sf_dir in SF_DIRS:
             for name in names:
-                el, jobs = _timed_run(spark, name, sf_dir)
+                el, jobs, task = _timed_run(spark, name, sf_dir)
                 cur = timings[name].get(sf)
                 if cur is None or el < cur:
                     timings[name][sf] = el
                 if sf == SF_DIRS[-1][0]:
                     # max across runs: caching never lowers the bound
                     jobs_hi[name] = max(jobs_hi.get(name, 0), jobs)
-        refs.append(ref_vector())
+                    task_hi[name] = min(task_hi.get(name, task), task)
 
     extra: dict[str, float] = {}
     jobs_x3: dict[str, int] = {}
+    task_x3: dict[str, float] = {}
     copies = args.copies
     xkey = f"x{copies}"
     # sf-equivalent label: 3 copies of sf0.1 -> "0.3", 10 -> "1.0"
@@ -337,7 +352,7 @@ def main() -> None:
         for _ in range(args.runs):
             for name in names:
                 try:
-                    el, jobs = _timed_run(spark, name, tier_dir)
+                    el, jobs, task = _timed_run(spark, name, tier_dir)
                 except ScaleGuardrailError as e:
                     # a scale guardrail fired (round 14: the ngram
                     # exact arm's corpus ceiling) — record the refusal
@@ -351,7 +366,7 @@ def main() -> None:
                 if name not in extra or el < extra[name]:
                     extra[name] = el
                 jobs_x3[name] = max(jobs_x3.get(name, 0), jobs)
-            refs.append(ref_vector())
+                task_x3[name] = min(task_x3.get(name, task), task)
 
     report: dict[str, dict] = {}
     flagged: list[str] = []
@@ -362,12 +377,14 @@ def main() -> None:
         ratio = round(t[hi] / t[mid], 2)
         report[name] = {**t, "decade_ratio": ratio}
         report[name]["jobs"] = jobs_hi[name]
+        report[name]["task_sec"] = task_hi[name]
         if name in extra:
             # Nx the sf0.1 data; linear work lands at <= ~N (fixed
             # overhead pulls it down, skew pulls it up slightly)
             report[name][sf_equiv] = extra[name]
             report[name][f"{xkey}_ratio"] = round(extra[name] / t[hi], 2)
             report[name][f"jobs_{xkey}"] = jobs_x3[name]
+            report[name][f"task_sec_{xkey}"] = task_x3[name]
             # Job count must be ~data-size-independent: a declarative
             # plan launches a fixed number of jobs; iterative operators
             # (connected components) may add O(log growth) rounds — the
@@ -389,11 +406,6 @@ def main() -> None:
         "queries": report,
         "flagged_superlinear": sorted(flagged),
         "flagged_job_growth": sorted(flagged_jobs),
-        # bench.ref_vector() samples bracketing every pass (start,
-        # post-warm, after each base-tiers pass, after each extra-tier
-        # pass) — the host context that makes wall ratios from a
-        # contended window identifiable (VERDICT r14 #1)
-        "refs": refs,
     }
     if args.out:
         # Merge with any prior file instead of clobbering it. Two

@@ -6,35 +6,29 @@ when no interactive UI is available.
 
 Usage: python tools/stage_profile.py <query> [runs=2] [sf_dir]
 
-Prints one line per stage of the LAST run (warm steady state — what
-the bench's min-of-N measures) plus totals for every run, and stamps
-host references (ref_vector) so a contended window is visible in the
-output rather than silently poisoning it.
+Prints the wall, executor task seconds and stage count of every run,
+then one line per stage of the LAST run (warm steady state). Each run
+drains in its own Spark job group (``scale_probe.drain_in_group``), and
+its stages are those of the group's jobs, including jobs started from
+thread pools.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
-import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import ref_vector  # noqa: E402
+from scale_probe import drain_in_group, group_work  # noqa: E402
+
 from real_time_video_streaming_analytics_lakehouse_spark.plans import (  # noqa: E402
     CATALOG,
 )
 from real_time_video_streaming_analytics_lakehouse_spark.session import (  # noqa: E402
     get_spark,
 )
-
-
-def stages_since(rest: str, watermark: int) -> list[dict]:
-    with urllib.request.urlopen(rest, timeout=10) as r:
-        data = json.load(r)
-    return [s for s in data if s["stageId"] > watermark]
 
 
 def main() -> int:
@@ -48,31 +42,17 @@ def main() -> int:
     os.environ.setdefault("SPARK_GRAFT_UI", "true")
     spark = get_spark("stage-profile")
     spark.sparkContext.setLogLevel("ERROR")
-    rest = (
-        f"{spark.sparkContext.uiWebUrl}/api/v1/applications/"
-        f"{spark.sparkContext.applicationId}/stages"
-        f"?status=complete&status=active&status=failed"
-    )
     fn = CATALOG[name].fn
-    print("refs_before", ref_vector())
-    wall = []
-    last_stages: list[dict] = []
     for i in range(runs):
-        wm = max(
-            (s["stageId"] for s in stages_since(rest, -1)), default=-1
+        wall, group = drain_in_group(
+            spark, lambda: fn(spark, sf_dir), f"{name} run {i}"
         )
-        spark.sparkContext.setJobDescription(f"{name} run {i}")
-        t0 = time.monotonic()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall.append(round(time.monotonic() - t0, 3))
-        last_stages = stages_since(rest, wm)
-        task_s = sum(s["executorRunTime"] for s in last_stages) / 1e3
+        tot, last_stages = group_work(spark, group)
         print(
-            f"run {i}: wall {wall[-1]} s, task {task_s:.2f} s, "
+            f"run {i}: wall {wall} s, task {tot['task_s']:.2f} s, "
             f"{len(last_stages)} stages"
         )
-    print("refs_after", ref_vector())
-    print(f"\n--- per-stage, last run (wall {wall[-1]} s) ---")
+    print(f"\n--- per-stage, last run (wall {wall} s) ---")
     for s in sorted(
         last_stages, key=lambda s: -s["executorRunTime"]
     ):

@@ -1,46 +1,34 @@
-"""Canonical streaming throughput anchor (round 13).
+"""Canonical streaming throughput anchor.
 
-Rounds 10-12 each measured streaming throughput with ad-hoc scripts
-whose parameters (warm-up, micro-batch count, payload shape) were
-described in BASELINE.md but never committed — so cross-round numbers
-kept diverging for METHOD reasons (round 12's 47.6k ev/s registry
-figure vs round 13's first re-measure at 15k was entirely the
-batch-count difference: a single-batch availableNow drain vs a
-4-micro-batch incremental drain, measured 60.2k vs 21.4k same-session
-same-HEAD). This tool IS the method now:
+The method for measuring streaming throughput, so figures from
+different dates differ only by code or host, not by method:
 
-* bench-style warm-up (one relational query, the Python-worker fleet,
-  the events scan) so the first drain doesn't pay session startup;
-* the three reference pipelines via bench._streaming_throughput
-  (32 source files, maxFilesPerTrigger=8 -> 4 watermarked
-  micro-batches, parquet sink, availableNow), best of ``--passes``;
+* a warm-up (:func:`warm_up`: one relational query, the Python-worker
+  fleet, the documents/embeddings scans) so the first drain does not
+  pay session startup;
+* the reference's three streaming pipelines
+  (:func:`_streaming_throughput`: 32 source files,
+  maxFilesPerTrigger=8 -> 4 watermarked micro-batches, parquet sink,
+  availableNow), best of ``--passes``;
 * registry-validated ingest (4-property / 3-required JSON payload ->
   from_json validation -> typed txlog tables + DLQ, exactly-once) in
-  BOTH configurations, best of ``--passes`` each:
+  both configurations, best of ``--passes`` each:
   - ``single_batch``: whole corpus in one trigger — the hot-path
     ceiling (validation + write throughput, minimal per-batch
-    overhead); comparable to round 12's 47.6k record;
+    overhead);
   - ``incremental``: maxFilesPerTrigger=8 — the steady-trigger figure
-    including per-batch txlog commit + checkpoint overhead.
+    including per-batch txlog commit + checkpoint overhead; it also
+    records per-micro-batch ``triggerExecution`` durations from the
+    query's progress log (``registry_incremental_batch_ms``).
+
+Every drain also reports executor task seconds (min over the passes):
+the jobs of a streaming query run in a Spark job group named after its
+run id, read through ``scale_probe.group_work`` once the drain ends. A
+throughput dip with flat task time points at the host, one with task
+time up at the code.
 
 Prints one ``RESULT {...}`` JSON line with 1-minute loadavg markers
-(start / post-warm / end) so BASELINE.md entries carry their load
-context. Round 15 (VERDICT r14 What's-wrong #1): the line also carries
-the bench reference vectors (``refs`` — cpu / single- and 32-thread
-memory-bandwidth probes at start / post-warm / between sections / end)
-and executor task seconds per pipeline and per registry drain (the
-same REST stage watermark bench.py uses) — so a throughput dip is
-attributable to the host (task flat, mem_ref_mt spiking) vs the code
-(task up) from the committed artifact alone, instead of the round-14
-situation where a 25–50 % all-surface dip was only *probably* host.
-Round 16 (VERDICT r15 What's-wrong #2 + #6): the anchor now ACTS on
-its references — each measurement window (a pipelines pass, a registry
-configuration) is classified against ``bench.MEM_REF_MT_QUIET_MAX``
-and the RESULT line carries a ``degraded`` map (machine-flagged, not
-narrated); the incremental registry drain also records per-micro-batch
-``triggerExecution`` durations from the query progress log
-(``registry_incremental_batch_ms``) so the steady-trigger figure's
-per-batch shape is visible.
+(start / post-warm / end).
 Usage: ``python tools/stream_anchor.py [--passes N]``.
 """
 
@@ -54,13 +42,15 @@ import sys
 import tempfile
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # task attribution reads the status REST API -> UI on for this session
 # (must be set before the session is built)
 os.environ.setdefault("SPARK_GRAFT_UI", "true")
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F  # noqa: E402
+from scale_probe import group_work  # noqa: E402
 
 REGISTRY_SCHEMA = {
     "type": "object",
@@ -74,15 +64,108 @@ REGISTRY_SCHEMA = {
 }
 
 
-def _registry_drain(
-    spark,
-    raw,
-    n: int,
-    single_batch: bool,
-    wm=None,
-    tasks=None,
-    batch_ms=None,
-) -> float:
+def _load1() -> float:
+    """1-minute loadavg marker."""
+    return round(os.getloadavg()[0], 2)
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Session warm-up: JVM, codegen, parquet footer caches, and the
+    Python worker fleet (the first mapInPandas in a session forks the
+    Arrow workers, a one-time cost that would otherwise land on
+    whichever drain reaches Python first)."""
+    from real_time_video_streaming_analytics_lakehouse_spark.plans import CATALOG
+    from real_time_video_streaming_analytics_lakehouse_spark.sources.readers import (
+        load_table,
+    )
+
+    CATALOG["event_type_rank"].fn(spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    spark.range(64).repartition(32).mapInPandas(
+        lambda batches: batches, "id LONG"
+    ).write.format("noop").mode("overwrite").save()
+    for warm_table in ("documents", "embeddings"):
+        load_table(spark, sf_dir, warm_table).write.format("noop").mode(
+            "overwrite"
+        ).save()
+
+
+def _drain(spark, start_query, what: str):
+    """Start a streaming query via ``start_query()`` and wait for its
+    availableNow drain. Returns (wall seconds, executor task seconds of
+    the query's job group, the finished query)."""
+    t0 = time.perf_counter()
+    q = start_query()
+    finished = q.awaitTermination(600)
+    elapsed = time.perf_counter() - t0
+    if not finished:
+        # A partial drain would overstate events/s, and deleting the
+        # work dir under a live query corrupts the run — fail loud.
+        q.stop()
+        raise RuntimeError(f"{what} did not finish within 600s")
+    tot, _ = group_work(spark, str(q.runId))
+    return elapsed, round(tot["task_s"], 3), q
+
+
+def _streaming_throughput(spark, sf_dir: str) -> tuple[dict, dict]:
+    """Drain the events table through each of the reference's three
+    streaming pipelines (file source → watermarked window agg →
+    parquet sink) via Trigger.AvailableNow. Returns (events/second,
+    executor task seconds), each keyed by pipeline."""
+    from real_time_video_streaming_analytics_lakehouse_spark.sources.readers import (
+        load_table,
+    )
+    from real_time_video_streaming_analytics_lakehouse_spark.streaming.pipelines import (
+        anomaly_stream,
+        content_popularity_stream,
+        stream_events_from_files,
+        user_activity_stream,
+    )
+
+    work = tempfile.mkdtemp(prefix="stream_anchor_pipe_")
+    try:
+        events = load_table(spark, sf_dir, "events").withColumn(
+            # watermarks require TIMESTAMP (not NTZ); session is UTC so
+            # the wall-clock values are unchanged
+            "ts", F.col("ts").cast("timestamp")
+        )
+        n = events.count()
+        src_dir = f"{work}/src"
+        # 32 files so maxFilesPerTrigger batches into multiple triggers
+        events.repartition(32).write.parquet(src_dir)
+        schema = spark.read.parquet(src_dir).schema
+        rates: dict[str, float] = {}
+        tasks: dict[str, float] = {}
+        for tag, build in (
+            ("user_activity", user_activity_stream),
+            ("content_popularity", content_popularity_stream),
+            ("anomaly", anomaly_stream),
+        ):
+            src = stream_events_from_files(
+                spark, src_dir, schema, max_files_per_trigger=8
+            )
+            elapsed, tasks[tag], _ = _drain(
+                spark,
+                lambda: (
+                    build(src)
+                    .writeStream.format("parquet")
+                    .option("path", f"{work}/out_{tag}")
+                    .option("checkpointLocation", f"{work}/ckpt_{tag}")
+                    .trigger(availableNow=True)
+                    .start()
+                ),
+                f"streaming drain ({tag})",
+            )
+            rates[tag] = round(n / elapsed, 1)
+        return rates, tasks
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _registry_drain(spark, raw, n: int, single_batch: bool):
+    """One registry-ingest drain of ``raw``. Returns (events/second,
+    executor task seconds, per-micro-batch ``triggerExecution`` ms)."""
     from real_time_video_streaming_analytics_lakehouse_spark.sources.registry import (
         SchemaRegistry,
     )
@@ -100,38 +183,22 @@ def _registry_drain(
         reg.register("video-events-value", REGISTRY_SCHEMA)
         kwargs = {} if single_batch else {"max_files_per_trigger": 8}
         src = stream_events_from_files(spark, src_dir, schema, **kwargs)
-        if wm is not None:
-            wm.advance()
-        t0 = time.perf_counter()
-        q = run_registry_ingest(
-            src, reg,
-            table_root=f"{work}/tables",
-            dlq_path=f"{work}/dlq",
-            checkpoint_path=f"{work}/ckpt",
+        elapsed, task_s, q = _drain(
+            spark,
+            lambda: run_registry_ingest(
+                src, reg,
+                table_root=f"{work}/tables",
+                dlq_path=f"{work}/dlq",
+                checkpoint_path=f"{work}/ckpt",
+            ),
+            "registry drain",
         )
-        finished = q.awaitTermination(600)
-        elapsed = time.perf_counter() - t0
-        if not finished:
-            q.stop()
-            raise RuntimeError("registry drain did not finish in 600s")
-        if wm is not None and tasks is not None:
-            task_ms = wm.delta_ms()
-            if task_ms is not None:
-                tasks.append(round(task_ms / 1000.0, 3))
-        if batch_ms is not None:
-            # Per-micro-batch trigger durations from the query's own
-            # progress log (round 16, VERDICT r15 #6): the incremental
-            # path's figure is a 4-micro-batch mean — the per-batch
-            # vector shows WHERE time went (skewed first batch vs
-            # uniform per-trigger cost) without any extra measurement.
-            batch_ms.append(
-                [
-                    p.durationMs.get("triggerExecution")
-                    for p in q.recentProgress
-                    if p.get("durationMs")
-                ]
-            )
-        return round(n / elapsed, 1)
+        batch_ms = [
+            p.durationMs.get("triggerExecution")
+            for p in q.recentProgress
+            if p.get("durationMs")
+        ]
+        return round(n / elapsed, 1), task_s, batch_ms
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -146,17 +213,6 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    # the warm-up, loadavg, reference and task-attribution helpers are
-    # bench.py's OWN (shared, not copied): the whole point of this
-    # tool is one method that cannot drift between the batch bench and
-    # the streaming anchor
-    from bench import (
-        TaskTimeWatermark,
-        _load1,
-        _streaming_throughput,
-        ref_vector,
-        warm_up,
-    )
     from real_time_video_streaming_analytics_lakehouse_spark.session import get_spark
     from real_time_video_streaming_analytics_lakehouse_spark.sources.readers import (
         load_table,
@@ -164,53 +220,22 @@ def main() -> None:
 
     spark = get_spark("stream_anchor")
     spark.sparkContext.setLogLevel("ERROR")
-    wm = TaskTimeWatermark(spark)
-    refs = [ref_vector()]
     out: dict = {"load_start": _load1(), "passes": args.passes}
 
     warm_up(spark, args.sf_dir)
     events = load_table(spark, args.sf_dir, "events")
     out["load_post_warm"] = _load1()
-    refs.append(ref_vector())
 
-    # Round 16 (VERDICT r15 What's-wrong #2): the anchor ACTS on its
-    # own references instead of leaving interpretation to the reader —
-    # every measurement window (one pipelines pass / one registry
-    # configuration) is classified against the committed quiet band,
-    # and the RESULT line carries a 'degraded' map so a future
-    # throughput dip (like r14's 9.7k-20.1k) is machine-flagged.
-    from bench import MEM_REF_MT_QUIET_MAX
-
-    def _window_degraded(i_before: int, i_after: int) -> bool:
-        return (
-            max(
-                refs[i_before]["mem_ref_mt_sec"],
-                refs[i_after]["mem_ref_mt_sec"],
-            )
-            > MEM_REF_MT_QUIET_MAX
-        )
-
-    degraded: dict = {}
     best: dict = {}
     task_best: dict = {}
-    pipeline_windows: list = []
     for _ in range(args.passes):
-        tasks: dict = {}
-        i_before = len(refs) - 1
-        rates = _streaming_throughput(spark, args.sf_dir, task_out=tasks)
-        refs.append(ref_vector())
-        pipeline_windows.append(
-            _window_degraded(i_before, len(refs) - 1)
-        )
+        rates, tasks = _streaming_throughput(spark, args.sf_dir)
         for k, v in rates.items():
             best[k] = max(best.get(k, 0.0), v)
         for k, v in tasks.items():
-            # min task = the least-disturbed execution (bench rule)
-            task_best[k] = min(task_best.get(k, float("inf")), v)
+            task_best[k] = min(task_best.get(k, v), v)
     out["pipelines_ev_s"] = best
-    if task_best:
-        out["pipelines_task_sec"] = task_best
-    degraded["pipelines_passes"] = pipeline_windows
+    out["pipelines_task_sec"] = task_best
 
     n = events.count()
     raw = events.select(
@@ -220,34 +245,19 @@ def main() -> None:
         ).alias("value"),
     )
     for tag, single in (("single_batch", True), ("incremental", False)):
-        tasks_l: list = []
-        batches_l: list = []
-        rates: list = []
-        pass_flags: list = []
-        # one bracket per DRAIN, not per configuration (review
-        # finding, round 16): a burst confined to one pass must not
-        # hide behind the other pass's quiet end-sample
+        rates_l, tasks_l, batches_l = [], [], []
         for _ in range(args.passes):
-            i_before = len(refs) - 1
-            rates.append(
-                _registry_drain(
-                    spark, raw, n, single,
-                    wm=wm, tasks=tasks_l,
-                    batch_ms=None if single else batches_l,
-                )
-            )
-            refs.append(ref_vector())
-            pass_flags.append(_window_degraded(i_before, len(refs) - 1))
-        degraded[f"registry_{tag}"] = pass_flags
-        out[f"registry_{tag}_ev_s"] = max(rates)
-        out[f"registry_{tag}_runs"] = rates
-        if tasks_l:
-            out[f"registry_{tag}_task_sec"] = min(tasks_l)
-        if batches_l:
-            out[f"registry_{tag}_batch_ms"] = batches_l
+            rate, task_s, batch_ms = _registry_drain(spark, raw, n, single)
+            rates_l.append(rate)
+            tasks_l.append(task_s)
+            batches_l.append(batch_ms)
+        out[f"registry_{tag}_ev_s"] = max(rates_l)
+        out[f"registry_{tag}_runs"] = rates_l
+        out[f"registry_{tag}_task_sec"] = min(tasks_l)
+        if not single:
+            # the per-micro-batch shape of the steady-trigger figure
+            out["registry_incremental_batch_ms"] = batches_l
     out["load_end"] = _load1()
-    out["refs"] = refs
-    out["degraded"] = degraded
     print("RESULT " + json.dumps(out))
     spark.stop()
 
