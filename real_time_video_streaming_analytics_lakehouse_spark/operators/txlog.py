@@ -96,7 +96,12 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import (
+    IntegralType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from .commitstore import (
     CommitConflictError,
@@ -677,6 +682,37 @@ def _prune(snap: Snapshot, predicates) -> list[dict]:
         ]
         return out
     return [f_ for f_ in files.values() if _keep_entry(f_, predicates)]
+
+
+def _key_range_predicates(key_set, key_schema: StructType,
+                          partition_by: list[str]) -> list[tuple]:
+    """``[(k, ">=", min), (k, "<=", max)]`` over the batch's MERGE keys
+    (``key_set``, a pyarrow table), for :func:`_prune` to skip probe
+    files that cannot hold any of them. A key column contributes only
+    when its order agrees with the join's equality and with the logged
+    bounds: an integral column, or a binary-collated string column
+    that is not a partition column (a logged partition value is the
+    hive-escaped directory name, which need not order like the value),
+    and only when no batch key is NULL there (a NULL key matches NULL
+    null-safely, and min/max stats skip NULLs). Floats (NaN, -0.0),
+    collated strings and every other type keep every file."""
+    import pyarrow.compute as pc
+
+    preds = []
+    for f_ in key_schema.fields:
+        t = f_.dataType
+        if not (
+            isinstance(t, IntegralType)
+            or (t == StringType() and f_.name not in partition_by)
+        ):
+            continue
+        col = key_set.column(f_.name)
+        if col.null_count:
+            continue
+        mm = pc.min_max(col)
+        preds += [(f_.name, ">=", mm["min"].as_py()),
+                  (f_.name, "<=", mm["max"].as_py())]
+    return preds
 
 
 # ---------------------------------------------------------------------------
@@ -2276,13 +2312,29 @@ class TxTable:
         tested :func:`..operators.merge.merge_upsert`, applied here at
         file granularity.
 
-        The touched-file probe joins the target against the source's
-        distinct keys. Key distribution is size-gated: at or below
-        ``max_broadcast_keys`` distinct keys (counted with an
-        early-exit ``limit(n+1)`` scan) the key set is broadcast — the
-        bounded-CDC-batch fast path; above it the joins fall back to
-        shuffle hash/sort-merge so an unbounded source can never OOM
-        the driver or executors with a forced broadcast.
+        The source's distinct keys come to the driver as one Arrow
+        table (a ``limit(max_broadcast_keys + 1)`` job); its row count
+        is the size gate. At or below ``max_broadcast_keys`` keys — the
+        bounded-CDC-batch fast path:
+
+        * the key set is broadcast from the driver as a local relation;
+        * the touched-file probe reads only the files that can hold a
+          key: each integral or binary-collated string key column with
+          no NULL among the batch's keys hands its ``[min, max]`` to
+          :func:`_prune` (see :func:`_key_range_predicates`). When no
+          file survives, the merge is a pure append and runs no probe;
+        * the probe returns the matched ``(file, key)`` pairs, so the
+          touched files and the matched keys come from one job, and
+          every later query joins on the matched keys alone.
+
+        Above the gate the joins fall back to shuffle hash/sort-merge
+        against a checkpointed key set and the probe reads every live
+        file, so an unbounded source can never OOM the driver or
+        executors with a forced broadcast.
+
+        A source that changes nothing — no rows and no schema change —
+        commits no version and returns the current one, as
+        :meth:`delete`/:meth:`update` do when nothing matches.
 
         ``merge_schema=True`` lets the source carry new columns
         (appended nullable) or widened types, evolving the table schema
@@ -2309,24 +2361,21 @@ class TxTable:
         else:
             _require_compatible(snap.schema, src.schema)
         src = _align(src, target_schema)
+        self._last_merge_used_broadcast = None
         if not snap.files:
-            v = self.write(src, mode="append", operation="MERGE",
-                           params=params, merge_schema=merge_schema)
-            self._last_merge_used_broadcast = None
-            return v
+            return self._commit_insert_only(src, snap, params, schema_json,
+                                            target_schema)
 
-        # Materialize the distinct key set once — it feeds the probe,
-        # the anti-join, and both CDC branches. ONE job: the count is
-        # the checkpoint-materializing action itself (a limit(n+1)
-        # early-exit count would be a separate job whose skipped
-        # partitions the probe recomputes anyway — a false economy).
-        keys_df = src.select(*keys).distinct().localCheckpoint(eager=False)
-        n_keys = keys_df.count()
-        use_broadcast = n_keys <= max_broadcast_keys
+        key_schema = StructType([target_schema[k] for k in keys])
+        key_set = (
+            src.select(*keys).distinct().limit(max_broadcast_keys + 1)
+            .toArrow()
+        )
+        if key_set.num_rows == 0:
+            return self._commit_insert_only(None, snap, params, schema_json,
+                                            target_schema)
+        use_broadcast = key_set.num_rows <= max_broadcast_keys
         self._last_merge_used_broadcast = use_broadcast
-
-        def gate(df: DataFrame) -> DataFrame:
-            return F.broadcast(df) if use_broadcast else df
 
         def ns_join(left: DataFrame, right: DataFrame, how: str) -> DataFrame:
             # NULL-SAFE key join: plain `on=keys` never matches
@@ -2342,27 +2391,58 @@ class TxTable:
                 cond = c if cond is None else cond & c
             return left.join(right, cond, how)
 
+        if use_broadcast:
+            keys_df = F.broadcast(
+                self.spark.createDataFrame(key_set, key_schema)
+            )
+            preds = _key_range_predicates(key_set, key_schema,
+                                          snap.partition_by)
+            entries = _prune(snap, preds) if preds else list(
+                snap.files.values()
+            )
+            if not entries:
+                return self._commit_insert_only(src, snap, params,
+                                                schema_json, target_schema)
+        else:
+            keys_df = src.select(*keys).distinct().localCheckpoint(
+                eager=False
+            )
+            entries = list(snap.files.values())
+
         # Probe with the positional read (_dv_rel = the scan's
         # root-relative _metadata.file_path, captured at scan level):
         # input_file_name() is undefined both above shuffles and on the
         # multi-source plans every DV-applying read produces.
         target_fields = [f.name for f in target_schema.fields]
-        tgt_pos = self._read_entries(
-            list(snap.files.values()), target_schema, snap.partition_by,
-            with_position=True,
+        probe = ns_join(
+            self._read_entries(entries, target_schema, snap.partition_by,
+                               with_position=True),
+            keys_df, "left_semi",
         )
-        hits = (
-            ns_join(tgt_pos, gate(keys_df), "left_semi")
-            .groupBy("_dv_rel")
-            .count()
-            .collect()
-        )
-        counts = {r["_dv_rel"]: r["count"] for r in hits}
+        matched_keys = None
+        counts: dict[str, int] = {}
+        if use_broadcast:
+            # count aliased to the reserved _dv_pos: no key can be named so
+            hits = (
+                probe.groupBy("_dv_rel", *keys)
+                .agg(F.count(F.lit(1)).alias("_dv_pos"))
+                .toArrow()
+            )
+            for rel, n in zip(hits.column("_dv_rel").to_pylist(),
+                              hits.column("_dv_pos").to_pylist()):
+                counts[rel] = counts.get(rel, 0) + n
+            # A touched file's row has a source key exactly when its key
+            # was matched, so the later joins need only the matched keys.
+            keys_df = matched_keys = F.broadcast(
+                self.spark.createDataFrame(hits.select(keys), key_schema)
+            )
+        else:
+            for r in probe.groupBy("_dv_rel").count().collect():
+                counts[r["_dv_rel"]] = r["count"]
         touched = sorted(counts)
         if not touched:
-            v = self._commit_insert_only(src, snap, params, schema_json,
-                                         target_schema)
-            return v
+            return self._commit_insert_only(src, snap, params, schema_json,
+                                            target_schema)
 
         # Merge-on-read split (see delete()): files under the DV
         # threshold get their MATCHED rows deletion-vectored and the
@@ -2377,7 +2457,7 @@ class TxTable:
                 snap.partition_by, with_position=True,
             )
             matched_dv = ns_join(
-                tpos_dv, gate(keys_df), "left_semi"
+                tpos_dv, keys_df, "left_semi"
             ).localCheckpoint(eager=False)
         # Probe the TOUCHED files, not the full table: every target row
         # with a matched key is by construction in a touched file (the
@@ -2391,16 +2471,17 @@ class TxTable:
                 [snap.files[p] for p in rw_set], target_schema,
                 snap.partition_by,
             )
-            pre = ns_join(tdf, gate(keys_df), "left_semi")
-            survivors = ns_join(tdf, gate(keys_df), "left_anti")
+            pre = ns_join(tdf, keys_df, "left_semi")
+            survivors = ns_join(tdf, keys_df, "left_anti")
         if matched_dv is not None:
             mdv = matched_dv.select(*target_fields)
             pre = mdv if pre is None else pre.unionByName(mdv)
-        matched_keys = (
-            pre.select(*keys).distinct().localCheckpoint(eager=False)
-        )
-        upd_src = ns_join(src, gate(matched_keys), "left_semi")
-        inserts = ns_join(src, gate(matched_keys), "left_anti")
+        if matched_keys is None:
+            matched_keys = (
+                pre.select(*keys).distinct().localCheckpoint(eager=False)
+            )
+        upd_src = ns_join(src, matched_keys, "left_semi")
+        inserts = ns_join(src, matched_keys, "left_anti")
         # Columns the ORIGINAL source doesn't carry must keep the
         # TARGET's values on matched rows (Delta updateAll +
         # schema.autoMerge leaves them unchanged) — _align's null-fill
@@ -2422,7 +2503,8 @@ class TxTable:
                 ccond = c if ccond is None else ccond & c
             updates = (
                 upd_src.drop(*missing)
-                .join(gate(carried), ccond)
+                .join(F.broadcast(carried) if use_broadcast else carried,
+                      ccond)
                 .select(*target_fields)
             )
         else:
@@ -2456,13 +2538,20 @@ class TxTable:
             dv_adds=dv_adds, dv_bundle=bundle,
         )
 
-    def _commit_insert_only(self, src: DataFrame, snap: Snapshot,
+    def _commit_insert_only(self, src: DataFrame | None, snap: Snapshot,
                             params: dict | None, schema_json: str | None,
                             target_schema: StructType) -> int:
         """MERGE with zero matched keys: pure append of the source (plus
-        the schema evolution, if any) — no files rewritten."""
-        adds = self._stage_files(src, snap.version + 1, snap.partition_by,
-                                 None, snap.properties)
+        the schema evolution, if any) — no files rewritten. ``src=None``
+        is a source known to be empty. Nothing to add and no schema
+        change commits nothing: the current version is returned."""
+        adds = (
+            self._stage_files(src, snap.version + 1, snap.partition_by,
+                              None, snap.properties)
+            if src is not None else []
+        )
+        if not adds and schema_json is None:
+            return snap.version
 
         def action(v: int) -> dict:
             a = {

@@ -9,10 +9,10 @@ from pyspark.sql import DataFrame
 
 class ScaleGuardrailError(ValueError):
     """An operator refused to run because a derived corpus bound was
-    exceeded without an explicit opt-in (round 14: the ngram exact
-    arm's all-pairs ceiling). A DEDICATED type so tooling (the scale
-    probe) can distinguish an intentional refusal from any other
-    ValueError a construction path might raise."""
+    exceeded without an explicit opt-in (e.g. the ngram exact arm's
+    all-pairs ceiling). A DEDICATED type so tooling (the scale probe)
+    can distinguish an intentional refusal from any other ValueError a
+    construction path might raise."""
 
 
 def require_local_dir(path: str) -> str:
@@ -38,20 +38,19 @@ def require_local_dir(path: str) -> str:
 def local_relation(spark, rows, schema: str) -> DataFrame:
     """Bounded driver-side rows → DataFrame, evaluated in the JVM.
 
-    A plain ``createDataFrame(list_of_tuples)`` builds a PICKLED Python
-    RDD: every materialization (each broadcast build, each action) runs
-    a ``defaultParallelism``-task Python-worker stage, and on this
-    Spark/Python build each such task pays ~0.15-0.4 s of worker
-    protocol overhead (``worker_util.setup_spark_files`` calls
-    ``importlib.invalidate_caches()`` per task, and Python 3.11's
-    ``zipimporter.invalidate_caches`` unconditionally re-reads the
-    whole pyspark.zip table of contents) — measured 11 s task-time /
-    0.7 s wall for a SEVEN-ROW mapping table on local[32] (guide §4:
-    eliminate the Python boundary; §1.2: per-task work). The Arrow
-    path (``createDataFrame(pandas_df)`` with
-    ``spark.sql.execution.arrow.pyspark.enabled``) ships the same rows
-    as Arrow record batches decoded entirely JVM-side: measured
-    0.1 s wall, ZERO Python tasks, identical values and schema.
+    The rows go through ``createDataFrame(pandas_df)`` with
+    ``spark.sql.execution.arrow.pyspark.enabled``: they ship as Arrow
+    record batches decoded JVM-side into a LocalRelation, so no
+    materialization runs a Python worker. A plain
+    ``createDataFrame(list_of_tuples)`` instead builds a pickled Python
+    RDD, and every materialization of it (each broadcast build, each
+    action) runs a ``defaultParallelism``-task Python-worker stage
+    whose per-task worker start-up dwarfs the rows' work (measurements
+    in BASELINE.md).
+
+    Zero Python tasks is not zero jobs: broadcasting the relation still
+    runs one JVM job of ``min(rows, defaultParallelism)`` tasks per
+    query that builds the broadcast.
 
     Rows must be position-aligned tuples/lists matching ``schema`` (a
     DDL string). Falls back to the plain path for empty input (nothing
@@ -89,13 +88,9 @@ def local_relation(spark, rows, schema: str) -> DataFrame:
 #: :func:`ensure_parallelism` — ~64 KB of compressed text is ~0.5–1 MB
 #: raw ≈ 0.1–0.3 s of shingle/hash CPU per task, comfortably above the
 #: measured per-task fixed overhead (~20–50 ms scheduling + Python
-#: worker protocol) while still fanning real work out. Round 16: the
-#: previous target (always ``defaultParallelism``) spread a 584 KB
-#: corpus over 32 near-empty tasks; interleaved A/B at sf0.1 measured
-#: doc_dedup_fingerprints wall 4.4 → 3.1 s (task 92 → 20 s) and
-#: ngram_jaccard_top_pairs wall 3.5 → 2.6 s (task 59 → 20 s) at the
-#: bytes-derived count vs 32 (guide §2: derive partitioning from input
-#: size, not a constant tuned for either local mode or the cluster).
+#: worker protocol) while still fanning real work out. Partitioning is
+#: derived from input size, not a constant tuned for either local mode
+#: or the cluster (measurements in BASELINE.md).
 ENSURE_PARALLELISM_BYTES_PER_PARTITION = 64 * 1024
 
 
@@ -104,7 +99,7 @@ def _scan_bytes(df: DataFrame) -> int | None:
     when the plan has no file scan (ExistingRDD, in-memory relation)
     or any file is not local/stat-able.
 
-    Single-scan assumption (ADVICE r16): ``inputFiles`` sums over
+    Single-scan assumption: ``inputFiles`` sums over
     EVERY scan in the plan, so on a multi-table frame (a join) this
     would overcount and over-provision the repartition target. Every
     current caller passes a single-table scan; a caller wrapping a
@@ -132,15 +127,15 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     math) runs single-threaded. One cheap round-robin shuffle of the
     narrow input unlocks the cores the input can actually feed.
 
-    The target is derived from the INPUT SIZE (round 16, guide §2.5):
-    one partition per :data:`ENSURE_PARALLELISM_BYTES_PER_PARTITION`
-    of compressed input, clamped to [2, defaultParallelism] — a tiny
-    corpus must not be sprayed across ``defaultParallelism`` near-empty
-    tasks whose fixed per-task overhead (scheduling, Python worker
-    protocol, block-manager round trips) dwarfs their work; a corpus
-    big enough to feed every core still gets every core. When the
+    The target is derived from the INPUT SIZE: one partition per
+    :data:`ENSURE_PARALLELISM_BYTES_PER_PARTITION` of compressed input,
+    clamped to [2, defaultParallelism] — a tiny corpus must not be
+    sprayed across ``defaultParallelism`` near-empty tasks whose fixed
+    per-task overhead (scheduling, Python worker protocol,
+    block-manager round trips) dwarfs their work; a corpus big enough
+    to feed every core still gets every core. When the
     input size is unknowable (no file scan under ``df``) the target
-    falls back to ``defaultParallelism`` (the pre-round-16 behavior).
+    falls back to ``defaultParallelism``.
 
     At 100 TB inputs already carry thousands of partitions, so this is a
     no-op there — it never *reduces* partitioning and never repartitions
@@ -151,9 +146,9 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
         target = min_partitions
     else:
         nbytes = _scan_bytes(df)
-        # Floor at 2 ONLY when the session has ≥2 cores (ADVICE r16):
-        # on local[1] the old max(2, ...) exceeded defaultParallelism
-        # and added a repartition shuffle that buys nothing.
+        # Floor at 2 ONLY when the session has ≥2 cores: on local[1]
+        # a floor of 2 would exceed defaultParallelism and add a
+        # repartition shuffle that buys nothing.
         floor = min(2, sc.defaultParallelism)
         target = (
             sc.defaultParallelism

@@ -44,26 +44,23 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Arrow for driver<->JVM transfers (guide §6): toPandas and
+    # Arrow for driver<->JVM transfers: toPandas and
     # createDataFrame(pandas) go through Arrow record batches decoded
     # JVM-side instead of pickled Python RDDs. Load-bearing for
     # operators.util.local_relation — the pickle path materializes a
     # defaultParallelism-task PYTHON stage per broadcast build of even
-    # a 7-row mapping table (~0.3 s/task of worker protocol overhead
-    # on this build; see local_relation's docstring for the measured
-    # numbers). Runtime-settable, so driver-created vanilla sessions
-    # pick it up through apply_runtime_confs.
+    # a 7-row mapping table. Runtime-settable, so driver-created
+    # vanilla sessions pick it up through apply_runtime_confs.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # File-listing parallelism for reads that pass explicit file lists
     # (the native txtable read hands Spark one path per live entry).
     # Spark's default is 10000 TASKS whenever >32 paths are listed —
     # at 20k files that is 10000 near-empty tasks whose scheduling
-    # overhead alone costs ~20 s on local[32] (measured,
-    # tools/maintenance_probe.py round 9: plan construction 23.2 s at
-    # 20k files, ~21 s of it the listing job). 4×cores tasks keep the
-    # listing distributed (object stores still hide per-stat latency)
-    # without drowning in scheduler overhead; a 1000-executor
-    # deployment should raise it along with cluster size.
+    # overhead dominates plan construction (measured with
+    # tools/maintenance_probe.py; numbers in BASELINE.md). 4×cores
+    # tasks keep the listing distributed (object stores still hide
+    # per-stat latency) without drowning in scheduler overhead; a
+    # 1000-executor deployment should raise it along with cluster size.
     "spark.sql.sources.parallelPartitionDiscovery.parallelism": str(
         max(4 * _env_cpus(), 64)
     ),

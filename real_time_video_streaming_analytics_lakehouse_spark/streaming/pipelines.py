@@ -325,9 +325,21 @@ def run_merge_stream_versioned(
     job. Two independent writers (distinct app_ids) interleave safely:
     optimistic concurrency in the log serializes their commits.
 
+    A micro-batch that changes nothing — such as the no-data batch a
+    watermark advance triggers — commits no version, so history holds
+    one MERGE version per batch that carried rows. The replay skip
+    above is unchanged: it compares against the last COMMITTED
+    ``txnVersion``, and replaying an empty batch commits nothing again.
+
     Scale: only files holding matched keys rewrite per batch
-    (``TxTable.merge`` does a size-gated semi-join probe against the
-    log's file list), so commit cost tracks batch size, not table size.
+    (``TxTable.merge`` semi-joins the batch's keys against the live
+    files). The probe reads every live file whose min/max stats or
+    partition values can hold a batch key. So commit cost tracks batch
+    size, not table size, only when the keys are range-clustered
+    integral or string columns: a batch of new, increasing ids (an
+    event id) reads no file and commits as a pure append. Keys that
+    span every file's range, or floating-point/temporal keys, probe the
+    whole table.
 
     ``merge_schema=True`` is the reference's ``schema.autoMerge`` for
     streaming MERGE (``delta-lake/delta_setup.py:87``): a micro-batch

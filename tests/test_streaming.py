@@ -273,6 +273,54 @@ def test_run_merge_stream_accepts_file_uri_target(spark, tmp_path):
     assert sorted(r["event_id"] for r in rows) == [1, 2]
 
 
+def test_run_merge_stream_versioned_no_data_batch_commits_nothing(
+    spark, tmp_path
+):
+    """Watermarked dedup into the versioned MERGE sink: the watermark
+    advance after batch 2 triggers a no-data micro-batch, and that batch
+    must leave no version — history holds exactly one MERGE per batch
+    that carried rows, and the last txnVersion is the last such batch."""
+    from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import TxTable
+    from real_time_video_streaming_analytics_lakehouse_spark.streaming import (
+        dedup_stream_within_watermark,
+    )
+
+    src_dir = str(tmp_path / "nodata_src")
+    t = dt.datetime(2024, 1, 1, 12, 0, 0)
+    batches = [
+        [Row(event_id=1, ts=t, user_id=1, event_type="view", value=1.0)],
+        # two hours later: the 30-minute watermark passes id 1's expiry
+        [Row(event_id=2, ts=t + dt.timedelta(hours=2), user_id=2,
+             event_type="view", value=2.0)],
+    ]
+    for i, rows in enumerate(batches):
+        before = set(glob.glob(f"{src_dir}/*.parquet"))
+        spark.createDataFrame(rows).coalesce(1).write.mode("append").parquet(src_dir)
+        for f in set(glob.glob(f"{src_dir}/*.parquet")) - before:
+            os.utime(f, (1700000000 + i * 100, 1700000000 + i * 100))
+    src = stream_events_from_files(
+        spark, src_dir, spark.read.parquet(src_dir).schema, max_files_per_trigger=1
+    )
+    target = f"{tmp_path}/nodata_target"
+    q = run_merge_stream_versioned(
+        dedup_stream_within_watermark(src), target, f"{tmp_path}/nodata_ckpt",
+        keys=["event_id"], precedence_col="ts", app_id="nodata",
+    )
+    q.awaitTermination(120)
+    progress = q.recentProgress
+    data_batches = [p["batchId"] for p in progress if p["numInputRows"] > 0]
+    assert data_batches == [0, 1]
+    assert any(p["numInputRows"] == 0 for p in progress)  # the no-data batch
+
+    tx = TxTable(spark, target)
+    history = tx.history().collect()
+    merges = [r for r in history if r.operation == "MERGE"]
+    assert len(merges) == len(data_batches)
+    assert [r.operation for r in history] == ["MERGE", "MERGE", "CREATE TABLE"]
+    assert tx.txn_version("nodata") == data_batches[-1]
+    assert sorted(r["event_id"] for r in tx.read().collect()) == [1, 2]
+
+
 def test_late_data_dropped_after_watermark(spark, tmp_path):
     """Rows older than the current watermark are dropped (T1/T3).
 

@@ -631,6 +631,178 @@ def test_merge_size_gate_broadcast_vs_shuffle(spark, table):
     assert got == {1: 10, 2: 20, 3: 30, 4: 40, 5: 50}
 
 
+# -- merge: empty sources, key-range probe pruning ---------------------------
+
+
+def _log_entries(root: str) -> list[str]:
+    return sorted(os.listdir(os.path.join(root, "_txlog")))
+
+
+def _stage_dirs(root: str) -> list[str]:
+    parent, name = os.path.split(root)
+    return [d for d in os.listdir(parent) if d.startswith(name + "__")]
+
+
+def test_merge_empty_source_commits_nothing(spark, table):
+    """A MERGE whose source has no rows changes nothing, so it writes no
+    log entry and stages nothing — on a table with files and on one
+    without — and returns the current version."""
+    empty = _df(spark, [(1, "a", 1)]).limit(0)
+    v0 = table.merge(empty, keys=["id"])
+    assert v0 == table.snapshot().version == 0
+    table.write(_df(spark, [(1, "a", 1), (2, "b", 2)]))
+    before = _log_entries(table.root)
+    assert table.merge(empty, keys=["id"]) == 1
+    assert _log_entries(table.root) == before
+    assert _stage_dirs(table.root) == []
+    assert [r.operation for r in table.history().collect()] == [
+        "APPEND", "CREATE TABLE"
+    ]
+
+
+def test_merge_empty_source_still_commits_schema_change(spark, table):
+    """An empty source that carries a new column under
+    ``merge_schema=True`` still evolves the schema, in a commit that
+    adds no file."""
+    table.write(_df(spark, [(1, "a", 1)]))
+    empty = spark.createDataFrame([], "id BIGINT, day STRING, v INT, note STRING")
+    v = table.merge(empty, keys=["id"], merge_schema=True)
+    assert v == 2
+    assert "note" in table.snapshot().schema.fieldNames()
+    assert table.history().collect()[0].numAddedFiles == 0
+    assert [tuple(r) for r in table.read().collect()] == [(1, "a", 1, None)]
+
+
+def _merge_matches_upsert(spark, t, src, keys):
+    """TxTable.merge of ``src`` leaves exactly the rows the row-level
+    reference ``merge_upsert`` computes from the same snapshot (rows
+    compared by repr, so NaN keys compare equal)."""
+    from real_time_video_streaming_analytics_lakehouse_spark.operators.merge import (
+        merge_upsert,
+    )
+
+    cols = t.read().columns
+    want = sorted(
+        repr(r) for r in merge_upsert(t.read(), src, keys).select(*cols).collect()
+    )
+    t.merge(src, keys=keys)
+    got = sorted(repr(r) for r in t.read().select(*cols).collect())
+    assert got == want
+
+
+def test_merge_pruning_keeps_null_key_matches(spark, tmp_path):
+    """NULLs on both sides: a key column with a NULL in the batch gives
+    no range (NULL matches NULL null-safely, and min/max stats skip
+    NULLs), while the other key column still prunes. Each write is one
+    file, so a file's stats cover its NULL-key rows too."""
+    ddl = "a BIGINT, b STRING, v INT"
+    t = TxTable.create(spark, str(tmp_path / "nk"), StructType.fromDDL(ddl))
+    for rows in ([(1, "x", 0), (2, None, 0), (None, "q", 0)],
+                 [(10, None, 0), (11, "m", 0), (12, None, 0)]):
+        t.write(spark.createDataFrame(rows, ddl).coalesce(1))
+    # b's non-NULL keys lie outside the second file's b range
+    _merge_matches_upsert(spark, t, spark.createDataFrame(
+        [(10, None, 7), (20, "z", 9)], ddl), ["a", "b"])
+    # a's non-NULL keys lie outside the first file's a range
+    _merge_matches_upsert(spark, t, spark.createDataFrame(
+        [(None, "q", 5), (5, "x", 6)], ddl), ["a", "b"])
+    assert t.read().count() == 8
+
+
+def test_merge_pruning_keeps_string_key_matches(spark, tmp_path):
+    ddl = "k STRING, v INT"
+    t = TxTable.create(spark, str(tmp_path / "sk"), StructType.fromDDL(ddl))
+    t.write(spark.createDataFrame([("a", 0), ("b", 0), ("c", 0)], ddl))
+    t.write(spark.createDataFrame([("x", 0), ("y", 0), ("zé", 0)], ddl))
+    _merge_matches_upsert(spark, t, spark.createDataFrame(
+        [("y", 1), ("zé", 2), ("m", 3)], ddl), ["k"])
+    assert t.read().count() == 7
+
+
+def test_merge_pruning_keeps_partition_key_matches(spark, tmp_path):
+    """Partition-column keys: an integral one prunes by partition value;
+    a string one never does, because the logged value is the escaped
+    directory name (``a:b`` is logged as ``a%3Ab``)."""
+    ddl = "p INT, v INT"
+    t = TxTable.create(spark, str(tmp_path / "pk"), StructType.fromDDL(ddl),
+                       partition_by=["p"])
+    t.write(spark.createDataFrame([(1, 0), (2, 0), (10, 0)], ddl))
+    _merge_matches_upsert(spark, t, spark.createDataFrame(
+        [(10, 9), (11, 5)], ddl), ["p"])
+    assert t.read().count() == 4
+
+    ddl = "s STRING, v INT"
+    t = TxTable.create(spark, str(tmp_path / "ps"), StructType.fromDDL(ddl),
+                       partition_by=["s"])
+    t.write(spark.createDataFrame([("a:b", 0), ("a/b", 0), ("x", 0)], ddl))
+    _merge_matches_upsert(spark, t, spark.createDataFrame(
+        [("a:b", 9), ("a/b", 8)], ddl), ["s"])
+    assert t.read().count() == 3
+
+
+def test_merge_pruning_without_stats_probes_every_file(spark, tmp_path):
+    ddl = "id BIGINT, v INT"
+    t = TxTable.create(spark, str(tmp_path / "ns"), StructType.fromDDL(ddl))
+    t.write(spark.createDataFrame([(1, 0), (2, 0)], ddl), stats_cols=[])
+    t.write(spark.createDataFrame([(10, 0), (11, 0)], ddl), stats_cols=[])
+    _merge_matches_upsert(spark, t, spark.createDataFrame(
+        [(2, 1), (10, 2), (50, 3)], ddl), ["id"])
+    assert t.read().count() == 5
+
+
+def test_merge_pruning_skips_nan_double_keys(spark, tmp_path):
+    """A double key never prunes: NaN sorts above every number in Spark
+    but compares False in the bound test, so a NaN-keyed match would
+    be dropped."""
+    ddl = "k DOUBLE, v INT"
+    nan = float("nan")
+    t = TxTable.create(spark, str(tmp_path / "dk"), StructType.fromDDL(ddl))
+    t.write(spark.createDataFrame([(nan, 0), (1.0, 0)], ddl))
+    t.write(spark.createDataFrame([(5.0, 0), (6.0, 0)], ddl))
+    _merge_matches_upsert(spark, t, spark.createDataFrame(
+        [(nan, 1), (2.0, 2), (6.0, 3)], ddl), ["k"])
+    rows = {repr(r.k): r.v for r in t.read().collect()}
+    assert rows == {"nan": 1, "1.0": 0, "2.0": 2, "5.0": 0, "6.0": 3}
+
+
+def test_merge_outside_every_file_range_runs_no_probe(spark, tmp_path):
+    """Keys above every file's max prune the whole probe: the MERGE runs
+    the key-set job plus a pure append, the jobs of a MERGE into a table
+    with no files. The same MERGE into a table without stats runs the
+    probe and so more jobs. Job counts come from the status tracker."""
+    sc = spark.sparkContext
+    ddl = "id BIGINT, v INT"
+    schema = StructType.fromDDL(ddl)
+    target = [(i, 0) for i in range(10)]
+
+    def src():
+        return spark.createDataFrame([(i, i) for i in range(100, 105)], ddl)
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setJobGroup("", "")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    pruned = TxTable.create(spark, str(tmp_path / "pr"), schema)
+    pruned.write(spark.createDataFrame(target, ddl))
+    unpruned = TxTable.create(spark, str(tmp_path / "np"), schema)
+    unpruned.write(spark.createDataFrame(target, ddl), stats_cols=[])
+    fileless = TxTable.create(spark, str(tmp_path / "fl"), schema)
+
+    n_keys = jobs("merge-keyset", lambda: src().dropDuplicates(["id"])
+                  .select("id").distinct().limit(500_001).toArrow())
+    n_append = jobs("merge-fileless", lambda: fileless.merge(src(), ["id"]))
+    n_pruned = jobs("merge-pruned", lambda: pruned.merge(src(), ["id"]))
+    n_unpruned = jobs("merge-unpruned", lambda: unpruned.merge(src(), ["id"]))
+    assert n_pruned == n_keys + n_append
+    assert n_unpruned > n_pruned
+    for t in (pruned, unpruned):
+        assert t.read().count() == 15
+
+
 # -- log checkpointing ----------------------------------------------------
 
 
