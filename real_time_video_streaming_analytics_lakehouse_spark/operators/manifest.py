@@ -27,7 +27,8 @@ Checkpoint v2 layout: the v1 columns (``path``, ``partitionValues``,
 still what entry materialization reads, so fidelity is exact) plus
 parsed sidecar columns used ONLY for columnar skipping:
 
-* ``pv:<col>``  — partition value, string (hive directory encoding);
+* ``pv:<col>``  — partition value, string (hive directory encoding;
+  :func:`_bounds_mask` unescapes it before comparing);
 * ``min:<col>`` / ``max:<col>`` — stats bounds, typed from the
   snapshot schema (int64 / float64 / utf8);
 * ``bf:<col>`` / ``bfk:<col>`` / ``bfb:<col>`` — bloom bitmap bytes
@@ -46,6 +47,7 @@ one.
 from __future__ import annotations
 
 import json
+import re
 
 # -- shared predicate semantics (scalar + columnar use ONE definition) ------
 
@@ -71,8 +73,28 @@ def to_num(v):
     return None
 
 
+def unescape_partition_value(v: str) -> str:
+    """The value a hive directory name ``v`` encodes: each ``%XX``
+    becomes the character with hex code ``XX`` — Spark's
+    ``unescapePathName``, the inverse of the escaping its partitioned
+    writer applies (``a:b`` is written as ``a%3Ab``, ``a/b`` as
+    ``a%2Fb``). Logged partition values keep the directory form;
+    pruning and partition-column stats compare the unescaped value."""
+    if "%" not in v:
+        return v
+    return re.sub(r"%([0-9A-Fa-f]{2})",
+                  lambda m: chr(int(m.group(1), 16)), v)
+
+
 def range_test(lo, hi, op, lit) -> bool:
-    """Could a value in ``[lo, hi]`` satisfy ``value <op> lit``?"""
+    """Could a value in ``[lo, hi]`` satisfy ``value <op> lit``?
+
+    A NaN bound or literal keeps the file: Spark orders NaN above every
+    value and equal to itself, so a ``max`` of NaN may hide rows that
+    satisfy ``>``/``>=``, and a NaN literal matches NaN rows that no
+    ``[lo, hi]`` comparison can see."""
+    if lo != lo or hi != hi or lit != lit:
+        return True
     if op == "=":
         return lo <= lit <= hi
     if op == "<":
@@ -442,6 +464,7 @@ def _bounds_mask(table, col: str, op: str, lit):
     Mirrors :func:`bounds_may_match`: partition value when present,
     else stats bounds, else keep."""
     import numpy as np
+    import pyarrow as pa
     import pyarrow.compute as pc
 
     n = table.num_rows
@@ -449,7 +472,7 @@ def _bounds_mask(table, col: str, op: str, lit):
     names = set(table.column_names)
     numeric_lit = isinstance(lit, (int, float)) and not isinstance(lit, bool)
     string_lit = isinstance(lit, str)
-    if not (numeric_lit or string_lit):
+    if not (numeric_lit or string_lit) or lit != lit:  # NaN literal: keep
         return keep
 
     def apply(lo_vals, hi_vals, rows_mask):
@@ -484,8 +507,12 @@ def _bounds_mask(table, col: str, op: str, lit):
                 ok = pc.greater(hi_vals, lit)
             else:
                 ok = pc.greater_equal(hi_vals, lit)
-            # scalar contract: EITHER bound missing -> keep the file
+            # scalar contract: EITHER bound missing or NaN -> keep
             valid = pc.and_(pc.is_valid(lo_vals), pc.is_valid(hi_vals))
+            if pa.types.is_floating(lo_vals.type):
+                valid = pc.and_(valid, pc.invert(pc.or_(
+                    pc.is_nan(lo_vals), pc.is_nan(hi_vals)
+                )))
             bad = pc.and_(
                 pc.invert(pc.fill_null(ok, True)), valid
             ).combine_chunks().to_numpy(zero_copy_only=False).astype(bool)
@@ -494,7 +521,10 @@ def _bounds_mask(table, col: str, op: str, lit):
     pv_name = f"pv:{col}"
     has_pv = np.zeros(n, dtype=bool)
     if pv_name in names:
-        pv = table.column(pv_name).to_pylist()
+        pv = [
+            None if v is None else unescape_partition_value(v)
+            for v in table.column(pv_name).to_pylist()
+        ]
         has_pv = np.array([v is not None for v in pv], dtype=bool)
         if has_pv.any():
             if numeric_lit:
@@ -519,8 +549,6 @@ def _bounds_mask(table, col: str, op: str, lit):
 
     min_name, max_name = f"min:{col}", f"max:{col}"
     if min_name in names:
-        import pyarrow as pa
-
         lo_col = table.column(min_name)
         hi_col = table.column(max_name)
         rows = ~has_pv  # stats apply only where no partition value

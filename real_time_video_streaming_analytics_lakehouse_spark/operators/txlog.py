@@ -85,6 +85,7 @@ deployment simply uploads them before committing.
 
 from __future__ import annotations
 
+import decimal
 import json
 import os
 import pathlib
@@ -97,6 +98,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    DecimalType,
+    DoubleType,
+    FloatType,
     IntegralType,
     StringType,
     StructField,
@@ -117,6 +121,7 @@ from .manifest import (
     bounds_may_match,
     entries_to_arrow,
     prune_columnar,
+    unescape_partition_value,
 )
 from .util import local_relation
 
@@ -436,7 +441,7 @@ def _lossy_partition_types(spark: SparkSession, schema: StructType,
         for seg in os.path.dirname(rel).split(os.sep):
             k, eq, raw = seg.partition("=")
             if eq and k in part_cols and types.get(k) != StringType():
-                v = urllib.parse.unquote(raw)
+                v = unescape_partition_value(raw)
                 if v != "__HIVE_DEFAULT_PARTITION__":
                     pairs.add((k, v))
     if not pairs:
@@ -453,6 +458,95 @@ def _lossy_partition_types(spark: SparkSession, schema: StructType,
         for i, c in enumerate(cols)
     ]).collect()[0]
     return {c for i, c in enumerate(cols) if row[f"_rt{i}"] == 0}
+
+
+def _partition_values(rel: str) -> dict:
+    """``{column: directory value}`` from a file's hive path, values in
+    the escaped directory form the log records."""
+    pv = {}
+    for seg in os.path.dirname(rel).split(os.sep):
+        k, eq, v = seg.partition("=")
+        if eq:
+            pv[k] = v
+    return pv
+
+
+# ---------------------------------------------------------------------------
+# per-file stats from parquet footers
+#
+# Spark's parquet writer (parquet-java) records each column chunk's row
+# count, null count and min/max in the file footer, so a staged file's
+# ``numRecords`` and min/max come from reading its footer on the driver
+# — no Spark job. The values are the ones a Spark ``min``/``max``
+# aggregate over the file returns (pinned against that aggregate by
+# ``tests/test_txlog.py``), up to two differences that only widen the
+# bounds: -0.0 and 0.0 may swap, and a string chunk whose min/max
+# parquet-java dropped (values over 4 KB) logs None/None.
+
+
+def _partition_stat(raw: str | None, dtype):
+    """A partition column's value as a Spark read types it: the
+    unescaped directory value cast to ``dtype`` (None for the NULL
+    partition or a value the cast rejects)."""
+    if raw is None:
+        return None
+    v = unescape_partition_value(raw)
+    if v == "__HIVE_DEFAULT_PARTITION__":
+        return None
+    try:
+        if isinstance(dtype, IntegralType):
+            return int(v)
+        if isinstance(dtype, (FloatType, DoubleType)):
+            return float(v)
+        if isinstance(dtype, DecimalType):
+            return decimal.Decimal(v).quantize(
+                decimal.Decimal(1).scaleb(-dtype.scale),
+                context=decimal.Context(prec=dtype.precision + 2),
+            )
+    except (ValueError, ArithmeticError):
+        return None
+    return v  # string, date (ISO text)
+
+
+def _footer_bounds(md, idx: int | None, dtype) -> dict:
+    """``{"min", "max"}`` of column ``idx`` over every row group of a
+    file's footer metadata ``md``. NaN-aware like Spark's ``max``: a
+    chunk max of NaN makes the file max NaN; a min is NaN only when
+    every chunk's is. A chunk that holds values but carries no min/max
+    makes both None, which keeps the file under every predicate."""
+    unknown = {"min": None, "max": None}
+    if idx is None:  # column absent from this file: all NULL on read
+        return unknown
+    mins, maxs = [], []
+    for rg in range(md.num_row_groups):
+        chunk = md.row_group(rg).column(idx)
+        st = chunk.statistics
+        if st is not None and st.has_null_count \
+                and st.null_count >= chunk.num_values:
+            continue  # all NULL: no bound to contribute
+        if st is None or not st.has_min_max:
+            return unknown
+        if isinstance(dtype, DecimalType) and chunk.physical_type in (
+            "INT32", "INT64"
+        ):
+            lo = decimal.Decimal(st.min_raw).scaleb(-dtype.scale)
+            hi = decimal.Decimal(st.max_raw).scaleb(-dtype.scale)
+        else:
+            try:
+                lo, hi = st.min, st.max
+            except (ValueError, NotImplementedError, OverflowError):
+                return unknown
+        mins.append(lo)
+        maxs.append(hi)
+    if not mins:
+        return unknown
+    if isinstance(dtype, (FloatType, DoubleType)):
+        real = [v for v in mins if v == v]
+        lo = min(real) if real else float("nan")
+        hi = float("nan") if any(v != v for v in maxs) else max(maxs)
+    else:
+        lo, hi = min(mins), max(maxs)
+    return {"min": lo, "max": hi}
 
 
 # ---------------------------------------------------------------------------
@@ -629,7 +723,9 @@ def _keep_entry(f_: dict, predicates) -> bool:
     """Scalar file-skipping decision for ONE entry dict — the same
     semantics :func:`~.manifest.prune_columnar` evaluates columnarly
     (bounds via :func:`~.manifest.bounds_may_match`, blooms via
-    :func:`_bloom_may_contain`); every ambiguity resolves to keep."""
+    :func:`_bloom_may_contain`); every ambiguity resolves to keep. A
+    partition value compares as the value it encodes, not as its
+    escaped directory name."""
     for col, op, lit in predicates or []:
         # probe only literal types whose str() provably matches the
         # indexed column's Spark string cast (int/str — the same
@@ -646,7 +742,7 @@ def _keep_entry(f_: dict, predicates) -> bool:
         pv = (f_.get("partitionValues") or {}).get(col)
         st = (f_.get("stats") or {}).get(col)
         if pv is not None:
-            lo = hi = pv
+            lo = hi = unescape_partition_value(pv)
         elif st is not None:
             lo, hi = st.get("min"), st.get("max")
         else:
@@ -684,16 +780,14 @@ def _prune(snap: Snapshot, predicates) -> list[dict]:
     return [f_ for f_ in files.values() if _keep_entry(f_, predicates)]
 
 
-def _key_range_predicates(key_set, key_schema: StructType,
-                          partition_by: list[str]) -> list[tuple]:
+def _key_range_predicates(key_set, key_schema: StructType) -> list[tuple]:
     """``[(k, ">=", min), (k, "<=", max)]`` over the batch's MERGE keys
     (``key_set``, a pyarrow table), for :func:`_prune` to skip probe
     files that cannot hold any of them. A key column contributes only
     when its order agrees with the join's equality and with the logged
-    bounds: an integral column, or a binary-collated string column
-    that is not a partition column (a logged partition value is the
-    hive-escaped directory name, which need not order like the value),
-    and only when no batch key is NULL there (a NULL key matches NULL
+    bounds: an integral column or a binary-collated string column
+    (partition values compare unescaped, see :func:`_keep_entry`), and
+    only when no batch key is NULL there (a NULL key matches NULL
     null-safely, and min/max stats skip NULLs). Floats (NaN, -0.0),
     collated strings and every other type keep every file."""
     import pyarrow.compute as pc
@@ -701,10 +795,7 @@ def _key_range_predicates(key_set, key_schema: StructType,
     preds = []
     for f_ in key_schema.fields:
         t = f_.dataType
-        if not (
-            isinstance(t, IntegralType)
-            or (t == StringType() and f_.name not in partition_by)
-        ):
+        if not (isinstance(t, IntegralType) or t == StringType()):
             continue
         col = key_set.column(f_.name)
         if col.null_count:
@@ -936,24 +1027,17 @@ class TxTable:
                 for f in df.schema.fields
             ])).parquet(t.root)
         schema = df.schema
-        # One scan collects numRecords + min/max column stats for every
-        # adopted file (same auto-indexing as fresh writes), so log-side
+        # numRecords + min/max column stats for every adopted file, from
+        # its footer (same auto-indexing as fresh writes), so log-side
         # file skipping works immediately — not only after a rewrite.
         # Zero-row files are not adopted (Delta doesn't commit them).
         per_file = t._collect_stats(t.root, files, df, None,
                                     properties or {}, part_cols)
-        adds = []
-        for rel in files:
-            if rel not in per_file:
-                continue
-            pv = {}
-            for seg in os.path.dirname(rel).split(os.sep):
-                if "=" in seg:
-                    k, _, v = seg.partition("=")
-                    pv[k] = v
-            entry = {"path": rel, "partitionValues": pv}
-            entry.update(per_file[rel])
-            adds.append(entry)
+        adds = [
+            {"path": rel, "partitionValues": _partition_values(rel),
+             **per_file[rel]}
+            for rel in files if rel in per_file
+        ]
         _publish_commit(t.root, 0, {
             "version": 0,
             "timestamp_ms": int(time.time() * 1000),
@@ -1241,11 +1325,13 @@ class TxTable:
         """Append or overwrite; returns the new version.
 
         The frame is staged with Spark's parquet writer (hive partition
-        layout when the table is partitioned), each staged file is moved
-        into the table root under a writer-unique name, per-file
-        row counts + min/max stats are collected with ONE scan of the
-        new files only (grouped by ``input_file_name`` — Delta collects
-        stats at the same point), and the commit is published last.
+        layout when the table is partitioned), per-file row counts +
+        min/max stats are read from the staged files' parquet footers on
+        the driver (no second job; Delta collects stats at the same
+        point), each staged file is moved into the table root under a
+        writer-unique name, and the commit is published last. One Spark
+        job stages the files; a ``bloom.columns`` table adds one
+        aggregate over them for its bitmaps.
 
         ``merge_schema=True`` is Delta's ``mergeSchema``: the committed
         schema becomes the union (new nullable columns appended,
@@ -1300,9 +1386,10 @@ class TxTable:
         # Sibling of the table root (never inside it, so snapshot reads
         # can't see it), WITHOUT a leading underscore: "_"-prefixed dirs
         # are invisible to Spark's own file listing, which would break
-        # the stats read-back of the staged files. The token makes both
-        # the stage dir and the final file names writer-unique, so
-        # concurrent writers can never clobber each other's data files.
+        # the bloom read-back of a ``bloom.columns`` table's staged
+        # files. The token makes both the stage dir and the final file
+        # names writer-unique, so concurrent writers can never clobber
+        # each other's data files.
         token = uuid.uuid4().hex[:8]
         stage = self.root + f"__stage_v{version}_{token}"
         shutil.rmtree(stage, ignore_errors=True)
@@ -1330,14 +1417,9 @@ class TxTable:
             store.publish_file(
                 os.path.join(stage, rel), os.path.join(self.root, final_rel)
             )
-            pv = {}
-            for seg in sub.split(os.sep):
-                if "=" in seg:
-                    k, _, v = seg.partition("=")
-                    pv[k] = v
-            entry = {"path": final_rel, "partitionValues": pv}
-            entry.update(per_file.get(rel, {}))
-            adds.append(entry)
+            adds.append({"path": final_rel,
+                         "partitionValues": _partition_values(rel),
+                         **per_file[rel]})
         shutil.rmtree(stage, ignore_errors=True)
         return adds
 
@@ -1350,29 +1432,60 @@ class TxTable:
                        stats_cols: list[str] | None,
                        properties: dict | None = None,
                        partition_by: list[str] | None = None) -> dict:
-        """One aggregate over the staged files: per-file numRecords and
-        column min/max for log-side data skipping. ``stats_cols=None``
-        auto-indexes the first ``auto_stats_cols`` eligible columns
-        (Delta's default behavior — stats are what make `_prune`'s file
-        skipping work without the writer having to opt in); pass an
-        explicit list to control it, or ``[]`` to collect none.
+        """Per-file ``numRecords`` and column min/max for log-side data
+        skipping, read from each staged file's parquet footer on the
+        driver (see :func:`_footer_bounds`); a partition column's bounds
+        are its typed directory value (:func:`_partition_stat`). Files
+        whose footer counts zero rows — a write task that got no rows —
+        are left out, so they are never committed (Delta doesn't either).
+        ``stats_cols=None`` auto-indexes the first ``auto_stats_cols``
+        eligible columns (Delta's default behavior — stats are what make
+        `_prune`'s file skipping work without the writer having to opt
+        in); pass an explicit list to control it, or ``[]`` to collect
+        none.
 
-        When the table opts in (``bloom.columns`` property), the SAME
-        aggregate also collects each file's bloom bit positions per
-        indexed column — ``hashes`` collect_set aggregates of the
-        md5-derived position expression, bounded by ``bloom.bits``
-        values per file per column — folded into per-file hex bitmaps
-        for `_prune`'s driver-side equality probe."""
-        if not staged:
-            return {}
+        Only a table that opts in to bloom indexing (``bloom.columns``
+        property) runs a Spark job here: one aggregate over the staged
+        files collects each file's bloom bit positions per indexed
+        column — ``hashes`` collect_set aggregates of the md5-derived
+        position expression, bounded by ``bloom.bits`` values per file
+        per column — folded into per-file hex bitmaps for `_prune`'s
+        driver-side equality probe."""
+        import pyarrow.parquet as pq
+
+        dtypes = dict(df.dtypes)
         if stats_cols is None:
             stats_cols = [
                 c for c, t in df.dtypes if t.startswith(_STATS_TYPES)
             ][: self.auto_stats_cols]
         cols = [
             c for c in stats_cols
-            if dict(df.dtypes).get(c, "").startswith(_STATS_TYPES)
+            if dtypes.get(c, "").startswith(_STATS_TYPES)
         ]
+        types = {f.name: f.dataType for f in df.schema.fields}
+        parts = set(partition_by or [])
+        out = {}
+        for rel in staged:
+            md = pq.read_metadata(os.path.join(stage, rel))
+            if md.num_rows == 0:
+                continue
+            pv = _partition_values(rel)
+            idx = {md.schema.column(i).path: i for i in range(md.num_columns)}
+            stats = {}
+            for c in cols:
+                if c in parts:
+                    v = _partition_stat(pv.get(c), types[c])
+                    mm = {"min": v, "max": v}
+                else:
+                    mm = _footer_bounds(md, idx.get(c), types[c])
+                # plain JSON in the commit: dates/decimals as text
+                stats[c] = {
+                    k: v if v is None or isinstance(v, (int, float, str))
+                    else str(v)
+                    for k, v in mm.items()
+                }
+            out[rel] = {"numRecords": md.num_rows, "stats": stats}
+
         bloom_cols, bits, hashes = _bloom_params(properties or {})
         # Partition columns are NEVER bloom-indexed: partitionValues
         # already give _prune the EXACT per-file value (a bitmap adds
@@ -1382,24 +1495,28 @@ class TxTable:
         # ever match — reproduced false-negative row loss.
         bloom_cols = [
             c for c in bloom_cols
-            if dict(df.dtypes).get(c, "") in _BLOOM_TYPES
-            and c not in (partition_by or [])
+            if dtypes.get(c, "") in _BLOOM_TYPES and c not in parts
         ]
-        aggs = [F.count(F.lit(1)).alias("_n")]
-        for c in cols:
-            aggs += [F.min(c).alias(f"_min_{c}"), F.max(c).alias(f"_max_{c}")]
-        for ci, c in enumerate(bloom_cols):
-            for i in range(hashes):
-                aggs.append(
-                    F.collect_set(_bloom_expr(c, i, bits))
-                    .alias(f"_bf_{ci}_{i}")
-                )
-        # Explicit schema on the stats read-back: partition-type
-        # INFERENCE would retype a string partition value like
-        # day='01' to INT 1, and a bloom bitmap built from the retyped
-        # value ('1') can never match the true literal ('01') — a
-        # false-negative prune, i.e. silent row loss (the same hazard
-        # the partitioned merge sink pins for its target read).
+        if bloom_cols and out:
+            self._collect_blooms(stage, df, out, bloom_cols, bits, hashes)
+        return out
+
+    def _collect_blooms(self, stage: str, df: DataFrame, out: dict,
+                        bloom_cols: list[str], bits: int,
+                        hashes: int) -> None:
+        """Add each non-empty staged file's ``bloom`` bitmaps to its
+        ``out`` entry, from one aggregate over the staged files."""
+        aggs = [
+            F.collect_set(_bloom_expr(c, i, bits)).alias(f"_bf_{ci}_{i}")
+            for ci, c in enumerate(bloom_cols)
+            for i in range(hashes)
+        ]
+        # Explicit schema on the read-back: partition-type INFERENCE
+        # would retype a string partition value like day='01' to INT 1,
+        # and a bloom bitmap built from the retyped value ('1') can
+        # never match the true literal ('01') — a false-negative prune,
+        # i.e. silent row loss (the same hazard the partitioned merge
+        # sink pins for its target read).
         rows = (
             self.spark.read.option("basePath", stage)
             .schema(df.schema).parquet(stage)
@@ -1407,7 +1524,7 @@ class TxTable:
             .agg(*aggs)
             .collect()  # bounded: one row per staged file
         )
-        out = {}
+        seen = set()
         for r in rows:
             # input_file_name() renders a percent-encoded URI; decode
             # so staged paths with spaces/non-ASCII keep exact rels
@@ -1415,43 +1532,27 @@ class TxTable:
             rel = os.path.relpath(
                 urllib.parse.unquote(r["_f"].removeprefix("file:")), stage
             )
-            stats = {
-                c: {"min": r[f"_min_{c}"], "max": r[f"_max_{c}"]} for c in cols
-            }
-            # JSON-safe: dates/decimals -> str via default=str on dump is
-            # avoided; coerce here so commits stay plain JSON.
-            for c, mm in stats.items():
-                for k, v in mm.items():
-                    if v is not None and not isinstance(v, (int, float, str)):
-                        mm[k] = str(v)
-            out[rel] = {"numRecords": r["_n"], "stats": stats}
-            if bloom_cols:
-                blooms = {}
-                for ci, c in enumerate(bloom_cols):
-                    mask = 0
-                    for i in range(hashes):
-                        for p in r[f"_bf_{ci}_{i}"] or []:
-                            mask |= 1 << p
-                    blooms[c] = {
-                        "k": hashes,
-                        "bits": bits,
-                        "mask": format(mask, f"0{(bits + 3) // 4}x"),
-                    }
-                out[rel]["bloom"] = blooms
-        # A staged file with no group row must be a ZERO-ROW file (a
-        # write task that got no rows); verify via the parquet footer so
-        # a broken read-back (e.g. a hidden-path listing rule eating the
-        # stage dir) fails loudly instead of silently dropping data.
-        import pyarrow.parquet as pq
-
-        for rel in set(staged) - set(out):
-            n = pq.ParquetFile(os.path.join(stage, rel)).metadata.num_rows
-            if n != 0:
-                raise RuntimeError(
-                    f"stats read-back missed non-empty staged file {rel} "
-                    f"({n} rows)"
-                )
-        return out
+            blooms = {}
+            for ci, c in enumerate(bloom_cols):
+                mask = 0
+                for i in range(hashes):
+                    for p in r[f"_bf_{ci}_{i}"] or []:
+                        mask |= 1 << p
+                blooms[c] = {
+                    "k": hashes,
+                    "bits": bits,
+                    "mask": format(mask, f"0{(bits + 3) // 4}x"),
+                }
+            out[rel]["bloom"] = blooms
+            seen.add(rel)
+        # Every file the footers count rows in must have been read back;
+        # a miss (e.g. a hidden-path listing rule eating the stage dir)
+        # fails loudly instead of committing a file without its bitmap.
+        missing = sorted(set(out) - seen)
+        if missing:
+            raise RuntimeError(
+                f"bloom read-back missed non-empty staged files {missing[:3]}"
+            )
 
     def _stage_cdc(self, cdc_df: DataFrame, version: int) -> list[str]:
         """Write explicit change rows (table columns + ``_change_type``)
@@ -2347,6 +2448,15 @@ class TxTable:
 
         Change files tag matched rows as ``update_preimage`` /
         ``update_postimage`` and unmatched source rows as ``insert``.
+
+        The deduplicated, aligned source is evaluated once: against a
+        table with live files it is persisted before the key-set job
+        (its first action, which fills the cache) and unpersisted when
+        the merge returns or raises, so the probe-side joins and the
+        data and change-file writes scan the cache instead of re-running
+        the source's plan — a streaming batch's stateful upstream runs
+        once per MERGE. A merge into a table with no files reads the
+        source once anyway and is not cached.
         """
         src_cols = set(source.columns)
         src = source.dropDuplicates(keys)
@@ -2366,6 +2476,25 @@ class TxTable:
             return self._commit_insert_only(src, snap, params, schema_json,
                                             target_schema)
 
+        # Every later query reads the source (key set, probe-side joins,
+        # data and change-file writes): evaluate it once. The key-set
+        # job is the first action and fills the cache.
+        src = src.persist()
+        try:
+            return self._merge_into_files(
+                src, snap, keys, src_cols, params, schema_json,
+                target_schema, max_broadcast_keys,
+            )
+        finally:
+            src.unpersist()
+
+    def _merge_into_files(self, src: DataFrame, snap: Snapshot,
+                          keys: list[str], src_cols: set,
+                          params: dict | None, schema_json: str | None,
+                          target_schema: StructType,
+                          max_broadcast_keys: int) -> int:
+        """The body of :meth:`merge` for a target with live files, on
+        the aligned, deduplicated and persisted source ``src``."""
         key_schema = StructType([target_schema[k] for k in keys])
         key_set = (
             src.select(*keys).distinct().limit(max_broadcast_keys + 1)
@@ -2395,8 +2524,7 @@ class TxTable:
             keys_df = F.broadcast(
                 self.spark.createDataFrame(key_set, key_schema)
             )
-            preds = _key_range_predicates(key_set, key_schema,
-                                          snap.partition_by)
+            preds = _key_range_predicates(key_set, key_schema)
             entries = _prune(snap, preds) if preds else list(
                 snap.files.values()
             )

@@ -25,6 +25,7 @@ from real_time_video_streaming_analytics_lakehouse_spark.operators.manifest impo
     FileManifest,
     bounds_may_match,
     entries_to_arrow,
+    unescape_partition_value,
 )
 from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import (
     _bloom_positions_py,
@@ -296,6 +297,37 @@ def test_bounds_may_match_semantics():
     assert bounds_may_match(1, 9, ">=", 9)
     assert not bounds_may_match(5, 9, "<", 5)
     assert bounds_may_match(5, 9, "<=", 5)
+
+
+def test_nan_bounds_and_literals_keep():
+    """Spark orders NaN above every value and equal to itself: a NaN
+    bound or literal never proves a file empty, in the scalar test and
+    in the columnar one over float64 stats."""
+    import numpy as np
+    import pyarrow as pa
+
+    from real_time_video_streaming_analytics_lakehouse_spark.operators.manifest import (
+        _bounds_mask,
+    )
+
+    nan = float("nan")
+    assert bounds_may_match(1.0, nan, ">", 5)
+    assert bounds_may_match(nan, nan, ">=", 5)
+    assert bounds_may_match("1.0", "NaN", ">", 5)
+    assert bounds_may_match(1.0, 2.0, "=", nan)
+    assert not bounds_may_match(1.0, 2.0, ">", 5)
+    table = pa.table({"min:d": pa.array([1.0, 1.0, nan], pa.float64()),
+                      "max:d": pa.array([nan, 2.0, nan], pa.float64())})
+    assert _bounds_mask(table, "d", ">", 5).tolist() == [True, False, True]
+    assert np.all(_bounds_mask(table, "d", "=", nan))
+
+
+def test_unescape_partition_value():
+    assert unescape_partition_value("a%3Ab") == "a:b"
+    assert unescape_partition_value("a%2Fb") == "a/b"
+    assert unescape_partition_value("100%25") == "100%"
+    assert unescape_partition_value("%zz%4") == "%zz%4"
+    assert unescape_partition_value("é") == "é"
 
 
 def test_bigint_bounds_beyond_float53_do_not_false_prune(tmp_path):

@@ -720,9 +720,9 @@ def test_merge_pruning_keeps_string_key_matches(spark, tmp_path):
 
 
 def test_merge_pruning_keeps_partition_key_matches(spark, tmp_path):
-    """Partition-column keys: an integral one prunes by partition value;
-    a string one never does, because the logged value is the escaped
-    directory name (``a:b`` is logged as ``a%3Ab``)."""
+    """Partition-column keys prune by partition value: an integral one,
+    and a string one whose logged value is the escaped directory name
+    (``a:b`` is logged as ``a%3Ab``) but compares unescaped."""
     ddl = "p INT, v INT"
     t = TxTable.create(spark, str(tmp_path / "pk"), StructType.fromDDL(ddl),
                        partition_by=["p"])
@@ -767,9 +767,12 @@ def test_merge_pruning_skips_nan_double_keys(spark, tmp_path):
 
 def test_merge_outside_every_file_range_runs_no_probe(spark, tmp_path):
     """Keys above every file's max prune the whole probe: the MERGE runs
-    the key-set job plus a pure append, the jobs of a MERGE into a table
-    with no files. The same MERGE into a table without stats runs the
-    probe and so more jobs. Job counts come from the status tracker."""
+    the key-set job on its persisted source plus a pure append of the
+    cached source, the jobs of the same two steps on a persisted
+    ``dropDuplicates`` frame (the key-set query, then a write of it to a
+    table with no files). The same MERGE into a table without stats runs
+    the probe and so more jobs. Job counts come from the status
+    tracker."""
     sc = spark.sparkContext
     ddl = "id BIGINT, v INT"
     schema = StructType.fromDDL(ddl)
@@ -792,15 +795,260 @@ def test_merge_outside_every_file_range_runs_no_probe(spark, tmp_path):
     unpruned.write(spark.createDataFrame(target, ddl), stats_cols=[])
     fileless = TxTable.create(spark, str(tmp_path / "fl"), schema)
 
-    n_keys = jobs("merge-keyset", lambda: src().dropDuplicates(["id"])
-                  .select("id").distinct().limit(500_001).toArrow())
-    n_append = jobs("merge-fileless", lambda: fileless.merge(src(), ["id"]))
+    cached = src().dropDuplicates(["id"]).persist()
+    try:
+        n_keys = jobs("merge-keyset", lambda: cached.select("id").distinct()
+                      .limit(500_001).toArrow())
+        n_append = jobs("merge-append", lambda: fileless.write(cached))
+    finally:
+        cached.unpersist()
     n_pruned = jobs("merge-pruned", lambda: pruned.merge(src(), ["id"]))
     n_unpruned = jobs("merge-unpruned", lambda: unpruned.merge(src(), ["id"]))
     assert n_pruned == n_keys + n_append
     assert n_unpruned > n_pruned
     for t in (pruned, unpruned):
         assert t.read().count() == 15
+    assert fileless.read().count() == 5
+
+
+def test_merge_evaluates_its_source_once(spark, tmp_path):
+    """The source is computed once per MERGE: a Python UDF that counts
+    the rows it sees runs once per source row although the key set, the
+    probe-side joins and the data and change-file writes all read the
+    source."""
+    ddl = "id BIGINT, v BIGINT"
+    t = TxTable.create(spark, str(tmp_path / "once"), StructType.fromDDL(ddl),
+                       properties={"delta.enableChangeDataFeed": "true"})
+    t.write(spark.createDataFrame([(i, 0) for i in range(10)], ddl))
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("bigint")
+    def counted(v):
+        seen.add(1)
+        return v
+
+    src = spark.range(5, 15).select("id", counted(F.col("id") * 10).alias("v"))
+    t.merge(src, keys=["id"])
+    assert seen.value == 10
+    assert sorted(tuple(r) for r in t.read().collect()) == (
+        [(i, 0) for i in range(5)] + [(i, i * 10) for i in range(5, 15)]
+    )
+    changes = t.change_feed(2).groupBy("_change_type").count().collect()
+    assert {r[0]: r[1] for r in changes} == {
+        "update_preimage": 5, "update_postimage": 5, "insert": 5,
+    }
+
+
+# -- file skipping on NaN bounds and escaped partition values -------------
+
+
+def _checkpointed(t: TxTable) -> TxTable:
+    """``t`` with its latest version consolidated into a checkpoint, so
+    snapshots resolve to a columnar manifest."""
+    from real_time_video_streaming_analytics_lakehouse_spark.operators.manifest import (
+        FileManifest,
+    )
+
+    t._write_checkpoint(t.snapshot().version)
+    assert isinstance(t.snapshot().files, FileManifest)
+    return t
+
+
+@pytest.mark.parametrize("checkpoint", [False, True])
+def test_nan_max_keeps_file_for_range_predicates(spark, tmp_path, checkpoint):
+    """A file holding ``[1.0, NaN]`` logs ``max: NaN``; Spark orders NaN
+    above every value, so ``d > 5`` matches the NaN row and pruning must
+    keep the file, from the log's dicts and from a checkpoint."""
+    ddl = "id BIGINT, d DOUBLE"
+    nan = float("nan")
+    t = TxTable.create(spark, str(tmp_path / "nan"), StructType.fromDDL(ddl))
+    t.write(spark.createDataFrame([(1, 1.0), (2, nan)], ddl).coalesce(1))
+    t.write(spark.createDataFrame([(3, 2.0), (4, 3.0)], ddl).coalesce(1))
+    (stats,) = [f["stats"]["d"] for f in t.snapshot().files.values()
+                if f["stats"]["d"]["min"] == 1.0]
+    assert stats["max"] != stats["max"]  # NaN
+    if checkpoint:
+        _checkpointed(t)
+    for pred, want in ((("d", ">", 5), {2}), (("d", ">=", 5), {2}),
+                       (("d", "=", nan), {2}), (("d", "<", 1.5), {1})):
+        got = {r.id for r in t.read(predicates=[pred]).collect()}
+        assert got == want, pred
+    assert {r.id for r in t.read().where("d > 5").collect()} == {2}
+
+
+@pytest.mark.parametrize("checkpoint", [False, True])
+def test_string_partition_pruning_compares_unescaped_values(
+    spark, tmp_path, checkpoint
+):
+    """``a:b`` and ``a/b`` are written to the escaped directories
+    ``s=a%3Ab`` and ``s=a%2Fb``; a predicate on the value finds their
+    rows, from the log's dicts and from a checkpoint."""
+    ddl = "s STRING, v INT"
+    t = TxTable.create(spark, str(tmp_path / "esc"), StructType.fromDDL(ddl),
+                       partition_by=["s"])
+    t.write(spark.createDataFrame(
+        [("a:b", 1), ("a/b", 2), ("a", 3), ("b", 4)], ddl))
+    assert {f["partitionValues"]["s"] for f in t.snapshot().files.values()} \
+        == {"a%3Ab", "a%2Fb", "a", "b"}
+    if checkpoint:
+        _checkpointed(t)
+    for pred, want in ((("s", "=", "a:b"), {1}), (("s", "=", "a/b"), {2}),
+                       (("s", ">", "a/"), {1, 2, 4}),
+                       (("s", "<", "a0"), {2, 3})):
+        got = {r.v for r in t.read(predicates=[pred]).collect()}
+        assert got == want, pred
+
+
+# -- per-file stats from parquet footers ----------------------------------
+
+
+def _spark_stats_oracle(spark, t: TxTable, cols: list[str]) -> dict:
+    """Per-file ``numRecords`` and min/max as a Spark aggregate over the
+    committed files computes them — how stats were collected before they
+    were read from footers — in the log's JSON form."""
+    import urllib.parse
+
+    snap = t.snapshot()
+    aggs = [F.count(F.lit(1)).alias("_n")]
+    for c in cols:
+        aggs += [F.min(c).alias(f"_min_{c}"), F.max(c).alias(f"_max_{c}")]
+    rows = (
+        spark.read.option("basePath", t.root).schema(snap.schema)
+        .parquet(*[os.path.join(t.root, p) for p in snap.files])
+        .groupBy(F.input_file_name().alias("_f")).agg(*aggs).collect()
+    )
+
+    def as_json(v):
+        return v if v is None or isinstance(v, (int, float, str)) else str(v)
+
+    out = {}
+    for r in rows:
+        rel = os.path.relpath(
+            urllib.parse.unquote(r["_f"].removeprefix("file:")), t.root
+        )
+        out[rel] = {
+            "numRecords": r["_n"],
+            "stats": {c: {"min": as_json(r[f"_min_{c}"]),
+                          "max": as_json(r[f"_max_{c}"])} for c in cols},
+        }
+    return out
+
+
+def _stats_differences(spark, t: TxTable) -> list[tuple]:
+    """``(file, column, bound, logged, oracle)`` for every logged stat
+    that differs from the Spark aggregate (NaN equals NaN; -0.0 and 0.0
+    differ)."""
+    import math
+
+    cols = [f.name for f in t.snapshot().schema.fields]
+    want = _spark_stats_oracle(spark, t, cols)
+    files = t.snapshot().files
+    assert set(files) == set(want)
+    diffs = []
+    for rel, entry in files.items():
+        assert entry["numRecords"] == want[rel]["numRecords"]
+        assert set(entry["stats"]) == set(cols)
+        for c in cols:
+            for k in ("min", "max"):
+                a, b = entry["stats"][c][k], want[rel]["stats"][c][k]
+                if isinstance(a, float) and isinstance(b, float) and (
+                    (math.isnan(a) and math.isnan(b))
+                    or (a == b and math.copysign(1, a) == math.copysign(1, b))
+                ):
+                    continue
+                if type(a) is not type(b) or a != b or isinstance(a, float):
+                    diffs.append((rel, c, k, a, b))
+    return diffs
+
+
+def test_footer_stats_equal_spark_aggregate(spark, tmp_path):
+    """Logged stats equal a Spark min/max over each file for every stats
+    type: each integer width; float and double with NaN, ±inf and -0.0;
+    three decimal widths; date; empty and non-ASCII strings; an all-NULL
+    column; files of several row groups. The only differences are a zero
+    whose sign differs and None for a string over 4 KB, which
+    parquet-java leaves out of the footer."""
+    import datetime
+    import decimal
+
+    import pyarrow.parquet as pq
+
+    ddl = ("b TINYINT, s SMALLINT, i INT, l BIGINT, f FLOAT, d DOUBLE, "
+           "d51 DECIMAL(5,1), d102 DECIMAL(10,2), d382 DECIMAL(38,2), "
+           "dt DATE, str STRING, nul INT")
+    D = decimal.Decimal
+    nan, inf = float("nan"), float("inf")
+
+    def row(n, d=None, f=None, text=None):
+        return (
+            n % 127 - 60, n * 7 - 2000, n * 1000 - 300_000,
+            n * 10**12 - 2**40, f if f is not None else n / 8 - 30,
+            d if d is not None else n / 3 - 100,
+            D(n % 9999 - 5000).scaleb(-1), D(n * 101 - 30_000).scaleb(-2),
+            D(n * 10**20 + 7).scaleb(-2) * (1 if n % 2 else -1),
+            datetime.date(1900, 1, 1) + datetime.timedelta(days=n * 97),
+            text if text is not None else f"é{n:04d}漢", None,
+        )
+
+    t = TxTable.create(spark, str(tmp_path / "eq"), StructType.fromDDL(ddl))
+    # several row groups per file: a small block size makes parquet-java
+    # flush a row group at each size check (every 100 rows at first)
+    spark.conf.set("parquet.block.size", "2048")
+    try:
+        # ±inf, and NaN only in the last row groups, so file bounds
+        # combine chunk bounds NaN-aware
+        rows = [row(0, f=inf), row(1, f=-inf)] + [
+            row(n) for n in range(2, 500)
+        ] + [row(n, d=nan) for n in range(500, 640)]
+        t.write(spark.createDataFrame(rows, ddl).coalesce(1))
+    finally:
+        spark.conf.unset("parquet.block.size")
+    # every double NaN; an empty string is the min, a string over 4 KB
+    # the max
+    t.write(spark.createDataFrame(
+        [row(7, d=nan, text=""), row(8, d=nan, text="x" * 5000),
+         row(9, d=nan, text="abc")], ddl).coalesce(1))
+    # a float minimum that is both 0.0 and -0.0
+    t.write(spark.createDataFrame(
+        [row(20, f=0.0), row(21, f=-0.0)] + [
+            row(n, f=float(n)) for n in range(22, 25)
+        ], ddl).coalesce(1))
+    files = t.snapshot().files
+    groups = {rel: pq.ParquetFile(os.path.join(t.root, rel)).metadata
+              .num_row_groups for rel in files}
+    assert max(groups.values()) > 2
+    diffs = _stats_differences(spark, t)
+    big = sorted((k, a, b[:3]) for _, c, k, a, b in diffs if c == "str")
+    zeros = [(c, k, a, b) for _, c, k, a, b in diffs if c != "str"]
+    assert big == [("max", None, "xxx"), ("min", None, "")], big
+    # parquet-java keeps the -0.0; Spark's min keeps the first zero
+    assert repr(zeros) == repr([("f", "min", -0.0, 0.0)]), zeros
+    # the all-NaN file: min and max NaN, as Spark computes them
+    (nan_file,) = [f for f in files.values()
+                   if f["numRecords"] == 3]
+    assert nan_file["stats"]["d"]["min"] != nan_file["stats"]["d"]["min"]
+    assert nan_file["stats"]["nul"] == {"min": None, "max": None}
+
+
+def test_footer_stats_for_partition_columns(spark, tmp_path):
+    """Partition columns' stats are their typed, unescaped directory
+    values (NULL partition → None), equal to a Spark min/max over each
+    file, for int, string and date partitions."""
+    import datetime
+
+    ddl = "p INT, s STRING, dt DATE, v DOUBLE"
+    t = TxTable.create(spark, str(tmp_path / "part"),
+                       StructType.fromDDL(ddl), partition_by=["p", "s", "dt"])
+    day = datetime.date(2024, 2, 29)
+    t.write(spark.createDataFrame([
+        (1, "a:b", day, 1.0), (1, "a:b", day, 2.0), (-3, "a/b", None, 3.0),
+        (None, "é", day, 4.0), (7, None, day, float("nan")),
+    ], ddl))
+    assert _stats_differences(spark, t) == []
+    stats = {(f["stats"]["p"]["min"], f["stats"]["s"]["min"],
+              f["stats"]["dt"]["min"]) for f in t.snapshot().files.values()}
+    assert stats == {(1, "a:b", "2024-02-29"), (-3, "a/b", None),
+                     (None, "é", "2024-02-29"), (7, None, "2024-02-29")}
 
 
 # -- log checkpointing ----------------------------------------------------
