@@ -17,7 +17,8 @@ Layout (all inside the table root)::
     <root>/_txlog/00000000000000000000.json             # commit 0, 1, ...
     <root>/_txlog/00000000000000000010.checkpoint.parquet  # log checkpoint
     <root>/_txlog/_last_checkpoint.json                  # newest checkpoint ptr
-    <root>/_change_data/cdc-...parquet                   # CDF change files
+    <root>/_change_data/_change_type=insert/day=2024-01-01/cdc-...parquet
+                                                         # CDF change files
     <root>/day=2024-01-01/part-...parquet                # immutable data files
 
 Each commit records ``add`` / ``remove`` file actions with per-file
@@ -68,7 +69,12 @@ Scale notes (the parts that matter at 100 TB):
     holding only the CHANGED rows tagged ``update_preimage`` /
     ``update_postimage`` / ``insert`` / ``delete`` — so CDF consumers
     see row-level changes, not the rewritten file's carried-over rows,
-    and OPTIMIZE (``dataChange=false``) is invisible to the feed.
+    and OPTIMIZE (``dataChange=false``) is invisible to the feed. The
+    change rows leave in the same Spark write as the commit's data
+    rows: the change type is the outer hive partition level of the
+    staged files, so a change file keeps it in its path
+    (``_change_type=<type>/<partition dirs>``) and, like a data file,
+    holds only the table's non-partition columns.
 
 The COMMIT plane (publish / list / read commits, checkpoints, the
 ``_last_checkpoint`` pointer) is pluggable via
@@ -98,13 +104,19 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ByteType,
+    DateType,
     DecimalType,
     DoubleType,
     FloatType,
+    IntegerType,
     IntegralType,
+    LongType,
+    ShortType,
     StringType,
     StructField,
     StructType,
+    TimestampType,
 )
 
 from .commitstore import (
@@ -127,6 +139,13 @@ from .util import local_relation
 
 _LOG_DIR = "_txlog"
 _CDC_DIR = "_change_data"
+#: a DML commit's staged rows carry this column: NULL for data rows,
+#: the change type for change rows. The feed adds the other two names,
+#: so no table column may use any of them.
+_CHANGE_TYPE = "_change_type"
+_RESERVED_COLUMNS = (_CHANGE_TYPE, "_commit_version", "_commit_timestamp")
+#: the staged subtree holding a DML commit's data rows
+_DATA_ROWS_DIR = f"{_CHANGE_TYPE}=__HIVE_DEFAULT_PARTITION__"
 _DV_DIR = "_deletion_vectors"
 _LAST_CHECKPOINT = "_last_checkpoint.json"
 _STATS_TYPES = ("int", "bigint", "smallint", "tinyint", "double", "float",
@@ -251,6 +270,18 @@ def _require_compatible(table: StructType, incoming: StructType) -> None:
             "schema mismatch (pass merge_schema=True to evolve): "
             f"missing={only_a} new={only_b} "
             f"type_diff={[(k, a[k], b[k]) for k in diff]}"
+        )
+
+
+def _reject_reserved(schema: StructType) -> None:
+    """Refuse table columns named like the change feed's own columns:
+    the feed would overwrite or duplicate them. Spark resolves names
+    case-insensitively, so the check does too."""
+    bad = [n for n in schema.fieldNames() if n.lower() in _RESERVED_COLUMNS]
+    if bad:
+        raise ValueError(
+            f"column name(s) {bad} are reserved for the change data feed "
+            f"({', '.join(_RESERVED_COLUMNS)}); rename them"
         )
 
 
@@ -517,6 +548,12 @@ def _footer_bounds(md, idx: int | None, dtype) -> dict:
     unknown = {"min": None, "max": None}
     if idx is None:  # column absent from this file: all NULL on read
         return unknown
+    if isinstance(dtype, (FloatType, DoubleType)) and not (
+        md.created_by or ""
+    ).startswith(("parquet-mr", "parquet-java")):
+        # other writers (Arrow's among them) leave NaN out of min/max,
+        # so the bounds would prune a file whose NaN rows match ">"
+        return unknown
     mins, maxs = [], []
     for rg in range(md.num_row_groups):
         chunk = md.row_group(rg).column(idx)
@@ -707,16 +744,43 @@ def _bloom_may_contain(bl: dict | None, lit) -> bool:
 #: front so an unsupported op (e.g. '!=') fails with a clear error
 #: instead of being silently ignored by pruning and then crashing the
 #: row filter with a bare KeyError.
-_PRED_OPS = ("=", "<", "<=", ">", ">=")
+_PRED_FNS = {
+    "=": lambda c, v: c == v,
+    "<": lambda c, v: c < v,
+    "<=": lambda c, v: c <= v,
+    ">": lambda c, v: c > v,
+    ">=": lambda c, v: c >= v,
+}
 
 
 def _validate_predicates(predicates) -> None:
     for _col, op, _lit in predicates or []:
-        if op not in _PRED_OPS:
+        if op not in _PRED_FNS:
             raise ValueError(
                 f"unsupported predicate op {op!r}; supported operators: "
-                f"{list(_PRED_OPS)}"
+                f"{list(_PRED_FNS)}"
             )
+
+
+def _filter_rows(df: DataFrame, schema: StructType, predicates) -> DataFrame:
+    """``df`` filtered row-exactly by ``[(col, op, literal)]``. Spark
+    orders NaN above every number, so ``>``/``>=`` on a float column
+    with a non-NaN literal matches NaN rows; ``OR isnan(c)`` keeps the
+    predicate out of parquet row-group pushdown, which would otherwise
+    skip them in files whose writer (Arrow, for one) leaves NaN out of
+    the footer min/max."""
+    types = {f.name: f.dataType for f in schema.fields}
+    for col, op, lit in predicates or []:
+        c = F.col(col)
+        cond = _PRED_FNS[op](c, F.lit(lit))
+        if (
+            op in (">", ">=")
+            and isinstance(types.get(col), (FloatType, DoubleType))
+            and not (isinstance(lit, float) and lit != lit)
+        ):
+            cond = cond | F.isnan(c)
+        df = df.filter(cond)
+    return df
 
 
 def _keep_entry(f_: dict, predicates) -> bool:
@@ -804,6 +868,153 @@ def _key_range_predicates(key_set, key_schema: StructType) -> list[tuple]:
         preds += [(f_.name, ">=", mm["min"].as_py()),
                   (f_.name, "<=", mm["max"].as_py())]
     return preds
+
+
+# ---------------------------------------------------------------------------
+# MERGE key membership
+#
+# A MERGE splits target and source rows by whether their key is in a key
+# set. A small set becomes a literal predicate in the query itself; a
+# larger one is a left-outer join against the distinct keys with an
+# indicator column. Either way the frame gains the never-NULL boolean
+# column _MEMBER, so the code downstream is the same.
+
+#: key sets at or below this many keys become a literal predicate
+#: instead of a broadcast join: the broadcast costs a job per query that
+#: uses it, the literal costs driver-side planning that grows with the
+#: key count (measured in CHANGES.md).
+_LITERAL_KEYS_MAX = 256
+
+_MEMBER = "__txmerge_member"
+_INT_SUFFIX = {ByteType: "Y", ShortType: "S", IntegerType: "", LongType: "L"}
+
+
+def _sql_literals(col, dtype) -> list | None:
+    """Exact, typed Spark SQL literals for the values of one Arrow key
+    column (None for a NULL value), or None when ``dtype`` has no exact
+    rendering. Strings go through their UTF-8 hex, so no escaping is
+    needed; timestamps through their integer microseconds, so the
+    session time zone cannot shift them."""
+    import pyarrow as pa
+
+    t = type(dtype)
+    if t in _INT_SUFFIX:
+        return [None if v is None else f"{v}{_INT_SUFFIX[t]}"
+                for v in col.to_pylist()]
+    if dtype == StringType():  # the default (binary) collation only
+        return [None if v is None else
+                f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+                for v in col.to_pylist()]
+    if t is TimestampType and col.type.unit == "us":
+        return [None if v is None else f"timestamp_micros({v})"
+                for v in col.cast(pa.int64()).to_pylist()]
+    if t is DateType:
+        return [None if v is None else f"DATE '{v.isoformat()}'"
+                for v in col.to_pylist()]
+    if t in (DoubleType, FloatType, DecimalType):
+        def text(v) -> str:
+            if isinstance(v, decimal.Decimal):
+                return format(v, "f")
+            if v != v:
+                return "NaN"
+            if v in (float("inf"), float("-inf")):
+                return "Infinity" if v > 0 else "-Infinity"
+            return repr(v)
+        return [None if v is None else
+                f"CAST('{text(v)}' AS {dtype.simpleString()})"
+                for v in col.to_pylist()]
+    return None
+
+
+def _literal_membership(key_set, key_schema: StructType) -> str | None:
+    """SQL predicate, never NULL, that holds exactly for rows whose key
+    columns equal one row of ``key_set`` (a pyarrow table) null-safely,
+    as the join's ``<=>`` does; None when a key type has no exact
+    literal. Keys without a NULL form one ``IN`` list (over a struct for
+    several columns); a key holding a NULL adds its own ``<=>`` term."""
+    cols = []
+    for f_ in key_schema.fields:
+        lits = _sql_literals(key_set.column(f_.name), f_.dataType)
+        if lits is None:
+            return None
+        cols.append(lits)
+    names = ["`" + f_.name.replace("`", "``") + "`"
+             for f_ in key_schema.fields]
+    full = [t for t in zip(*cols) if None not in t]
+    terms = []
+    if full:
+        if len(names) == 1:
+            lhs, items = names[0], [t[0] for t in full]
+        else:
+            def struct(vals) -> str:
+                return "named_struct(" + ", ".join(
+                    f"'k{i}', {v}" for i, v in enumerate(vals)) + ")"
+            lhs, items = struct(names), [struct(t) for t in full]
+        terms.append(f"coalesce({lhs} IN ({', '.join(items)}), false)")
+    for t in zip(*cols):
+        if None in t:
+            terms.append("(" + " AND ".join(
+                f"{n} IS NULL" if v is None else f"{n} <=> {v}"
+                for n, v in zip(names, t)) + ")")
+    return " OR ".join(terms)
+
+
+def _key_members(spark: SparkSession, key_set, key_schema: StructType):
+    """The membership test for the distinct keys ``key_set``: a literal
+    predicate (SQL text) at or below :data:`_LITERAL_KEYS_MAX` keys, else
+    a broadcast relation of the keys."""
+    if key_set.num_rows <= _LITERAL_KEYS_MAX:
+        expr = _literal_membership(key_set, key_schema)
+        if expr is not None:
+            return expr
+    return F.broadcast(spark.createDataFrame(key_set, key_schema))
+
+
+def _mark(df: DataFrame, keys: list[str], members) -> DataFrame:
+    """``df`` plus the never-NULL boolean column :data:`_MEMBER`: its key
+    is in ``members`` null-safely. ``members`` is a literal predicate
+    (:func:`_key_members`) or a frame of distinct keys, joined left-outer
+    with an indicator column."""
+    if isinstance(members, str):
+        return df.withColumn(_MEMBER, F.expr(members))
+    right = members.select(
+        *[F.col(k).alias(f"{_MEMBER}{i}") for i, k in enumerate(keys)],
+        F.lit(True).alias(_MEMBER),
+    )
+    cond = None
+    for i, k in enumerate(keys):
+        c = F.col(k).eqNullSafe(F.col(f"{_MEMBER}{i}"))
+        cond = c if cond is None else cond & c
+    return df.join(right, cond, "left_outer").select(
+        *[F.col(c) for c in df.columns],
+        F.coalesce(F.col(_MEMBER), F.lit(False)).alias(_MEMBER),
+    )
+
+
+def _drop_duplicate_keys(df: DataFrame, keys: list[str]) -> DataFrame:
+    """``df.dropDuplicates(keys)``, keeping each kept row's own key
+    values: the dedup aggregate outputs a float key normalized (-0.0 as
+    0.0), while a MERGE writes the source row as it is."""
+    types = {f.name: f.dataType for f in df.schema.fields}
+    raw = {
+        k: f"{_MEMBER}_raw{i}" for i, k in enumerate(keys)
+        if isinstance(types[k], (FloatType, DoubleType))
+    }
+    if not raw:
+        return df.dropDuplicates(keys)
+    return (
+        df.withColumns({a: F.col(k) for k, a in raw.items()})
+        .dropDuplicates(keys)
+        .withColumns({k: F.col(a) for k, a in raw.items()})
+        .drop(*raw.values())
+    )
+
+
+def _union_all(frames: list[DataFrame]) -> DataFrame:
+    out = frames[0]
+    for f_ in frames[1:]:
+        out = out.unionByName(f_)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -951,6 +1162,7 @@ class TxTable:
         """Empty-table create with schema + properties (S8;
         reference ``delta_setup.py:450-505``). Version 0 holds the
         schema and table properties and zero files."""
+        _reject_reserved(schema)
         t = cls(spark, path, store=store)
         os.makedirs(t.root, exist_ok=True)
         if _list_versions(t.root):
@@ -997,6 +1209,14 @@ class TxTable:
         column keeps its inferred type only when that type reproduces
         every directory value (:func:`_lossy_partition_types`), so
         ``day=01`` stays the string ``'01'``.
+
+        Float/double stats are logged only for files parquet-java
+        wrote: other writers (Arrow's among them) leave NaN out of the
+        footer min/max, so their bounds are unknown and never prune.
+        ``read(predicates=...)`` also keeps NaN rows out of Spark's
+        parquet row-group pushdown (see :func:`_filter_rows`); a plain
+        ``read().where("d > 5")`` still depends on Spark's own pushdown,
+        which skips such a file's NaN rows.
         """
         t = cls(spark, path)
         if _list_versions(t.root):
@@ -1027,11 +1247,12 @@ class TxTable:
                 for f in df.schema.fields
             ])).parquet(t.root)
         schema = df.schema
+        _reject_reserved(schema)
         # numRecords + min/max column stats for every adopted file, from
         # its footer (same auto-indexing as fresh writes), so log-side
         # file skipping works immediately — not only after a rewrite.
         # Zero-row files are not adopted (Delta doesn't commit them).
-        per_file = t._collect_stats(t.root, files, df, None,
+        per_file = t._collect_stats(t.root, files, schema, None,
                                     properties or {}, part_cols)
         adds = [
             {"path": rel, "partitionValues": _partition_values(rel),
@@ -1187,10 +1408,7 @@ class TxTable:
             if with_position:
                 cols += [F.col("_dv_rel"), F.col("_dv_pos")]
             parts.append(part.select(*cols))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union_all(parts)
 
     def read(self, version: int | None = None,
              timestamp_ms: int | None = None,
@@ -1212,17 +1430,10 @@ class TxTable:
         snap = self.snapshot(version, timestamp_ms)
         _validate_predicates(predicates)
         files = _prune(snap, predicates)
-        df = self._read_entries(files, snap.schema, snap.partition_by)
-        _OPS = {
-            "=": lambda c, v: c == v,
-            "<": lambda c, v: c < v,
-            "<=": lambda c, v: c <= v,
-            ">": lambda c, v: c > v,
-            ">=": lambda c, v: c >= v,
-        }
-        for col, op, lit in predicates or []:
-            df = df.filter(_OPS[op](F.col(col), F.lit(lit)))
-        return df
+        return _filter_rows(
+            self._read_entries(files, snap.schema, snap.partition_by),
+            snap.schema, predicates,
+        )
 
     # -- commit machinery --------------------------------------------------
 
@@ -1342,6 +1553,7 @@ class TxTable:
         """
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append|overwrite, got {mode!r}")
+        _reject_reserved(df.schema)
         snap = self.snapshot()
         schema_json: str | None = None
         if not snap.schema_json:
@@ -1356,8 +1568,8 @@ class TxTable:
                     schema_json = merged.json()
         else:
             _require_compatible(snap.schema, df.schema)
-        adds = self._stage_files(df, snap.version + 1, snap.partition_by,
-                                 stats_cols, snap.properties)
+        adds, _ = self._stage_files(df, snap.version + 1, snap.partition_by,
+                                    stats_cols, snap.properties)
 
         def action(version: int) -> dict:
             a = {
@@ -1382,7 +1594,19 @@ class TxTable:
     def _stage_files(self, df: DataFrame, version: int,
                      partition_by: list[str],
                      stats_cols: list[str] | None,
-                     properties: dict | None = None) -> list[dict]:
+                     properties: dict | None = None,
+                     changes: bool = False) -> tuple[list[dict], list[str]]:
+        """Write ``df`` once and move its files into the table: returns
+        the data files' add actions and the change files' paths.
+
+        ``changes=True`` is a DML commit's frame: the table columns plus
+        :data:`_CHANGE_TYPE`, NULL for data rows. It is written with
+        ``_CHANGE_TYPE`` as the outer partition level, so one job stages
+        both kinds: the ``__HIVE_DEFAULT_PARTITION__`` subtree holds the
+        data files, every other subtree change files, which move under
+        ``_change_data/`` keeping their hive sub-path
+        (``_change_type=insert/p=a%3Ab/cdc-*.parquet``). Either kind of
+        file holds exactly the table's non-partition columns."""
         # Sibling of the table root (never inside it, so snapshot reads
         # can't see it), WITHOUT a leading underscore: "_"-prefixed dirs
         # are invisible to Spark's own file listing, which would break
@@ -1393,42 +1617,66 @@ class TxTable:
         token = uuid.uuid4().hex[:8]
         stage = self.root + f"__stage_v{version}_{token}"
         shutil.rmtree(stage, ignore_errors=True)
+        levels = ([_CHANGE_TYPE] if changes else []) + list(partition_by)
         writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
+        if levels:
+            writer = writer.partitionBy(*levels)
         writer.parquet(stage)
 
         staged = sorted(
             str(p.relative_to(stage))
             for p in pathlib.Path(stage).rglob("*.parquet")
         )
-        per_file = self._collect_stats(stage, staged, df, stats_cols,
+        data_root, data = stage, staged
+        if changes:
+            data_root = os.path.join(stage, _DATA_ROWS_DIR)
+            data = [rel.split(os.sep, 1)[1] for rel in staged
+                    if rel.startswith(_DATA_ROWS_DIR + os.sep)]
+        schema = StructType(
+            [f for f in df.schema.fields if f.name != _CHANGE_TYPE]
+        )
+        per_file = self._collect_stats(data_root, data, schema, stats_cols,
                                        properties, partition_by)
+        store = store_for(self.root)
+        adds = []
         # Tasks that received no rows still write a zero-row parquet
         # file; don't commit those (Delta doesn't either).
-        staged = [rel for rel in staged if rel in per_file]
-        adds = []
-        store = store_for(self.root)
-        for i, rel in enumerate(staged):
-            sub = os.path.dirname(rel)
+        for i, rel in enumerate(r for r in data if r in per_file):
             final_rel = os.path.join(
-                sub, f"part-{version:010d}-{token}-{i:05d}.parquet"
+                os.path.dirname(rel),
+                f"part-{version:010d}-{token}-{i:05d}.parquet",
             )
-            store.publish_file(
-                os.path.join(stage, rel), os.path.join(self.root, final_rel)
-            )
+            store.publish_file(os.path.join(data_root, rel),
+                               os.path.join(self.root, final_rel))
             adds.append({"path": final_rel,
                          "partitionValues": _partition_values(rel),
                          **per_file[rel]})
+        cdc = []
+        if changes:
+            import pyarrow.parquet as pq
+
+            for i, rel in enumerate(
+                r for r in staged if not r.startswith(_DATA_ROWS_DIR + os.sep)
+            ):
+                src = os.path.join(stage, rel)
+                if pq.read_metadata(src).num_rows == 0:
+                    continue
+                final_rel = os.path.join(
+                    _CDC_DIR, os.path.dirname(rel),
+                    f"cdc-{version:010d}-{token}-{i:05d}.parquet",
+                )
+                store.publish_file(src, os.path.join(self.root, final_rel))
+                cdc.append(final_rel)
         shutil.rmtree(stage, ignore_errors=True)
-        return adds
+        return adds, cdc
 
     #: like Delta's dataSkippingNumIndexedCols: auto-collect min/max
     #: stats for at most this many leading eligible columns when the
     #: caller doesn't name stats columns explicitly.
     auto_stats_cols: int = 32
 
-    def _collect_stats(self, stage: str, staged: list[str], df: DataFrame,
+    def _collect_stats(self, stage: str, staged: list[str],
+                       schema: StructType,
                        stats_cols: list[str] | None,
                        properties: dict | None = None,
                        partition_by: list[str] | None = None) -> dict:
@@ -1453,16 +1701,16 @@ class TxTable:
         driver-side equality probe."""
         import pyarrow.parquet as pq
 
-        dtypes = dict(df.dtypes)
+        dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
         if stats_cols is None:
             stats_cols = [
-                c for c, t in df.dtypes if t.startswith(_STATS_TYPES)
+                c for c, t in dtypes.items() if t.startswith(_STATS_TYPES)
             ][: self.auto_stats_cols]
         cols = [
             c for c in stats_cols
             if dtypes.get(c, "").startswith(_STATS_TYPES)
         ]
-        types = {f.name: f.dataType for f in df.schema.fields}
+        types = {f.name: f.dataType for f in schema.fields}
         parts = set(partition_by or [])
         out = {}
         for rel in staged:
@@ -1498,10 +1746,11 @@ class TxTable:
             if dtypes.get(c, "") in _BLOOM_TYPES and c not in parts
         ]
         if bloom_cols and out:
-            self._collect_blooms(stage, df, out, bloom_cols, bits, hashes)
+            self._collect_blooms(stage, schema, out, bloom_cols, bits,
+                                 hashes)
         return out
 
-    def _collect_blooms(self, stage: str, df: DataFrame, out: dict,
+    def _collect_blooms(self, stage: str, schema: StructType, out: dict,
                         bloom_cols: list[str], bits: int,
                         hashes: int) -> None:
         """Add each non-empty staged file's ``bloom`` bitmaps to its
@@ -1519,7 +1768,7 @@ class TxTable:
         # sink pins for its target read).
         rows = (
             self.spark.read.option("basePath", stage)
-            .schema(df.schema).parquet(stage)
+            .schema(schema).parquet(stage)
             .groupBy(F.input_file_name().alias("_f"))
             .agg(*aggs)
             .collect()  # bounded: one row per staged file
@@ -1553,36 +1802,6 @@ class TxTable:
             raise RuntimeError(
                 f"bloom read-back missed non-empty staged files {missing[:3]}"
             )
-
-    def _stage_cdc(self, cdc_df: DataFrame, version: int) -> list[str]:
-        """Write explicit change rows (table columns + ``_change_type``)
-        under ``_change_data/`` — Delta's CDC file layout. The files are
-        self-contained (no hive partitioning), invisible to snapshot
-        reads (which consume the log's file list), and collected by
-        VACUUM past retention like tombstoned data files."""
-        token = uuid.uuid4().hex[:8]
-        stage = self.root + f"__cdcstage_{token}"
-        shutil.rmtree(stage, ignore_errors=True)
-        cdc_df.write.mode("overwrite").parquet(stage)
-        out = []
-        staged = sorted(
-            str(p.relative_to(stage))
-            for p in pathlib.Path(stage).rglob("*.parquet")
-        )
-        import pyarrow.parquet as pq
-
-        store = store_for(self.root)
-        for i, rel in enumerate(staged):
-            src = os.path.join(stage, rel)
-            if pq.ParquetFile(src).metadata.num_rows == 0:
-                continue
-            final_rel = os.path.join(
-                _CDC_DIR, f"cdc-{version:010d}-{token}-{i:05d}.parquet"
-            )
-            store.publish_file(src, os.path.join(self.root, final_rel))
-            out.append(final_rel)
-        shutil.rmtree(stage, ignore_errors=True)
-        return out
 
     # -- history / time travel / restore ----------------------------------
 
@@ -1919,12 +2138,18 @@ class TxTable:
         Delta's ``_change_data`` mechanism) are served from those files,
         so a copy-on-write rewrite surfaces ONLY its changed rows with
         true update pre/post-images — never the rewritten file's
-        carried-over rows. Plain appends/overwrites are reconstructed
-        from add/remove actions (exactly how Delta serves CDF for
-        commits without change files), and ``dataChange=false`` commits
-        (OPTIMIZE) are invisible. Output columns follow the schema at
-        the range's end; older-generation rows are cast/null-filled.
-        Needs the underlying files still on disk (pre-VACUUM)."""
+        carried-over rows. A change file sits under
+        ``_change_data/_change_type=<type>/<partition dirs>/`` and holds
+        the non-partition columns, so it is read with
+        ``basePath=_change_data`` under the commit's ``fileSchema`` plus
+        ``_change_type``; flat change files of older commits hold every
+        column and read as they are. Plain appends/overwrites are
+        reconstructed from add/remove actions (exactly how Delta serves
+        CDF for commits without change files), and ``dataChange=false``
+        commits (OPTIMIZE) are invisible. Output columns follow the
+        schema at the range's end; older-generation rows are
+        cast/null-filled. Needs the underlying files still on disk
+        (pre-VACUUM)."""
         all_versions = _list_versions(self.root)
         hi = to_version if to_version is not None else (
             all_versions[-1] if all_versions else 0
@@ -2034,20 +2259,32 @@ class TxTable:
                 )
             )
             if c.get("cdc"):
-                cdc_paths = []
                 for rel in c["cdc"]:
-                    p = os.path.join(self.root, rel)
-                    if not os.path.exists(p):
+                    if not os.path.exists(os.path.join(self.root, rel)):
                         raise VacuumedFileError(
                             f"change feed needs vacuumed change file {rel}"
                         )
-                    cdc_paths.append(p)
-                with_type = StructType(
-                    final_schema.fields
-                    + [StructField("_change_type", StringType())]
-                )
-                raw = self.spark.read.parquet(*cdc_paths)
-                parts.append(stamp(_align(raw, with_type)))
+                ct = StructField(_CHANGE_TYPE, StringType())
+                paths = [os.path.join(self.root, rel) for rel in c["cdc"]]
+                if c["cdc"][0].startswith(
+                    os.path.join(_CDC_DIR, _CHANGE_TYPE + "=")
+                ):
+                    # hive layout: _change_type and the partition values
+                    # come from the path, the rest from the file
+                    file_schema = StructType.fromJson(json.loads(
+                        c.get("fileSchema") or schema_at[v]
+                    ))
+                    raw = (
+                        self.spark.read
+                        .option("basePath", os.path.join(self.root, _CDC_DIR))
+                        .schema(StructType(file_schema.fields + [ct]))
+                        .parquet(*paths)
+                    )
+                else:  # flat files holding every column (older commits)
+                    raw = self.spark.read.parquet(*paths)
+                parts.append(stamp(_align(
+                    raw, StructType(final_schema.fields + [ct])
+                )))
                 continue
             added_entries, removed_entries = state_at.get(v, ([], []))
             for kind, entries in (
@@ -2067,10 +2304,7 @@ class TxTable:
                 .withColumn("_commit_timestamp", F.lit(0).cast("long"))
                 .limit(0)
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union_all(parts)
 
     # -- copy-on-write DML -------------------------------------------------
 
@@ -2093,17 +2327,11 @@ class TxTable:
         # _dv_rel (the scan's root-relative _metadata.file_path), not
         # input_file_name(): the latter is undefined on a multi-source
         # plan, which every DV-applying read is (scan ⟕ anti bundle)
-        df = self._read_entries(files, snap.schema, snap.partition_by,
-                                with_position=True)
-        _OPS = {
-            "=": lambda c, v: c == v,
-            "<": lambda c, v: c < v,
-            "<=": lambda c, v: c <= v,
-            ">": lambda c, v: c > v,
-            ">=": lambda c, v: c >= v,
-        }
-        for col, op, lit in predicates or []:
-            df = df.filter(_OPS[op](F.col(col), F.lit(lit)))
+        df = _filter_rows(
+            self._read_entries(files, snap.schema, snap.partition_by,
+                               with_position=True),
+            snap.schema, predicates,
+        )
         hits = (
             df.filter(cond)
             .groupBy("_dv_rel")
@@ -2211,39 +2439,51 @@ class TxTable:
             ["file", "row_index"]
         )
 
-    def _rewrite(self, touched: list[str], snap: Snapshot,
-                 remaining: DataFrame | None, operation: str, params: dict,
-                 extra_df: DataFrame | None = None,
-                 cdc_df: DataFrame | None = None,
+    def _dv_route(self, snap: Snapshot, dv_set: list[str],
+                  schema: StructType,
+                  match) -> tuple[DataFrame, list[dict], str]:
+        """Merge-on-read half of a DML commit: the rows of the DV-route
+        files that ``match`` (positional frame → its matched rows)
+        selects, checkpointed and projected onto ``schema``; their new
+        deletion-vector bundle; and the files' re-add entries."""
+        matched = match(self._read_entries(
+            [snap.files[p] for p in dv_set], schema, snap.partition_by,
+            with_position=True,
+        )).localCheckpoint(eager=False)
+        bundle, card = self._stage_dv(
+            self._build_dv_rows(matched, snap, dv_set),
+            snap.version + 1, dv_set,
+        )
+        return (
+            matched.select(*[f.name for f in schema.fields]),
+            self._dv_adds(snap, dv_set, bundle, card),
+            bundle,
+        )
+
+    def _rewrite(self, touched: list[str], snap: Snapshot, rows: DataFrame,
+                 operation: str, params: dict,
                  schema_json: str | None = None,
                  file_schema: StructType | None = None,
                  dv_adds: list[dict] | None = None,
                  dv_bundle: str | None = None) -> int:
-        """Shared DML tail for DELETE/UPDATE/MERGE: stage the survivors
-        (+ merge inserts) of the rewritten files, stage the explicit
-        change rows, re-add the DV-route entries with their new bundle,
-        publish with disjoint-rewrite retry. ``remaining=None`` skips
-        data staging entirely (a pure merge-on-read commit writes only
-        a DV bundle + change files — the rewrite-amplification win).
+        """Shared DML tail for DELETE/UPDATE/MERGE. ``rows`` is the
+        commit's one frame: the table columns plus ``_change_type``,
+        NULL for a row of the new data files (survivors of the rewritten
+        files, updated and inserted rows) and the change type for a
+        change row. It is staged in one write (:meth:`_stage_files`);
+        the DV-route entries re-add with their new bundle; the commit
+        publishes with disjoint-rewrite retry. A commit whose rows are
+        all change rows (a pure merge-on-read DELETE) adds no data file.
 
         ``touched`` lists EVERY logically modified file (both routes):
         they all appear in ``remove`` so concurrent-writer conflict
         detection covers DV updates too; the DV-route paths re-add in
         the same commit, which replay and VACUUM's re-add tracking
         already understand (the RESTORE pattern)."""
-        version = snap.version + 1
-        if extra_df is not None:
-            remaining = (
-                extra_df if remaining is None
-                else remaining.unionByName(extra_df)
-            )
-        adds = (
-            self._stage_files(remaining, version, snap.partition_by, None,
-                              snap.properties)
-            if remaining is not None else []
-        )
+        adds, cdc = self._stage_files(rows, snap.version + 1,
+                                      snap.partition_by, None,
+                                      snap.properties, changes=True)
         adds = adds + (dv_adds or [])
-        cdc = self._stage_cdc(cdc_df, version) if cdc_df is not None else []
 
         def action(v: int) -> dict:
             a = {
@@ -2295,41 +2535,21 @@ class TxTable:
         if not touched:
             return snap.version
         dv_set, rw_set = self._dv_split(snap, counts)
-        params = {"predicate": str(cond)}
-        if not dv_set:
-            tdf = self._touched_df(snap, touched)
-            cdc = tdf.filter(cond).withColumn("_change_type", F.lit("delete"))
-            # Survivors = rows where cond is NOT TRUE (Delta DELETE
-            # semantics): plain ~cond is NULL for NULL-condition rows,
-            # so they would be neither kept nor recorded as deletes —
-            # silent row loss on e.g. x > 5 over a NULL x.
-            return self._rewrite(
-                touched, snap, tdf.filter(~cond | cond.isNull()),
-                "DELETE", params, cdc_df=cdc,
-            )
-        data_cols = [f.name for f in snap.schema.fields]
-        dv_pos = self._read_entries(
-            [snap.files[p] for p in dv_set], snap.schema, snap.partition_by,
-            with_position=True,
-        ).filter(cond).localCheckpoint(eager=False)
-        cdc = dv_pos.select(*data_cols).withColumn(
-            "_change_type", F.lit("delete")
-        )
-        remaining = None
+        parts, dv_adds, bundle = [], None, None
         if rw_set:
-            tdf_rw = self._touched_df(snap, rw_set)
-            cdc = cdc.unionByName(
-                tdf_rw.filter(cond).withColumn("_change_type", F.lit("delete"))
+            # A row survives unless cond is TRUE (Delta DELETE
+            # semantics): a NULL-condition row stays a data row.
+            parts.append(self._touched_df(snap, rw_set).select(
+                "*", F.when(cond, F.lit("delete")).alias(_CHANGE_TYPE)
+            ))
+        if dv_set:
+            deleted, dv_adds, bundle = self._dv_route(
+                snap, dv_set, snap.schema, lambda df: df.filter(cond)
             )
-            remaining = tdf_rw.filter(~cond | cond.isNull())
-        bundle, card = self._stage_dv(
-            self._build_dv_rows(dv_pos, snap, dv_set),
-            snap.version + 1, dv_set,
-        )
+            parts.append(deleted.withColumn(_CHANGE_TYPE, F.lit("delete")))
         return self._rewrite(
-            touched, snap, remaining, "DELETE", params, cdc_df=cdc,
-            dv_adds=self._dv_adds(snap, dv_set, bundle, card),
-            dv_bundle=bundle,
+            touched, snap, _union_all(parts), "DELETE",
+            {"predicate": str(cond)}, dv_adds=dv_adds, dv_bundle=bundle,
         )
 
     def update(self, cond, assignments: dict, predicates=None) -> int:
@@ -2350,56 +2570,36 @@ class TxTable:
         if not touched:
             return snap.version
         dv_set, rw_set = self._dv_split(snap, counts)
-        params = {"predicate": str(cond)}
+        images = F.array(F.lit("update_preimage"), F.lit("update_postimage"),
+                         F.lit(None).cast("string"))
 
-        def apply(df: DataFrame) -> DataFrame:
+        def rows(df: DataFrame, kinds) -> DataFrame:
+            # A matched row leaves as its preimage, its postimage and its
+            # updated data row; the assignments skip the preimage.
+            out = df.select("*", F.explode(kinds).alias(_CHANGE_TYPE))
+            pre = F.col(_CHANGE_TYPE).eqNullSafe("update_preimage")
             for col, expr in assignments.items():
-                df = df.withColumn(col, F.when(cond, expr).otherwise(F.col(col)))
-            return df
-
-        if not dv_set:
-            tdf = self._touched_df(snap, touched)
-            pre = tdf.filter(cond)
-            cdc = (
-                pre.withColumn("_change_type", F.lit("update_preimage"))
-                .unionByName(
-                    apply(pre).withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
+                out = out.withColumn(
+                    col, F.when(~pre & cond, expr).otherwise(F.col(col))
                 )
-            )
-            return self._rewrite(
-                touched, snap, apply(tdf), "UPDATE", params, cdc_df=cdc,
-            )
-        data_cols = [f.name for f in snap.schema.fields]
-        dv_pos = self._read_entries(
-            [snap.files[p] for p in dv_set], snap.schema, snap.partition_by,
-            with_position=True,
-        ).filter(cond).localCheckpoint(eager=False)
-        pre = dv_pos.select(*data_cols)
-        remaining = None
+            return out
+
+        parts, dv_adds, bundle = [], None, None
         if rw_set:
-            tdf_rw = self._touched_df(snap, rw_set)
-            pre = pre.unionByName(tdf_rw.filter(cond))
-            remaining = apply(tdf_rw)
-        post = apply(pre)
-        cdc = (
-            pre.withColumn("_change_type", F.lit("update_preimage"))
-            .unionByName(
-                post.withColumn("_change_type", F.lit("update_postimage"))
+            parts.append(rows(
+                self._touched_df(snap, rw_set),
+                F.when(cond, images).otherwise(
+                    F.array(F.lit(None).cast("string"))
+                ),
+            ))
+        if dv_set:
+            matched, dv_adds, bundle = self._dv_route(
+                snap, dv_set, snap.schema, lambda df: df.filter(cond)
             )
-        )
-        bundle, card = self._stage_dv(
-            self._build_dv_rows(dv_pos, snap, dv_set),
-            snap.version + 1, dv_set,
-        )
-        # the DV-route files' updated rows land as NEW files
-        extra = apply(dv_pos.select(*data_cols))
+            parts.append(rows(matched, images))
         return self._rewrite(
-            touched, snap, remaining, "UPDATE", params,
-            extra_df=extra, cdc_df=cdc,
-            dv_adds=self._dv_adds(snap, dv_set, bundle, card),
-            dv_bundle=bundle,
+            touched, snap, _union_all(parts), "UPDATE",
+            {"predicate": str(cond)}, dv_adds=dv_adds, dv_bundle=bundle,
         )
 
     def merge(self, source: DataFrame, keys: list[str],
@@ -2418,7 +2618,6 @@ class TxTable:
         is the size gate. At or below ``max_broadcast_keys`` keys — the
         bounded-CDC-batch fast path:
 
-        * the key set is broadcast from the driver as a local relation;
         * the touched-file probe reads only the files that can hold a
           key: each integral or binary-collated string key column with
           no NULL among the batch's keys hands its ``[min, max]`` to
@@ -2426,12 +2625,22 @@ class TxTable:
           file survives, the merge is a pure append and runs no probe;
         * the probe returns the matched ``(file, key)`` pairs, so the
           touched files and the matched keys come from one job, and
-          every later query joins on the matched keys alone.
+          every later split tests the matched keys alone;
+        * a key set of at most ``_LITERAL_KEYS_MAX`` keys is tested as a
+          literal predicate in the query (:func:`_literal_membership`),
+          a larger one by a broadcast join. No job broadcasts a small
+          key set.
 
-        Above the gate the joins fall back to shuffle hash/sort-merge
-        against a checkpointed key set and the probe reads every live
-        file, so an unbounded source can never OOM the driver or
-        executors with a forced broadcast.
+        Above the gate the splits join against a checkpointed key set
+        (shuffle hash/sort-merge) and the probe reads every live file,
+        so an unbounded source can never OOM the driver or executors
+        with a forced broadcast.
+
+        The commit's rows leave in one write (:meth:`_rewrite`): each
+        source row is exploded into its data row and its change row
+        (``update_postimage`` when its key matched, ``insert`` when
+        not), and each row of a rewritten file is a surviving data row
+        or, when its key matched, an ``update_preimage`` change row.
 
         A source that changes nothing — no rows and no schema change —
         commits no version and returns the current one, as
@@ -2446,24 +2655,22 @@ class TxTable:
         semantics — the aligned source's null-fill applies only to
         inserted rows, never overwrites a matched row's data).
 
-        Change files tag matched rows as ``update_preimage`` /
-        ``update_postimage`` and unmatched source rows as ``insert``.
-
         The deduplicated, aligned source is evaluated once: against a
         table with live files it is persisted before the key-set job
         (its first action, which fills the cache) and unpersisted when
-        the merge returns or raises, so the probe-side joins and the
-        data and change-file writes scan the cache instead of re-running
-        the source's plan — a streaming batch's stateful upstream runs
-        once per MERGE. A merge into a table with no files reads the
-        source once anyway and is not cached.
+        the merge returns or raises, so the probe and the one write
+        scan the cache instead of re-running the source's plan — a
+        streaming batch's stateful upstream runs once per MERGE. A
+        merge into a table with no files reads the source once anyway
+        and is not cached.
         """
         src_cols = set(source.columns)
-        src = source.dropDuplicates(keys)
+        src = _drop_duplicate_keys(source, keys)
         snap = self.snapshot()
         schema_json: str | None = None
         target_schema = snap.schema
         if merge_schema:
+            _reject_reserved(src.schema)
             merged = _merge_schemas(snap.schema, src.schema)
             if merged != snap.schema:
                 schema_json = merged.json()
@@ -2476,9 +2683,9 @@ class TxTable:
             return self._commit_insert_only(src, snap, params, schema_json,
                                             target_schema)
 
-        # Every later query reads the source (key set, probe-side joins,
-        # data and change-file writes): evaluate it once. The key-set
-        # job is the first action and fills the cache.
+        # Every later query reads the source (key set, probe, the one
+        # write): evaluate it once. The key-set job is the first action
+        # and fills the cache.
         src = src.persist()
         try:
             return self._merge_into_files(
@@ -2503,27 +2710,9 @@ class TxTable:
         if key_set.num_rows == 0:
             return self._commit_insert_only(None, snap, params, schema_json,
                                             target_schema)
-        use_broadcast = key_set.num_rows <= max_broadcast_keys
-        self._last_merge_used_broadcast = use_broadcast
-
-        def ns_join(left: DataFrame, right: DataFrame, how: str) -> DataFrame:
-            # NULL-SAFE key join: plain `on=keys` never matches
-            # NULL=NULL, so a NULL-key row would look permanently
-            # unmatched — every merge would re-insert it, silently
-            # accumulating duplicates (Delta MERGE conditions written
-            # with `=` share the trap; `<=>` is the fix there too).
-            # EqualNullSafe is still an equi-join predicate to Spark,
-            # so the broadcast/sort-merge gate applies unchanged.
-            cond = None
-            for k in keys:
-                c = left[k].eqNullSafe(right[k])
-                cond = c if cond is None else cond & c
-            return left.join(right, cond, how)
-
-        if use_broadcast:
-            keys_df = F.broadcast(
-                self.spark.createDataFrame(key_set, key_schema)
-            )
+        bounded = key_set.num_rows <= max_broadcast_keys
+        self._last_merge_used_broadcast = bounded
+        if bounded:
             preds = _key_range_predicates(key_set, key_schema)
             entries = _prune(snap, preds) if preds else list(
                 snap.files.values()
@@ -2531,8 +2720,9 @@ class TxTable:
             if not entries:
                 return self._commit_insert_only(src, snap, params,
                                                 schema_json, target_schema)
+            members = _key_members(self.spark, key_set, key_schema)
         else:
-            keys_df = src.select(*keys).distinct().localCheckpoint(
+            members = src.select(*keys).distinct().localCheckpoint(
                 eager=False
             )
             entries = list(snap.files.values())
@@ -2541,15 +2731,13 @@ class TxTable:
         # root-relative _metadata.file_path, captured at scan level):
         # input_file_name() is undefined both above shuffles and on the
         # multi-source plans every DV-applying read produces.
-        target_fields = [f.name for f in target_schema.fields]
-        probe = ns_join(
+        probe = _mark(
             self._read_entries(entries, target_schema, snap.partition_by,
                                with_position=True),
-            keys_df, "left_semi",
-        )
-        matched_keys = None
+            keys, members,
+        ).where(F.col(_MEMBER))
         counts: dict[str, int] = {}
-        if use_broadcast:
+        if bounded:
             # count aliased to the reserved _dv_pos: no key can be named so
             hits = (
                 probe.groupBy("_dv_rel", *keys)
@@ -2560,9 +2748,11 @@ class TxTable:
                               hits.column("_dv_pos").to_pylist()):
                 counts[rel] = counts.get(rel, 0) + n
             # A touched file's row has a source key exactly when its key
-            # was matched, so the later joins need only the matched keys.
-            keys_df = matched_keys = F.broadcast(
-                self.spark.createDataFrame(hits.select(keys), key_schema)
+            # was matched, so every later split needs the matched keys
+            # alone (distinct: a key can sit in several files; the
+            # grouping already normalized NaN and -0.0).
+            members = _key_members(
+                self.spark, hits.group_by(keys).aggregate([]), key_schema
             )
         else:
             for r in probe.groupBy("_dv_rel").count().collect():
@@ -2578,38 +2768,36 @@ class TxTable:
         # are never rewritten, which is the whole cost story for the
         # reference's frequent-MERGE pipelines at 100 TB.
         dv_set, rw_set = self._dv_split(snap, counts)
-        matched_dv = None
+        fields = [f.name for f in target_schema.fields]
+        parts, pre, dv_adds, bundle = [], [], None, None
         if dv_set:
-            tpos_dv = self._read_entries(
-                [snap.files[p] for p in dv_set], target_schema,
-                snap.partition_by, with_position=True,
+            matched, dv_adds, bundle = self._dv_route(
+                snap, dv_set, target_schema,
+                lambda df: _mark(df, keys, members).where(F.col(_MEMBER)),
             )
-            matched_dv = ns_join(
-                tpos_dv, keys_df, "left_semi"
-            ).localCheckpoint(eager=False)
-        # Probe the TOUCHED files, not the full table: every target row
-        # with a matched key is by construction in a touched file (the
-        # hits probe found the files holding them), so this yields the
-        # identical key set while reading only the touched files —
-        # dropping the merge's second full-table scan.
-        pre = None
-        survivors = None
+            pre.append(matched)
+            parts.append(
+                matched.withColumn(_CHANGE_TYPE, F.lit("update_preimage"))
+            )
         if rw_set:
-            tdf = self._read_entries(
-                [snap.files[p] for p in rw_set], target_schema,
-                snap.partition_by,
+            # Every target row with a matched key is by construction in
+            # a touched file, so only the touched files are read. A
+            # matched row leaves as its preimage alone: its new image
+            # comes from the source.
+            tdf = _mark(
+                self._read_entries([snap.files[p] for p in rw_set],
+                                   target_schema, snap.partition_by),
+                keys, members,
             )
-            pre = ns_join(tdf, keys_df, "left_semi")
-            survivors = ns_join(tdf, keys_df, "left_anti")
-        if matched_dv is not None:
-            mdv = matched_dv.select(*target_fields)
-            pre = mdv if pre is None else pre.unionByName(mdv)
-        if matched_keys is None:
-            matched_keys = (
-                pre.select(*keys).distinct().localCheckpoint(eager=False)
-            )
-        upd_src = ns_join(src, matched_keys, "left_semi")
-        inserts = ns_join(src, matched_keys, "left_anti")
+            parts.append(tdf.select(*fields, F.when(
+                F.col(_MEMBER), F.lit("update_preimage")
+            ).alias(_CHANGE_TYPE)))
+            pre.append(tdf.where(F.col(_MEMBER)).select(*fields))
+        if not bounded:
+            # the source splits on the keys the target holds
+            members = _union_all(pre).select(*keys).distinct() \
+                .localCheckpoint(eager=False)
+        src = _mark(src, keys, members)
         # Columns the ORIGINAL source doesn't carry must keep the
         # TARGET's values on matched rows (Delta updateAll +
         # schema.autoMerge leaves them unchanged) — _align's null-fill
@@ -2617,12 +2805,12 @@ class TxTable:
         # matched target rows, one row per key (ties under duplicate
         # target keys follow the engine's documented keep-one merge
         # semantics).
-        missing = [c for c in target_fields if c not in src_cols]
+        missing = [c for c in fields if c not in src_cols]
         if missing:
             # Aliased keys + null-safe condition: a matched NULL-key
             # row must still pick up its carried columns (a plain
             # on=keys inner join would drop the row entirely).
-            carried = pre.select(
+            carried = _union_all(pre).select(
                 *[F.col(k).alias(f"_ck_{k}") for k in keys], *missing
             ).dropDuplicates([f"_ck_{k}" for k in keys])
             ccond = None
@@ -2630,38 +2818,23 @@ class TxTable:
                 c = F.col(k).eqNullSafe(F.col(f"_ck_{k}"))
                 ccond = c if ccond is None else ccond & c
             updates = (
-                upd_src.drop(*missing)
-                .join(F.broadcast(carried) if use_broadcast else carried,
-                      ccond)
-                .select(*target_fields)
+                src.where(F.col(_MEMBER)).drop(*missing)
+                .join(F.broadcast(carried) if bounded else carried, ccond)
+                .select(*fields, _MEMBER)
             )
-        else:
-            updates = upd_src
-        extra = updates.unionByName(inserts).select(*target_fields)
-        cdc = (
-            pre.withColumn("_change_type", F.lit("update_preimage"))
-            .unionByName(
-                updates.select(*target_fields).withColumn(
-                    "_change_type", F.lit("update_postimage")
-                )
+            src = updates.unionByName(
+                src.where(~F.col(_MEMBER)).select(*fields, _MEMBER)
             )
-            .unionByName(
-                inserts.select(*target_fields).withColumn(
-                    "_change_type", F.lit("insert")
-                )
-            )
-        )
-        dv_adds = None
-        bundle = None
-        if dv_set:
-            bundle, card = self._stage_dv(
-                self._build_dv_rows(matched_dv, snap, dv_set),
-                snap.version + 1, dv_set,
-            )
-            dv_adds = self._dv_adds(snap, dv_set, bundle, card)
+        # One scan of the source yields each row's data row (NULL type)
+        # and its change row.
+        kind = F.when(F.col(_MEMBER), F.lit("update_postimage")) \
+            .otherwise(F.lit("insert"))
+        parts.append(src.select(*fields, F.explode(
+            F.array(F.lit(None).cast("string"), kind)
+        ).alias(_CHANGE_TYPE)))
         return self._rewrite(
-            touched, snap, survivors, "MERGE",
-            {"keys": keys, **(params or {})}, extra_df=extra, cdc_df=cdc,
+            touched, snap, _union_all(parts), "MERGE",
+            {"keys": keys, **(params or {})},
             schema_json=schema_json, file_schema=target_schema,
             dv_adds=dv_adds, dv_bundle=bundle,
         )
@@ -2675,7 +2848,7 @@ class TxTable:
         change commits nothing: the current version is returned."""
         adds = (
             self._stage_files(src, snap.version + 1, snap.partition_by,
-                              None, snap.properties)
+                              None, snap.properties)[0]
             if src is not None else []
         )
         if not adds and schema_json is None:
@@ -2742,7 +2915,7 @@ class TxTable:
             )
         else:
             df = df.coalesce(n)
-        adds = self._stage_files(
+        adds, _ = self._stage_files(
             df, snap.version + 1, snap.partition_by,
             stats_cols or zorder_cols, snap.properties,
         )
@@ -2791,8 +2964,8 @@ class TxTable:
             return snap.version
         df = self._read_entries(scope, snap.schema, snap.partition_by)
         n = target_files or max(1, len(scope))
-        adds = self._stage_files(df.coalesce(n), snap.version + 1,
-                                 snap.partition_by, None, snap.properties)
+        adds, _ = self._stage_files(df.coalesce(n), snap.version + 1,
+                                    snap.partition_by, None, snap.properties)
         removes = sorted(e["path"] for e in scope)
 
         def action(v: int) -> dict:

@@ -332,14 +332,17 @@ def run_merge_stream_versioned(
     ``txnVersion``, and replaying an empty batch commits nothing again.
 
     Scale: only files holding matched keys rewrite per batch
-    (``TxTable.merge`` semi-joins the batch's keys against the live
-    files). The probe reads every live file whose min/max stats or
-    partition values can hold a batch key. So commit cost tracks batch
-    size, not table size, only when the keys are range-clustered
-    integral or string columns: a batch of new, increasing ids (an
-    event id) reads no file and commits as a pure append. Keys that
-    span every file's range, or floating-point/temporal keys, probe the
-    whole table.
+    (``TxTable.merge`` probes the live files for the batch's keys). The
+    probe reads every live file whose min/max stats or partition values
+    can hold a batch key. So commit cost tracks batch size, not table
+    size, only when the keys are range-clustered integral or string
+    columns: a batch of new, increasing ids (an event id) reads no file
+    and commits as a pure append. Keys that span every file's range, or
+    floating-point/temporal keys, probe the whole table. A batch with a
+    small key set (a windowed aggregate's ``(window, key)`` pairs) runs
+    three Spark jobs per MERGE: the key set, the probe (the keys are a
+    literal predicate, not a broadcast) and one write that stages the
+    new data files and the change-feed rows together.
 
     ``merge_schema=True`` is the reference's ``schema.autoMerge`` for
     streaming MERGE (``delta-lake/delta_setup.py:87``): a micro-batch

@@ -1,0 +1,387 @@
+"""DML commits on the transaction log: key membership and the one write.
+
+* A MERGE tests key membership with a literal predicate when the key
+  set is small (``_LITERAL_KEYS_MAX``) and with a broadcast join above
+  it; both routes must leave the rows ``merge_upsert`` computes, for
+  NULL, quoted and non-ASCII string, timestamp (under a non-UTC session
+  time zone), decimal and double (NaN, -0.0) keys and a two-column key.
+* DELETE, UPDATE and MERGE stage their data rows and change rows in one
+  write; the change feed must equal the expected rows on a table
+  partitioned by int, string and date, on the rewrite and the
+  deletion-vector routes. Flat change files of older commits still read.
+* A streaming MERGE whose commit fails after staging recovers from its
+  checkpoint to the row-identical table, and VACUUM collects the
+  orphaned files.
+"""
+
+from __future__ import annotations
+
+import datetime as dt
+import decimal
+import glob
+import json
+import os
+
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import Row
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from real_time_video_streaming_analytics_lakehouse_spark.operators import txlog
+from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import (
+    _LITERAL_KEYS_MAX,
+    TxTable,
+)
+
+from .test_txlog import _merge_matches_upsert
+
+
+@pytest.fixture()
+def literal_calls(monkeypatch):
+    """Every key set MERGE rendered as a literal predicate (None when a
+    key type had no literal); a key set above the cutoff is never
+    rendered."""
+    calls = []
+    real = txlog._literal_membership
+
+    def spy(key_set, key_schema):
+        out = real(key_set, key_schema)
+        calls.append(out)
+        return out
+
+    monkeypatch.setattr(txlog, "_literal_membership", spy)
+    return calls
+
+
+def _table(spark, path, ddl, rows, **kw) -> TxTable:
+    t = TxTable.create(spark, str(path), StructType.fromDDL(ddl), **kw)
+    t.write(spark.createDataFrame(rows, ddl))
+    return t
+
+
+# -- literal key predicates ----------------------------------------------------
+
+
+def test_literal_route_null_key(spark, tmp_path, literal_calls):
+    ddl = "k BIGINT, v INT"
+    t = _table(spark, tmp_path / "n", ddl, [(1, 0), (None, 0), (3, 0)])
+    _merge_matches_upsert(spark, t, spark.createDataFrame(
+        [(None, 7), (3, 8), (4, 9)], ddl), ["k"])
+    assert literal_calls and None not in literal_calls
+    assert sorted((r.k or -1, r.v) for r in t.read().collect()) == [
+        (-1, 7), (1, 0), (3, 8), (4, 9)]
+
+
+def test_literal_route_quoted_and_non_ascii_strings(spark, tmp_path,
+                                                    literal_calls):
+    ddl = "k STRING, v INT"
+    keys = ["it's", "back\\slash", "\\'", "é日本", "", "plain"]
+    t = _table(spark, tmp_path / "s", ddl, [(k, 0) for k in keys])
+    _merge_matches_upsert(spark, t, spark.createDataFrame(
+        [(k, i + 1) for i, k in enumerate(keys[:5])] + [("new'", 9)], ddl),
+        ["k"])
+    assert literal_calls and None not in literal_calls
+    assert {r.k: r.v for r in t.read().collect()} == {
+        "it's": 1, "back\\slash": 2, "\\'": 3, "é日本": 4, "": 5,
+        "plain": 0, "new'": 9}
+
+
+def test_literal_route_timestamp_key_under_session_time_zone(
+    spark, tmp_path, literal_calls
+):
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        ddl = "ts TIMESTAMP, v INT"
+        base = dt.datetime(2024, 3, 10, 23, 45, 0, 123456)
+        stamps = [base + dt.timedelta(minutes=17 * i) for i in range(4)]
+        t = _table(spark, tmp_path / "ts", ddl, [(s, 0) for s in stamps])
+        src = spark.createDataFrame(
+            [(stamps[1], 5), (stamps[3], 6),
+             (base + dt.timedelta(days=1), 7)], ddl)
+        _merge_matches_upsert(spark, t, src, ["ts"])
+        assert literal_calls and None not in literal_calls
+        assert sorted(r.v for r in t.read().collect()) == [0, 0, 5, 6, 7]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+
+
+def test_literal_route_decimal_and_double_keys(spark, tmp_path,
+                                               literal_calls):
+    D = decimal.Decimal
+    ddl = "k DECIMAL(38,2), v INT"
+    big = D("123456789012345678901234567890123456.78")
+    t = _table(spark, tmp_path / "dec", ddl,
+               [(D("1.10"), 0), (D("-0.01"), 0), (big, 0)])
+    _merge_matches_upsert(spark, t, spark.createDataFrame(
+        [(D("1.10"), 1), (big, 2), (D("2.00"), 3)], ddl), ["k"])
+    assert {r.k: r.v for r in t.read().collect()} == {
+        D("1.10"): 1, D("-0.01"): 0, big: 2, D("2.00"): 3}
+
+    nan = float("nan")
+    ddl = "k DOUBLE, v INT"
+    t = _table(spark, tmp_path / "dbl", ddl,
+               [(nan, 0), (0.0, 0), (0.1, 0), (float("inf"), 0)])
+    _merge_matches_upsert(spark, t, spark.createDataFrame(
+        [(nan, 1), (-0.0, 2), (0.1, 3), (float("inf"), 4), (7.5, 5)], ddl),
+        ["k"])
+    assert literal_calls and None not in literal_calls
+    assert sorted(r.v for r in t.read().collect()) == [1, 2, 3, 4, 5]
+
+
+def test_literal_route_two_column_key_with_null(spark, tmp_path,
+                                                literal_calls):
+    ddl = "a BIGINT, b STRING, v INT"
+    t = _table(spark, tmp_path / "two", ddl,
+               [(1, "x", 0), (1, None, 0), (None, "y", 0), (2, "y", 0)])
+    _merge_matches_upsert(spark, t, spark.createDataFrame(
+        [(1, None, 5), (None, "y", 6), (2, "y", 7), (2, None, 8)], ddl),
+        ["a", "b"])
+    assert literal_calls and None not in literal_calls
+    assert t.read().count() == 5
+
+
+@pytest.mark.parametrize("n, literal", [(_LITERAL_KEYS_MAX, True),
+                                        (_LITERAL_KEYS_MAX + 1, False)])
+def test_literal_cutoff(spark, tmp_path, literal_calls, n, literal):
+    """At the cutoff the key set is a literal predicate; one key more
+    and every membership test is a broadcast join. Both routes leave
+    the rows ``merge_upsert`` computes."""
+    ddl = "k BIGINT, v INT"
+    t = _table(spark, tmp_path / "cut", ddl,
+               [(i, 0) for i in range(_LITERAL_KEYS_MAX + 10)])
+    _merge_matches_upsert(spark, t, spark.createDataFrame(
+        [(i, 1) for i in range(n)], ddl), ["k"])
+    assert t._last_merge_used_broadcast is True
+    assert bool(literal_calls) is literal and None not in literal_calls
+    assert sum(r.v for r in t.read().collect()) == n
+
+
+def _job_id(spark, name: str) -> int:
+    """Id of a one-job marker query run under job group ``name``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        spark.range(1).collect()
+    finally:
+        sc.setJobGroup("", "")
+    return sc.statusTracker().getJobIdsForGroup(name)[0]
+
+
+def test_small_key_merge_runs_three_jobs(spark, tmp_path):
+    """Key set, probe, one write: a MERGE of a few keys into a table
+    with live files runs no broadcast job and writes its data and change
+    rows together. Adaptive execution is off, as in a streaming
+    micro-batch (with it on, each shuffle is a job of its own). The
+    jobs are those between two marker jobs (job ids are sequential)."""
+    ddl = "w TIMESTAMP, e STRING, n BIGINT"
+    base = dt.datetime(2024, 1, 1)
+    rows = [(base + dt.timedelta(minutes=5 * i), e, 1)
+            for i in range(6) for e in ("click", "view")]
+    t = _table(spark, tmp_path / "jobs", ddl, rows,
+               properties={"delta.enableChangeDataFeed": "true"})
+    src = spark.createDataFrame(
+        [(base + dt.timedelta(minutes=25), "click", 2),
+         (base + dt.timedelta(minutes=30), "view", 1)], ddl)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        before = _job_id(spark, "small-merge-before")
+        v = t.merge(src, keys=["w", "e"])
+        after = _job_id(spark, "small-merge-after")
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert after - before - 1 == 3
+    kinds = sorted(r._change_type for r in t.change_feed(v).collect())
+    assert kinds == ["insert", "update_postimage", "update_preimage"]
+
+
+# -- one write: data and change rows -------------------------------------------
+
+PART_DDL = "id BIGINT, p INT, s STRING, d DATE, v INT"
+D1, D2 = dt.date(2024, 1, 1), dt.date(2024, 2, 29)
+
+
+def _changes(t: TxTable, version: int) -> list[tuple]:
+    return sorted(
+        (r._change_type, r.id, r.p, r.s, r.d, r.v)
+        for r in t.change_feed(version, version).collect()
+    )
+
+
+@pytest.mark.parametrize("dv", [False, True])
+def test_partitioned_change_feed_after_merge_update_delete(spark, tmp_path,
+                                                           dv):
+    """Each partition holds four rows and each DML touches one of them,
+    so with deletion vectors on every touched file takes the DV route."""
+    parts = [(1, "a:b", D1), (2, "a/b", D2), (3, None, D1), (None, "x", D2)]
+    rows = [(10 * j + i, p, s, d, 0)
+            for j, (p, s, d) in enumerate(parts) for i in range(4)]
+    props = {"dv.enabled": "true"} if dv else {}
+    t = TxTable.create(spark, str(tmp_path / "pt"),
+                       StructType.fromDDL(PART_DDL),
+                       partition_by=["p", "s", "d"], properties=props)
+    t.write(spark.createDataFrame(rows, PART_DDL))
+    state = {r[0]: r for r in rows}
+
+    # id 12 moves to another partition; id 40 is new
+    src = [(1, 1, "a:b", D1, 5), (12, 3, None, D1, 6), (40, 2, "a/b", D2, 7)]
+    v = t.merge(spark.createDataFrame(src, PART_DDL), keys=["id"])
+    assert _changes(t, v) == sorted(
+        [("update_preimage", *state[1][:5]), ("update_postimage", *src[0]),
+         ("update_preimage", *state[12][:5]), ("update_postimage", *src[1]),
+         ("insert", *src[2])])
+    state.update({r[0]: r for r in src})
+
+    v = t.update(F.col("id") == 21, {"v": F.col("v") + 100})
+    new = state[21][:4] + (100,)
+    assert _changes(t, v) == [("update_postimage", *new),
+                              ("update_preimage", *state[21])]
+    state[21] = new
+
+    v = t.delete(F.col("id").isin(2, 31))
+    assert _changes(t, v) == sorted(
+        [("delete", *state[2]), ("delete", *state[31])])
+    del state[2], state[31]
+
+    assert sorted(tuple(r) for r in t.read().select(
+        "id", "p", "s", "d", "v").collect()) == sorted(
+        state.values(), key=lambda r: r[0])
+    commits = [txlog._read_commit(t.root, x) for x in range(2, v + 1)]
+    assert all(("dvc" in c) is dv for c in commits)
+    for c in commits:
+        for rel in c["cdc"]:
+            parts_ = rel.split(os.sep)
+            assert parts_[0] == "_change_data"
+            assert parts_[1].startswith("_change_type=")
+            assert [x.split("=")[0] for x in parts_[2:5]] == ["p", "s", "d"]
+            names = pq.read_schema(os.path.join(t.root, rel)).names
+            assert sorted(names) == ["id", "v"]
+        for add in c["add"]:
+            assert not add["path"].startswith("_change_type")
+
+
+def test_legacy_flat_change_file_still_reads(spark, tmp_path):
+    """A commit written before change rows were staged with the data
+    rows logged flat change files holding every column plus
+    ``_change_type``; the feed still serves them."""
+    ddl = "id BIGINT, p STRING, v INT"
+    t = TxTable.create(spark, str(tmp_path / "legacy"),
+                       StructType.fromDDL(ddl), partition_by=["p"])
+    t.write(spark.createDataFrame([(1, "a:b", 0), (2, "b", 0)], ddl))
+    rel = os.path.join("_change_data", "cdc-0000000002-legacy-00000.parquet")
+    (spark.createDataFrame(
+        [(1, "a:b", 0, "update_preimage"), (1, "a:b", 9, "update_postimage")],
+        ddl + ", _change_type STRING",
+    ).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "flat")))
+    os.makedirs(os.path.join(t.root, "_change_data"))
+    os.rename(glob.glob(str(tmp_path / "flat" / "*.parquet"))[0],
+              os.path.join(t.root, rel))
+    txlog._publish_commit(t.root, 2, {
+        "version": 2, "timestamp_ms": 1, "operation": "UPDATE",
+        "operationParameters": {}, "fileSchema": t.snapshot().schema.json(),
+        "add": [], "remove": [], "cdc": [rel],
+    })
+    got = sorted((r._change_type, r.id, r.p, r.v, r._commit_version)
+                 for r in t.change_feed(2).collect())
+    assert got == [("update_postimage", 1, "a:b", 9, 2),
+                   ("update_preimage", 1, "a:b", 0, 2)]
+
+
+# -- crash after staging, streaming MERGE recovery ----------------------------
+
+
+def _land(spark, src_dir: str, batches) -> None:
+    for i, rows in enumerate(batches):
+        before = set(glob.glob(f"{src_dir}/*.parquet"))
+        spark.createDataFrame(rows).coalesce(1).write.mode("append") \
+            .parquet(src_dir)
+        for f in set(glob.glob(f"{src_dir}/*.parquet")) - before:
+            os.utime(f, (1700000000 + i * 100, 1700000000 + i * 100))
+
+
+def _run_stream(spark, src_dir: str, target: str, ckpt: str):
+    from real_time_video_streaming_analytics_lakehouse_spark.streaming import (
+        run_merge_stream_versioned,
+        stream_events_from_files,
+    )
+
+    src = stream_events_from_files(
+        spark, src_dir, spark.read.parquet(src_dir).schema,
+        max_files_per_trigger=1,
+    )
+    q = run_merge_stream_versioned(src, target, ckpt, keys=["event_id"],
+                                   precedence_col="ts", app_id="crash")
+    q.awaitTermination(120)
+    return q
+
+
+def _feed(t: TxTable) -> list[tuple]:
+    return sorted(
+        (r._change_type, r._commit_version, r.event_id, r.event_type, r.value)
+        for r in t.change_feed(1).collect()
+    )
+
+
+def _files_on_disk(root: str) -> set[str]:
+    return {os.path.relpath(p, root)
+            for p in glob.glob(f"{root}/**/*.parquet", recursive=True)
+            if not os.path.relpath(p, root).startswith("_txlog")}
+
+
+def test_streaming_merge_recovers_from_failed_commit(spark, tmp_path,
+                                                     monkeypatch):
+    t0 = dt.datetime(2024, 1, 1, 12)
+    batches = [
+        [Row(event_id=i, ts=t0, user_id=i, event_type="view", value=1.0)
+         for i in range(4)],
+        [Row(event_id=1, ts=t0 + dt.timedelta(minutes=1), user_id=1,
+             event_type="click", value=2.0),
+         Row(event_id=7, ts=t0, user_id=7, event_type="view", value=3.0)],
+        [Row(event_id=2, ts=t0 + dt.timedelta(minutes=2), user_id=2,
+             event_type="buy", value=4.0)],
+    ]
+    src_dir = str(tmp_path / "src")
+    _land(spark, src_dir, batches)
+    ref = TxTable(spark, str(tmp_path / "ref"))
+    _run_stream(spark, src_dir, ref.root, str(tmp_path / "ref_ckpt"))
+
+    real = txlog._publish_commit
+    failed = []
+
+    def publish_once_failing(root, version, action):
+        if version == 2 and not failed:  # batch 1's MERGE, after staging
+            failed.append(version)
+            raise RuntimeError("injected failure before the log commit")
+        return real(root, version, action)
+
+    monkeypatch.setattr(txlog, "_publish_commit", publish_once_failing)
+    target = str(tmp_path / "target")
+    ckpt = str(tmp_path / "ckpt")
+    with pytest.raises(Exception, match="injected failure"):
+        _run_stream(spark, src_dir, target, ckpt)
+    assert failed == [2]
+    _run_stream(spark, src_dir, target, ckpt)
+
+    tx = TxTable(spark, target)
+    cols = ["event_id", "ts", "user_id", "event_type", "value"]
+    assert sorted(tuple(r) for r in tx.read().select(*cols).collect()) == \
+        sorted(tuple(r) for r in ref.read().select(*cols).collect())
+    merges = [r for r in tx.history().collect() if r.operation == "MERGE"]
+    assert sorted(json.loads(r.operationParameters)["txnVersion"]
+                  for r in merges) == [0, 1, 2]
+    assert _feed(tx) == _feed(ref)
+
+    logged = set()
+    for v in txlog._list_versions(tx.root):
+        c = txlog._read_commit(tx.root, v)
+        logged |= {a["path"] for a in c.get("add", [])} | set(c.get("cdc", []))
+    orphans = _files_on_disk(tx.root) - logged
+    assert any(p.startswith("_change_data") for p in orphans)
+    assert any(not p.startswith("_change_data") for p in orphans)
+    collected = set(tx.vacuum(retention_hours=0))
+    assert orphans <= collected
+    assert _files_on_disk(tx.root) == set(tx.snapshot().files)
+    assert sorted(tuple(r) for r in tx.read().select(*cols).collect()) == \
+        sorted(tuple(r) for r in ref.read().select(*cols).collect())

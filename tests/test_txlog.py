@@ -876,6 +876,47 @@ def test_nan_max_keeps_file_for_range_predicates(spark, tmp_path, checkpoint):
     assert {r.id for r in t.read().where("d > 5").collect()} == {2}
 
 
+def test_arrow_written_nan_rows_survive_range_predicates(spark, tmp_path):
+    """Arrow's parquet writer leaves NaN out of the footer min/max, so a
+    ``[1.0, NaN]`` file adopted by ``bootstrap`` logs no float bounds,
+    and ``read(predicates=...)`` keeps its NaN row out of Spark's parquet
+    row-group pushdown."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "arrow_nan"
+    root.mkdir()
+    pq.write_table(pa.table({"id": [1, 2, 3], "d": [1.0, float("nan"), 0.5]}),
+                   str(root / "part-0.parquet"))
+    t = TxTable.bootstrap(spark, str(root))
+    (entry,) = t.snapshot().files.values()
+    assert entry["stats"]["d"] == {"min": None, "max": None}
+    assert entry["stats"]["id"] == {"min": 1, "max": 3}
+    for pred, want in ((("d", ">", 5), {2}), (("d", ">=", 1.0), {1, 2}),
+                       (("d", "<", 5), {1, 3})):
+        assert {r.id for r in t.read(predicates=[pred]).collect()} == want
+
+
+@pytest.mark.parametrize("name", ["_change_type", "_commit_version",
+                                  "_Commit_Timestamp"])
+def test_change_feed_column_names_are_reserved(spark, tmp_path, name):
+    """A table column named like a change-feed column would be
+    overwritten (or duplicated) in the feed, so create, write and an
+    evolving merge refuse it."""
+    ddl = f"k BIGINT, {name} STRING"
+    with pytest.raises(ValueError, match="reserved"):
+        TxTable.create(spark, str(tmp_path / "c"), StructType.fromDDL(ddl))
+    t = TxTable.create(spark, str(tmp_path / "t"), StructType.fromDDL("k BIGINT"))
+    t.write(spark.createDataFrame([(1,)], "k BIGINT"))
+    df = spark.createDataFrame([(1, "x")], ddl)
+    with pytest.raises(ValueError, match="reserved"):
+        t.write(df, merge_schema=True)
+    with pytest.raises(ValueError, match="reserved"):
+        t.merge(df, keys=["k"], merge_schema=True)
+    assert t.snapshot().version == 1
+    assert t.read().columns == ["k"]
+
+
 @pytest.mark.parametrize("checkpoint", [False, True])
 def test_string_partition_pruning_compares_unescaped_values(
     spark, tmp_path, checkpoint

@@ -1,0 +1,92 @@
+"""Per-drain Spark jobs of one ``stream_ingest`` run.
+
+Runs one seed of the benchmark's ``stream_ingest`` workload through
+perfbench's own :class:`StreamWorkload` (same session settings, warm
+tick, generator and drains as ``perfbench/run.py``), then lists every
+job each drain submitted, read from the Spark status REST API::
+
+    t1.silver  job   11  tasks  25  batch 1: call at clientserver.py:644
+
+Jobs are grouped by their drain tag (``<tick>.<drain>``, e.g.
+``t1.bronze``); a job's tasks are those of its stages that ran (skipped
+stages and stages another job ran first do not count), the rule
+perfbench's ``tasks_per_op`` uses. The last line per drain is its total.
+Jobs of the set-up and the warm tick are left out.
+
+Usage::
+
+    python3 tools/stream_jobs.py [--seed 1] [--seconds 10]
+
+It reads ``perfbench/`` and never edits it; everything it writes goes to
+``.bench_work/stream_jobs/`` in the checkout.
+"""
+
+from __future__ import annotations
+
+import argparse
+import os
+import re
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+
+import run as perfbench_run  # noqa: E402
+
+
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--seconds", type=float, default=10)
+    args = ap.parse_args(argv)
+    perfbench_run._environment()
+
+    from layers import SparkRest, Tracer, attribute, tag_of, tagged
+    from stream_work import StreamWorkload
+
+    from real_time_video_streaming_analytics_lakehouse_spark.session import (
+        get_spark,
+    )
+
+    spark = get_spark("stream_jobs", master=perfbench_run.MASTER)
+    try:
+        with tagged(spark, "setup"):
+            perfbench_run.warm_up(spark)
+        rest = SparkRest(spark)
+        wl = StreamWorkload(
+            os.path.join(perfbench_run.WORK, "stream_jobs"), Tracer(False))
+        wl.prepare(spark, args.seed)
+        wl.run(spark, args.seconds)
+        if wl.failed:
+            print("FAILED:", *wl.failed, sep="\n  ")
+        jobs, stages = rest.jobs_and_stages()
+        per_job = attribute(jobs, stages, lambda j: j["jobId"])
+        drains: dict[str, list[dict]] = {}
+        for job in sorted(jobs, key=lambda j: j["jobId"]):
+            tag = tag_of(job)
+            if tag and tag.split(".")[0] not in ("setup", "warm"):
+                drains.setdefault(tag, []).append(job)
+        for tag in sorted(drains, key=lambda t: (int(t.split(".")[0][1:]),
+                                                  t)):
+            total = 0
+            for job in drains[tag]:
+                tasks = int(per_job[job["jobId"]]["tasks"])
+                total += tasks
+                # a streaming batch's jobs all carry the query's
+                # "id = .. runId = .. batch = N" description: keep the
+                # batch number, then the job's call site
+                batch = re.search(r"batch = (\d+)",
+                                  job.get("description") or "")
+                desc = (f"batch {batch.group(1)}: " if batch else "") + \
+                    re.sub(r"\S*/", "", job.get("name", ""))
+                print(f"{tag:10s} job {job['jobId']:4d}  tasks {tasks:3d}  "
+                      f"{desc[:90]}")
+            print(f"{tag:10s} total: {len(drains[tag])} jobs, "
+                  f"{total} tasks")
+    finally:
+        perfbench_run._stop(spark)
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
