@@ -1,6 +1,6 @@
 """Persisted, incrementally-maintained IVF-PQ ANN index.
 
-Round-6 gap: ``ann_ivf_topk`` / ``ann_ivfpq_topk`` retrain their
+``ann_ivf_topk`` / ``ann_ivfpq_topk`` retrain their
 centroid/codebook sample and re-encode the whole corpus on EVERY
 invocation — fine at bench scale, wasteful at 100 TB, where an ANN
 index is maintained state, not a per-query computation. This module
@@ -140,15 +140,15 @@ def _model_table(spark: SparkSession, centroids, books) -> DataFrame:
         for i, c in enumerate(book)
     ]
     # local_relation: one Arrow batch decoded JVM-side — the pickle
-    # path would run a Python-worker stage per materialization (round
-    # 16, guide §4 — see operators.util.local_relation).
+    # path would run a Python-worker stage per materialization (see
+    # operators.util.local_relation).
     return local_relation(
         spark, rows, "component string, m int, idx int, vals array<double>"
     )
 
 
 #: per-process model cache: {model table root: (log version, model)}.
-#: Round-7 review: ann_index_topk re-collected + re-broadcast the model
+#: Without it ann_index_topk would re-collect + re-broadcast the model
 #: on every invocation. The cache key is the model TABLE VERSION (one
 #: cheap driver-side snapshot resolution), so an explicit rebuild
 #: (build_ann_index overwrite) invalidates naturally while repeat

@@ -175,7 +175,7 @@ def assign_clusters(
 
     def _unit(m):
         # zero-norm guard: an all-zero vector/centroid stays zero
-        # instead of dividing by zero (NaN + RuntimeWarning, ADVICE r11)
+        # instead of dividing by zero (NaN + RuntimeWarning)
         norms = np.linalg.norm(m, axis=1, keepdims=True)
         return m / np.where(norms == 0.0, 1.0, norms)
 

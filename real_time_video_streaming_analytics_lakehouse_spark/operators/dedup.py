@@ -104,18 +104,15 @@ def minhash_lsh_candidates(
     from .text import exploded_word_shingles
 
     rows_per_band = num_perm // bands
-    # Bytes-derived repartition target (round 17, reverting the
-    # round-16 full-width pin): the pin assumed the 64-slot aggregate
-    # was CPU-dense enough to feed every core, but a quiet-host
-    # stage_profile showed the 32-task signature stage at 20.7 s
-    # executorRunTime with only 4.8 s CPU — ~0.5 s/task of fixed
-    # blocked overhead on near-empty tasks. At the bytes-derived
-    # width (10 at sf0.1) the same stage runs 1.5 s / 1.1 s CPU and
-    # the query's task_total drops 11–15 s → 2.0–2.5 s. (The r16 A/B
-    # that justified the pin ran on a contended host whose wall
-    # swings masked this; the quiet interleaved A/B is decisive.) At
-    # scale the input arrives wide and the helper is a no-op either
-    # way.
+    # Bytes-derived repartition target, not a full-width pin: a pin to
+    # every core assumes the 64-slot aggregate is CPU-dense enough to
+    # feed them, but a quiet-host stage_profile showed the pinned
+    # 32-task signature stage at 20.7 s executorRunTime with only
+    # 4.8 s CPU — ~0.5 s/task of fixed blocked overhead on near-empty
+    # tasks. At the bytes-derived width (10 at sf0.1) the same stage
+    # runs 1.5 s / 1.1 s CPU and the query's task_total drops
+    # 11–15 s → 2.0–2.5 s. At scale the input arrives wide and the
+    # helper is a no-op either way.
     exploded = exploded_word_shingles(
         ensure_parallelism(df),
         id_col, text_col, shingle_size,
@@ -211,7 +208,7 @@ def simhash_candidates(
     sf0.1. Default is 4 x 16-bit chunks (exact for hamming <= 3); raise
     ``chunks`` only for corpora with near-uniform signatures.
     """
-    # Round 16: ensure_parallelism here was tried and REVERTED — the
+    # No ensure_parallelism here (tried and reverted): the
     # two-partition token explode feeds a partial aggregate that the
     # exchange re-spreads anyway, and interleaved A/B at sf0.1 showed
     # the wrapped variant >= the unwrapped one (min 4.39 vs 4.07 s;

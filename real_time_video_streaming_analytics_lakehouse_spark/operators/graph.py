@@ -26,7 +26,7 @@ over DataFrame shuffles with a convergence check. Scale notes:
     docs needs ~20 rounds, not 1M, so even at ~3× the shuffles per
     round the total is orders of magnitude less work. Driver job
     round-trips — the measured noise amplifier for this query family
-    (BASELINE.md round 9) — drop proportionally with rounds.
+    (BASELINE.md) — drop proportionally with rounds.
   * intermediate edge frames are localCheckpointed every round to cut
     the growing lineage (otherwise plan size, not data, becomes the
     bottleneck; an un-checkpointed iterated self-join was measured
@@ -76,7 +76,7 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 
 #: Edge-count ceiling for the adaptive driver-side union-find inside
-#: :func:`connected_components` (round 12). The star loop's cost on a
+#: :func:`connected_components`. The star loop's cost on a
 #: SMALL graph is pure driver-job overhead — 3 rounds × (checkpoint +
 #: signature scan) measured 3.2 s on a 62-edge graph at a ~0.2 s/job
 #: floor — while a bounded ``collect`` + Python union-find is one job
@@ -95,7 +95,7 @@ def _union_find_labels(pairs) -> list[tuple]:
     Shared by :func:`connected_components`' adaptive driver path and
     :func:`connected_components_bounded`'s executor task — ONE
     implementation so the two paths' "label semantics are identical"
-    contract cannot drift (round-13 review)."""
+    contract cannot drift."""
     parent: dict = {}
 
     def find(x):
@@ -144,10 +144,10 @@ def connected_components(
     fixpoint is reached in O(log^2 n) rounds — on near-dup cluster
     graphs, ~log2(largest component) — vs O(diameter) for label
     propagation (:func:`connected_components_label_prop`), which this
-    replaced after round-9 forensics showed per-round driver job
-    round-trips were the query family's dominant noise/latency source.
+    replaced because per-round driver job round-trips were the query
+    family's dominant noise/latency source.
 
-    Adaptive small-graph path (round 12): when the deduplicated edge
+    Adaptive small-graph path: when the deduplicated edge
     count is ≤ ``driver_max_edges`` (known for free from the first
     convergence-signature scan), the edges are collected — a BOUNDED
     driver read, ≤ ``driver_max_edges`` 2-long rows — and labeled with
@@ -207,7 +207,7 @@ def connected_components(
         # local_relation, not createDataFrame(list): the label map is
         # consumed by TWO broadcast joins below, and the pickle path
         # would run a defaultParallelism-task Python stage per build
-        # (round 16, guide §4 — see local_relation).
+        # (see local_relation).
         label_df = local_relation(
             nodes.sparkSession, labels, f"u {idt}, label {idt}"
         )
@@ -216,7 +216,7 @@ def connected_components(
         # node corpus. The inner join restricts output to ``nodes`` —
         # edge endpoints absent from the node table influence
         # connectivity but are never emitted, matching the distributed
-        # star path on ill-formed input (ADVICE r12).
+        # star path on ill-formed input.
         labeled = all_nodes.join(F.broadcast(label_df), "u", "inner")
         singletons = all_nodes.join(
             F.broadcast(label_df), "u", "left_anti"
@@ -269,7 +269,7 @@ def connected_components(
     # to ``nodes`` (a no-op under the edges⊆nodes contract, but on
     # ill-formed input it keeps this path row-set-identical to the
     # driver union-find path, which also never emits out-of-nodes
-    # endpoints — ADVICE r12).
+    # endpoints).
     leaf_labels = e.groupBy("u").agg(F.min("v").alias("label")).join(
         edge_nodes, "u", "left_semi"
     )
@@ -299,10 +299,9 @@ def connected_components_bounded(
 
     :func:`connected_components`' adaptive small-graph path reads the
     edge count (and possibly the edges) at CONSTRUCTION time, which
-    blocks the driver before the first action — the reason round 12's
-    ``embedding_dedup_clusters`` grew a ThreadPoolExecutor to overlap
-    two arms' construction (VERDICT r12 next-round #6). When the
-    CALLER can bound the edge set by construction (the oracle-anchor
+    blocks the driver before the first action (a caller with two such
+    arms would need a thread pool to overlap their construction). When
+    the CALLER can bound the edge set by construction (the oracle-anchor
     plans cap their corpora, so |pairs| is a compile-time constant
     bound), this variant instead ships the deduplicated edge list to a
     single ``applyInPandas`` group and runs the same path-compressed

@@ -1,12 +1,11 @@
 """Columnar file-manifest for transaction-log snapshots.
 
-Round-6 review finding: ``txlog._load_checkpoint`` materialized EVERY
-checkpoint entry to a Python dict on the driver (``to_pylist()`` + one
-``json.loads`` per entry) and ``_prune`` then looped those dicts — at
-the 100 TB target (~10⁶ files) snapshot resolution and every pruned
-read/DML probe become a driver-memory/CPU bottleneck. Delta solves the
-same problem by reconstructing log state as a columnar job; this module
-is that design for the native log:
+Materializing EVERY checkpoint entry to a Python dict on the driver
+(``to_pylist()`` + one ``json.loads`` per entry) and looping those
+dicts in ``_prune`` would, at the 100 TB target (~10⁶ files), make
+snapshot resolution and every pruned read/DML probe a driver-memory/CPU
+bottleneck. Delta solves the same problem by reconstructing log state
+as a columnar job; this module is that design for the native log:
 
 * the checkpoint parquet stays the source of truth and is held as a
   **pyarrow table** — never bulk-converted to Python objects;

@@ -6,8 +6,8 @@ feature-extraction as Arrow-batched ``mapInPandas`` — the one place in
 this engine where Python legitimately enters the data path, because no
 built-in expression can decode media.
 
-Decoding is REAL for the library-free formats (round 6,
-:mod:`.media_codecs`): binary PPM, 24-bit BMP, and PCM WAV need only
+Decoding is REAL for the library-free formats
+(:mod:`.media_codecs`): binary PPM, 24-bit BMP, and PCM WAV need only
 struct/numpy/stdlib-``wave``, so payloads tagged ``ppm``/``bmp``/
 ``wav`` are genuinely parsed — true width/height (audio: channels ×
 frames) from the bytes, real pixel/sample access for resize and

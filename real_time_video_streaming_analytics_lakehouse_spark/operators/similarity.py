@@ -60,11 +60,11 @@ def _codebook_sample(
     """Bounded deterministic training sample for centroid/codebook
     quantizers — ``sample_size`` rows, uniform over the corpus.
 
-    Round 11 (VERDICT r10 "What's wrong" #2): was ``orderBy(id_col).
-    limit(sample_size)`` — scale-safe (TakeOrdered, no sort shuffle)
-    but id-prefix-BIASED (the codebook trains on whichever rows sort
-    first; with time-ordered or tenant-prefixed ids that is not the
-    corpus distribution). Now: a hash-threshold Bernoulli filter
+    Not ``orderBy(id_col).limit(sample_size)``, which is scale-safe
+    (TakeOrdered, no sort shuffle) but id-prefix-BIASED (the codebook
+    trains on whichever rows sort first; with time-ordered or
+    tenant-prefixed ids that is not the
+    corpus distribution). Instead: a hash-threshold Bernoulli filter
     (:func:`.sampling.deterministic_sample`, content-hash keyed —
     partition- and order-invariant) at 2× the needed fraction, then an
     exact bound via TakeOrdered ON THE HASH over only the ~2·size
@@ -108,9 +108,9 @@ def _codebook_sample(
     sample = draw(frac)
     if len(sample) < min(sample_size, n) and frac < 1.0:
         # The Bernoulli draw is binomial — at 2x the needed fraction an
-        # undershoot below sample_size is rare but possible (ADVICE
-        # r11). Top up deterministically: frac=1.0 keeps every row, so
-        # the hash-ordered limit returns exactly min(n, sample_size)
+        # undershoot below sample_size is rare but possible. Top up
+        # deterministically: frac=1.0 keeps every row, so the
+        # hash-ordered limit returns exactly min(n, sample_size)
         # and the kept set still depends only on (ids, seed).
         sample = draw(1.0)
     memo[memo_key] = sample
@@ -198,8 +198,8 @@ def _attach_count_ceiling(
     ``message`` (a Column, so it can interpolate the offending count
     ``_cn`` and group values). Zero construction jobs by design; the
     shared scaffolding of the :func:`cosine_pairs` and
-    :func:`semantic_dedup` scale guards (round 16 — previously two
-    hand-rolled copies that could drift)."""
+    :func:`semantic_dedup` scale guards (one copy, so they cannot
+    drift)."""
     gcols = list(group_cols)
     if gcols:
         cnt = df.groupBy(*gcols).agg(F.count("*").alias("_cn"))
@@ -233,9 +233,8 @@ def cosine_pairs(
 
     Built-in ``zip_with``/``aggregate`` expressions evaluate interpreted
     per element — O(n²·d) interpreted ops is the wrong tool for
-    all-pairs. And collecting the corpus to the driver (round-1 design)
-    caps the operator at driver memory. Instead, the classic exact
-    scheme:
+    all-pairs. And collecting the corpus to the driver caps the operator
+    at driver memory. Instead, the classic exact scheme:
 
     1. Hash every row into one of ``num_blocks`` blocks.
     2. Replicate each row to the B block-pair tasks it participates in
@@ -261,8 +260,8 @@ def cosine_pairs(
     to Σ_group n_g² and the group values are carried through to the
     output columns.
 
-    ``max_vectors`` (round 15, VERDICT r14 #6 — the catalog ceiling
-    propagated to the library surface): on an UNGROUPED corpus the
+    ``max_vectors`` (the catalog ceiling propagated to the library
+    surface): on an UNGROUPED corpus the
     operator is O(n²) by contract, so by default execution raises when
     the corpus exceeds this many non-NULL vectors. The guard is LAZY —
     a 1-row count aggregate broadcast-joined on a constant key (a hash
@@ -287,7 +286,7 @@ def cosine_pairs(
     ]
     # local_relation, not createDataFrame(list): the pickle path would
     # re-run a 32-task Python stage at EVERY broadcast build of this
-    # 7-row table (round 16, guide §4 — see local_relation).
+    # 7-row table (see local_relation).
     mapping = local_relation(spark, tasks, "blk INT, ti INT, tj INT")
     gcols = list(group_cols)
     # NULL vectors would crash the block matmul's np.stack; a NULL
@@ -410,7 +409,7 @@ def semantic_dedup(
       deterministic and partition-invariant. Costs one extra
       aggregate + join over component members only.
 
-    ``keep_policy`` may also be a TUPLE of policies (round 12): the
+    ``keep_policy`` may also be a TUPLE of policies: the
     assignment, within-cluster pairing, and connected components —
     the expensive stages — run ONCE, and the output switches to long
     format ``(id_col, cluster, policy, representative, keep)`` with
@@ -437,7 +436,7 @@ def semantic_dedup(
     task at (cluster/num_blocks)-sized inputs; the CC runs over the
     ε-edges only.
 
-    ``cc_strategy`` (round 13, VERDICT r12 #6): ``"adaptive"``
+    ``cc_strategy``: ``"adaptive"``
     (default) uses :func:`~.graph.connected_components`, whose
     convergence/size reads run bounded driver actions at CONSTRUCTION
     time; ``"bounded_lazy"`` uses
@@ -447,8 +446,8 @@ def semantic_dedup(
     oracle-anchor plans cap their corpora). The bound is enforced in
     the task, failing the action loudly if exceeded.
 
-    ``max_cluster_vectors`` (round 16, VERDICT r15 #4 — completing the
-    ``cosine_pairs.max_vectors`` pattern): the within-cluster pairing
+    ``max_cluster_vectors`` (the ``cosine_pairs.max_vectors``
+    pattern): the within-cluster pairing
     is O(n_c²) per cluster by contract, and ``n_clusters=1`` on an
     unbounded corpus is exactly the all-pairs regime ``cosine_pairs``
     refuses — but the grouped path skips that guard (its bound is the
@@ -482,9 +481,9 @@ def semantic_dedup(
     sim_col = (
         "_centroid_cos" if "centroid_outlier" in policies else None
     )
-    # "single cluster" must account for EXPLICIT centroids (ADVICE r11:
-    # multi-row centroids= with n_clusters<=1 previously hit the k=1
-    # shortcut, mislabeling real clusters as 0): effective cluster
+    # "single cluster" must account for EXPLICIT centroids (multi-row
+    # centroids= with n_clusters<=1 must not take the k=1 shortcut,
+    # which would label real clusters 0): effective cluster
     # count is len(centroids) when given, else n_clusters.
     single_cluster = (
         len(centroids) <= 1 if centroids is not None else n_clusters <= 1
@@ -519,7 +518,7 @@ def semantic_dedup(
             assigned = assigned.localCheckpoint(eager=False)
     pairs_input = assigned
     if max_cluster_vectors is not None:
-        # Lazy per-cluster ceiling (round 16): k rows of counts,
+        # Lazy per-cluster ceiling: k rows of counts,
         # broadcast back onto the members so the FIRST pairing task
         # refuses before any quadratic work. Only the pairing input is
         # guarded — the CC/members paths below stay linear regardless.
@@ -640,7 +639,7 @@ def lsh_params_for(
     max_bands: int = 64,
 ) -> tuple[int, int]:
     """Corpus-size-aware ``(num_hyperplanes, num_bands)`` for
-    :func:`lsh_cosine_pairs` (round-9 scale evidence: at FIXED band
+    :func:`lsh_cosine_pairs` (scale evidence: at FIXED band
     width the 3× synthetic tier measured x3_ratio 3.12 for the LSH
     pair query — expected bucket occupancy is n/2^bits per band, so
     in-bucket candidate pairs grow QUADRATICALLY in n once occupancy

@@ -1,10 +1,10 @@
 """Mergeable cardinality sketches (Datasketches HLL, Spark 4 built-ins).
 
-Exact ``count_distinct`` is the one aggregate incremental view
-maintenance cannot combine (``incremental.py``: sum+sum and max(max)
-decompose; distinct-over-history does not — every distinct value of a
-key would have to ship to one reducer, and yesterday's count can't be
-added to today's). The standard at-scale answer is to PERSIST THE
+Exact ``count_distinct`` is the one common aggregate incremental
+maintenance cannot combine (sum+sum and max(max) decompose;
+distinct-over-history does not — every distinct value of a key would
+have to ship to one reducer, and yesterday's count can't be added to
+today's). The standard at-scale answer is to PERSIST THE
 SKETCH, not the number: an HLL sketch is a fixed-size (~2^lg_k bytes)
 binary summary whose union is register-wise max — associative,
 commutative, idempotent — so

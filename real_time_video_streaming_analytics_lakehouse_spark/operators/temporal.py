@@ -254,22 +254,21 @@ def interval_join(
     Right columns keep their names; collisions with left names gain
     ``suffix``.
 
-    ``max_bins_per_row`` (round 15, VERDICT r14 #6): a DEGENERATE
-    ``bin_width_us`` — tiny relative to the interval lengths, whether
-    passed explicitly or derived from a pathological length
-    distribution (p75 ≪ max) — silently multiplies the replication
-    factor toward quadratic blow-up. The guard is LAZY and per-row
-    (an ``assert_true`` filter on each row's bin count — zero
-    construction jobs): execution raises a SparkRuntimeException
-    naming this knob when any row would explode into more than this
-    many bins. Pass ``None`` to opt in to unbounded replication.
+    ``max_bins_per_row``: a DEGENERATE ``bin_width_us`` — tiny relative
+    to the interval lengths, whether passed explicitly or derived from a
+    pathological length distribution (p75 ≪ max) — silently multiplies
+    the replication factor toward quadratic blow-up. The guard is LAZY
+    and per-row (an ``assert_true`` filter on each row's bin count —
+    zero construction jobs): execution raises a SparkRuntimeException
+    naming this knob when any row would explode into more than this many
+    bins. Pass ``None`` to opt in to unbounded replication.
     """
     if bin_width_us is None:
         left_lens = left.select(
             (epoch_us(F.col(left_end)) - epoch_us(F.col(left_start)))
             .alias("_len")
         )
-        # Self-join shortcut (round 17): when the caller passes the
+        # Self-join shortcut: when the caller passes the
         # SAME frame with the same interval columns on both sides
         # (customer_order_profile's overlap self-join), the union
         # would scan it twice for a p75 that is duplication-invariant
@@ -337,7 +336,7 @@ def interval_join(
             # operator's pre-guard behavior; assert_true on the bare
             # comparison would RAISE on NULL input instead (and only
             # the optimizer's inferred IsNotNull filters mask it
-            # under default configs — review finding, round 15).
+            # under default configs).
             df = df.filter(
                 F.assert_true(
                     nb.isNull() | (nb <= F.lit(max_bins_per_row)),

@@ -88,7 +88,7 @@ def repetition_features(
     tokens_col: str | None = None,
     token_tf: DataFrame | None = None,
 ) -> DataFrame:
-    """Gopher-style repetition quality signals (round 9; the
+    """Gopher-style repetition quality signals (the
     repetition-filter family of Rae et al. 2021 §A1.1 / Dolma's
     quality taggers, standard in training-data curation and absent
     from the reference): per-document
@@ -112,7 +112,7 @@ def repetition_features(
     (the text_quality fold shares ONE scan's arrays across language
     ID, the bigram LM, and this).
 
-    ``token_tf`` (round 17): an already-aggregated per-(id, token)
+    ``token_tf``: an already-aggregated per-(id, token)
     count frame with a ``tf`` column — the token mode is then
     ``max(tf)`` per id over it (the identical two-level aggregate)
     instead of this operator's own explode + count, so a caller
@@ -264,7 +264,7 @@ def bm25_term_stats(
     attach (text_quality's plan pin forbids nested-loop joins, and an
     arm that doesn't emit the score shouldn't pay for dl/avgdl).
 
-    ``tf`` (round 17): an already-aggregated ``(id, term, tf)`` frame —
+    ``tf``: an already-aggregated ``(id, term, tf)`` frame —
     callers that compute several term-frequency families over one
     corpus (text_quality) pass a shared materialized tf so this
     operator skips its own explode + aggregate; ``words`` is ignored
@@ -393,7 +393,7 @@ def top_tfidf_term(
     combinable, so the per-doc reduction partially aggregates before
     the shuffle instead of sorting whole partitions.
 
-    ``tf`` (round 17): same contract as :func:`bm25_term_stats` — an
+    ``tf``: same contract as :func:`bm25_term_stats` — an
     already-aggregated ``(id, term, tf)`` frame shared by the caller
     replaces this operator's own explode + aggregate; ``words`` is
     ignored (may be None) when given."""
@@ -478,19 +478,18 @@ def shingle_array(words: Column, size: int = 3) -> Column:
     deriving several shingle UNIVERSES from one tokenization) can
     shingle without re-splitting the text.
 
-    Round 16 (guide §1.2 "per-task work"): small ``size`` uses the
-    shifted-``zip_with`` formulation the char-level :func:`shingles`
-    already uses — ``size-1`` whole-array zips whose lambda is a
-    2-arg concat — instead of ``transform(sequence(...))`` whose
-    per-ELEMENT lambda evaluates ``slice(words, i+1, size)`` +
-    ``concat_ws`` through the interpreted HOF path (measured ~1.7x
-    slower at size=3 on the sf0.1 corpus; both sites noop-sink
-    timed). Large ``size`` keeps the transform formulation: the zip
-    chain costs ``size-1`` array passes, and at size=13 (the
-    decontamination 13-grams) transform measured ~1.4x FASTER than
-    the chain. Output is bit-identical either way (same windows in
-    the same positional order, same partial-window clamp — the
-    ``when(y NULL, x)`` zip lambda reproduces ``concat_ws``'s
+    Less per-task work: small ``size`` uses the shifted-``zip_with``
+    formulation the char-level :func:`shingles` already uses —
+    ``size-1`` whole-array zips whose lambda is a 2-arg concat — instead
+    of ``transform(sequence(...))`` whose per-ELEMENT lambda evaluates
+    ``slice(words, i+1, size)`` + ``concat_ws`` through the interpreted
+    HOF path (measured ~1.7x slower at size=3 on the sf0.1 corpus; both
+    sites noop-sink timed). Large ``size`` keeps the transform
+    formulation: the zip chain costs ``size-1`` array passes, and at
+    size=13 (the decontamination 13-grams) transform measured ~1.4x
+    FASTER than the chain. Output is bit-identical either way (same
+    windows in the same positional order, same partial-window clamp —
+    the ``when(y NULL, x)`` zip lambda reproduces ``concat_ws``'s
     NULL-skip exactly; pinned by test)."""
     if size <= 4:
         s = F.size(words)
@@ -533,8 +532,7 @@ def shingle_hash_array(words: Column, size: int = 3) -> Column:
     """64-bit hashes of the distinct word-n-gram shingles of a token
     array — the integer-only sibling of :func:`shingle_array` for
     pipelines that only ever JOIN/COUNT shingles and never emit the
-    strings (round 16, guide §1.2 per-task work + §2.3 shuffle fewer
-    bytes).
+    strings (less per-task work, fewer shuffle bytes).
 
     :func:`shingle_array` + ``xxhash64(sh)`` builds every window
     STRING (two ``concat`` allocations per window) and then hashes
@@ -629,19 +627,6 @@ def rolling_hash_col(
     )
 
 
-def rolling_fingerprint(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    base: int = 131,
-    mod: int = 10**15,
-) -> DataFrame:
-    """Per-doc :func:`rolling_hash_col` projection."""
-    return df.select(
-        F.col(id_col), rolling_hash_col(text_col, base, mod).alias("rhash")
-    )
-
-
 def winnow_fingerprints_col(
     text_col: str = "text",
     k: int = 8,
@@ -733,7 +718,7 @@ def winnow_fingerprints_vec(
     (pinned against the HOF column and the Python reference in
     tests/test_operators.py).
 
-    Round-11 equivalence note: the two paths are value-identical on
+    Equivalence note: the two paths are value-identical on
     the FULL Unicode range, not just the BMP — Spark 4's
     ``split('')``/``ascii()``/``length()`` all operate on CODEPOINTS
     (surrogate pairs stay together), matching this path's UTF-32
@@ -952,17 +937,16 @@ def winnow_dup_spans(
     :func:`winnow_containment_hits`; this operator exists for the
     span-REMOVAL decision the reference family lacks.
 
-    Scale note (round 15 guardrail audit, VERDICT r14 #6): NO
-    quadratic surface is reachable here, so no ceiling is enforced —
-    unlike the pair-join dedup operators, cross-doc matching is an
-    inverted-index SEMI join (an anchor row survives or not; rows are
-    never paired), and span assembly is a per-doc window over that
+    Scale note: NO quadratic surface is reachable here, so no ceiling is
+    enforced — unlike the pair-join dedup operators, cross-doc matching
+    is an inverted-index SEMI join (an anchor row survives or not; rows
+    are never paired), and span assembly is a per-doc window over that
     doc's own anchors. Pathological overlap (every doc sharing one
-    passage) grows the surviving-anchor count linearly in corpus
-    size — the per-fp doc-count aggregate and the semi join remain
-    hash-shuffle linear; only a per-DOC anchor blow-up (bounded by
-    the 2/(w+1) winnowing density × doc length) affects the window
-    stage, and it is partitioned per doc."""
+    passage) grows the surviving-anchor count linearly in corpus size —
+    the per-fp doc-count aggregate and the semi join remain hash-shuffle
+    linear; only a per-DOC anchor blow-up (bounded by the 2/(w+1)
+    winnowing density × doc length) affects the window stage, and it is
+    partitioned per doc."""
     from pyspark.sql.window import Window
 
     if merge_gap is None:
@@ -1057,8 +1041,8 @@ def filter_by_quantile(
       stays ≤ ``accuracy`` (the GK summary keeps every value until its
       compression budget binds). Callers that oracle this path across
       engines must pass an ``accuracy`` at or above their largest
-      stratum so the exactness precondition is ENFORCED, not assumed
-      (ADVICE r14); at true 100 TB the default accuracy is the
+      stratum so the exactness precondition is ENFORCED, not assumed;
+      at true 100 TB the default accuracy is the
       intended approximate operating point.
     * ``exact=True``: ``percent_rank`` over a per-stratum window —
       exact, but sorts each stratum; right for modest corpora and for
@@ -1354,7 +1338,7 @@ def predict_language_from_words(
     features frame) share the tokenization instead of re-scanning and
     re-splitting the source.
 
-    ``tf`` (round 17): an already-aggregated ``(id, lang, w, tf)``
+    ``tf``: an already-aggregated ``(id, lang, w, tf)``
     frame — the profile counts become ``sum(tf)`` by (lang, w) (exact:
     a two-level count) and the per-doc distinct word set is exactly
     ``tf``'s key set, so a caller computing several term-frequency
@@ -1406,8 +1390,8 @@ def stop_shingle_cap(
     — the ``lsh_params_for`` precedent: the operating point is a
     function of corpus size, not a hand-tuned constant.
 
-    The ceiling is the 100 TB term, added in round 13 after the ×30
-    synthetic tier FALSIFIED the fractional-only derivation: with
+    The ceiling is the 100 TB term; the ×30 synthetic tier FALSIFIED
+    a fractional-only derivation: with
     ``cap = n/per``, any shingle whose document frequency is a
     sub-1/per FRACTION of the corpus (a phrase that appears in, say,
     0.5 % of documents — ubiquitous in real text) keeps df ∝ n inside
@@ -1479,8 +1463,8 @@ def ngram_jaccard_pairs_grouped(
     max_shingle_df: dict | None = None,
     hashed: bool = False,
 ) -> DataFrame:
-    """Shared-stage multi-arm core of :func:`ngram_jaccard_pairs`
-    (round 12, VERDICT r11 #2): ``sh`` is an already-exploded
+    """Shared-stage multi-arm core of :func:`ngram_jaccard_pairs`:
+    ``sh`` is an already-exploded
     ``(arm, id, sh)`` frame — one row per DISTINCT shingle per (arm,
     doc) — and every stage (stop-shingle df, sizes, inverted-index
     pair join, scoring) runs ONCE with the arm column joined into its
@@ -1496,7 +1480,7 @@ def ngram_jaccard_pairs_grouped(
     template shingles — where the previous keep-side SEMI join
     shuffled the entire shingle frame.
 
-    Round 16 (guide §2.3 "narrower types" / §1.2): every stage after
+    Narrower shuffle types: every stage after
     the explode keys on ``xxhash64(sh)`` instead of the shingle
     STRING — the :func:`contaminated_ids` precedent ("the 13-gram
     strings themselves never shuffle"). The checkpoint, the df-cap
@@ -1506,11 +1490,11 @@ def ngram_jaccard_pairs_grouped(
     string equality. Counts are unchanged unless two DISTINCT shingle
     strings collide in 64 bits (p ≈ n²/2⁶⁵; the test corpus has no
     collision — pinned by test, and the driver oracle re-checks the
-    string-side counts end-to-end every round). Hashing also lets the
+    string-side counts end-to-end). Hashing also lets the
     PRE-drop frame checkpoint (hash rows are ~3-5x narrower than the
     string rows whose materialization GC-thrashed an 8g heap at the
-    synthetic 10x tier — the round-12 reason the df aggregate used to
-    re-run the whole shingle explode): the explode now runs ONCE per
+    synthetic 10x tier, which made re-running the whole shingle explode
+    for the df aggregate the cheaper choice): the explode now runs ONCE per
     execution, and the df aggregate + anti join read the checkpointed
     hash frame (their identical subtrees collapse to one
     ReusedExchange/ReusedBroadcast at runtime).
@@ -1520,7 +1504,7 @@ def ngram_jaccard_pairs_grouped(
     survivors for the rank column) — never a global sort of all
     scored pairs.
 
-    ``hashed=True`` (round 16): ``sh``'s shingle column already holds
+    ``hashed=True``: ``sh``'s shingle column already holds
     64-bit hashes (:func:`shingle_hash_array`) — skip the string
     ``xxhash64`` here; the caller never built shingle strings at all.
     ``arms`` may likewise hold any orderable key type (e.g. tinyint

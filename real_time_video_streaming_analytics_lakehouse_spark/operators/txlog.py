@@ -364,8 +364,8 @@ def _txn_map(root: str, version: int) -> dict:
 def _load_checkpoint(root: str, version: int):
     """Read one parquet log checkpoint into replay state — as a LAZY
     :class:`~.manifest.FileManifest` over the parquet's Arrow table.
-    Entries are NEVER bulk-materialized to Python dicts here (the
-    round-6 driver bottleneck at ~10⁶ files); snapshot consumers
+    Entries are NEVER bulk-materialized to Python dicts here (a
+    driver bottleneck at ~10⁶ files); snapshot consumers
     materialize individual entries on demand and pruning runs
     columnar (see :mod:`.manifest`)."""
     t = checkpoint_from_bytes(store_for(root).read_checkpoint(version))
@@ -586,6 +586,31 @@ def _footer_bounds(md, idx: int | None, dtype) -> dict:
     return {"min": lo, "max": hi}
 
 
+#: reader options that stop parquet from skipping row groups by their
+#: footer min/max and pages by their column index
+_NO_PARQUET_BOUNDS_FILTER = {
+    "parquet.filter.stats.enabled": "false",
+    "parquet.filter.columnindex.enabled": "false",
+}
+
+
+def _float_bounds_unknown(entries: list[dict], schema: StructType,
+                          partition_by: list[str]) -> bool:
+    """Whether some float/double data column of ``schema`` has no max
+    logged for one of ``entries``. Such a file may come from a writer
+    that leaves NaN out of its footer and page min/max (Arrow's, for
+    one, see :func:`_footer_bounds`); Spark orders NaN above every
+    number, so parquet's own filtering of ``d > 5`` would skip NaN rows
+    that match it, and the scan must switch that filtering off."""
+    floats = [f.name for f in schema.fields
+              if isinstance(f.dataType, (FloatType, DoubleType))
+              and f.name not in partition_by]
+    return any(
+        ((e.get("stats") or {}).get(c) or {}).get("max") is None
+        for e in entries for c in floats
+    )
+
+
 # ---------------------------------------------------------------------------
 # bloom-filter file index (Delta's bloom filter index analog)
 #
@@ -762,24 +787,10 @@ def _validate_predicates(predicates) -> None:
             )
 
 
-def _filter_rows(df: DataFrame, schema: StructType, predicates) -> DataFrame:
-    """``df`` filtered row-exactly by ``[(col, op, literal)]``. Spark
-    orders NaN above every number, so ``>``/``>=`` on a float column
-    with a non-NaN literal matches NaN rows; ``OR isnan(c)`` keeps the
-    predicate out of parquet row-group pushdown, which would otherwise
-    skip them in files whose writer (Arrow, for one) leaves NaN out of
-    the footer min/max."""
-    types = {f.name: f.dataType for f in schema.fields}
+def _filter_rows(df: DataFrame, predicates) -> DataFrame:
+    """``df`` filtered row-exactly by ``[(col, op, literal)]``."""
     for col, op, lit in predicates or []:
-        c = F.col(col)
-        cond = _PRED_FNS[op](c, F.lit(lit))
-        if (
-            op in (">", ">=")
-            and isinstance(types.get(col), (FloatType, DoubleType))
-            and not (isinstance(lit, float) and lit != lit)
-        ):
-            cond = cond | F.isnan(c)
-        df = df.filter(cond)
+        df = df.filter(_PRED_FNS[op](F.col(col), F.lit(lit)))
     return df
 
 
@@ -1212,11 +1223,10 @@ class TxTable:
 
         Float/double stats are logged only for files parquet-java
         wrote: other writers (Arrow's among them) leave NaN out of the
-        footer min/max, so their bounds are unknown and never prune.
-        ``read(predicates=...)`` also keeps NaN rows out of Spark's
-        parquet row-group pushdown (see :func:`_filter_rows`); a plain
-        ``read().where("d > 5")`` still depends on Spark's own pushdown,
-        which skips such a file's NaN rows.
+        footer min/max, so their bounds are unknown and never prune,
+        and every scan of such a file switches parquet's own min/max
+        filtering off (:func:`_float_bounds_unknown`), so a range
+        condition keeps its NaN rows in reads, DELETE and UPDATE alike.
         """
         t = cls(spark, path)
         if _list_versions(t.root):
@@ -1308,7 +1318,11 @@ class TxTable:
         cardinality is bounded, shuffle otherwise. ``with_position=True``
         appends ``_dv_rel`` (root-relative file path) and ``_dv_pos``
         (physical row index) columns — what the DV write path uses to
-        address rows."""
+        address rows.
+
+        A group with a float/double column whose bounds the log does
+        not hold is scanned with parquet's row-group and page filtering
+        off (:func:`_float_bounds_unknown`)."""
         if not entries:
             df = self.spark.createDataFrame([], schema)
             if with_position:
@@ -1361,6 +1375,8 @@ class TxTable:
             if partition_by:
                 reader = reader.option("basePath", self.root)
             gen_schema = StructType.fromJson(json.loads(sj))
+            if _float_bounds_unknown(es, gen_schema, partition_by):
+                reader = reader.options(**_NO_PARQUET_BOUNDS_FILTER)
             part = reader.schema(gen_schema).parquet(
                 *[os.path.join(self.root, e["path"]) for e in es]
             )
@@ -1432,7 +1448,7 @@ class TxTable:
         files = _prune(snap, predicates)
         return _filter_rows(
             self._read_entries(files, snap.schema, snap.partition_by),
-            snap.schema, predicates,
+            predicates,
         )
 
     # -- commit machinery --------------------------------------------------
@@ -2178,14 +2194,14 @@ class TxTable:
             seed_snap = self.snapshot(version=seed_version)
             live = _lite_map(seed_snap.files)
             sj = seed_snap.schema.json()
-        # immutable copy of the seed state keyed by path (round-9
-        # advice): a remove that misses `live` (the path was already
-        # popped by an earlier surviving commit) still reconstructs
-        # from the ORIGINAL lite entry — schema generation and DV ref
-        # intact — instead of synthesizing one. Removes by the seed
-        # commit itself stay on the synthesized fallback below: their
-        # pre-seed lite state is unrecoverable (checkpoints store live
-        # entries only), pinned as over-delivery in
+        # immutable copy of the seed state keyed by path: a remove that
+        # misses `live` (the path was already popped by an earlier
+        # surviving commit) still reconstructs from the ORIGINAL lite
+        # entry — schema generation and DV ref intact — instead of
+        # synthesizing one. Removes by the seed commit itself stay on
+        # the synthesized fallback below: their pre-seed lite state is
+        # unrecoverable (checkpoints store live entries only), pinned
+        # as over-delivery in
         # test_change_feed_seed_commit_removal_over_delivers_dv_rows.
         seed_lites = dict(live)
         for v in all_versions:
@@ -2330,7 +2346,7 @@ class TxTable:
         df = _filter_rows(
             self._read_entries(files, snap.schema, snap.partition_by,
                                with_position=True),
-            snap.schema, predicates,
+            predicates,
         )
         hits = (
             df.filter(cond)
@@ -2391,8 +2407,8 @@ class TxTable:
                 f"deletion-vector stage lost files {missing[:3]}..."
             )
         # bundle publication goes through the store's data-plane hook
-        # (round-7 review: a bare os.rename assumed a rename-capable
-        # filesystem even when the commit plane was object-store-backed)
+        # (a bare os.rename would assume a rename-capable filesystem
+        # even when the commit plane is object-store-backed)
         store_for(self.root).publish_dir(stage, os.path.join(self.root, rel))
         return rel, counts
 

@@ -513,8 +513,8 @@ DEVICE_PLATFORM_QUALITY_SQL = (
 # purchase within 30 minutes. The attribution set uses a LEFT SEMI join
 # (EXISTS) so multi-view purchases are not double-counted.
 #
-# Round 5 adds the AS-OF arm (operators/temporal.py::asof_join): each
-# purchase is matched to the single LATEST preceding view (union-merge
+# The AS-OF arm (operators/temporal.py::asof_join): each purchase is
+# matched to the single LATEST preceding view (union-merge
 # + one per-key window — no range-join candidate blow-up), and
 # ``asof_gap_us_total`` sums the view→purchase microsecond gaps of
 # purchases whose latest view is within the 30-minute window. A
@@ -678,8 +678,8 @@ def daily_user_metrics_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     (day, user) grouping; collect_set states stay small (bounded label
     domains), so the agg is map-side combinable."""
     e = _events(spark, sf_dir)
-    # Round 17 (VERDICT r16 #4): the two COUNT(DISTINCT ...) aggregates
-    # are expressed as size(collect_set(...)) — exactly equal values
+    # The two COUNT(DISTINCT ...) aggregates are expressed as
+    # size(collect_set(...)) — exactly equal values
     # (both ignore NULLs; cast back to the count's LONG), but the
     # single-pass set-aggregate plan replaces the planner's Expand
     # rewrite, which multiplied EVERY event row ×3 (one projection per
@@ -719,8 +719,8 @@ def daily_user_metrics_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
 def daily_user_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-gradeable projection of :func:`daily_user_metrics_gold`:
     the ARRAY columns are emitted as '|'-joined sorted strings because
-    the driver's pandas-based hasher cannot hash list cells (round-2
-    ``TypeError: unhashable type: 'list'``). The gold operator keeps
+    the driver's pandas-based hasher cannot hash list cells
+    (``TypeError: unhashable type: 'list'``). The gold operator keeps
     real ArrayType columns; only this catalog surface stringifies.
     Also the catalog home of the collect_set/array-agg evidence (F16,
     formerly the separate ``user_event_type_sets`` query — folded here
@@ -793,8 +793,8 @@ WINDOW w AS (PARTITION BY event_type ORDER BY day
 # --- props_key_distribution (JSON parse S2-analog) ------------------------
 
 def props_key_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON-key distribution, plus the COUNT-MIN-SKETCH arm (round 6;
-    operators/sketches.py::cms_build/cms_estimate): a CMS over each
+    """JSON-key distribution, plus the COUNT-MIN-SKETCH arm
+    (operators/sketches.py::cms_build/cms_estimate): a CMS over each
     group's ``event_type`` values and the sketch's frequency estimate
     for the probe value ``'click'``. The bucket hash is md5-derived
     (60 hex bits mod width — the same engine-portable content-hash
@@ -876,10 +876,10 @@ def user_activity_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
         window_start_sec("ts", 300).alias("window_start_sec"),
         "event_type",
     ).agg(*aggs).withColumn("window_kind", F.lit("tumbling"))
-    # Round 17 (guide §2.3 — shuffle narrower types): the sliding arm
-    # used ``F.window(ts, 5 min, 1 min)``, whose Expand carries a
-    # struct<timestamp, timestamp> grouping key through both distinct-
-    # aggregate exchanges. An event at t lies in window start s iff
+    # Shuffle narrower types: ``F.window(ts, 5 min, 1 min)`` in the
+    # sliding arm would make its Expand carry a struct<timestamp,
+    # timestamp> grouping key through both distinct-aggregate
+    # exchanges. An event at t lies in window start s iff
     # s = minute_floor(t) − k minutes for k ∈ 0..4, so the five
     # assignments are one explode over k with an 8-byte LONG key —
     # exactly the oracle's formulation ((epoch_us // 60e6 − k) · 60),
@@ -1056,10 +1056,9 @@ def sessionize_rollup(
     sf_dir: str,
     arms: tuple[str, ...] = ("gap_lag", "native_window"),
 ) -> DataFrame:
-    """Both sessionization paths stacked by ``method`` (round-5 fold of
-    the former separate ``session_rollup_30min`` and
-    ``session_window_rollup`` catalog entries, freeing a slot for
-    ``training_mix_sample`` within the driver's 50-query window):
+    """Both sessionization paths stacked by ``method`` (one catalog
+    entry for both, so the catalog fits the driver's 50-query
+    window):
 
     * ``gap_lag``: the LAG + running-sum rewrite
       (:func:`..operators.sessionize.gap_sessionize`, splits when
@@ -1073,8 +1072,8 @@ def sessionize_rollup(
     (``session_num``/``duration_sec``) remain on the un-stacked
     builders, which tests cover directly.
 
-    ``arms`` (round 14, the per-arm attribution knob, same contract as
-    the dedup entries): single-arm runs are row-identical to the fused
+    ``arms`` (the per-arm attribution knob, same contract as the dedup
+    entries): single-arm runs are row-identical to the fused
     result's slice (test-pinned), so the scale probe attributes growth
     per sessionization strategy."""
     builders = {
@@ -1282,8 +1281,8 @@ _REG_SCHEMA = {
 
 
 def dq_validation_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-pass DQ profile + (round 10) the SCHEMA-REGISTRY INGEST
-    arm (:mod:`..sources.registry`; reference
+    """Single-pass DQ profile + the SCHEMA-REGISTRY INGEST arm
+    (:mod:`..sources.registry`; reference
     kafka-setup/topics.py:76-165,599-663): events are re-serialized as
     per-topic Kafka-style JSON payloads with DETERMINISTICALLY planted
     producer defects (event_id % 31 == 3 → truncated JSON, event_id %
@@ -1303,11 +1302,11 @@ def dq_validation_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never building JSON), so the whole parse→validate→route→flatten
     pipeline is checked against an independent derivation.
 
-    Plan shape (round 11): the base DQ profile AND every registry
-    counter ride ONE aggregate over ONE annotated projection of
-    ``events`` — one scan total (was 4: base + routes + two good-topic
-    aggs, each recomputing the to_json→from_json projection; VERDICT
-    r10 "What's wrong" #1). The payload column is named ``payload`` so
+    Plan shape: the base DQ profile AND every registry counter ride
+    ONE aggregate over ONE annotated projection of ``events`` — one
+    scan total, not one each for the base profile, the routes and the
+    two good-topic aggs, each recomputing the to_json→from_json
+    projection. The payload column is named ``payload`` so
     the raw ``value`` double survives for the base null profile."""
     from ..sources.registry import (
         SchemaRegistry,
@@ -1501,8 +1500,7 @@ QUERIES: dict[str, QuerySpec] = {
         sessionize_rollup,
         SESSIONIZE_ROLLUP_SQL,
         "sessionize + rollup (A1), LAG-rewrite and native "
-        "F.session_window arms stacked by method (round-5 fold of the "
-        "former session_rollup_30min / session_window_rollup entries)",
+        "F.session_window arms stacked by method",
     ),
     "user_activity_5min": QuerySpec(
         user_activity_5min,

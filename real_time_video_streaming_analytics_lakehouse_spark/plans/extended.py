@@ -23,7 +23,7 @@ def clean_standardize_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH engines (padding, lowercasing, injected bad IPs), then cleaned
     with the reference's pipeline (etl_framework.py:337-365).
 
-    Round 9 adds the PII arm (``operators/text.py::pii_counts`` /
+    The PII arm (``operators/text.py::pii_counts`` /
     ``redact_pii``): a deterministic ``notes_raw`` contact blob is
     synthesized per customer — one email always, a second on every 4th
     key, a phone on every 2nd, an IP always (the real corpus contains
@@ -267,7 +267,7 @@ def user_value_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user event timeline with next-event gap, per-user value dense
     rank, and first value.
 
-    Round 6 adds the SCD2 arm (operators/temporal.py::scd2_from_history
+    The SCD2 arm (operators/temporal.py::scd2_from_history
     + asof_join): each user's ``event_type`` history is compressed into
     Type-2 validity intervals (consecutive equal states collapse to one
     interval), and every event is enriched with ``state_since_us`` —

@@ -2,11 +2,10 @@
 star): deduplication, text analysis, fingerprinting, and vector
 similarity over the ``documents`` and ``embeddings`` tables.
 
-Every query here is oracle-checked (round 5 closed the last rows-only
-gap): hash-function-specific candidate sets (MinHash/SimHash, LSH
-clustering) are anchored with injected exact duplicates whose recall
-and scores are provable by construction, and IVF is run at full probe
-where it is provably ≡ brute force.
+Every query here is oracle-checked: hash-function-specific candidate
+sets (MinHash/SimHash, LSH clustering) are anchored with injected exact
+duplicates whose recall and scores are provable by construction, and IVF
+is run at full probe where it is provably ≡ brute force.
 """
 
 from __future__ import annotations
@@ -49,11 +48,11 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: per-(path, content-fingerprint) row counts for the derived scale
-#: knobs and guardrail ceilings (ADVICE r14: the round-14 cosine guard
-#: added an eager count() job to EVERY construction of the entry —
-#: bench passes, tests, compositions; with the cache only the first
-#: construction per table content pays the one metadata-count job,
-#: exactly the _ANN_INDEX_CACHE precedent). Keyed by the same stat
+#: knobs and guardrail ceilings: the cosine guard needs a count, and
+#: without the cache that is an eager count() job in EVERY construction
+#: of the entry — bench passes, tests, compositions; with it only the
+#: first construction per table content pays the one metadata-count
+#: job, exactly the _ANN_INDEX_CACHE precedent. Keyed by the same stat
 #: fingerprint as the schema cache, so a rewritten table re-counts.
 _COUNT_CACHE: dict[tuple, int] = {}
 
@@ -66,7 +65,7 @@ def _table_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     path = os.path.join(sf_dir, f"{name}.parquet")
     fp = _table_fingerprint(path)
     if fp is None:
-        # ADVICE r15: a None fingerprint (transient OSError during a
+        # A None fingerprint (transient OSError during a
         # concurrent rewrite) must not become a cache key — a later
         # None-fingerprint lookup of the same path would serve a stale
         # count into guardrail ceilings and lsh_params_for. Mirror the
@@ -86,13 +85,13 @@ def _table_count(spark: SparkSession, sf_dir: str, name: str) -> int:
 _RE_TOKEN_PATTERN = r"[a-zA-Z0-9]+|[^a-zA-Z0-9\s]"
 
 
-#: BPE oracle-arm parameters (round 14, VERDICT r13 #2): the merge
-#: loop trains on the every-17th-doc mini-corpus (the %37 holdout
-#: precedent) with a bounded merge budget — small enough that the
-#: DuckDB oracle re-derives the FULL training loop (unrolled argmax +
-#: left-to-right merge application via delimiter-wrapped string
-#: replace) and the sequential encode, yet the whole operator pipeline
-#: (word-type table → merge loop → rank-ordered encode) runs end-to-end.
+#: BPE oracle-arm parameters: the merge loop trains on the
+#: every-17th-doc mini-corpus (the %37 holdout precedent) with a bounded
+#: merge budget — small enough that the DuckDB oracle re-derives the
+#: FULL training loop (unrolled argmax + left-to-right merge application
+#: via delimiter-wrapped string replace) and the sequential encode, yet
+#: the whole operator pipeline (word-type table → merge loop →
+#: rank-ordered encode) runs end-to-end.
 _BPE_MINI_MOD = 17
 _BPE_NUM_MERGES = 8
 
@@ -108,17 +107,16 @@ def doc_token_stats(
       list; formerly the separate ``regex_token_counts`` query,
       folded here so the catalog fits the driver's 50-query check
       window), one row per language.
-    * ``bpe_merge`` (round 14, VERDICT r13 #2) — the learned BPE merge
-      rules, in rank order, trained on the every-17th-doc mini-corpus
-      with ``num_merges=8, min_frequency=2``: ``ord`` = rank, ``sval``
-      = ``'a b'``. Training runs through
-      :func:`..operators.bpe.train_bpe_bounded` — the same merge loop
-      as the distributed :func:`..operators.bpe.train_bpe` (shared
-      :func:`..operators.bpe.train_merges_py`, equality test-pinned)
-      in ONE lazy executor task, zero construction jobs. The DuckDB
-      oracle re-derives the entire loop: per-iteration weighted pair
-      counts, argmax (count desc, ties lexicographic), and the
-      left-to-right non-overlapping merge application (delimiter-
+    * ``bpe_merge`` — the learned BPE merge rules, in rank order,
+      trained on the every-17th-doc mini-corpus with ``num_merges=8,
+      min_frequency=2``: ``ord`` = rank, ``sval`` = ``'a b'``. Training
+      runs through :func:`..operators.bpe.train_bpe_bounded` — the same
+      merge loop as the distributed :func:`..operators.bpe.train_bpe`
+      (shared :func:`..operators.bpe.train_merges_py`, equality
+      test-pinned) in ONE lazy executor task, zero construction jobs.
+      The DuckDB oracle re-derives the entire loop: per-iteration
+      weighted pair counts, argmax (count desc, ties lexicographic), and
+      the left-to-right non-overlapping merge application (delimiter-
       wrapped string replace — byte-equivalent to the fold).
     * ``bpe_encode`` — each mini-corpus doc encoded with the learned
       rules applied sequentially in rank order
@@ -133,10 +131,10 @@ def doc_token_stats(
     The long format's unused measure columns are NULL per surface
     (ints/doubles/strings only — no nullable booleans).
 
-    ``trainer`` (round 15, VERDICT r14 #5) selects the PHYSICAL
-    training path feeding the ``bpe_merge``/``bpe_encode`` arms —
-    same merge rules either way (shared ``train_merges_py`` loop,
-    equality pinned in tests/test_bpe.py):
+    ``trainer`` selects the PHYSICAL training path feeding the
+    ``bpe_merge``/``bpe_encode`` arms — same merge rules either way
+    (shared ``train_merges_py`` loop, equality pinned in
+    tests/test_bpe.py):
 
     * ``"bounded"`` (default, also the bench path): one lazy
       ``applyInPandas`` task, zero construction jobs;
@@ -162,7 +160,7 @@ def doc_token_stats(
     if trainer not in ("bounded", "distributed"):
         raise ValueError(f"unknown BPE trainer {trainer!r}")
 
-    # Round 16: ensure_parallelism here was tried and REJECTED
+    # No ensure_parallelism here (tried and rejected)
     # (interleaved A/B at sf0.1: the un-repartitioned scan is >= as
     # fast — the lang groupBy already exchanges, so the repartition
     # only adds a shuffle in front of it).
@@ -194,8 +192,8 @@ def doc_token_stats(
             mini, num_merges=_BPE_NUM_MERGES, min_frequency=2
         )
         # local_relation: JVM-evaluated local rows — the pickle path
-        # would run a Python-worker stage per materialization (round
-        # 16, guide §4 — see operators.util.local_relation).
+        # would run a Python-worker stage per materialization (see
+        # operators.util.local_relation).
         from ..operators.util import local_relation
 
         merges = local_relation(
@@ -235,9 +233,9 @@ def doc_token_stats(
 
 def _bpe_oracle_sql(n_merges: int, mini_mod: int) -> str:
     """The full BPE training loop + sequential encode in DuckDB SQL,
-    UNROLLED for a bounded merge budget (VERDICT r13 #2's recursive-CTE
-    suggestion, done as an unrolled chain — aggregates are not allowed
-    in a recursive term, and the budget is a construction constant).
+    UNROLLED for a bounded merge budget (an unrolled chain, not a
+    recursive CTE — aggregates are not allowed in a recursive term, and
+    the budget is a construction constant).
 
     Corpus-charset contract (shared with every token oracle in this
     module): the synthetic documents are printable ASCII — verified
@@ -358,12 +356,12 @@ DOC_TOKEN_STATS_SQL = _bpe_oracle_sql(_BPE_NUM_MERGES, _BPE_MINI_MOD)
 _BM25_QUERY = ("spark", "query", "join")
 
 
-#: text_quality's column families, in output order (round 15, VERDICT
-#: r14 What's-wrong #3): each key is an ``arms`` value selecting one
-#: family of columns over the shared checkpointed feature scan, so the
-#: arm probe attributes per-family cost as (family − base) — the
-#: doc_dedup_fingerprints precedent — without un-fusing the catalog
-#: plan (the round-4 multi-scan regression).
+#: text_quality's column families, in output order: each key is an
+#: ``arms`` value selecting one family of columns over the shared
+#: checkpointed feature scan, so the arm probe attributes per-family
+#: cost as (family − base) — the doc_dedup_fingerprints precedent —
+#: without un-fusing the catalog plan (separate scans per family regress
+#: it).
 _TQ_FAMILIES = (
     "lang_id", "lm", "repetition", "tfidf", "bm25",
     "gate_exact", "gate_approx",
@@ -385,10 +383,10 @@ def text_quality(
     and the token array through the same pass and is lazily
     checkpointed; the language-ID stages (profile training + per-doc
     overlap) explode words from the checkpointed arrays instead of
-    re-reading and re-splitting the source (the round-3 fold scanned
-    documents three times and tokenized twice).
+    re-reading and re-splitting the source (which would scan documents
+    three times and tokenize twice).
 
-    Round 6 adds the BIGRAM-LM arm (operators/lm.py): a count-based
+    The BIGRAM-LM arm (operators/lm.py): a count-based
     bigram LM trained on the corpus itself with ``min_count=2``
     pruning, every doc scored through :func:`..operators.lm.
     score_documents`. The catalog emits the INTEGER surfaces —
@@ -400,14 +398,14 @@ def text_quality(
     Both stages reuse the checkpointed token arrays — no extra scan or
     tokenize.
 
-    Round 9 adds the REPETITION arm
-    (:func:`..operators.text.repetition_features` — Gopher-style
-    duplicated-token mass and top-token/top-bigram mode counts, the
-    standard curation repetition filters): ``n_distinct_tokens``,
-    ``dup_token_frac``, ``top_token_count``, ``top_bigram_count``,
-    again reusing the same checkpointed token arrays.
+    The REPETITION arm (:func:`..operators.text.repetition_features` —
+    Gopher-style duplicated-token mass and top-token/top-bigram mode
+    counts, the standard curation repetition filters):
+    ``n_distinct_tokens``, ``dup_token_frac``, ``top_token_count``,
+    ``top_bigram_count``, again reusing the same checkpointed token
+    arrays.
 
-    Round 9 also adds the TF-IDF arm
+    The TF-IDF arm
     (:func:`..operators.text.top_tfidf_term`): each doc's most
     corpus-distinctive term by raw inverse document frequency
     ``tf/df`` with its integer tf/df surfaces — struct-max aggregate
@@ -416,7 +414,7 @@ def text_quality(
     pinned closed-form in tests/test_operators.py because libm
     transcendentals are not hash-portable across engines.
 
-    Round 10 adds the BM25 arm: per-doc integer statistics for the
+    The BM25 arm: per-doc integer statistics for the
     fixed query set :data:`_BM25_QUERY` (``bm25_q_hits`` distinct
     query terms present, ``bm25_q_tf`` summed in-doc occurrences,
     ``bm25_q_df_sum`` summed corpus document frequencies), read off
@@ -427,45 +425,42 @@ def text_quality(
     dl/avgdl branch, which this arm doesn't emit) remains
     property-pinned (tests/test_properties.py).
 
-    Round 13 adds the QUANTILE-GATE arm (VERDICT r12 next-round #3 —
-    :func:`..operators.text.filter_by_quantile`, the corpus-filtering
-    step every curation pipeline runs after scoring): ``q80_keep`` = 1
-    for docs the operator keeps at the per-``lang`` 0.8 quantile of
-    the INTEGER ``n_tokens`` score via the ``exact=True``
-    (percent_rank) path — integer scores on a deterministic grid make
-    the per-stratum rank cut reproducible across engines, and DuckDB
-    re-derives membership with the same PERCENT_RANK window. NULL-text
-    docs never enter the gate (keep 0): Spark and DuckDB disagree on
-    default NULL ordering inside window sorts, so gating them would be
-    engine-defined.
+    The QUANTILE-GATE arm (:func:`..operators.text.filter_by_quantile`,
+    the corpus-filtering step every curation pipeline runs after
+    scoring): ``q80_keep`` = 1 for docs the operator keeps at the
+    per-``lang`` 0.8 quantile of the INTEGER ``n_tokens`` score via the
+    ``exact=True`` (percent_rank) path — integer scores on a
+    deterministic grid make the per-stratum rank cut reproducible across
+    engines, and DuckDB re-derives membership with the same PERCENT_RANK
+    window. NULL-text docs never enter the gate (keep 0): Spark and
+    DuckDB disagree on default NULL ordering inside window sorts, so
+    gating them would be engine-defined.
 
-    Round 14 (VERDICT r13 #3) adds ``q80_keep_approx``: the SAME gate
-    through the operator's ``exact=False`` path — the 100 TB
-    operating point (per-stratum ``percentile_approx`` thresholds
-    broadcast back; the corpus pass is map-only). On integer scores
-    Spark's percentile_approx is the discrete quantile, which DuckDB's
-    ``quantile_disc`` re-derives exactly (verified per stratum at
-    sf0.001/0.01/0.1 and at max accuracy), so BOTH physical paths now
-    flow through the driver gate; the percent_rank/approx equivalence
-    stays pinned in tests/test_operators.py.
+    ``q80_keep_approx``: the SAME gate through the operator's
+    ``exact=False`` path — the 100 TB operating point (per-stratum
+    ``percentile_approx`` thresholds broadcast back; the corpus pass is
+    map-only). On integer scores Spark's percentile_approx is the
+    discrete quantile, which DuckDB's ``quantile_disc`` re-derives
+    exactly (verified per stratum at sf0.001/0.01/0.1 and at max
+    accuracy), so BOTH physical paths flow through the driver gate; the
+    percent_rank/approx equivalence stays pinned in
+    tests/test_operators.py.
 
-    ``arms`` (round 15, VERDICT r14 What's-wrong #3): selects which
-    COLUMN FAMILIES attach to the base feature columns (which always
-    compute) — :data:`_TQ_FAMILIES`; deselected families skip their
-    joins/aggregations and their columns are absent, so the scale
-    probe attributes per-family growth as (family − base) over the
-    SAME shared checkpointed scan. Single-family output is
+    ``arms``: selects which COLUMN FAMILIES attach to the base feature
+    columns (which always compute) — :data:`_TQ_FAMILIES`; deselected
+    families skip their joins/aggregations and their columns are absent,
+    so the scale probe attributes per-family growth as (family − base)
+    over the SAME shared checkpointed scan. Single-family output is
     column-projected row-identical to the fused result (test-pinned);
-    the catalog default runs all families — the fused plan is
-    byte-identical to round 14's."""
+    the catalog default runs all families in one fused plan."""
     from ..operators.lm import score_documents, train_bigram_lm
 
     unknown = set(arms) - set(_TQ_FAMILIES)
     if unknown:
         raise ValueError(f"unknown arms {sorted(unknown)}")
 
-    # Round 16: ensure_parallelism on this scan was tried and
-    # REJECTED (interleaved A/B at sf0.1: wall 3.06 -> 4.21 s): the
+    # No ensure_parallelism on this scan (tried and rejected;
+    # interleaved A/B at sf0.1: wall 3.06 -> 4.21 s): the
     # checkpointed feature frame carries token ARRAYS, and spreading
     # it over ~10 partitions multiplies every family subtree's
     # block-manager reads of fat rows; the single-partition
@@ -476,23 +471,23 @@ def text_quality(
         d, extra=[F.col("lang"), tokens("text").alias("_w")]
     ).localCheckpoint(eager=False)
     words = feat.select("doc_id", "lang", F.explode("_w").alias("w"))
-    # Round 17 family fusion (VERDICT r16 #3, guide §2.1/§2.4 — fewer
-    # shuffles): the lang-id profile + per-doc distinct set, the tfidf
-    # tf/df pair, the bm25 tf/df pair, and the repetition token mode
-    # each re-exploded the checkpointed token arrays and re-ran their
-    # own (doc, word)-keyed aggregate — 4 explode+aggregate passes over
-    # the fat checkpoint whose subtrees Catalyst prunes differently, so
-    # nothing was reusable. ONE shared per-(doc, lang, word) count,
+    # Family fusion (fewer shuffles): if the lang-id profile + per-doc
+    # distinct set, the tfidf tf/df pair, the bm25 tf/df pair, and the
+    # repetition token mode each re-exploded the checkpointed token
+    # arrays and re-ran their own (doc, word)-keyed aggregate, that
+    # would be 4 explode+aggregate passes over the fat checkpoint whose
+    # subtrees Catalyst prunes differently, so nothing would be
+    # reusable. ONE shared per-(doc, lang, word) count,
     # lazily materialized, now feeds all four families: the profile
     # counts become sum(tf) by (lang, w) (a two-level count — exact),
     # the per-doc distinct word set is exactly tf's key set, tfidf/bm25
     # read their tf directly, and the token mode is max(tf). Exact
     # because lang is functionally dependent on doc_id (one documents
-    # row per doc). The explode now runs once; every family reads a
-    # NARROW (id, lang, w, tf) materialization instead of the fat
-    # token-array checkpoint (the r16 rejection of parallelizing this
-    # scan was about spreading those fat rows — tf rows are the
-    # opposite shape).
+    # row per doc). The explode runs once; every family reads a NARROW
+    # (id, lang, w, tf) materialization instead of the fat token-array
+    # checkpoint (the rejection of parallelizing this scan above is
+    # about spreading those fat rows — tf rows are the opposite
+    # shape).
     tf = (
         words.groupBy("doc_id", "lang", "w")
         .agg(F.count("*").alias("tf"))
@@ -524,7 +519,7 @@ def text_quality(
         feat, id_col="doc_id", tokens_col="_w", token_tf=tfv
     )
     tfidf = top_tfidf_term(None, tf=tfv)
-    # Round 10: the BM25 INTEGER arm — per-doc query-term statistics
+    # The BM25 INTEGER arm — per-doc query-term statistics
     # (distinct hits, summed tf, summed corpus df) for a fixed query
     # set, read off :func:`..operators.text.bm25_term_stats` — the
     # exact tf/df frame :func:`..operators.text.bm25_scores` is built
@@ -546,9 +541,9 @@ def text_quality(
     )
     # Quantile-gate arms: run the REAL operator over the integer
     # n_tokens score per lang stratum and mark membership, BOTH
-    # physical paths (round 14, VERDICT r13 #3):
+    # physical paths:
     # - q80_keep: exact=True (percent_rank window) — oracled with the
-    #   same PERCENT_RANK window in DuckDB (round 13);
+    #   same PERCENT_RANK window in DuckDB;
     # - q80_keep_approx: exact=False — the 100 TB path (per-stratum
     #   percentile_approx thresholds broadcast back, map-only corpus
     #   pass). On integer scores Spark's percentile_approx equals
@@ -562,7 +557,7 @@ def text_quality(
     gate = filter_by_quantile(
         scored, "n_tokens", 0.8, strata_col="lang", exact=True,
     ).select("doc_id", F.lit(1).alias("q80_keep"))
-    # accuracy=1e6 (ADVICE r14): percentile_approx is the EXACT
+    # accuracy=1e6: percentile_approx is the EXACT
     # discrete quantile while every stratum holds ≤ accuracy rows (the
     # GK sketch keeps all values until its budget binds) — 1e6 is 200×
     # the largest sf0.1 stratum, so the quantile_disc oracle identity
@@ -790,18 +785,17 @@ def doc_dedup_fingerprints(
     ONE scan; the group stats join is AQE-broadcast (group table ≤ one
     row per distinct content).
 
-    Round 5 adds ``holdout_hits``: benchmark decontamination
+    ``holdout_hits``: benchmark decontamination
     (:func:`..operators.text.contaminated_ids`, the 13-gram-collision
-    rule) run against a deterministic in-corpus holdout (every 37th
-    doc) — each doc's count of distinct 13-grams shared with the
-    holdout, 0 for clean docs. The operator joins on 64-bit shingle
-    hashes (strings never shuffle); the oracle recomputes the same
-    counts over the shingle strings themselves — identical strings
-    hash identically, so the counts agree exactly (a cross-string
-    xxhash64 collision is the only divergence, and this fixed corpus
-    has none).
+    rule) run against a deterministic in-corpus holdout (every 37th doc)
+    — each doc's count of distinct 13-grams shared with the holdout, 0
+    for clean docs. The operator joins on 64-bit shingle hashes (strings
+    never shuffle); the oracle recomputes the same counts over the
+    shingle strings themselves — identical strings hash identically, so
+    the counts agree exactly (a cross-string xxhash64 collision is the
+    only divergence, and this fixed corpus has none).
 
-    Round 10 adds the WINNOWING arm (Schleimer et al. SIGMOD'03 —
+    The WINNOWING arm (Schleimer et al. SIGMOD'03 —
     :func:`..operators.text.winnow_fingerprints_vec`): per doc the
     count of selected window-min k-gram fingerprints
     (``winnow_fp_count``; expected density 2/(w+1) of positions) and
@@ -815,30 +809,29 @@ def doc_dedup_fingerprints(
     (Arrow-vectorized, lazily checkpointed) and reused by the count
     column, the holdout filter, and the hits join.
 
-    Round 12 adds the SUBSTRING-DEDUP arm (Lee et al. 2022 via
+    The SUBSTRING-DEDUP arm (Lee et al. 2022 via
     :func:`..operators.text.winnow_dup_spans` — positional winnowing
     anchors instead of a suffix array): per doc, the number of
     cross-document duplicated spans (``dup_spans``), their total
-    character length (``dup_span_chars``), and the content-derived
-    group id of the doc's spans (``dup_span_group``, the minimum
-    matched fingerprint; -1 when the doc has none) — so the span
-    extractor's whole pipeline (positional selection → ≥2-distinct-doc
-    anchor filter → gap-merge → min_anchors gate) runs under the
-    driver oracle: DuckDB re-derives the leftmost-min positional
-    selection with ``list_position`` over the same portable
-    polynomial hashes, then the identical LAG + running-sum merge.
-    Exact-duplicate texts in the corpus guarantee the arm fires
-    (their spans cover ~the whole doc).
+    character length (``dup_span_chars``), and the content-derived group
+    id of the doc's spans (``dup_span_group``, the minimum matched
+    fingerprint; -1 when the doc has none) — so the span extractor's
+    whole pipeline (positional selection → ≥2-distinct-doc anchor filter
+    → gap-merge → min_anchors gate) runs under the driver oracle: DuckDB
+    re-derives the leftmost-min positional selection with
+    ``list_position`` over the same portable polynomial hashes, then the
+    identical LAG + running-sum merge. Exact-duplicate texts in the
+    corpus guarantee the arm fires (their spans cover ~the whole doc).
 
-    ``arms`` (round 14, VERDICT r13 #1): this entry's arms are COLUMN
-    FAMILIES over one row per doc, not stacked rows — ``holdout``
-    (13-gram decontamination hits), ``winnow`` (fingerprint count +
-    holdout-shared count), ``span`` (duplicate-span stats). The base
-    columns (exact-dup group stats, shingle-set fingerprint, rolling
-    hash) always compute; deselected families skip their scans/joins
-    and their columns are absent from the output, so the scale probe
-    attributes per-family growth. Single-family output is
-    column-projected row-identical to the fused result (test-pinned).
+    ``arms``: this entry's arms are COLUMN FAMILIES over one row per
+    doc, not stacked rows — ``holdout`` (13-gram decontamination hits),
+    ``winnow`` (fingerprint count + holdout-shared count), ``span``
+    (duplicate-span stats). The base columns (exact-dup group stats,
+    shingle-set fingerprint, rolling hash) always compute; deselected
+    families skip their scans/joins and their columns are absent from
+    the output, so the scale probe attributes per-family growth.
+    Single-family output is column-projected row-identical to the fused
+    result (test-pinned).
     """
     from ..operators.text import contaminated_ids, winnow_dup_spans
 
@@ -847,13 +840,13 @@ def doc_dedup_fingerprints(
     if unknown:
         raise ValueError(f"unknown arms {sorted(unknown)}")
 
-    # Round 16 (guide §2.5 input skew / §1.2): the documents table is
-    # one parquet file → one scan partition, so every per-doc
-    # expression here (winnow Arrow UDF, 13-gram shingling, the
-    # rolling-hash char fold, md5) ran single-task — the profile
-    # showed a serial chain of 1-task stages, wall ~5.9 s at ~2x
-    # parallelism. One cheap round-robin repartition of the narrow
-    # input unlocks all cores; no-op at scale (never reduces
+    # Input skew: the documents table is one parquet file → one scan
+    # partition, so every per-doc expression here (winnow Arrow UDF,
+    # 13-gram shingling, the rolling-hash char fold, md5) would run
+    # single-task — the profile showed a serial chain of 1-task
+    # stages, wall ~5.9 s at ~2x parallelism. One cheap round-robin
+    # repartition of the narrow input unlocks all cores; no-op at scale
+    # (never reduces
     # partitioning).
     d = ensure_parallelism(_docs(spark, sf_dir))
     groups = exact_dedup_groups(d, "text", "doc_id")
@@ -978,7 +971,7 @@ whold AS (SELECT DISTINCT fp FROM wfp WHERE doc_id % 37 = 0),
 whits AS (
   SELECT w.doc_id, CAST(COUNT(*) AS BIGINT) AS winnow_hits
   FROM wfp w JOIN whold h ON w.fp = h.fp GROUP BY 1),
--- substring-dedup arm (round 12): POSITIONAL winnowing (leftmost min
+-- substring-dedup arm: POSITIONAL winnowing (leftmost min
 -- per window via list_position), >=2-distinct-doc anchors, LAG +
 -- running-sum gap merge (gap 11 = w+k-1), spans with >=2 anchors
 wpos AS (
@@ -1057,8 +1050,8 @@ _BOILERPLATE = (
 #: decade above the bench corpus (sf0.1 ≈ 5k docs) and well below the
 #: ×30 tier (150k docs), where the arm measured 307.5 s / ≳48 g driver
 #: (SCALING.json ngram_arm_split_x30): the arm's super-linearity is a
-#: documented CONTRACT, and this makes it an enforced one (VERDICT
-#: r13 What's-wrong #2) instead of a footgun a library user can hit by
+#: documented CONTRACT, and this makes it an enforced one instead of a
+#: footgun a library user can hit by
 #: running the fused default on a large corpus.
 _NGRAM_EXACT_MAX_DOCS = 50_000
 
@@ -1075,7 +1068,7 @@ def ngram_jaccard_top_pairs(
     * ``exact`` — full-universe semantics over ``documents`` (the
       baseline contract; the one ~linear-at-best plan in the catalog).
     * ``stopcap`` — the 100 TB boilerplate defense AT ITS DERIVED
-      OPERATING POINT (round 11): every even-``doc_id`` document gets
+      OPERATING POINT: every even-``doc_id`` document gets
       a planted boilerplate sentence (df ≈ n/2 shingles — the
       template-header pathology), and the run is capped at
       ``stop_shingle_cap(n_docs)`` (1 % of the corpus), which drops
@@ -1088,7 +1081,7 @@ def ngram_jaccard_top_pairs(
     ``n_docs`` reaches the cap as a plain int from a parquet
     metadata count; no layout-dependent value enters the output.
 
-    Round 12 (VERDICT r11 #2): both arms run through ONE pipeline —
+    Both arms run through ONE pipeline —
     each document is tokenized once, the exact shingle array is
     computed once per doc and REUSED as the stopcap array for odd
     (unplanted) docs, and the stop-shingle df / sizes / pair-join /
@@ -1100,15 +1093,14 @@ def ngram_jaccard_top_pairs(
     distributes over the join; the empty-token filter covers
     empty/whitespace-only texts, whose token array is ``[""]``).
 
-    ``arms`` (round 13) selects which arms run — the catalog always
+    ``arms`` selects which arms run — the catalog always
     runs both; the scale probe measures ``("stopcap",)`` alone so the
     ×N tiers attribute growth per arm (the exact arm's all-pairs
     contract is super-linear BY DESIGN on duplicate-saturated input;
     the capped arm is the 100 TB path whose linearity is the claim
     worth measuring — SCALING.md).
 
-    Round 14 (VERDICT r13 What's-wrong #2): the exact arm's contract
-    is now ENFORCED — above ``exact_max_docs``
+    The exact arm's contract is ENFORCED — above ``exact_max_docs``
     (:data:`_NGRAM_EXACT_MAX_DOCS`) a run whose ``arms`` include
     ``"exact"`` raises with the escape hatch named, unless
     ``allow_exact_above=True``. Bit-identical at anchor/bench sizes
@@ -1123,7 +1115,7 @@ def ngram_jaccard_top_pairs(
     from ..operators.util import ScaleGuardrailError
 
     docs = _docs(spark, sf_dir)
-    # cached metadata count (lsh_params precedent; ADVICE r14 cache)
+    # cached metadata count (lsh_params precedent)
     n_docs = _table_count(spark, sf_dir, "documents")
     if (
         "exact" in arms
@@ -1147,7 +1139,7 @@ def ngram_jaccard_top_pairs(
         F.filter(F.col("_w"), lambda x: x != F.lit("")),
         boiler_w,
     )
-    # three projections (round 16, guide §1.2): a_ex AND the planted
+    # three projections (less per-task work): a_ex AND the planted
     # token array _wc are each materialized behind their own
     # multiply-referenced alias so CollapseProject keeps them
     # un-inlined — odd docs shingle exactly once, and the stopcap
@@ -1156,7 +1148,7 @@ def ngram_jaccard_top_pairs(
     # its ~5 whole-array reference sites (noop-sink measured ~25 %
     # off the even-doc shingle stage).
     #
-    # Round 16, second pass (guide §1.2 + §2.3): shingle STRINGS are
+    # Less per-task work, narrower shuffle types: shingle STRINGS are
     # never built — :func:`shingle_hash_array` hashes each word once
     # and folds the window hashes with xxhash64(long, long) (integer
     # work, zero string allocation), and the arm key is a TINYINT id
@@ -1205,9 +1197,9 @@ def ngram_jaccard_top_pairs(
         max_shingle_df={arm_ids["stopcap"]: stop_shingle_cap(n_docs)},
         hashed=True,
     )
-    # Label map built from arm_ids (ADVICE r16): a hardcoded
-    # when/otherwise silently labeled any future arm id 'stopcap';
-    # the chain now falls through to NULL, which the knob-gate and
+    # Label map built from arm_ids: a hardcoded when/otherwise would
+    # silently label any future arm id 'stopcap'; the chain falls
+    # through to NULL, which the knob-gate and
     # stacked-union identity checks would catch immediately.
     method = F.lit(None).cast("string")
     for name, mid in arm_ids.items():
@@ -1248,7 +1240,7 @@ planted AS (
   FROM documents),
 cap AS (
   -- stop_shingle_cap: fractional 1% term for small corpora, absolute
-  -- 128-doc ceiling for linear pair work at scale (round 13)
+  -- 128-doc ceiling for linear pair work at scale
   SELECT LEAST(GREATEST(2, COUNT(*) // 100), 128) AS cap FROM documents),
 cwords AS (
   SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM planted),
@@ -1337,11 +1329,11 @@ def hash_dedup_candidates(
     codegen'd split they would save, at this and any scale where text
     compresses better than its token array.
 
-    ``arms`` (round 14, VERDICT r13 #1) selects which sketch families
-    run — the catalog always runs both; the scale probe measures each
-    alone so the ×N tiers attribute growth per family instead of
-    hiding one family's pathology inside the fused wall (the round-13
-    ngram stopcap lesson). Single-arm output is row-identical to the
+    ``arms`` selects which sketch families run — the catalog always
+    runs both; the scale probe measures each alone so the ×N tiers
+    attribute growth per family instead of hiding one family's
+    pathology inside the fused wall (as the ngram stopcap arm's once
+    was). Single-arm output is row-identical to the
     fused result filtered to that ``method`` (test-pinned)."""
     d = _docs(spark, sf_dir).select("doc_id", "text")
     planted = d.filter(
@@ -1419,7 +1411,7 @@ def ann_topk(
       sub-linear ``n_probe < n_clusters`` operating point (probing
       ~n_probe/n_clusters of the corpus) is the same code path with a
       shorter probe list, recall-pinned in tests/test_similarity.py.
-    * ``pq_full_refine`` (round 5): product-quantization ADC scoring
+    * ``pq_full_refine``: product-quantization ADC scoring
       run at FULL refine depth — every candidate survives the ADC
       shortlist and reaches the exact cosine re-rank, so the result is
       provably ≡ brute force for ANY codebooks while the whole PQ
@@ -1427,7 +1419,7 @@ def ann_topk(
       executes end-to-end. The memory-compression operating point
       (small ``refine``, codes-only scan) is the same code path,
       recall-pinned in tests/test_similarity.py.
-    * ``ivfpq_persisted`` (round 7): the same top-k answered from the
+    * ``ivfpq_persisted``: the same top-k answered from the
       PERSISTED index (:mod:`..operators.ann_index` — model + codes as
       native-log tables, maintained incrementally by
       ``run_ann_index_stream``), at full probe + full refine — so this
@@ -1467,25 +1459,24 @@ def ann_topk(
         raise ValueError(f"unknown arms {sorted(unknown)}")
     if not arms:
         raise ValueError("arms must name at least one ANN method")
-    # arms= (round 14, the per-arm attribution knob, same contract as
-    # the dedup entries): each selected method still runs end-to-end;
+    # arms= (the per-arm attribution knob, same contract as the dedup
+    # entries): each selected method still runs end-to-end;
     # a single-arm run is row-identical to the fused result's slice
     # (test-pinned), so the scale probe attributes growth per method.
     #
-    # Round 17 (VERDICT r16 #5, guide §2.6): arm CONSTRUCTION is half
-    # this query's warm wall (~2.0 s of ~3.7: the bounded codebook
-    # sample's count+collect jobs, the driver-side numpy Lloyd loops,
-    # the persisted index's parquet metadata reads) and the four arms
-    # are independent — build them from a small inheritable thread
-    # pool so their driver jobs and numpy training overlap instead of
-    # running back-to-back. Results are unchanged: each builder is
-    # deterministic, and the shared codebook-sample memo is keyed on
-    # the immutable DataFrame object (a concurrent double-compute of
-    # the same deterministic sample is wasted work, not a wrong
-    # answer). Wrapping with the session (not the bare builder) carries
-    # the caller's SparkSession.addTag tags onto the pool's jobs.
-    # Single-arm calls skip the pool (the scale probe's attribution
-    # mode stays sequential).
+    # Arm CONSTRUCTION is half this query's warm wall (~2.0 s of ~3.7:
+    # the bounded codebook sample's count+collect jobs, the driver-side
+    # numpy Lloyd loops, the persisted index's parquet metadata reads)
+    # and the four arms are independent — build them from a small
+    # inheritable thread pool so their driver jobs and numpy training
+    # overlap instead of running back-to-back. Results are unchanged:
+    # each builder is deterministic, and the shared codebook-sample memo
+    # is keyed on the immutable DataFrame object (a concurrent
+    # double-compute of the same deterministic sample is wasted work,
+    # not a wrong answer). Wrapping with the session (not the bare
+    # builder) carries the caller's SparkSession.addTag tags onto the
+    # pool's jobs. Single-arm calls skip the pool (the scale probe's
+    # attribution mode stays sequential).
     if len(arms) > 1:
         from concurrent.futures import ThreadPoolExecutor
 
@@ -1569,7 +1560,7 @@ SELECT 'ivfpq_persisted' AS method, * FROM topk
 
 
 #: vector ceiling for the exact all-pairs cosine entry — the catalog's
-#: OTHER by-contract quadratic surface (the ngram exact arm's round-14
+#: OTHER by-contract quadratic surface (the ngram exact arm's
 #: guardrail, applied consistently). The ×30 tier (60k vectors) runs
 #: at 35 s and stays measurable below the ceiling; the 100 TB path is
 #: embedding_dedup_clusters_lsh's bucketed candidates.
@@ -1586,15 +1577,15 @@ def embedding_cosine_pairs(
     block-pair matmul, O(n²) pair work BY CONTRACT (the provably-exact
     baseline the bucketed LSH path is judged against; SCALING.json
     x30_ratio 44.7 at 60k vectors is the quadratic regime arriving on
-    schedule). Round 14: the contract is enforced like the ngram exact
-    arm's — above ``exact_max_vectors`` the query raises
+    schedule). The contract is enforced like the ngram exact arm's —
+    above ``exact_max_vectors`` the query raises
     :class:`..operators.util.ScaleGuardrailError` naming the LSH path
     and the opt-in; bit-identical below the ceiling."""
     from ..operators.similarity import cosine_pairs
     from ..operators.util import ScaleGuardrailError
 
     emb = _emb(spark, sf_dir)
-    # cached metadata count (ADVICE r14): construction is job-free
+    # cached metadata count: construction is job-free
     # after the first count per (process, table content)
     n_vec = _table_count(spark, sf_dir, "embeddings")
     if n_vec > exact_max_vectors and not allow_exact_above:
@@ -1657,19 +1648,18 @@ _EXACT_CLUSTER_MAX_VEC = 500
 #: round.
 _SEMDEDUP_BASIS_DIMS = (0, 16, 32, 48)
 
-#: target cluster size for the k>1 arm's DERIVED operating point
-#: (round 13, VERDICT r12 next-round #4): the arm's cluster count is
-#: no longer the literal 4 but ``semdedup_params_for(n_corpus,
-#: _SEMDEDUP_TARGET_CLUSTER)`` — the 100 TB scale knob (hold cluster
-#: SIZE constant, let k grow with n) exercised and driver-oracled at
-#: this anchor. n_corpus = 2 × the 500-vector anchor cap (originals +
-#: planted copies) is a CONSTANT by construction, so k = 1000 // 250 =
-#: 4 derives identically in Spark (pure Python ints) and in the oracle
-#: (the same integer division over the same DECLARED bound in the
-#: EMBEDDING_DEDUP_CLUSTERS SQL `kval` CTE — deliberately not a
-#: COUNT(*): both engines must derive from the bound, or a NULL
-#: anchored embedding would shrink the realized count on one side
-#: only) — no action, no hand-tuned constant.
+#: target cluster size for the k>1 arm's DERIVED operating point: the
+#: arm's cluster count is not a literal 4 but
+#: ``semdedup_params_for(n_corpus, _SEMDEDUP_TARGET_CLUSTER)`` — the
+#: 100 TB scale knob (hold cluster SIZE constant, let k grow with n)
+#: exercised and driver-oracled at this anchor. n_corpus = 2 × the
+#: 500-vector anchor cap (originals + planted copies) is a CONSTANT by
+#: construction, so k = 1000 // 250 = 4 derives identically in Spark
+#: (pure Python ints) and in the oracle (the same integer division over
+#: the same DECLARED bound in the EMBEDDING_DEDUP_CLUSTERS SQL `kval`
+#: CTE — deliberately not a COUNT(*): both engines must derive from the
+#: bound, or a NULL anchored embedding would shrink the realized count
+#: on one side only) — no action, no hand-tuned constant.
 _SEMDEDUP_TARGET_CLUSTER = 250
 
 
@@ -1682,32 +1672,31 @@ def embedding_dedup_clusters(
     THREE operating points, stacked as arms of one result (the
     stop-shingle-arm pattern):
 
-    * ``exact`` — round 11's provably-exact anchor:
+    * ``exact`` — the provably-exact anchor:
       ``semantic_dedup(n_clusters=1)``, min-id keep. With a single
-      cluster the within-cluster ε-pairing is the global cosine≥0.4
-      pair graph and the representative is the connected component's
-      canonical (minimum) id — byte-identical to the pre-round-11
-      cosine_pairs→connected_components formulation; the oracle
-      computes the same closure with a recursive CTE.
-    * ``semdedup_k4`` (round 12, VERDICT r11 next-round #1) — the
-      paper's SCALE path (``n_clusters>1``: pair term n² → Σn_c² via
-      within-cluster grouping) under the planted ×2-copy technique
-      proven for the LSH sibling: every vector is unioned with a
-      ×2-scaled copy (``vec_id + 1_000_000``; power-of-two scaling is
-      direction-exact, so a copy's spherical assignment and
-      normalized form are BIT-identical to its original's — cos=1
-      duplicates provably co-cluster under ANY centroids) and the
-      pipeline runs with the first ``k`` one-hot centroids
-      (`_SEMDEDUP_BASIS_DIMS`) at threshold 0.9, where — round 13,
-      VERDICT r12 #4 — ``k = semdedup_params_for(n_corpus,
-      _SEMDEDUP_TARGET_CLUSTER)`` is the operator's own DERIVED scale
-      knob over the construction-constant corpus size (= 4 here). The
-      oracle re-derives ``k`` with the same integer division (its
-      ``kval`` CTE) and the assignment closed-form (argmax of the
-      first k raw components), the within-cluster ≥0.9 pair graph,
-      and the per-cluster closure — derivation → assignment → grouped
-      pairing → CC → keep all flow through the driver gate at k>1.
-    * ``centroid_outlier`` (VERDICT r11 #3) — the paper's keep policy
+      cluster the within-cluster ε-pairing is the global cosine≥0.4 pair
+      graph and the representative is the connected component's
+      canonical (minimum) id — byte-identical to a
+      cosine_pairs→connected_components formulation; the oracle computes
+      the same closure with a recursive CTE.
+    * ``semdedup_k4`` — the paper's SCALE path (``n_clusters>1``: pair
+      term n² → Σn_c² via within-cluster grouping) under the planted
+      ×2-copy technique proven for the LSH sibling: every vector is
+      unioned with a ×2-scaled copy (``vec_id + 1_000_000``;
+      power-of-two scaling is direction-exact, so a copy's spherical
+      assignment and normalized form are BIT-identical to its original's
+      — cos=1 duplicates provably co-cluster under ANY centroids) and
+      the pipeline runs with the first ``k`` one-hot centroids
+      (`_SEMDEDUP_BASIS_DIMS`) at threshold 0.9, where ``k =
+      semdedup_params_for(n_corpus, _SEMDEDUP_TARGET_CLUSTER)`` is the
+      operator's own DERIVED scale knob over the construction-constant
+      corpus size (= 4 here). The oracle re-derives ``k`` with the same
+      integer division (its ``kval`` CTE) and the assignment closed-form
+      (argmax of the first k raw components), the within-cluster ≥0.9
+      pair graph, and the per-cluster closure — derivation → assignment
+      → grouped pairing → CC → keep all flow through the driver gate at
+      k>1.
+    * ``centroid_outlier`` — the paper's keep policy
       under one explicit centroid e_0: per ε-component keep the member
       LEAST similar to its cluster centroid (min-id ties). cos(v, e_0)
       = v[0]/‖v‖ is closed-form in SQL (both sides round to 9
@@ -1715,19 +1704,18 @@ def embedding_dedup_clusters(
       argmin-per-component is oracle-checked over REAL multi-member
       components (threshold 0.4), not just tied planted pairs.
 
-    DEMOTED to an oracle anchor (round-5): inputs are capped at
+    DEMOTED to an oracle anchor: inputs are capped at
     ``vec_id < 500`` — identical to the full corpus at oracle scale
     (sf≤0.01), bounded-quadratic everywhere else. The production-scale
     clustering path is :func:`embedding_dedup_clusters_lsh`.
 
-    ``arms`` (round 14, VERDICT r13 #1) selects which operating points
-    run — the catalog always runs all three; the scale probe measures
-    each alone for per-arm ×N attribution. ``exact`` and
-    ``centroid_outlier`` alone still go through the shared
-    ``semantic_dedup`` pass (with a single keep policy the expensive
-    pairing/CC stages are the same — only the extra policy's
-    aggregate is skipped); single-arm output is row-identical to the
-    fused result filtered to that ``arm`` (test-pinned)."""
+    ``arms`` selects which operating points run — the catalog always
+    runs all three; the scale probe measures each alone for per-arm ×N
+    attribution. ``exact`` and ``centroid_outlier`` alone still go
+    through the shared ``semantic_dedup`` pass (with a single keep
+    policy the expensive pairing/CC stages are the same — only the extra
+    policy's aggregate is skipped); single-arm output is row-identical
+    to the fused result filtered to that ``arm`` (test-pinned)."""
     from ..operators.similarity import semantic_dedup, semdedup_params_for
 
     _ARM_NAMES = ("exact", "centroid_outlier", "semdedup_k4")
@@ -1742,7 +1730,7 @@ def embedding_dedup_clusters(
         [1.0 if i == d else 0.0 for i in range(64)]
         for d in _SEMDEDUP_BASIS_DIMS
     ]
-    # DERIVED operating point (round 13): the arm's k comes from the
+    # DERIVED operating point: the arm's k comes from the
     # operator's own scale-knob derivation over the corpus size the
     # anchor cap fixes by construction — not a hand-picked literal.
     n_planted = 2 * _EXACT_CLUSTER_MAX_VEC  # originals + ×2 copies
@@ -1750,7 +1738,7 @@ def embedding_dedup_clusters(
     if k_derived > len(basis):
         # Explicit raise, not assert: stripped under `python -O`, the
         # assert would silently pass all len(basis) centroids when the
-        # target-cluster knob or corpus bound changes (ADVICE r13).
+        # target-cluster knob or corpus bound changes.
         raise ValueError(
             f"derived k={k_derived} outgrew the {len(basis)}-vector "
             "one-hot basis — widen _SEMDEDUP_BASIS_DIMS"
@@ -1782,12 +1770,11 @@ def embedding_dedup_clusters(
     )
 
     def build_both() -> DataFrame:
-        # max_cluster_vectors=None (round 16): the corpus is capped at
+        # max_cluster_vectors=None: the corpus is capped at
         # _EXACT_CLUSTER_MAX_VEC (<=500) by construction, so the
         # library's per-cluster ceiling can never bind here — opting
-        # out keeps the catalog default plan byte-identical across
-        # rounds (bench history comparability), the r15 cosine_pairs
-        # wrapper precedent.
+        # out keeps the catalog plan free of the guard (comparable
+        # with bench history), the cosine_pairs wrapper precedent.
         return semantic_dedup(
             emb, threshold=0.4, num_blocks=2, centroids=[basis[0]],
             keep_policy=pair_policies,
@@ -1812,13 +1799,12 @@ def embedding_dedup_clusters(
             F.col("representative").alias("cluster_id"), "keep",
         )
 
-    # cc_strategy="bounded_lazy" (round 13, VERDICT r12 #6): both arms'
-    # corpora are construction-bounded (<=500 anchored vectors, <=1000
-    # with planted copies), so the ε-graph union-find runs lazily in
-    # one executor task — constructing this query launches ZERO Spark
-    # jobs (pinned in tests/test_plan_quality.py), which removed the
-    # round-12 ThreadPoolExecutor that existed only to overlap the two
-    # arms' construction-time CC actions.
+    # cc_strategy="bounded_lazy": both arms' corpora are
+    # construction-bounded (<=500 anchored vectors, <=1000 with planted
+    # copies), so the ε-graph union-find runs lazily in one executor
+    # task — constructing this query launches ZERO Spark jobs (pinned in
+    # tests/test_plan_quality.py), so no thread pool is needed to
+    # overlap the two arms' construction-time CC actions.
     parts = []
     if pair_policies:
         parts.append(build_both())
@@ -1958,7 +1944,7 @@ def embedding_dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     /dedup pipeline's recall in practice: plant known duplicates,
     check they are found.
 
-    Runs at the DERIVED operating point (round-10): band width and
+    Runs at the DERIVED operating point: band width and
     count come from ``lsh_params_for(corpus_rows, 0.9)`` instead of
     fixed defaults. Because planted-duplicate recall is 1 under ANY
     band layout (identical sign patterns collide in every band), the
@@ -1987,7 +1973,7 @@ def embedding_dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    # base rows + their copies; cached metadata count (ADVICE r14)
+    # base rows + their copies; cached metadata count
     n_corpus = 2 * _table_count(spark, sf_dir, "embeddings")
     k, b = lsh_params_for(n_corpus, threshold=0.9)
     pairs = lsh_cosine_pairs(
@@ -2036,7 +2022,7 @@ def chunk_pack_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunking → sequence-packing rollup, per shard — drives BOTH
     LLM-pipeline operators (:func:`..operators.text.chunk_documents`,
     :func:`..operators.text.pack_chunks`) end-to-end through the
-    driver's oracle gate (they were pytest-only before round 5).
+    driver's oracle gate, not only through pytest.
 
     Every document is chunked into overlapping 128-token windows
     (stride 64), the chunks are FFD-packed into ≤512-token training

@@ -37,9 +37,9 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # *(1+tax) 6dp) — exact int128 totals in both engines, identical
     # under any summation order; averages divide that exact total by
     # the count, so both engines perform one IEEE division on identical
-    # operands. (Round-3: plain double sums rounded at 6dp over ~6e4
-    # rows were provably order-SENSITIVE — the --perturb gate flips
-    # them between partitionings.)
+    # operands. (Plain double sums rounded at 6dp over ~6e4 rows are
+    # order-SENSITIVE: the --perturb gate flips them between
+    # partitionings.)
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
     return li.groupBy("l_returnflag", "l_linestatus").agg(
@@ -95,8 +95,8 @@ def top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Top-k via orderBy+limit (parallel per-partition TakeOrdered +
     # merge), NOT a global rank window — a single-partition sort of
-    # every order's revenue is the bottleneck at scale (round-9 audit;
-    # same pattern as ngram_jaccard_top_pairs). The order is total
+    # every order's revenue is the bottleneck at scale (same pattern
+    # as ngram_jaccard_top_pairs). The order is total
     # (o_orderkey tiebreak), so rank == row_number and recomputing the
     # rank over just the 10 survivors is result-identical.
     order = [F.col("revenue").desc(), F.col("o_orderkey")]
@@ -198,12 +198,11 @@ FROM agg
 def customer_order_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer profile (J1: left-outer + coalesce).
 
-    Round 6 adds the INTERVAL-JOIN arm
-    (operators/temporal.py::interval_join): each order's fulfillment
-    interval is [o_orderdate, max lineitem ship date], and
-    ``overlapping_order_pairs`` counts the pairs of a customer's orders
-    whose fulfillment intervals overlap — "orders in flight
-    simultaneously". The operator is the bin-replication rewrite (equi
+    The INTERVAL-JOIN arm (operators/temporal.py::interval_join): each
+    order's fulfillment interval is [o_orderdate, max lineitem ship
+    date], and ``overlapping_order_pairs`` counts the pairs of a
+    customer's orders whose fulfillment intervals overlap — "orders in
+    flight simultaneously". The operator is the bin-replication rewrite (equi
     join on (30-day bin, custkey), exact overlap + canonical-bin filter
     in-stage — no nested-loop join, no candidate blow-up at a hot
     customer), oracled against DuckDB's brute-force pair join, which is
@@ -242,9 +241,9 @@ def customer_order_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bound holds unchanged if the data's interval scale shifts.
     # max_bins_per_row=None: the embedding_cosine_pairs precedent —
     # the catalog entry's plan stays free of the library-level lazy
-    # guard (its pinned shape and round-over-round walls are
-    # load-bearing), and the derived p75 width already bounds
-    # replication at ~2 copies/order here by construction.
+    # guard (its pinned shape and measured walls are load-bearing), and
+    # the derived p75 width already bounds replication at ~2
+    # copies/order here by construction.
     pairs = interval_join(
         iv,
         iv,

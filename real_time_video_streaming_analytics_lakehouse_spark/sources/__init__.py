@@ -1,4 +1,4 @@
-from .readers import TABLES, load_table, register_views
+from .readers import TABLES, load_table
 from .txstream import TxTableDataSource
 
-__all__ = ["TABLES", "load_table", "register_views", "TxTableDataSource"]
+__all__ = ["TABLES", "load_table", "TxTableDataSource"]

@@ -54,14 +54,14 @@ def _perturbed(df: DataFrame) -> DataFrame:
     return df.repartition(parts, F.rand(seed))
 
 
-# Per-(dir, table) schema cache (round 13): every schema-less
+# Per-(dir, table) schema cache: every schema-less
 # spark.read.parquet launches a one-task footer-inference job — pure
 # driver latency paid at CONSTRUCTION time by every query, every bench
 # pass. The first read's inferred schema is passed explicitly to every
 # subsequent read (zero jobs). Keyed by (resolved path, content
 # fingerprint) so a table REWRITTEN at the same path within a process
 # (fixture regeneration, synthetic scale tiers) invalidates the entry
-# instead of silently applying a stale schema (ADVICE r13).
+# instead of silently applying a stale schema.
 _SCHEMA_CACHE: dict = {}
 
 
@@ -70,7 +70,7 @@ def _table_fingerprint(path: str) -> tuple | None:
     for a directory table, the aggregate over its data files,
     recursing ONE level into subdirectories so a Hive-partitioned
     table (``<root>/<col>=<val>/<files>``) rewritten in place changes
-    its stamp (ADVICE r14 — the flat scandir missed nested rewrites).
+    its stamp (a flat scandir would miss nested rewrites).
     Deeper nesting (multi-level partitioning) is outside this corpus;
     such layouts fall back to the level-2 entry's own (name, mtime,
     size), which still changes whenever files are added/removed/
@@ -93,7 +93,7 @@ def _table_fingerprint(path: str) -> tuple | None:
         # the per-entry stats can race a concurrent rewrite (a probe
         # re-materializing a /tmp tier mid-read): any entry vanishing
         # between scandir and stat degrades to an UNCACHED read (None)
-        # rather than crashing load_table (review finding, round 15)
+        # rather than crashing load_table
         with os.scandir(path) as it:
             for e in it:
                 if e.name.startswith(("_", ".")):
@@ -127,7 +127,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.schema(cached[1]).parquet(path)
     else:
         # fp None (missing table): read uncached so Spark raises its
-        # own PATH_NOT_FOUND error message (ADVICE r14)
+        # own PATH_NOT_FOUND error message
         df = spark.read.parquet(path)
         if fp is not None:
             _SCHEMA_CACHE[key] = (fp, df.schema)
@@ -142,11 +142,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             F.timestamp_micros(F.expr("ts DIV 1000")).cast("timestamp_ntz"),
         )
     return _perturbed(df)
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES
-) -> None:
-    """Register each table as a temp view (for spark.sql-based plans)."""
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -28,7 +28,7 @@ Schema evolution: ``register`` enforces BACKWARD compatibility by
 default (a consumer on the new version can read data produced under
 the old one): a shared property may not change type, and a field newly
 promoted to ``required`` must already exist in the previous version's
-properties. Round 12 completes Confluent's subject-level mode set:
+properties. Confluent's subject-level mode set is complete:
 ``compatibility="forward"`` checks the other direction (data produced
 under the new version stays valid to readers on the old one — a
 property the old version requires must survive into the new one, and
@@ -123,7 +123,7 @@ def backward_incompatibilities(
     now-required field. Required-ness is this engine's DLQ gate, not a
     parse-breaking change: post-promotion, such payloads route to the
     dead-letter table with ``missing:<field>`` for repair-replay (the
-    round-11 mid-stream evolution e2e pins exactly this workflow),
+    mid-stream evolution e2e test pins exactly this workflow),
     whereas a TYPE change or a required field with no property would
     corrupt the typed table itself and is rejected. The FORWARD
     direction (:func:`forward_incompatibilities`) is intentionally
@@ -132,7 +132,7 @@ def backward_incompatibilities(
     registry's control: there is no DLQ on their side to catch a
     payload missing a field they require.
 
-    ``strict=True`` (ADVICE r13) opts into Confluent-parity semantics
+    ``strict=True`` opts into Confluent-parity semantics
     for deployments whose consumers are NOT behind this engine's DLQ:
     the optional→required promotion is then rejected too, exactly as
     Confluent's BACKWARD checker would."""
@@ -168,10 +168,10 @@ def forward_incompatibilities(old: dict, new: dict) -> list[str]:
     type; a property ``old`` REQUIRES must stay REQUIRED in ``new``
     (merely keeping it optional is not enough — a new-produced payload
     may then omit a field old readers demand, Confluent JSON-schema
-    semantics). Confluent's FORWARD mode (round 12, VERDICT r11 #4;
-    the required→optional demotion hole closed round 13 per ADVICE
-    r12). NOT the exact mirror of the backward algebra: forward is
-    STRICT about required-ness where backward deliberately relaxes it
+    semantics). Confluent's FORWARD mode, including the rejection of a
+    required→optional demotion. NOT the exact mirror of the backward
+    algebra: forward is STRICT about required-ness where backward
+    deliberately relaxes it
     — see the relaxation note on
     :func:`backward_incompatibilities` for why the asymmetry is the
     design (our DLQ exists, old readers' doesn't)."""
@@ -217,7 +217,7 @@ class SchemaRegistry:
         """``strict=True`` applies Confluent-parity BACKWARD semantics
         (optional→required promotions rejected) instead of this
         engine's documented DLQ-gated relaxation — for deployments
-        whose old consumers are not behind the DLQ (ADVICE r13)."""
+        whose old consumers are not behind the DLQ."""
         if compatibility not in ("backward", "forward", "full", "none"):
             raise ValueError(f"unknown compatibility mode {compatibility!r}")
         self.root = root

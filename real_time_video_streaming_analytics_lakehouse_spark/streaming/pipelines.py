@@ -667,7 +667,7 @@ def run_registry_ingest(
         # good tables (the compatibility gate admits the widening); the
         # DLQ's shape comes from the raw stream, so an upstream column
         # addition must fail loudly there instead of silently evolving
-        # the DLQ schema around the gate (ADVICE r11).
+        # the DLQ schema around the gate.
         targets = [
             (os.path.join(table_root, topic), frame, True)
             for topic, frame in sorted(good.items())

@@ -26,6 +26,8 @@ from real_time_video_streaming_analytics_lakehouse_spark.operators.text import (
     chunk_documents,
 )
 
+from .conftest import count_jobs
+
 
 # -- sequential reference (the classic algorithm, verbatim) ----------------
 
@@ -263,16 +265,12 @@ def test_train_bpe_bounded_zero_construction_jobs(spark):
     """The bounded trainer is LAZY: constructing the merge DataFrame
     (and the sequential encode over it) launches no Spark jobs — the
     connected_components_bounded contract."""
-    sc = spark.sparkContext
-    sc.setJobGroup("bpe-construct-probe", "construction-only probe")
-    try:
+    def construct():
         df = _df(spark, ["low lower", "low low"])
-        merges = train_bpe_bounded(df, num_merges=4)
-        bpe_encode_sequential_bounded(df, merges)
-    finally:
-        sc.setJobGroup("", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("bpe-construct-probe")
-    assert len(jobs) == 0, f"construction launched {len(jobs)} jobs"
+        bpe_encode_sequential_bounded(df, train_bpe_bounded(df, num_merges=4))
+
+    jobs, _ = count_jobs(spark, construct)
+    assert jobs == 0, f"construction launched {jobs} jobs"
 
 
 def test_train_bpe_bounded_enforces_word_type_bound(spark):

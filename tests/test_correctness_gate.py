@@ -65,10 +65,9 @@ def duck():
 @pytest.mark.parametrize(
     "name", sorted(n for n, s in CATALOG.items() if s.oracle)
 )
-def test_driver_view_dtype_parity(spark, duck, name):
-    spec = CATALOG[name]
+def test_driver_view_dtype_parity(catalog_frame, duck, name):
     problems = driver_view_problems(
-        spec.fn(spark, SF_DIR).toPandas(), duck.execute(spec.oracle).df()
+        catalog_frame(name), duck.execute(CATALOG[name].oracle).df()
     )
     assert not problems, f"{name}: {problems}"
 

@@ -34,6 +34,7 @@ from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import 
     TxTable,
 )
 
+from .conftest import count_jobs
 from .test_txlog import _merge_matches_upsert
 
 
@@ -158,23 +159,12 @@ def test_literal_cutoff(spark, tmp_path, literal_calls, n, literal):
     assert sum(r.v for r in t.read().collect()) == n
 
 
-def _job_id(spark, name: str) -> int:
-    """Id of a one-job marker query run under job group ``name``."""
-    sc = spark.sparkContext
-    sc.setJobGroup(name, name)
-    try:
-        spark.range(1).collect()
-    finally:
-        sc.setJobGroup("", "")
-    return sc.statusTracker().getJobIdsForGroup(name)[0]
-
-
 def test_small_key_merge_runs_three_jobs(spark, tmp_path):
     """Key set, probe, one write: a MERGE of a few keys into a table
     with live files runs no broadcast job and writes its data and change
     rows together. Adaptive execution is off, as in a streaming
     micro-batch (with it on, each shuffle is a job of its own). The
-    jobs are those between two marker jobs (job ids are sequential)."""
+    jobs are counted by ``count_jobs``."""
     ddl = "w TIMESTAMP, e STRING, n BIGINT"
     base = dt.datetime(2024, 1, 1)
     rows = [(base + dt.timedelta(minutes=5 * i), e, 1)
@@ -187,12 +177,10 @@ def test_small_key_merge_runs_three_jobs(spark, tmp_path):
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        before = _job_id(spark, "small-merge-before")
-        v = t.merge(src, keys=["w", "e"])
-        after = _job_id(spark, "small-merge-after")
+        jobs, v = count_jobs(spark, lambda: t.merge(src, keys=["w", "e"]))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    assert after - before - 1 == 3
+    assert jobs == 3
     kinds = sorted(r._change_type for r in t.change_feed(v).collect())
     assert kinds == ["insert", "update_postimage", "update_preimage"]
 

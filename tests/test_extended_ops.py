@@ -70,129 +70,3 @@ def test_simhash_flags_near_duplicate_not_distinct(spark):
     }
     assert (1, 2) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs
-
-
-def test_incremental_refresh_equals_full_recompute(spark):
-    """Incremental view maintenance: gold built from the first half of
-    the event log, refreshed with the full log, must be row-identical to
-    a full recompute — combined partials (sum+sum, count+count,
-    max(max)), new keys inserted, untouched keys passed through, and
-    the folded-in watermark advanced."""
-    import datetime as dt
-
-    from pyspark.sql import Row
-
-    from real_time_video_streaming_analytics_lakehouse_spark.operators.incremental import (
-        aggregate_events,
-        incremental_refresh,
-    )
-
-    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
-    rows = [
-        Row(user_id=(i % 5) + 1, ts=t0 + dt.timedelta(minutes=i),
-            value=float(i % 7))
-        for i in range(200)
-    ]
-    # key 99 exists only in the OLD half; key 42 only in the NEW half
-    rows[10] = Row(user_id=99, ts=t0 + dt.timedelta(minutes=10), value=3.0)
-    rows[150] = Row(user_id=42, ts=t0 + dt.timedelta(minutes=150), value=9.0)
-    all_events = spark.createDataFrame(rows)
-    old_events = all_events.filter(
-        all_events.ts < t0 + dt.timedelta(minutes=100)
-    )
-
-    gold = aggregate_events(old_events, ["user_id"])
-    refreshed = incremental_refresh(gold, all_events, ["user_id"])
-    full = aggregate_events(all_events, ["user_id"])
-
-    def snap(df):
-        return {
-            r["user_id"]: (r["events_cnt"], round(r["value_sum"], 9),
-                           r["value_max"], r["_watermark_us"])
-            for r in df.collect()
-        }
-
-    assert snap(refreshed) == snap(full)
-    assert 99 in snap(refreshed) and 42 in snap(refreshed)
-
-    # refresh with no new events is a no-op (watermark unchanged)
-    again = incremental_refresh(refreshed, all_events, ["user_id"])
-    assert snap(again) == snap(full)
-
-
-def test_incremental_refresh_preserves_null_partials(spark):
-    """A key whose values are all NULL must keep value_sum/value_max
-    NULL through a refresh — exactly like a full recompute — on every
-    path: NULL partial on the gold side, on the delta side, and on
-    both."""
-    import datetime as dt
-
-    from pyspark.sql import Row
-
-    from real_time_video_streaming_analytics_lakehouse_spark.operators.incremental import (
-        aggregate_events,
-        incremental_refresh,
-    )
-
-    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
-    old = [
-        Row(user_id=1, ts=t0, value=None),                  # null-gold key
-        Row(user_id=2, ts=t0, value=2.0),
-        Row(user_id=4, ts=t0, value=None),                  # null both sides
-    ]
-    new = [
-        Row(user_id=2, ts=t0 + dt.timedelta(hours=1), value=None),
-        Row(user_id=3, ts=t0 + dt.timedelta(hours=1), value=None),  # null-delta insert
-        Row(user_id=4, ts=t0 + dt.timedelta(hours=1), value=None),
-    ]
-    schema = "user_id INT, ts TIMESTAMP_NTZ, value DOUBLE"
-    all_events = spark.createDataFrame(old + new, schema)
-    gold = aggregate_events(spark.createDataFrame(old, schema), ["user_id"])
-    refreshed = incremental_refresh(gold, all_events, ["user_id"])
-    full = aggregate_events(all_events, ["user_id"])
-
-    def snap(df):
-        return {
-            r["user_id"]: (r["events_cnt"], r["value_sum"], r["value_max"])
-            for r in df.collect()
-        }
-
-    assert snap(refreshed) == snap(full)
-    assert snap(refreshed)[1] == (1, None, None)
-    assert snap(refreshed)[3] == (1, None, None)
-    assert snap(refreshed)[4] == (2, None, None)
-
-
-def test_incremental_refresh_single_delta_evaluation(spark):
-    """The delta aggregate must be evaluated once: the refresh result's
-    physical plan reads the materialized (checkpointed) partials, not a
-    re-run of the scan+aggregate — there must be no HashAggregate over
-    the raw events left anywhere in the combine plan (the only
-    aggregates allowed are none: both join sides are checkpoint scans)."""
-    import datetime as dt
-
-    from pyspark.sql import Row
-
-    from real_time_video_streaming_analytics_lakehouse_spark.operators.incremental import (
-        aggregate_events,
-        incremental_refresh,
-    )
-
-    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
-    rows = [
-        Row(user_id=i % 3, ts=t0 + dt.timedelta(minutes=i), value=float(i))
-        for i in range(30)
-    ]
-    all_events = spark.createDataFrame(rows)
-    gold = aggregate_events(
-        all_events.filter(all_events.ts < t0 + dt.timedelta(minutes=15)),
-        ["user_id"],
-    )
-    refreshed = incremental_refresh(gold, all_events, ["user_id"])
-    qe = refreshed._jdf.queryExecution()
-    plan = qe.optimizedPlan().toString() + "\n" + qe.executedPlan().toString()
-    assert "ExistingRDD" in plan or "LocalTableScan" in plan
-    assert "HashAggregate" not in plan, (
-        "combine plan re-runs an aggregation instead of reading the "
-        "materialized partials:\n" + plan
-    )

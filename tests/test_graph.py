@@ -9,6 +9,8 @@ from real_time_video_streaming_analytics_lakehouse_spark.operators.graph import 
     connected_components,
 )
 
+from .conftest import count_jobs
+
 
 def test_connected_components_chain_cycle_singleton(spark):
     # chain 1-2-3, cycle 4-5-6-4, singleton 7
@@ -292,15 +294,10 @@ def test_bounded_cc_matches_adaptive_and_enforces_bound(spark):
         ]
     )
     nodes = spark.createDataFrame([Row(id=i) for i in range(1, 8)])
-    sc = spark.sparkContext
-    sc.setJobGroup("bounded-cc-probe", "construction probe")
-    try:
-        out_df = connected_components_bounded(edges, nodes)
-        assert not (
-            sc.statusTracker().getJobIdsForGroup("bounded-cc-probe") or []
-        ), "connected_components_bounded ran jobs at construction"
-    finally:
-        sc.setJobGroup("", "")
+    jobs, out_df = count_jobs(
+        spark, lambda: connected_components_bounded(edges, nodes)
+    )
+    assert jobs == 0, "connected_components_bounded ran jobs at construction"
     got = {r["id"]: r["cluster_id"] for r in out_df.collect()}
     want = {
         r["id"]: r["cluster_id"]

@@ -3,7 +3,9 @@ in the package — module-level or lazily inside a function — must name
 a module that exists and defines ``y``. The same holds for every
 ``from x import y`` in ``tools/`` whose ``x`` is a sibling tool module,
 ``perfbench`` or the package, and no tool or test imports the retired
-``bench`` script.
+``bench`` script. Every package module is reached, by following import
+edges, from the driver contract, the benchmark or a tool: a module that
+only tests import is dead code.
 
 A lazy import runs only when its one code path does, so a dangling one
 (its target moved or deleted) would otherwise fail only in production.
@@ -162,3 +164,81 @@ def test_nothing_imports_bench():
             if any(m.split(".")[0] == "bench" for m in mods):
                 offenders.append(f"{path.relative_to(ROOT)}:{node.lineno}")
     assert not offenders, offenders
+
+
+ENTRY_POINTS = (
+    ROOT / "__spark_entry__.py",
+    *sorted((ROOT / "perfbench").glob("*.py")),
+    *sorted(TOOLS.glob("*.py")),
+)
+
+
+def _package_imports(tree: ast.AST, pkg_parts: list[str] | None):
+    """(target module parts, imported names) for every import of the
+    package in ``tree``; relative imports resolve against ``pkg_parts``
+    (None outside the package). ``import x.y`` imports no names."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                parts = alias.name.split(".")
+                if parts[0] == PKG.name:
+                    yield parts[1:], []
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                base = pkg_parts[: len(pkg_parts) - node.level + 1]
+                mod = node.module.split(".") if node.module else []
+                yield base + mod, [a.name for a in node.names]
+            elif node.module.split(".")[0] == PKG.name:
+                yield node.module.split(".")[1:], [a.name for a in node.names]
+
+
+def _reached_modules() -> set[Path]:
+    """Package source files reached from ``ENTRY_POINTS``.
+
+    Importing a module reaches it and every package above it. A package
+    ``__init__`` reaches the submodule behind one of its top-level
+    ``from .x import name`` re-exports only when an importer asks for
+    that name, so a re-export alone keeps nothing alive."""
+    reached: set[Path] = set()
+    todo: list[tuple[list[str], list[str]]] = []
+    for path in ENTRY_POINTS:
+        todo += _package_imports(ast.parse(path.read_text(), str(path)), None)
+    while todo:
+        target, names = todo.pop()
+        src = _module_file(target)
+        if src is None:
+            continue  # a dangling import is the other tests' business
+        todo += [(target[:depth], []) for depth in range(len(target))]
+        if src.name == "__init__.py":
+            body = ast.parse(src.read_text(), str(src)).body
+            reexports = [n for n in body
+                         if isinstance(n, ast.ImportFrom) and n.level == 1]
+            for name in names:
+                if _module_file(target + [name]) is not None:
+                    todo.append((target + [name], []))
+                for node in reexports:
+                    if name == "*" or name in {a.name for a in node.names}:
+                        todo.append((target + node.module.split("."),
+                                     [a.name for a in node.names]))
+            tree = ast.Module(
+                body=[n for n in body if n not in reexports], type_ignores=[]
+            )
+        else:
+            tree = ast.parse(src.read_text(), str(src))
+        if src in reached:
+            continue
+        reached.add(src)
+        todo += _package_imports(tree, list(src.relative_to(PKG).parent.parts))
+    return reached
+
+
+def test_every_package_module_runs_outside_tests():
+    """A package module that only tests import is dead code: delete it
+    with its tests, or give it a caller in the package, ``perfbench/``
+    or ``tools/``."""
+    reached = _reached_modules()
+    unreached = sorted(
+        str(p.relative_to(ROOT)) for p in PKG.rglob("*.py") if p not in reached
+    )
+    assert PKG / "plans" / "catalog.py" in reached  # the walk got in
+    assert not unreached, f"reached from tests only: {unreached}"

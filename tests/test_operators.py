@@ -18,6 +18,8 @@ from real_time_video_streaming_analytics_lakehouse_spark.operators.sessionize im
     session_rollup,
 )
 
+from .conftest import count_jobs
+
 
 def ts(minute: int, second: int = 0) -> dt.datetime:
     return dt.datetime(2024, 1, 1, 10, minute, second)
@@ -1526,21 +1528,19 @@ def test_guardrail_count_is_cached_and_construction_job_free(spark):
     from real_time_video_streaming_analytics_lakehouse_spark.plans import llm_ops
 
     sf = "/root/testdata/sf0.001"
-    sc = spark.sparkContext
     llm_ops.embedding_cosine_pairs(spark, sf)  # warm the caches
     llm_ops._table_count(spark, sf, "documents")
-    sc.setJobGroup("count-cache-probe", "construction-only probe")
-    try:
+
+    def construct():
         llm_ops.embedding_cosine_pairs(spark, sf)
         llm_ops._table_count(spark, sf, "documents")
         llm_ops._table_count(spark, sf, "embeddings")
-        jobs = sc.statusTracker().getJobIdsForGroup("count-cache-probe")
-        assert not jobs, (
-            f"guarded-entry construction launched jobs {jobs} — the "
-            f"count cache regressed"
-        )
-    finally:
-        sc.setJobGroup("", "")
+
+    jobs, _ = count_jobs(spark, construct)
+    assert jobs == 0, (
+        f"guarded-entry construction launched {jobs} jobs — the count "
+        f"cache regressed"
+    )
     # (ngram_jaccard_top_pairs is excluded from the strict zero-job
     # probe: its lazy localCheckpoint makes AQE materialize the
     # stop-shingle broadcast stage at construction — 3 jobs, deliberate

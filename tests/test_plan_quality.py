@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from real_time_video_streaming_analytics_lakehouse_spark.plans import CATALOG
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, count_jobs
 
 
 def _plan(spark, name: str) -> str:
@@ -333,7 +333,7 @@ def test_top_query_shuffle_exchange_counts_pinned(spark):
         # bm25 and token-mode families now read ONE shared
         # materialized per-(doc, lang, word) count instead of each
         # re-exploding the checkpoint and re-aggregating (task_sec
-        # 11.9 -> 4.9 at sf0.1; plans/r17/text_quality_{before,after})
+        # 11.9 -> 4.9 at sf0.1; history/plans/r17/text_quality_{before,after})
         "text_quality": 17,
         "top_revenue_orders": 1,
         "training_mix_sample": 1,
@@ -369,23 +369,17 @@ def test_embedding_dedup_clusters_constructs_with_zero_jobs(spark):
     CONSTRUCTING the query must launch no Spark job at all — the
     round-12 ThreadPoolExecutor existed only to hide construction-time
     CC actions and is gone."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    # warm construct OUTSIDE the probe group: the first read of a
-    # parquet table pays a one-task schema-inference job that
+    # warm construct OUTSIDE the count: the first read of a parquet
+    # table pays a one-task schema-inference job that
     # readers.load_table caches away for every later read
     CATALOG["embedding_dedup_clusters"].fn(spark, SF_DIR)
-    # a unique job group isolates this test from the shared session
-    sc.setJobGroup("cc-construct-probe", "construction-only probe")
-    try:
-        CATALOG["embedding_dedup_clusters"].fn(spark, SF_DIR)
-        probe_jobs = tracker.getJobIdsForGroup("cc-construct-probe") or []
-        assert not probe_jobs, (
-            f"constructing embedding_dedup_clusters launched Spark jobs "
-            f"{probe_jobs} — a construction-time action crept back in"
-        )
-    finally:
-        sc.setJobGroup("", "")
+    jobs, _ = count_jobs(
+        spark, lambda: CATALOG["embedding_dedup_clusters"].fn(spark, SF_DIR)
+    )
+    assert jobs == 0, (
+        f"constructing embedding_dedup_clusters launched {jobs} Spark "
+        f"jobs — a construction-time action crept back in"
+    )
 
 
 def test_embedding_dedup_clusters_reuses_shared_exchanges(spark):

@@ -1,11 +1,10 @@
-"""Scale-technique tests: salted aggregation equivalence, bucketed
-co-located joins (no shuffle), Kafka payload parsing, approx sketches."""
+"""Scale-technique tests: bucketed co-located joins (no shuffle), Kafka
+payload parsing, approx sketches."""
 
 from __future__ import annotations
 
 import json
 
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -15,10 +14,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from real_time_video_streaming_analytics_lakehouse_spark.operators.skew import (
-    salted_aggregate,
-    top_frequency_keys,
-)
 from real_time_video_streaming_analytics_lakehouse_spark.sources.readers import (
     load_table,
 )
@@ -27,25 +22,6 @@ from real_time_video_streaming_analytics_lakehouse_spark.streaming import (
 )
 
 from .conftest import SF_DIR
-
-
-def test_salted_aggregate_matches_plain_groupby(spark):
-    e = load_table(spark, SF_DIR, "events")
-    plain = {
-        r["event_type"]: (r["cnt"], round(r["total"], 2))
-        for r in e.groupBy("event_type")
-        .agg(F.count("*").alias("cnt"), F.round(F.sum("value"), 2).alias("total"))
-        .collect()
-    }
-    salted = {
-        r["event_type"]: (r["cnt"], round(r["total"], 2))
-        for r in salted_aggregate(
-            e, ["event_type"], {"value": "total"}, salt_buckets=8
-        ).collect()
-    }
-    assert salted == plain
-    hot = top_frequency_keys(e, "event_type", n=1).collect()[0]
-    assert hot["freq"] == max(c for c, _ in plain.values())
 
 
 def test_bucketed_join_avoids_shuffle(spark, tmp_path):
@@ -104,20 +80,6 @@ def test_approx_sketches_close_to_exact(spark):
     assert abs(row["approx_p50"] - row["exact_p50"]) <= 5.0
 
 
-def test_salted_count_distinct_exact(spark):
-    from real_time_video_streaming_analytics_lakehouse_spark.operators.skew import salted_count_distinct
-
-    rows = [("hot", f"v{i % 97}") for i in range(2000)] + [
-        ("cold", f"v{i}") for i in range(5)
-    ]
-    df = spark.createDataFrame(rows, "k STRING, v STRING")
-    got = {
-        r["k"]: r["distinct_cnt"]
-        for r in salted_count_distinct(df, ["k"], "v", salt_buckets=8).collect()
-    }
-    assert got == {"hot": 97, "cold": 5}
-
-
 def test_floor_div_exact_beyond_double_mantissa(spark):
     """Integer div must be exact where double division is off-by-one
     (> 2^53, i.e. epoch nanoseconds) and floor (not truncate) for
@@ -173,16 +135,3 @@ def test_connected_components_raises_on_non_convergence(spark):
         for r in connected_components(edges, nodes, max_iter=12).collect()
     }
     assert set(out.values()) == {0}
-
-
-def test_salted_aggregate_count_only(spark):
-    """sums={} (count-only rollup) must still work — the salt falls back
-    to hashing all columns."""
-    from real_time_video_streaming_analytics_lakehouse_spark.operators.skew import salted_aggregate
-
-    df = spark.createDataFrame(
-        [("a", i) for i in range(100)] + [("b", 1)], "k STRING, v INT"
-    )
-    got = {r["k"]: r["cnt"]
-           for r in salted_aggregate(df, ["k"], sums={}).collect()}
-    assert got == {"a": 100, "b": 1}

@@ -12,7 +12,7 @@ from real_time_video_streaming_analytics_lakehouse_spark.sources.readers import 
     load_table,
 )
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, count_jobs
 
 
 def test_ivf_recall_against_brute_force(spark):
@@ -867,22 +867,14 @@ def test_semantic_dedup_lazy_guard_on_cluster_size(spark):
     assert ok_rows
     # over the ceiling: construction silent + job-free, execution
     # raises naming the knob
-    sc = spark.sparkContext
-    sc.setJobGroup("semdedup-guard-probe", "construction-only probe")
-    try:
-        guarded = semantic_dedup(
-            emb,
-            n_clusters=1,
-            threshold=0.99,
-            max_cluster_vectors=10,
-            cc_strategy="bounded_lazy",
-        )
-        jobs = sc.statusTracker().getJobIdsForGroup(
-            "semdedup-guard-probe"
-        )
-        assert not jobs, f"guard construction launched jobs {jobs}"
-    finally:
-        sc.setJobGroup("", "")
+    jobs, guarded = count_jobs(spark, lambda: semantic_dedup(
+        emb,
+        n_clusters=1,
+        threshold=0.99,
+        max_cluster_vectors=10,
+        cc_strategy="bounded_lazy",
+    ))
+    assert jobs == 0, f"guard construction launched {jobs} jobs"
     with pytest.raises(Exception, match="max_cluster_vectors"):
         guarded.collect()
     # opt-in disables; bit-identical to the guarded under-ceiling run

@@ -451,73 +451,6 @@ def test_run_merge_stream_rejects_object_store_paths(spark, tmp_path):
     assert require_local_dir("file:///tmp/x") == "/tmp/x"
 
 
-def test_stream_monitor_prunes_failed_and_restarts(spark, tmp_path):
-    """An intentionally failing query is detected on poll, restarted
-    once via its factory, then the healthy restart drains and finishes;
-    a query without a restart budget is pruned as failed (T8)."""
-    import time
-
-    from real_time_video_streaming_analytics_lakehouse_spark.streaming import StreamMonitor
-
-    src_dir = str(tmp_path / "mon_src")
-    spark.createDataFrame(
-        [Row(event_id=1, ts=dt.datetime(2024, 1, 1), value=1.0)]
-    ).write.parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-
-    def start(batch_fn, ckpt):
-        src = stream_events_from_files(spark, src_dir, schema)
-        return (src.writeStream.foreachBatch(batch_fn)
-                .option("checkpointLocation", f"{tmp_path}/{ckpt}")
-                .trigger(availableNow=True).start())
-
-    def boom(df, bid):
-        raise ValueError("intentional failure")
-
-    sink: list[int] = []
-
-    def good(df, bid):
-        sink.append(df.count())
-
-    def wait_inactive(q, timeout=60):
-        t0 = time.time()
-        while q.isActive and time.time() - t0 < timeout:
-            time.sleep(0.2)
-        assert not q.isActive
-
-    # -- failing query WITH a restart budget: restarted then finishes --
-    mon = StreamMonitor(max_restarts=1)
-    q1 = start(boom, "ck_fail_restart")
-    wait_inactive(q1)
-    mon.register("flaky", q1,
-                 restart=lambda: start(good, "ck_restarted"))
-    snap = mon.poll_once()
-    assert snap["queries"]["flaky"]["state"] == "restarted"
-    assert "intentional failure" in snap["queries"]["flaky"]["exception"]
-    # let the restarted query drain, then it reports finished
-    wait_inactive(mon._tracked["flaky"].query)
-    snap = mon.poll_once()
-    assert snap["queries"]["flaky"]["state"] == "finished"
-    assert sink == [1]
-
-    # -- failing query WITHOUT restart budget: pruned as failed --
-    mon2 = StreamMonitor()
-    q2 = start(boom, "ck_fail_prune")
-    wait_inactive(q2)
-    mon2.register("doomed", q2)
-    q3 = start(good, "ck_healthy")
-    mon2.register("healthy", q3)
-    snap = mon2.poll_once()
-    assert snap["queries"]["doomed"]["state"] == "failed"
-    assert mon2.failed_names == ["doomed"]
-    # failed query stays excluded from later sweeps
-    wait_inactive(q3)
-    snap = mon2.poll_once()
-    assert snap["queries"]["doomed"]["state"] == "failed"
-    assert snap["queries"]["healthy"]["state"] == "finished"
-    assert snap["active"] == 0
-
-
 def test_purchase_attribution_stream_interval_join(spark, tmp_path):
     """Stream-stream interval join: a purchase within 30 min of a
     same-user view is attributed; outside the window or cross-user it
@@ -559,48 +492,6 @@ def test_purchase_attribution_stream_interval_join(spark, tmp_path):
     rows = spark.read.parquet(out_dir).collect()
     assert [(r["view_id"], r["purchase_id"], r["purchase_value"])
             for r in rows] == [(1, 10, 9.99)]
-
-
-def test_stream_monitor_survives_failing_restart_factory(spark, tmp_path):
-    """A restart factory that itself raises must not abort the sweep:
-    the query is pruned as failed and other queries are still swept."""
-    import time
-
-    from real_time_video_streaming_analytics_lakehouse_spark.streaming import StreamMonitor
-
-    src_dir = str(tmp_path / "mon2_src")
-    spark.createDataFrame(
-        [Row(event_id=1, ts=dt.datetime(2024, 1, 1), value=1.0)]
-    ).write.parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-
-    def boom(df, bid):
-        raise ValueError("intentional failure")
-
-    src = stream_events_from_files(spark, src_dir, schema)
-    q = (src.writeStream.foreachBatch(boom)
-         .option("checkpointLocation", f"{tmp_path}/mon2_ckpt")
-         .trigger(availableNow=True).start())
-    t0 = time.time()
-    while q.isActive and time.time() - t0 < 60:
-        time.sleep(0.2)
-
-    def bad_factory():
-        raise RuntimeError("checkpoint locked")
-
-    src2 = stream_events_from_files(spark, src_dir, schema)
-    q2 = (src2.writeStream.format("noop")
-          .option("checkpointLocation", f"{tmp_path}/mon2_ok_ckpt")
-          .trigger(availableNow=True).start())
-
-    mon = StreamMonitor(max_restarts=2)
-    mon.register("flaky", q, restart=bad_factory)
-    mon.register("healthy", q2)
-    snap = mon.poll_once()
-    assert snap["queries"]["flaky"]["state"] == "failed"
-    assert "restart failed" in snap["queries"]["flaky"]["exception"]
-    assert "healthy" in snap["queries"]  # sweep continued past the failure
-    q2.awaitTermination(60)
 
 
 def test_run_merge_stream_null_partition_rows_survive(spark, tmp_path):

@@ -28,6 +28,8 @@ from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import 
     _commit_path,
 )
 
+from .conftest import count_jobs
+
 SCHEMA = StructType(
     [
         StructField("id", LongType()),
@@ -771,9 +773,7 @@ def test_merge_outside_every_file_range_runs_no_probe(spark, tmp_path):
     cached source, the jobs of the same two steps on a persisted
     ``dropDuplicates`` frame (the key-set query, then a write of it to a
     table with no files). The same MERGE into a table without stats runs
-    the probe and so more jobs. Job counts come from the status
-    tracker."""
-    sc = spark.sparkContext
+    the probe and so more jobs."""
     ddl = "id BIGINT, v INT"
     schema = StructType.fromDDL(ddl)
     target = [(i, 0) for i in range(10)]
@@ -781,13 +781,8 @@ def test_merge_outside_every_file_range_runs_no_probe(spark, tmp_path):
     def src():
         return spark.createDataFrame([(i, i) for i in range(100, 105)], ddl)
 
-    def jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setJobGroup("", "")
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+    def jobs(fn):
+        return count_jobs(spark, fn)[0]
 
     pruned = TxTable.create(spark, str(tmp_path / "pr"), schema)
     pruned.write(spark.createDataFrame(target, ddl))
@@ -797,13 +792,13 @@ def test_merge_outside_every_file_range_runs_no_probe(spark, tmp_path):
 
     cached = src().dropDuplicates(["id"]).persist()
     try:
-        n_keys = jobs("merge-keyset", lambda: cached.select("id").distinct()
+        n_keys = jobs(lambda: cached.select("id").distinct()
                       .limit(500_001).toArrow())
-        n_append = jobs("merge-append", lambda: fileless.write(cached))
+        n_append = jobs(lambda: fileless.write(cached))
     finally:
         cached.unpersist()
-    n_pruned = jobs("merge-pruned", lambda: pruned.merge(src(), ["id"]))
-    n_unpruned = jobs("merge-unpruned", lambda: unpruned.merge(src(), ["id"]))
+    n_pruned = jobs(lambda: pruned.merge(src(), ["id"]))
+    n_unpruned = jobs(lambda: unpruned.merge(src(), ["id"]))
     assert n_pruned == n_keys + n_append
     assert n_unpruned > n_pruned
     for t in (pruned, unpruned):
@@ -877,24 +872,46 @@ def test_nan_max_keeps_file_for_range_predicates(spark, tmp_path, checkpoint):
 
 
 def test_arrow_written_nan_rows_survive_range_predicates(spark, tmp_path):
-    """Arrow's parquet writer leaves NaN out of the footer min/max, so a
-    ``[1.0, NaN]`` file adopted by ``bootstrap`` logs no float bounds,
-    and ``read(predicates=...)`` keeps its NaN row out of Spark's parquet
-    row-group pushdown."""
+    """Arrow's parquet writer leaves NaN out of the footer min/max (and
+    out of the page index, when it writes one), so a ``[1.0, NaN, 0.5]``
+    file adopted by ``bootstrap`` logs no float bounds, and every scan
+    of it keeps parquet from filtering its NaN row out of ``d > 5``:
+    ``read`` with predicates or a plain filter, ``delete`` and
+    ``update``."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    root = tmp_path / "arrow_nan"
-    root.mkdir()
-    pq.write_table(pa.table({"id": [1, 2, 3], "d": [1.0, float("nan"), 0.5]}),
-                   str(root / "part-0.parquet"))
-    t = TxTable.bootstrap(spark, str(root))
-    (entry,) = t.snapshot().files.values()
-    assert entry["stats"]["d"] == {"min": None, "max": None}
-    assert entry["stats"]["id"] == {"min": 1, "max": 3}
-    for pred, want in ((("d", ">", 5), {2}), (("d", ">=", 1.0), {1, 2}),
-                       (("d", "<", 5), {1, 3})):
-        assert {r.id for r in t.read(predicates=[pred]).collect()} == want
+    def bootstrapped(name: str, page_index: bool) -> TxTable:
+        root = tmp_path / f"{name}_{page_index}"
+        root.mkdir()
+        pq.write_table(
+            pa.table({"id": [1, 2, 3], "d": [1.0, float("nan"), 0.5]}),
+            str(root / "part-0.parquet"), write_page_index=page_index,
+        )
+        return TxTable.bootstrap(spark, str(root))
+
+    for page_index in (False, True):
+        t = bootstrapped("read", page_index)
+        (entry,) = t.snapshot().files.values()
+        assert entry["stats"]["d"] == {"min": None, "max": None}
+        assert entry["stats"]["id"] == {"min": 1, "max": 3}
+        for pred, want in ((("d", ">", 5), {2}), (("d", ">=", 1.0), {1, 2}),
+                           (("d", "<", 5), {1, 3})):
+            got = {r.id for r in t.read(predicates=[pred]).collect()}
+            assert got == want, (pred, page_index)
+        got = {r.id for r in t.read().filter(F.col("d") > 5).collect()}
+        assert got == {2}, page_index
+
+        t = bootstrapped("delete", page_index)
+        t.delete(F.col("d") > 5, predicates=[("d", ">", 5)])
+        assert {r.id for r in t.read().collect()} == {1, 3}, page_index
+
+        t = bootstrapped("update", page_index)
+        t.update(F.col("d") > 5, {"d": F.lit(9.0)},
+                 predicates=[("d", ">", 5)])
+        assert {(r.id, r.d) for r in t.read().collect()} == {
+            (1, 1.0), (2, 9.0), (3, 0.5)
+        }, page_index
 
 
 @pytest.mark.parametrize("name", ["_change_type", "_commit_version",

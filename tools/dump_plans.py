@@ -1,8 +1,8 @@
 """Dump ``explain("formatted")`` for every catalog query to a directory.
 
-Optimization-round instrumentation (guide §1.1/§7.2): the judge cannot
-run Spark, so the round's plan claims are committed as
-``plans/r16/<query>_<tag>.txt`` files produced by this tool.
+A plan claim is backed by committed plan text: before/after plans are
+saved as ``<out_dir>/<query>_<tag>.txt`` files (``history/plans/r16``
+and ``history/plans/r17`` hold earlier ones).
 
 Usage: python tools/dump_plans.py <out_dir> <tag> [query ...]
        (no query args = all catalog queries)
