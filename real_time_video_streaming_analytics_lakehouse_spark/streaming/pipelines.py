@@ -30,7 +30,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    CalendarIntervalType,
+    MapType,
+    StructType,
+    UserDefinedType,
+    VariantType,
+)
 
 from ..functions.dialect import money_sum
 
@@ -297,6 +304,19 @@ def dedup_stream_within_watermark(
     )
 
 
+def _orderable(dtype) -> bool:
+    """Whether Spark can sort by a column of ``dtype``: not a map, a
+    variant or an interval, nor a struct or array holding one."""
+    if isinstance(dtype, UserDefinedType):
+        return _orderable(dtype.sqlType())
+    if isinstance(dtype, ArrayType):
+        return _orderable(dtype.elementType)
+    if isinstance(dtype, StructType):
+        return all(_orderable(f.dataType) for f in dtype.fields)
+    return not isinstance(dtype, (MapType, VariantType,
+                                  CalendarIntervalType))
+
+
 def run_merge_stream_versioned(
     result: DataFrame,
     table_path: str,
@@ -344,6 +364,23 @@ def run_merge_stream_versioned(
     literal predicate, not a broadcast) and one write that stages the
     new data files and the change-feed rows together.
 
+    Partition counts: Structured Streaming turns adaptive execution off
+    inside a micro-batch, so every shuffle of the batch's own queries
+    runs at ``spark.sql.shuffle.partitions``. ``TxTable.merge`` sizes
+    the work after its key-set job to the batch instead: the probe, a
+    pure append and the one write run in one partition per
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` of estimated
+    input, so a small batch probes in one task and commits one data file
+    (plus one change file per change type), and the next stream reading
+    the table scans one file per batch, not one per shuffle partition.
+    The sizing does not reach the keep-latest dedup below, which runs
+    before any size is known, nor the first MERGE into a table with no
+    files, which writes one file per partition of its source.
+
+    Keep-latest: rows of one key keep the one with the greatest
+    ``precedence_col``; a tie is broken by the batch's other orderable
+    columns, descending, so a replayed batch keeps the same row.
+
     ``merge_schema=True`` is the reference's ``schema.autoMerge`` for
     streaming MERGE (``delta-lake/delta_setup.py:87``): a micro-batch
     whose frame carries new nullable columns (or widened int/float
@@ -371,7 +408,15 @@ def run_merge_stream_versioned(
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch = dedup_keep_latest(batch_df, keys, precedence_col)
+        # Rows of one key tied on precedence keep the same winner
+        # whatever order the batch delivers them in: a replayed batch
+        # must rebuild the same table.
+        tiebreak = [
+            f.name for f in batch_df.schema.fields
+            if f.name not in keys and f.name != precedence_col
+            and _orderable(f.dataType)
+        ]
+        batch = dedup_keep_latest(batch_df, keys, precedence_col, tiebreak)
         params = {"txnAppId": app, "txnVersion": batch_id}
         if not TxTable.exists(spark, table_path):
             try:

@@ -54,3 +54,20 @@ def count_jobs(spark, fn):
     before = _marker_job(spark)
     out = fn()
     return _marker_job(spark) - before - 1, out
+
+
+def job_tasks(spark, fn):
+    """``(tasks, fn())``: per job ``fn`` runs, in job order, the tasks of
+    the stages that job ran (a skipped stage counts none), read from the
+    status tracker once the listener bus has caught up."""
+    sc = spark.sparkContext
+    before = _marker_job(spark)
+    out = fn()
+    after = _marker_job(spark)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    tasks = []
+    for job in range(before + 1, after):
+        stages = map(tracker.getStageInfo, tracker.getJobInfo(job).stageIds)
+        tasks.append(sum(s.numCompletedTasks for s in stages if s))
+    return tasks, out

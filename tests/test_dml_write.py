@@ -9,9 +9,13 @@
   write; the change feed must equal the expected rows on a table
   partitioned by int, string and date, on the rewrite and the
   deletion-vector routes. Flat change files of older commits still read.
-* A streaming MERGE whose commit fails after staging recovers from its
-  checkpoint to the row-identical table, and VACUUM collects the
-  orphaned files.
+* A small MERGE's probe and write run one task each and its commit
+  stages one data file and one change file per change type; a lowered
+  ``advisoryPartitionSizeInBytes`` stages several. ``TxTable.write``
+  keeps its frame's partitioning.
+* A streaming MERGE whose commit fails after staging, on the rewrite
+  and on the pure-append route, recovers from its checkpoint to the
+  row-identical table, and VACUUM collects the orphaned files.
 """
 
 from __future__ import annotations
@@ -34,7 +38,7 @@ from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import 
     TxTable,
 )
 
-from .conftest import count_jobs
+from .conftest import count_jobs, job_tasks
 from .test_txlog import _merge_matches_upsert
 
 
@@ -185,6 +189,88 @@ def test_small_key_merge_runs_three_jobs(spark, tmp_path):
     assert kinds == ["insert", "update_postimage", "update_preimage"]
 
 
+# -- the commit sized to the batch ---------------------------------------------
+
+
+def _four_file_table(spark, path) -> TxTable:
+    ddl = "k BIGINT, s STRING, v INT"
+    t = TxTable.create(spark, str(path), StructType.fromDDL(ddl),
+                       properties={"delta.enableChangeDataFeed": "true"})
+    t.write(spark.createDataFrame(
+        [(i, f"s{i}", 0) for i in range(40)], ddl).repartition(4, "k"))
+    assert len(t.snapshot().files) == 4
+    return t
+
+
+def _small_batch(spark):
+    # one key the table holds, one it does not
+    return spark.createDataFrame([(3, "new", 1), (99, "ins", 1)],
+                                 "k BIGINT, s STRING, v INT")
+
+
+def _staged(t: TxTable, version: int) -> tuple[int, dict]:
+    """Data files a commit added, and its change files per change type."""
+    c = txlog._read_commit(t.root, version)
+    per_type: dict[str, int] = {}
+    for rel in c.get("cdc", []):
+        kind = rel.split(os.sep)[1].split("=", 1)[1]
+        per_type[kind] = per_type.get(kind, 0) + 1
+    return len(c["add"]), per_type
+
+
+def test_small_merge_stages_one_file_per_kind_in_single_tasks(spark,
+                                                              tmp_path):
+    """A micro-batch-sized MERGE into a four-file table: its probe and
+    its write each run one task, and the commit stages one data file and
+    one change file per change type, not one per shuffle partition.
+    Adaptive execution is off, as in a streaming micro-batch."""
+    t = _four_file_table(spark, tmp_path / "small")
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        tasks, v = job_tasks(
+            spark, lambda: t.merge(_small_batch(spark), keys=["k"]))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(tasks) == 3  # key set, probe, write
+    assert tasks[1:] == [1, 1]
+    assert _staged(t, v) == (1, {"insert": 1, "update_postimage": 1,
+                                 "update_preimage": 1})
+
+
+def test_merge_under_small_advisory_size_stages_several_files(spark,
+                                                              tmp_path):
+    """The commit is sized by ``advisoryPartitionSizeInBytes``, not
+    coalesced to one file unconditionally: with a 1-byte target the same
+    MERGE stages several data files and still leaves the rows
+    ``merge_upsert`` computes."""
+    t = _four_file_table(spark, tmp_path / "advisory")
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1b")
+    try:
+        _merge_matches_upsert(spark, t, _small_batch(spark), ["k"])
+    finally:
+        spark.conf.set(key, old)
+    assert _staged(t, t.snapshot().version)[0] > 1
+
+
+def test_unsized_plan_is_left_as_it_is(spark):
+    """A plan Catalyst cannot size (an RDD's, Long.MaxValue bytes) is not
+    coalesced."""
+    df = spark.sparkContext.parallelize([(1,), (2,)], 3).toDF(["k"])
+    assert txlog._sized_to_batch(df) is df
+
+
+def test_write_keeps_the_frame_partitioning(spark, tmp_path):
+    """``TxTable.write`` is not sized to the batch: its upstream is not
+    materialized, so an 8-partition frame stages 8 files."""
+    df = spark.range(0, 16, numPartitions=8).withColumnRenamed("id", "k")
+    t = TxTable.create(spark, str(tmp_path / "w"), df.schema)
+    v = t.write(df)
+    assert len(txlog._read_commit(t.root, v)["add"]) == 8
+
+
 # -- one write: data and change rows -------------------------------------------
 
 PART_DDL = "id BIGINT, p INT, s STRING, d DATE, v INT"
@@ -318,8 +404,18 @@ def _files_on_disk(root: str) -> set[str]:
             if not os.path.relpath(p, root).startswith("_txlog")}
 
 
+@pytest.mark.parametrize("fail_version, orphan_kinds", [
+    (2, {"data", "change"}),  # batch 1: rewrites a file, stages changes
+    (4, {"data"}),  # batch 3: new ids only, a pure append
+], ids=["rewrite", "append"])
 def test_streaming_merge_recovers_from_failed_commit(spark, tmp_path,
-                                                     monkeypatch):
+                                                     monkeypatch,
+                                                     fail_version,
+                                                     orphan_kinds):
+    """The commit of one batch fails after its files are staged; the
+    restarted stream rebuilds the table a run with no fault builds. The
+    append case is bronze's per-tick shape: a batch whose keys no live
+    file can hold commits with no probe and no change files."""
     t0 = dt.datetime(2024, 1, 1, 12)
     batches = [
         [Row(event_id=i, ts=t0, user_id=i, event_type="view", value=1.0)
@@ -329,6 +425,8 @@ def test_streaming_merge_recovers_from_failed_commit(spark, tmp_path,
          Row(event_id=7, ts=t0, user_id=7, event_type="view", value=3.0)],
         [Row(event_id=2, ts=t0 + dt.timedelta(minutes=2), user_id=2,
              event_type="buy", value=4.0)],
+        [Row(event_id=i, ts=t0 + dt.timedelta(minutes=3), user_id=i,
+             event_type="view", value=5.0) for i in (10, 11, 12)],
     ]
     src_dir = str(tmp_path / "src")
     _land(spark, src_dir, batches)
@@ -339,7 +437,7 @@ def test_streaming_merge_recovers_from_failed_commit(spark, tmp_path,
     failed = []
 
     def publish_once_failing(root, version, action):
-        if version == 2 and not failed:  # batch 1's MERGE, after staging
+        if version == fail_version and not failed:  # after staging
             failed.append(version)
             raise RuntimeError("injected failure before the log commit")
         return real(root, version, action)
@@ -349,7 +447,7 @@ def test_streaming_merge_recovers_from_failed_commit(spark, tmp_path,
     ckpt = str(tmp_path / "ckpt")
     with pytest.raises(Exception, match="injected failure"):
         _run_stream(spark, src_dir, target, ckpt)
-    assert failed == [2]
+    assert failed == [fail_version]
     _run_stream(spark, src_dir, target, ckpt)
 
     tx = TxTable(spark, target)
@@ -358,7 +456,7 @@ def test_streaming_merge_recovers_from_failed_commit(spark, tmp_path,
         sorted(tuple(r) for r in ref.read().select(*cols).collect())
     merges = [r for r in tx.history().collect() if r.operation == "MERGE"]
     assert sorted(json.loads(r.operationParameters)["txnVersion"]
-                  for r in merges) == [0, 1, 2]
+                  for r in merges) == [0, 1, 2, 3]
     assert _feed(tx) == _feed(ref)
 
     logged = set()
@@ -366,8 +464,8 @@ def test_streaming_merge_recovers_from_failed_commit(spark, tmp_path,
         c = txlog._read_commit(tx.root, v)
         logged |= {a["path"] for a in c.get("add", [])} | set(c.get("cdc", []))
     orphans = _files_on_disk(tx.root) - logged
-    assert any(p.startswith("_change_data") for p in orphans)
-    assert any(not p.startswith("_change_data") for p in orphans)
+    assert {"change" if p.startswith("_change_data") else "data"
+            for p in orphans} == orphan_kinds
     collected = set(tx.vacuum(retention_hours=0))
     assert orphans <= collected
     assert _files_on_disk(tx.root) == set(tx.snapshot().files)

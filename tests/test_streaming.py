@@ -243,6 +243,35 @@ def test_run_merge_stream_upserts_per_batch(spark, tmp_path):
     assert out == {1: ("click", 10.0), 2: ("view", 2.0), 3: ("view", 3.0)}
 
 
+def test_run_merge_stream_keeps_the_same_row_of_a_precedence_tie(
+    spark, tmp_path
+):
+    """Two rows of one key with equal precedence in one micro-batch: the
+    sink keeps the same row whichever order the file holds them in, so a
+    replayed batch rebuilds the same table."""
+    from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import TxTable
+
+    t = dt.datetime(2024, 1, 1, 12, 0, 0)
+    tied = [Row(event_id=1, ts=t, user_id=1, event_type="view", value=1.0),
+            Row(event_id=1, ts=t, user_id=2, event_type="click", value=2.0)]
+    kept = []
+    for name, rows in (("fwd", tied), ("rev", tied[::-1])):
+        src_dir = str(tmp_path / f"{name}_src")
+        spark.createDataFrame(rows).coalesce(1).write.parquet(src_dir)
+        src = stream_events_from_files(
+            spark, src_dir, spark.read.parquet(src_dir).schema
+        )
+        target = str(tmp_path / f"{name}_target")
+        q = run_merge_stream_versioned(
+            src, target, str(tmp_path / f"{name}_ckpt"), keys=["event_id"],
+            precedence_col="ts",
+        )
+        q.awaitTermination(120)
+        kept.append([tuple(r) for r in TxTable(spark, target).read().collect()])
+    assert len(kept[0]) == 1
+    assert kept[0] == kept[1]
+
+
 def test_run_merge_stream_accepts_file_uri_target(spark, tmp_path):
     """A file:// target URI must behave identically to a plain path:
     the sink normalizes it before its table-exists check, so batch 2

@@ -5,13 +5,15 @@ perfbench's own :class:`StreamWorkload` (same session settings, warm
 tick, generator and drains as ``perfbench/run.py``), then lists every
 job each drain submitted, read from the Spark status REST API::
 
-    t1.silver  job   11  tasks  25  batch 1: call at clientserver.py:644
+    t1.silver  job   11  tasks  25 = 8+8+8+1        batch 1: call at ...
 
 Jobs are grouped by their drain tag (``<tick>.<drain>``, e.g.
 ``t1.bronze``); a job's tasks are those of its stages that ran (skipped
 stages and stages another job ran first do not count), the rule
-perfbench's ``tasks_per_op`` uses. The last line per drain is its total.
-Jobs of the set-up and the warm tick are left out.
+perfbench's ``tasks_per_op`` uses. After the ``=`` come the task counts
+of those stages in stage order, so a change that resizes one layer (a
+scan, a shuffle, a write) shows which stage moved. The last line per
+drain is its total. Jobs of the set-up and the warm tick are left out.
 
 Usage::
 
@@ -34,6 +36,24 @@ sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 import run as perfbench_run  # noqa: E402
 
 
+def stage_split(jobs: list[dict], stages: dict[int, list[dict]]
+                ) -> dict[int, list[int]]:
+    """Per job id, the task counts of the stages it ran, in stage order:
+    a stage another job claimed first, or one the job skipped, is left
+    out (``layers.attribute``'s rule, so the counts sum to its tasks)."""
+    out: dict[int, list[int]] = {}
+    seen: set[int] = set()
+    for job in sorted(jobs, key=lambda j: j["jobId"]):
+        parts = out.setdefault(job["jobId"], [])
+        for sid in sorted(job.get("stageIds", [])):
+            if sid in seen:
+                continue
+            seen.add(sid)
+            parts += [int(a.get("numTasks", 0)) for a in stages.get(sid, [])
+                      if a.get("status") != "SKIPPED"]
+    return out
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--seed", type=int, default=1)
@@ -41,7 +61,7 @@ def main(argv=None) -> int:
     args = ap.parse_args(argv)
     perfbench_run._environment()
 
-    from layers import SparkRest, Tracer, attribute, tag_of, tagged
+    from layers import SparkRest, Tracer, tag_of, tagged
     from stream_work import StreamWorkload
 
     from real_time_video_streaming_analytics_lakehouse_spark.session import (
@@ -60,7 +80,7 @@ def main(argv=None) -> int:
         if wl.failed:
             print("FAILED:", *wl.failed, sep="\n  ")
         jobs, stages = rest.jobs_and_stages()
-        per_job = attribute(jobs, stages, lambda j: j["jobId"])
+        split = stage_split(jobs, stages)
         drains: dict[str, list[dict]] = {}
         for job in sorted(jobs, key=lambda j: j["jobId"]):
             tag = tag_of(job)
@@ -70,7 +90,8 @@ def main(argv=None) -> int:
                                                   t)):
             total = 0
             for job in drains[tag]:
-                tasks = int(per_job[job["jobId"]]["tasks"])
+                parts = split[job["jobId"]]
+                tasks = sum(parts)
                 total += tasks
                 # a streaming batch's jobs all carry the query's
                 # "id = .. runId = .. batch = N" description: keep the
@@ -79,8 +100,9 @@ def main(argv=None) -> int:
                                   job.get("description") or "")
                 desc = (f"batch {batch.group(1)}: " if batch else "") + \
                     re.sub(r"\S*/", "", job.get("name", ""))
-                print(f"{tag:10s} job {job['jobId']:4d}  tasks {tasks:3d}  "
-                      f"{desc[:90]}")
+                shape = "+".join(map(str, parts)) or "0"
+                print(f"{tag:10s} job {job['jobId']:4d}  "
+                      f"tasks {tasks:3d} = {shape:14s} {desc[:80]}")
             print(f"{tag:10s} total: {len(drains[tag])} jobs, "
                   f"{total} tasks")
     finally:
