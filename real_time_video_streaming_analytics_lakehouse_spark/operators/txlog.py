@@ -135,7 +135,7 @@ from .manifest import (
     prune_columnar,
     unescape_partition_value,
 )
-from .util import local_relation
+from .util import local_relation, sized_to_batch
 
 _LOG_DIR = "_txlog"
 _CDC_DIR = "_change_data"
@@ -1026,37 +1026,6 @@ def _union_all(frames: list[DataFrame]) -> DataFrame:
     for f_ in frames[1:]:
         out = out.unionByName(f_)
     return out
-
-
-#: Spark's largest partition count (Int.MaxValue)
-_MAX_PARTITIONS = 2**31 - 1
-
-
-def _sized_to_batch(df: DataFrame) -> DataFrame:
-    """``df`` coalesced to ``ceil(size / advisory)`` partitions, where
-    ``size`` is Catalyst's ``sizeInBytes`` estimate of ``df`` and
-    ``advisory`` is ``spark.sql.adaptive.advisoryPartitionSizeInBytes``:
-    the post-shuffle sizing adaptive execution applies to batch queries
-    and a streaming micro-batch does not get. The estimate costs no job:
-    a filled cache reports its measured bytes, a file scan its files'
-    sizes. A coalesce never raises the partition count. A count above
-    Spark's largest leaves the frame as it is: a plan Catalyst cannot
-    size reports Long.MaxValue bytes.
-
-    Use it only on a frame whose upstream is a filled cache or a plain
-    file scan: above an unmaterialized shuffle or aggregate the coalesce
-    would pull that work into fewer tasks too. One partition reports
-    ``SinglePartition``, so a grouping above it needs no exchange."""
-    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    spark = df.sparkSession
-    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
-        .byteStringAsBytes(
-            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-        )
-    n = -(-size // advisory)
-    if n > _MAX_PARTITIONS:
-        return df
-    return df.coalesce(max(1, n))
 
 
 # ---------------------------------------------------------------------------
@@ -2528,12 +2497,12 @@ class TxTable:
         the same commit, which replay and VACUUM's re-add tracking
         already understand (the RESTORE pattern).
 
-        The write is sized to the commit (:func:`_sized_to_batch`):
-        ``rows`` reads only the touched files and, for a MERGE, the
-        persisted source, so a commit of a few KB stages one data file
-        and one change file per change type in one task, not one file
-        per shuffle partition."""
-        adds, cdc = self._stage_files(_sized_to_batch(rows),
+        The write is sized to the commit
+        (:func:`~.util.sized_to_batch`): ``rows`` reads only the touched
+        files and, for a MERGE, the persisted source, so a commit of a
+        few KB stages one data file and one change file per change type
+        in one task, not one file per shuffle partition."""
+        adds, cdc = self._stage_files(sized_to_batch(rows),
                                       snap.version + 1, snap.partition_by,
                                       None, snap.properties, changes=True)
         adds = adds + (dv_adds or [])
@@ -2718,8 +2687,8 @@ class TxTable:
         and is not cached.
 
         The work after the key-set job is sized to the batch
-        (:func:`_sized_to_batch`): the probe's scan, a pure append of
-        the persisted source and the one write run in
+        (:func:`~.util.sized_to_batch`): the probe's scan, a pure append
+        of the persisted source and the one write run in
         ``ceil(estimate / spark.sql.adaptive.advisoryPartitionSizeInBytes)``
         partitions, never more than they had. The estimate is the
         filled cache's measured bytes plus the read files' sizes, so no
@@ -2728,7 +2697,8 @@ class TxTable:
         file per change type. It does not apply to the first merge into
         a table with no files, nor to :meth:`write`: their upstream is
         not materialized, and a coalesce would pull its work into fewer
-        tasks.
+        tasks. A caller that wants that work sized too sizes the source
+        itself, as the streaming MERGE sink does with each micro-batch.
         """
         src_cols = set(source.columns)
         src = _drop_duplicate_keys(source, keys)
@@ -2784,7 +2754,7 @@ class TxTable:
                 snap.files.values()
             )
             if not entries:
-                return self._commit_insert_only(_sized_to_batch(src), snap,
+                return self._commit_insert_only(sized_to_batch(src), snap,
                                                 params, schema_json,
                                                 target_schema)
             members = _key_members(self.spark, key_set, key_schema)
@@ -2799,7 +2769,7 @@ class TxTable:
         # input_file_name() is undefined both above shuffles and on the
         # multi-source plans every DV-applying read produces.
         probe = _mark(
-            _sized_to_batch(self._read_entries(
+            sized_to_batch(self._read_entries(
                 entries, target_schema, snap.partition_by, with_position=True,
             )),
             keys, members,
@@ -2827,7 +2797,7 @@ class TxTable:
                 counts[r["_dv_rel"]] = r["count"]
         touched = sorted(counts)
         if not touched:
-            return self._commit_insert_only(_sized_to_batch(src), snap,
+            return self._commit_insert_only(sized_to_batch(src), snap,
                                             params, schema_json,
                                             target_schema)
 

@@ -15,6 +15,45 @@ class ScaleGuardrailError(ValueError):
     construction path might raise."""
 
 
+#: Spark's largest partition count (Int.MaxValue)
+_MAX_PARTITIONS = 2**31 - 1
+
+
+def sized_to_batch(df: DataFrame) -> DataFrame:
+    """``df`` coalesced to ``ceil(size / advisory)`` partitions, where
+    ``size`` is Catalyst's ``sizeInBytes`` estimate of ``df`` and
+    ``advisory`` is ``spark.sql.adaptive.advisoryPartitionSizeInBytes``:
+    the post-shuffle sizing adaptive execution applies to batch queries
+    and a streaming micro-batch does not get. The estimate costs no job:
+    a filled cache reports its measured bytes, a file scan its files'
+    compressed sizes. A coalesce never raises the partition count. A
+    count above Spark's largest leaves the frame as it is: a plan
+    Catalyst cannot size (an RDD, a Python data source, Kafka) reports
+    Long.MaxValue bytes.
+
+    The coalesce is narrow, so it pulls the work below it, up to the
+    last exchange, into the sized tasks. On a filled cache or a plain
+    file scan that is only the read. On a streaming micro-batch frame
+    (the ``LogicalRDD`` ``foreachBatch`` hands over, which keeps its
+    source's stats) it is the point: the batch's stateful stage (a
+    dedup or window aggregate over ``spark.sql.shuffle.partitions``
+    state-store partitions) runs in the sized tasks too, each task
+    opening the state stores of the partitions it reads. Anywhere else,
+    an unmaterialized shuffle or aggregate below ``df`` would lose its
+    parallelism. One partition reports ``SinglePartition``, so a
+    grouping or window above it needs no exchange."""
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    spark = df.sparkSession
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
+        .byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+    n = -(-size // advisory)
+    if n > _MAX_PARTITIONS:
+        return df
+    return df.coalesce(max(1, n))
+
+
 def require_local_dir(path: str) -> str:
     """Validate that ``path`` is a local-filesystem directory path and
     return it without a ``file://`` prefix.

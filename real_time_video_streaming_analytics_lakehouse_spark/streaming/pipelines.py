@@ -366,16 +366,22 @@ def run_merge_stream_versioned(
 
     Partition counts: Structured Streaming turns adaptive execution off
     inside a micro-batch, so every shuffle of the batch's own queries
-    runs at ``spark.sql.shuffle.partitions``. ``TxTable.merge`` sizes
-    the work after its key-set job to the batch instead: the probe, a
-    pure append and the one write run in one partition per
-    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` of estimated
-    input, so a small batch probes in one task and commits one data file
-    (plus one change file per change type), and the next stream reading
-    the table scans one file per batch, not one per shuffle partition.
-    The sizing does not reach the keep-latest dedup below, which runs
-    before any size is known, nor the first MERGE into a table with no
-    files, which writes one file per partition of its source.
+    runs at ``spark.sql.shuffle.partitions``. The sink sizes the batch
+    to its input instead (:func:`~..operators.util.sized_to_batch`,
+    one partition per ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+    of Catalyst's estimate) before its keep-latest: the coalesce pulls
+    the upstream's stateful stage into the sized tasks, and with one
+    partition the keep-latest needs no exchange. For a batch of a few
+    hundred KB from a file source, each job runs one task after its
+    scan: the stateful stage, keep-latest and key set share one, the
+    write has one, and so does a no-data batch. The commit stages one
+    data file (plus one change file per change type), also when it is
+    the first MERGE into a new table. ``TxTable.merge`` sizes the probe
+    and the write again from its filled cache. An upstream Catalyst cannot size (the ``txtable`` source, a
+    Python data source with no statistics, or Kafka) is left as it is:
+    its stateful stage and keep-latest run
+    ``spark.sql.shuffle.partitions`` tasks, and only the work after the
+    key-set job is sized.
 
     Keep-latest: rows of one key keep the one with the greatest
     ``precedence_col``; a tie is broken by the batch's other orderable
@@ -401,7 +407,7 @@ def run_merge_stream_versioned(
     """
     from ..operators.dedup import dedup_keep_latest
     from ..operators.txlog import TxTable
-    from ..operators.util import require_local_dir
+    from ..operators.util import require_local_dir, sized_to_batch
 
     table_path = require_local_dir(table_path)
     app = app_id or f"merge_stream:{checkpoint_path}"
@@ -416,7 +422,8 @@ def run_merge_stream_versioned(
             if f.name not in keys and f.name != precedence_col
             and _orderable(f.dataType)
         ]
-        batch = dedup_keep_latest(batch_df, keys, precedence_col, tiebreak)
+        batch = dedup_keep_latest(sized_to_batch(batch_df), keys,
+                                  precedence_col, tiebreak)
         params = {"txnAppId": app, "txnVersion": batch_id}
         if not TxTable.exists(spark, table_path):
             try:

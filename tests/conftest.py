@@ -56,18 +56,28 @@ def count_jobs(spark, fn):
     return _marker_job(spark) - before - 1, out
 
 
-def job_tasks(spark, fn):
-    """``(tasks, fn())``: per job ``fn`` runs, in job order, the tasks of
-    the stages that job ran (a skipped stage counts none), read from the
-    status tracker once the listener bus has caught up."""
+def job_stage_tasks(spark, fn):
+    """``(stages, fn())``: per job ``fn`` runs, in job order, the task
+    counts of the stages that job ran, in stage order (a skipped stage
+    is left out), read from the status tracker once the listener bus
+    has caught up."""
     sc = spark.sparkContext
     before = _marker_job(spark)
     out = fn()
     after = _marker_job(spark)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
-    tasks = []
+    stages = []
     for job in range(before + 1, after):
-        stages = map(tracker.getStageInfo, tracker.getJobInfo(job).stageIds)
-        tasks.append(sum(s.numCompletedTasks for s in stages if s))
-    return tasks, out
+        infos = map(tracker.getStageInfo,
+                    sorted(tracker.getJobInfo(job).stageIds))
+        stages.append([s.numCompletedTasks for s in infos
+                       if s and s.numCompletedTasks])
+    return stages, out
+
+
+def job_tasks(spark, fn):
+    """``(tasks, fn())``: per job ``fn`` runs, in job order, the tasks of
+    the stages that job ran (:func:`job_stage_tasks`, summed)."""
+    stages, out = job_stage_tasks(spark, fn)
+    return [sum(s) for s in stages], out

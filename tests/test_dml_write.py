@@ -37,6 +37,9 @@ from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import 
     _LITERAL_KEYS_MAX,
     TxTable,
 )
+from real_time_video_streaming_analytics_lakehouse_spark.operators.util import (
+    sized_to_batch,
+)
 
 from .conftest import count_jobs, job_tasks
 from .test_txlog import _merge_matches_upsert
@@ -259,7 +262,7 @@ def test_unsized_plan_is_left_as_it_is(spark):
     """A plan Catalyst cannot size (an RDD's, Long.MaxValue bytes) is not
     coalesced."""
     df = spark.sparkContext.parallelize([(1,), (2,)], 3).toDF(["k"])
-    assert txlog._sized_to_batch(df) is df
+    assert sized_to_batch(df) is df
 
 
 def test_write_keeps_the_frame_partitioning(spark, tmp_path):
@@ -366,8 +369,11 @@ def test_legacy_flat_change_file_still_reads(spark, tmp_path):
 # -- crash after staging, streaming MERGE recovery ----------------------------
 
 
-def _land(spark, src_dir: str, batches) -> None:
-    for i, rows in enumerate(batches):
+def _land(spark, src_dir: str, batches, first: int = 0) -> None:
+    """One parquet file per batch in ``src_dir``, with modification
+    times that order the files (a file source reads them in that
+    order); ``first`` is the first batch's place in that order."""
+    for i, rows in enumerate(batches, first):
         before = set(glob.glob(f"{src_dir}/*.parquet"))
         spark.createDataFrame(rows).coalesce(1).write.mode("append") \
             .parquet(src_dir)
@@ -375,8 +381,13 @@ def _land(spark, src_dir: str, batches) -> None:
             os.utime(f, (1700000000 + i * 100, 1700000000 + i * 100))
 
 
-def _run_stream(spark, src_dir: str, target: str, ckpt: str):
+def _run_stream(spark, src_dir: str, target: str, ckpt: str,
+                dedup: bool = False):
+    """Drain the files of ``src_dir`` into ``target``, one file per
+    micro-batch; ``dedup`` puts ``dedup_stream_within_watermark`` (a
+    stateful stage) in front of the sink."""
     from real_time_video_streaming_analytics_lakehouse_spark.streaming import (
+        dedup_stream_within_watermark,
         run_merge_stream_versioned,
         stream_events_from_files,
     )
@@ -385,6 +396,8 @@ def _run_stream(spark, src_dir: str, target: str, ckpt: str):
         spark, src_dir, spark.read.parquet(src_dir).schema,
         max_files_per_trigger=1,
     )
+    if dedup:
+        src = dedup_stream_within_watermark(src)
     q = run_merge_stream_versioned(src, target, ckpt, keys=["event_id"],
                                    precedence_col="ts", app_id="crash")
     q.awaitTermination(120)
@@ -402,6 +415,36 @@ def _files_on_disk(root: str) -> set[str]:
     return {os.path.relpath(p, root)
             for p in glob.glob(f"{root}/**/*.parquet", recursive=True)
             if not os.path.relpath(p, root).startswith("_txlog")}
+
+
+def _fail_publish_once(monkeypatch, fail_version: int) -> list[int]:
+    """Make the commit of ``fail_version`` fail once, after its files
+    are staged; returns the list the failed version is appended to."""
+    real = txlog._publish_commit
+    failed = []
+
+    def publish_once_failing(root, version, action):
+        if version == fail_version and not failed:  # after staging
+            failed.append(version)
+            raise RuntimeError("injected failure before the log commit")
+        return real(root, version, action)
+
+    monkeypatch.setattr(txlog, "_publish_commit", publish_once_failing)
+    return failed
+
+
+def _orphans(tx: TxTable) -> set[str]:
+    """Files under the table root that no commit logs."""
+    logged = set()
+    for v in txlog._list_versions(tx.root):
+        c = txlog._read_commit(tx.root, v)
+        logged |= {a["path"] for a in c.get("add", [])} | set(c.get("cdc", []))
+    return _files_on_disk(tx.root) - logged
+
+
+def _txn_versions(tx: TxTable) -> list[int]:
+    return sorted(json.loads(r.operationParameters)["txnVersion"]
+                  for r in tx.history().collect() if r.operation == "MERGE")
 
 
 @pytest.mark.parametrize("fail_version, orphan_kinds", [
@@ -433,16 +476,7 @@ def test_streaming_merge_recovers_from_failed_commit(spark, tmp_path,
     ref = TxTable(spark, str(tmp_path / "ref"))
     _run_stream(spark, src_dir, ref.root, str(tmp_path / "ref_ckpt"))
 
-    real = txlog._publish_commit
-    failed = []
-
-    def publish_once_failing(root, version, action):
-        if version == fail_version and not failed:  # after staging
-            failed.append(version)
-            raise RuntimeError("injected failure before the log commit")
-        return real(root, version, action)
-
-    monkeypatch.setattr(txlog, "_publish_commit", publish_once_failing)
+    failed = _fail_publish_once(monkeypatch, fail_version)
     target = str(tmp_path / "target")
     ckpt = str(tmp_path / "ckpt")
     with pytest.raises(Exception, match="injected failure"):
@@ -454,16 +488,10 @@ def test_streaming_merge_recovers_from_failed_commit(spark, tmp_path,
     cols = ["event_id", "ts", "user_id", "event_type", "value"]
     assert sorted(tuple(r) for r in tx.read().select(*cols).collect()) == \
         sorted(tuple(r) for r in ref.read().select(*cols).collect())
-    merges = [r for r in tx.history().collect() if r.operation == "MERGE"]
-    assert sorted(json.loads(r.operationParameters)["txnVersion"]
-                  for r in merges) == [0, 1, 2, 3]
+    assert _txn_versions(tx) == [0, 1, 2, 3]
     assert _feed(tx) == _feed(ref)
 
-    logged = set()
-    for v in txlog._list_versions(tx.root):
-        c = txlog._read_commit(tx.root, v)
-        logged |= {a["path"] for a in c.get("add", [])} | set(c.get("cdc", []))
-    orphans = _files_on_disk(tx.root) - logged
+    orphans = _orphans(tx)
     assert {"change" if p.startswith("_change_data") else "data"
             for p in orphans} == orphan_kinds
     collected = set(tx.vacuum(retention_hours=0))
@@ -471,3 +499,67 @@ def test_streaming_merge_recovers_from_failed_commit(spark, tmp_path,
     assert _files_on_disk(tx.root) == set(tx.snapshot().files)
     assert sorted(tuple(r) for r in tx.read().select(*cols).collect()) == \
         sorted(tuple(r) for r in ref.read().select(*cols).collect())
+
+
+def test_streaming_merge_after_stateful_dedup_recovers_from_failed_commit(
+    spark, tmp_path, monkeypatch
+):
+    """The commit of a batch that comes out of
+    ``dedup_stream_within_watermark`` fails after its files are staged.
+    The restart replays the batch, its state-store stage included (the
+    sink sizes it into the batch's tasks), and rebuilds the table a run
+    with no fault builds. A redelivery that lands after the restart is
+    still dropped by the restored dedup state."""
+    t0 = dt.datetime(2024, 1, 1, 12)
+    batches = [
+        [Row(event_id=i, ts=t0, user_id=i, event_type="view", value=1.0)
+         for i in range(4)],
+        # id 1 redelivered, restamped: dropped; id 7 new
+        [Row(event_id=1, ts=t0 + dt.timedelta(minutes=1), user_id=1,
+             event_type="click", value=2.0),
+         Row(event_id=7, ts=t0, user_id=7, event_type="view", value=3.0)],
+        [Row(event_id=8, ts=t0 + dt.timedelta(minutes=2), user_id=8,
+             event_type="view", value=4.0)],
+    ]
+    later = [
+        [Row(event_id=7, ts=t0 + dt.timedelta(minutes=5), user_id=7,
+             event_type="buy", value=9.0),
+         Row(event_id=9, ts=t0 + dt.timedelta(minutes=3), user_id=9,
+             event_type="view", value=5.0)],
+    ]
+    src_dir = str(tmp_path / "src")
+    ref = TxTable(spark, str(tmp_path / "ref"))
+    target, ckpt = str(tmp_path / "target"), str(tmp_path / "ckpt")
+
+    def run(root, checkpoint):
+        _run_stream(spark, src_dir, root, checkpoint, dedup=True)
+
+    _land(spark, src_dir, batches)
+    run(ref.root, str(tmp_path / "ref_ckpt"))
+    failed = _fail_publish_once(monkeypatch, 2)  # batch 1's commit
+    with pytest.raises(Exception, match="injected failure"):
+        run(target, ckpt)
+    assert failed == [2]
+    run(target, ckpt)
+    _land(spark, src_dir, later, first=len(batches))
+    run(ref.root, str(tmp_path / "ref_ckpt"))
+    run(target, ckpt)
+
+    tx = TxTable(spark, target)
+    got = sorted(tuple(r) for r in tx.read().collect())
+    assert got == sorted(tuple(r) for r in ref.read().collect())
+    assert sorted(r[0] for r in got) == [0, 1, 2, 3, 7, 8, 9]
+    # both redeliveries dropped: ids 1 and 7 keep their first arrival
+    assert {r.event_id: r.event_type for r in tx.read().collect()
+            if r.event_id in (1, 7)} == {1: "view", 7: "view"}
+    versions = _txn_versions(tx)
+    assert len(versions) == len(set(versions)) == 4
+    assert versions == _txn_versions(ref)
+    assert _feed(tx) == _feed(ref)
+    assert len(_feed(tx)) == len(set(_feed(tx)))
+
+    orphans = _orphans(tx)
+    assert orphans and not any(p.startswith("_change_data") for p in orphans)
+    assert orphans <= set(tx.vacuum(retention_hours=0))
+    assert _files_on_disk(tx.root) == set(tx.snapshot().files)
+    assert sorted(tuple(r) for r in tx.read().collect()) == got

@@ -350,6 +350,129 @@ def test_run_merge_stream_versioned_no_data_batch_commits_nothing(
     assert sorted(r["event_id"] for r in tx.read().collect()) == [1, 2]
 
 
+_ROCKSDB = ("org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider")
+
+
+def _dedup_sink_drains(spark, root, provider=None):
+    """Two drains of a file source -> ``dedup_stream_within_watermark``
+    -> ``run_merge_stream_versioned`` into ``root/bronze``, each landing
+    one file first. The second file redelivers id 1 and carries an event
+    two hours later, so its data batch is followed by a no-data batch.
+    ``provider`` is the state store provider class for the run (set for
+    it, then restored). Returns the second drain's jobs
+    (:func:`~tests.conftest.job_stage_tasks`) and the table."""
+    from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import TxTable
+    from real_time_video_streaming_analytics_lakehouse_spark.streaming import (
+        dedup_stream_within_watermark,
+    )
+
+    from .conftest import job_stage_tasks
+    from .test_dml_write import _land
+
+    t = dt.datetime(2024, 1, 1, 12, 0, 0)
+    files = [
+        [Row(event_id=i, ts=t, user_id=i, event_type="view", value=float(i))
+         for i in range(8)],
+        [Row(event_id=1, ts=t + dt.timedelta(minutes=2), user_id=1,
+             event_type="click", value=9.0),
+         Row(event_id=8, ts=t + dt.timedelta(hours=2), user_id=8,
+             event_type="view", value=8.0)],
+    ]
+    src_dir, target = str(root / "src"), str(root / "bronze")
+    key = "spark.sql.streaming.stateStore.providerClass"
+    old = spark.conf.get(key)
+    if provider:
+        spark.conf.set(key, provider)
+    try:
+        def drain():
+            src = stream_events_from_files(spark, src_dir, schema)
+            run_merge_stream_versioned(
+                dedup_stream_within_watermark(src), target,
+                str(root / "ckpt"), keys=["event_id"], precedence_col="ts",
+            ).awaitTermination(120)
+
+        _land(spark, src_dir, files[:1])
+        schema = spark.read.parquet(src_dir).schema
+        drain()
+        _land(spark, src_dir, files[1:], first=1)
+        stages, _ = job_stage_tasks(spark, drain)
+    finally:
+        spark.conf.set(key, old)
+    return stages, TxTable(spark, target)
+
+
+@pytest.fixture(scope="module")
+def dedup_sink(spark, tmp_path_factory):
+    return _dedup_sink_drains(spark, tmp_path_factory.mktemp("dedup_sink"))
+
+
+def _rows(tx) -> list[tuple]:
+    return sorted(tuple(r) for r in tx.read().collect())
+
+
+def test_run_merge_stream_sizes_a_micro_batch_to_its_input(spark, dedup_sink,
+                                                           tmp_path):
+    """The sink sizes each micro-batch from Catalyst's estimate of its
+    input before the keep-latest: a batch of a few KB from a file source
+    runs its stateful dedup, the keep-latest and the key set in one
+    task after the scan, its no-data batch in one task, and each commit
+    stages one data file. An upstream Catalyst cannot size (the
+    ``txtable`` source) keeps its ``spark.sql.shuffle.partitions``-task
+    stages."""
+    from real_time_video_streaming_analytics_lakehouse_spark.operators import txlog
+    from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import TxTable
+    from real_time_video_streaming_analytics_lakehouse_spark.sources.txstream import (
+        TxTableDataSource,
+    )
+
+    from .conftest import job_stage_tasks
+
+    stages, bronze = dedup_sink
+    # key set (scan, then one task), pure-append write, no-data batch
+    assert len(stages) == 3
+    assert len(stages[0]) == 2 and stages[0][1] == 1
+    assert stages[1:] == [[1], [1]]
+    merges = [r.version for r in bronze.history().collect()
+              if r.operation == "MERGE"]
+    assert len(merges) == 2
+    for v in merges:
+        assert len(txlog._read_commit(bronze.root, v)["add"]) == 1
+    assert 9.0 not in {r.value for r in bronze.read().collect()}
+
+    spark.dataSource.register(TxTableDataSource)
+    silver = str(tmp_path / "silver")
+
+    def drain():
+        src = (spark.readStream.format("txtable")
+               .option("path", bronze.root).load())
+        run_merge_stream_versioned(
+            user_activity_stream(src), silver, str(tmp_path / "ckpt"),
+            keys=["window_start", "event_type"], precedence_col="events_cnt",
+            output_mode="update",
+        ).awaitTermination(120)
+
+    stages, _ = job_stage_tasks(spark, drain)
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # one job, the first MERGE: the scan, then the stateful aggregate
+    # and the keep-latest shuffle, unsized
+    assert [s[1:] for s in stages] == [[n, n]]
+    assert TxTable(spark, silver).read().count() > 0
+
+
+def test_run_merge_stream_rocksdb_state_store_builds_the_same_table(
+    spark, dedup_sink, tmp_path
+):
+    """The sized micro-batch opens every state store partition in one
+    task. Under the RocksDB state store provider the sink runs the same
+    jobs and builds the table the default provider builds."""
+    stages, tx = _dedup_sink_drains(spark, tmp_path, provider=_ROCKSDB)
+    with open(tmp_path / "ckpt" / "offsets" / "0") as f:
+        assert _ROCKSDB in f.read()  # the checkpoint records the provider
+    assert stages == dedup_sink[0]
+    assert _rows(tx) == _rows(dedup_sink[1])
+
+
 def test_late_data_dropped_after_watermark(spark, tmp_path):
     """Rows older than the current watermark are dropped (T1/T3).
 

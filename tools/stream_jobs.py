@@ -14,6 +14,10 @@ perfbench's ``tasks_per_op`` uses. After the ``=`` come the task counts
 of those stages in stage order, so a change that resizes one layer (a
 scan, a shuffle, a write) shows which stage moved. The last line per
 drain is its total. Jobs of the set-up and the warm tick are left out.
+Then it runs perfbench's output checks on the tables (bronze against the
+generated events, silver against a batch recomputation, no row dropped
+by the watermark); if a tick or a check failed, it prints the failures
+and exits with status 1.
 
 Usage::
 
@@ -77,8 +81,6 @@ def main(argv=None) -> int:
             os.path.join(perfbench_run.WORK, "stream_jobs"), Tracer(False))
         wl.prepare(spark, args.seed)
         wl.run(spark, args.seconds)
-        if wl.failed:
-            print("FAILED:", *wl.failed, sep="\n  ")
         jobs, stages = rest.jobs_and_stages()
         split = stage_split(jobs, stages)
         drains: dict[str, list[dict]] = {}
@@ -105,9 +107,14 @@ def main(argv=None) -> int:
                       f"tasks {tasks:3d} = {shape:14s} {desc[:80]}")
             print(f"{tag:10s} total: {len(drains[tag])} jobs, "
                   f"{total} tasks")
+        # the output checks run after the listing: their jobs are no
+        # drain's
+        wl.report(spark, rest)
+        if wl.failed:
+            print("FAILED:", *wl.failed, sep="\n  ")
     finally:
         perfbench_run._stop(spark)
-    return 0
+    return 1 if wl.failed else 0
 
 
 if __name__ == "__main__":
