@@ -19,17 +19,39 @@ class ScaleGuardrailError(ValueError):
 _MAX_PARTITIONS = 2**31 - 1
 
 
-def sized_to_batch(df: DataFrame) -> DataFrame:
-    """``df`` coalesced to ``ceil(size / advisory)`` partitions, where
-    ``size`` is Catalyst's ``sizeInBytes`` estimate of ``df`` and
-    ``advisory`` is ``spark.sql.adaptive.advisoryPartitionSizeInBytes``:
-    the post-shuffle sizing adaptive execution applies to batch queries
-    and a streaming micro-batch does not get. The estimate costs no job:
-    a filled cache reports its measured bytes, a file scan its files'
-    compressed sizes. A coalesce never raises the partition count. A
-    count above Spark's largest leaves the frame as it is: a plan
+def _advisory_bytes(spark) -> int:
+    return spark._jvm.org.apache.spark.network.util.JavaUtils \
+        .byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+
+
+def catalyst_bytes(df: DataFrame) -> int | None:
+    """Catalyst's ``sizeInBytes`` estimate of ``df``, or None when it
+    has none. The estimate costs no job: a filled cache reports its
+    measured bytes, a file scan its files' compressed sizes. A plan
     Catalyst cannot size (an RDD, a Python data source, Kafka) reports
-    Long.MaxValue bytes.
+    Long.MaxValue bytes, which the operators above it scale by their
+    row widths; an estimate that needs more than Spark's largest
+    partition count of the advisory size is read as none."""
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if -(-size // _advisory_bytes(df.sparkSession)) > _MAX_PARTITIONS:
+        return None
+    return size
+
+
+def sized_to_batch(df: DataFrame, fallback_bytes: int | None = None
+                   ) -> DataFrame:
+    """``df`` coalesced to ``ceil(size / advisory)`` partitions, where
+    ``size`` is :func:`catalyst_bytes` of ``df`` and ``advisory`` is
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``: the
+    post-shuffle sizing adaptive execution applies to batch queries and
+    a streaming micro-batch does not get. When Catalyst cannot size
+    ``df``, ``size`` is ``fallback_bytes``, an estimate the caller
+    knows without a job (the streaming MERGE sink passes the bytes its
+    ``txtable`` source recorded in the batch's offsets). With neither,
+    the frame is left as it is. A coalesce never raises the partition
+    count.
 
     The coalesce is narrow, so it pulls the work below it, up to the
     last exchange, into the sized tasks. On a filled cache or a plain
@@ -42,16 +64,13 @@ def sized_to_batch(df: DataFrame) -> DataFrame:
     an unmaterialized shuffle or aggregate below ``df`` would lose its
     parallelism. One partition reports ``SinglePartition``, so a
     grouping or window above it needs no exchange."""
-    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    spark = df.sparkSession
-    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
-        .byteStringAsBytes(
-            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-        )
-    n = -(-size // advisory)
-    if n > _MAX_PARTITIONS:
+    size = catalyst_bytes(df)
+    if size is None:
+        size = fallback_bytes
+    if size is None:
         return df
-    return df.coalesce(max(1, n))
+    n = -(-size // _advisory_bytes(df.sparkSession))
+    return df if n > _MAX_PARTITIONS else df.coalesce(max(1, n))
 
 
 def require_local_dir(path: str) -> str:

@@ -9,10 +9,27 @@ Spark 4's Python Data Source API::
 
 Semantics (matching Delta's streaming source for append-style tables):
 
-* Offsets are LOG VERSIONS: offset ``{"version": N}`` means "commits
-  ``<= N`` have been emitted". Each micro-batch emits exactly the rows
-  of files ADDED by commits in ``(start, end]`` — incremental tailing
-  of the table, not a directory listing.
+* Offsets are LOG VERSIONS: offset ``{"version": N, "bytes": B,
+  "bytesFrom": F}`` means "commits ``<= N`` have been emitted". Each
+  micro-batch emits exactly the rows of files ADDED by commits in
+  ``(start, end]`` — incremental tailing of the table, not a directory
+  listing. Planning reads ``version`` only, so an offset without the
+  other two fields (a checkpoint written before they existed) still
+  plans.
+* ``bytes`` is a running total of the estimated bytes that the
+  data-changing commits from version ``F`` to ``N`` added: each add
+  action's ``numRecords`` times the pinned schema's row width
+  (Catalyst's rule, 8 bytes plus each field's default size). So
+  ``end − start`` of a micro-batch whose two offsets share ``F`` is
+  its size, known before the batch runs: the streaming MERGE sink
+  sizes the batch by it (:func:`offset_log_bytes`), because a Python
+  data source gives Catalyst no statistics. ``F`` is the first commit
+  the log still holds (never below ``startingVersion``); log
+  retention (``cleanup_log``) moves it, and a batch whose offsets
+  differ on it is left unsized. The walk reads commit JSON only: no
+  Spark job, no stat of a data file. An add without ``numRecords``
+  leaves the offset without ``bytes`` and ``bytesFrom``. The estimate
+  errs large (a string counts 20 bytes), the safe side for sizing.
 * ``dataChange=false`` commits (OPTIMIZE) are skipped entirely: their
   adds are rewrites of already-emitted rows.
 * A data-changing commit that REMOVES files (overwrite / DELETE /
@@ -45,7 +62,33 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    ByteType,
+    CalendarIntervalType,
+    CharType,
+    DataType,
+    DateType,
+    DayTimeIntervalType,
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    MapType,
+    NullType,
+    ShortType,
+    StringType,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+    UserDefinedType,
+    VarcharType,
+    VariantType,
+    YearMonthIntervalType,
+)
 
 from ..operators.txlog import (
     _WIDENS_TO,
@@ -56,6 +99,111 @@ from ..operators.txlog import (
 )
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+#: Catalyst's ``DataType.defaultSize`` of the types whose size does not
+#: depend on a parameter
+_DEFAULT_SIZE = {
+    NullType: 1, BooleanType: 1, ByteType: 1, ShortType: 2,
+    IntegerType: 4, LongType: 8, FloatType: 4, DoubleType: 8,
+    DateType: 4, TimestampType: 8, TimestampNTZType: 8, StringType: 20,
+    BinaryType: 100, CalendarIntervalType: 16, DayTimeIntervalType: 8,
+    YearMonthIntervalType: 4, VariantType: 2048,
+}
+
+
+def _default_size(t: DataType) -> int | None:
+    """Catalyst's ``defaultSize`` of ``t`` (one element per array or
+    map), or None for a type this table does not know."""
+    if isinstance(t, (CharType, VarcharType)):
+        return t.length
+    if isinstance(t, DecimalType):
+        return 8 if t.precision <= 18 else 16
+    if isinstance(t, UserDefinedType):
+        return _default_size(t.sqlType())
+    if isinstance(t, ArrayType):
+        parts = [t.elementType]
+    elif isinstance(t, MapType):
+        parts = [t.keyType, t.valueType]
+    elif isinstance(t, StructType):
+        parts = [f.dataType for f in t.fields]
+    else:
+        return _DEFAULT_SIZE.get(type(t))
+    sizes = [_default_size(p) for p in parts]
+    return None if None in sizes else sum(sizes)
+
+
+def row_width(schema: StructType) -> int | None:
+    """Estimated bytes of one row of ``schema``: Catalyst's
+    ``EstimationUtils.getSizePerRow`` without column statistics (8
+    bytes of row overhead plus each field's default size)."""
+    size = _default_size(schema)
+    return None if size is None else 8 + size
+
+
+def _size_fields(entry: str) -> list[tuple[int, int] | None]:
+    """Per source line of an offset-log entry, its ``(bytes,
+    bytesFrom)``, or None for a line without them: a file source's
+    ``{"logOffset": N}``, Kafka's partition map, an offset written
+    before the fields existed, or ``-`` for a source with no offset."""
+    out = []
+    for line in entry.splitlines()[2:]:  # after "v1" and the metadata
+        try:
+            o = json.loads(line)
+        except ValueError:
+            o = None
+        fields = (o.get("bytes"), o.get("bytesFrom")) \
+            if isinstance(o, dict) else ()
+        out.append(fields if fields and all(type(x) is int for x in fields)
+                   else None)
+    return out
+
+
+def offset_range_bytes(start: str | None, end: str) -> int | None:
+    """Estimated bytes of one micro-batch, from two entries of its
+    query's offset log (the text of ``<checkpoint>/offsets/<id>``):
+    ``start`` is the previous batch's entry, None for batch 0, which
+    starts at the initial offset's 0, and ``end`` is the batch's own.
+    The result is the sum over source lines of ``end.bytes -
+    start.bytes``. It is None, so the batch stays unsized, unless every
+    source line of both entries carries ``bytes`` and ``bytesFrom`` and
+    each pair agrees on ``bytesFrom``: after log retention moved it,
+    the difference would mean nothing, and an under-estimate would put
+    a large batch in one task."""
+    ends = _size_fields(end)
+    starts = ([f and (0, f[1]) for f in ends] if start is None
+              else _size_fields(start))
+    if not ends or len(starts) != len(ends) or None in ends + starts:
+        return None
+    total = 0
+    for (b0, f0), (b1, f1) in zip(starts, ends):
+        if f0 != f1 or b1 < b0:
+            return None
+        total += b1 - b0
+    return total
+
+
+def offset_log_bytes(checkpoint_path: str, batch_id: int) -> int | None:
+    """:func:`offset_range_bytes` of micro-batch ``batch_id``, read from
+    the query's offset log under ``checkpoint_path`` on the driver.
+    Structured Streaming writes a batch's entry before it runs the
+    batch, so the entry is there when ``foreachBatch`` runs, and a
+    replay reads the same entries. None when an entry cannot be read
+    (a checkpoint off the local file system)."""
+    path = checkpoint_path
+    if path.startswith("file:"):
+        path = "/" + path[len("file:"):].lstrip("/")
+    elif "://" in path:
+        return None
+
+    def entry(i: int) -> str:
+        with open(os.path.join(path, "offsets", str(i))) as f:
+            return f.read()
+
+    try:
+        return offset_range_bytes(
+            entry(batch_id - 1) if batch_id > 0 else None, entry(batch_id))
+    except OSError:
+        return None
 
 
 class SchemaChangedError(RuntimeError):
@@ -116,6 +264,7 @@ class TxTableStreamReader(DataSourceStreamReader):
         self.ignore_changes = (
             str(opts.get("ignorechanges", "false")).lower() == "true"
         )
+        self.row_width = row_width(schema)
 
     # -- offsets -----------------------------------------------------------
 
@@ -127,7 +276,10 @@ class TxTableStreamReader(DataSourceStreamReader):
         # offset is -1 and commit 0's adds are delivered, which is what
         # makes bootstrap-adopted tables (ALL pre-existing files land
         # in commit 0) streamable at all.
-        return {"version": self.starting_version - 1}
+        offset = {"version": self.starting_version - 1}
+        if self.row_width is not None:
+            offset.update(bytes=0, bytesFrom=self.starting_version)
+        return offset
 
     def latestOffset(self) -> dict:
         # Clamped at the initial offset: with startingVersion above the
@@ -137,7 +289,27 @@ class TxTableStreamReader(DataSourceStreamReader):
         # that case plan clean empty ranges until the table catches up.
         versions = _list_versions(self.path)
         latest = versions[-1] if versions else self.starting_version - 1
-        return {"version": max(latest, self.starting_version - 1)}
+        hi = max(latest, self.starting_version - 1)
+        return {"version": hi, **self._added_bytes(versions, hi)}
+
+    def _added_bytes(self, versions: list[int], hi: int) -> dict:
+        """``{"bytes", "bytesFrom"}`` of an offset at version ``hi``
+        (module docstring), or ``{}`` when a commit's size is unknown."""
+        if self.row_width is None:
+            return {}
+        base = max(versions[0] if versions else 0, self.starting_version)
+        total = 0
+        for v in versions:
+            if not (base <= v <= hi):
+                continue
+            c = _read_commit(self.path, v)
+            if c.get("dataChange") is False:
+                continue  # OPTIMIZE: partitions() emits nothing
+            for ad in c.get("add", []):
+                if ad.get("numRecords") is None:
+                    return {}
+                total += ad["numRecords"] * self.row_width
+        return {"bytes": total, "bytesFrom": base}
 
     # -- planning (driver-side, metadata only) -----------------------------
 

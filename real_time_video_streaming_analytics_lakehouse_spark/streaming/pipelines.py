@@ -317,6 +317,24 @@ def _orderable(dtype) -> bool:
                                   CalendarIntervalType))
 
 
+def micro_batch_bytes(batch_df: DataFrame, checkpoint_path: str,
+                      batch_id: int) -> tuple[int | None, str]:
+    """The bytes :func:`run_merge_stream_versioned` sizes micro-batch
+    ``batch_id`` by, and where they come from: Catalyst's estimate
+    (``"catalyst"``); when Catalyst has none, the batch's two entries of
+    the query's offset log (``"offset log"``,
+    :func:`~..sources.txstream.offset_log_bytes`); or neither
+    (``(None, "unsized")``). A driver-side read, no Spark job."""
+    from ..operators.util import catalyst_bytes
+    from ..sources.txstream import offset_log_bytes
+
+    size = catalyst_bytes(batch_df)
+    if size is not None:
+        return size, "catalyst"
+    size = offset_log_bytes(checkpoint_path, batch_id)
+    return size, "unsized" if size is None else "offset log"
+
+
 def run_merge_stream_versioned(
     result: DataFrame,
     table_path: str,
@@ -368,20 +386,25 @@ def run_merge_stream_versioned(
     inside a micro-batch, so every shuffle of the batch's own queries
     runs at ``spark.sql.shuffle.partitions``. The sink sizes the batch
     to its input instead (:func:`~..operators.util.sized_to_batch`,
-    one partition per ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
-    of Catalyst's estimate) before its keep-latest: the coalesce pulls
-    the upstream's stateful stage into the sized tasks, and with one
-    partition the keep-latest needs no exchange. For a batch of a few
-    hundred KB from a file source, each job runs one task after its
+    one partition per ``spark.sql.adaptive.advisoryPartitionSizeInBytes``)
+    before its keep-latest: the coalesce pulls the upstream's stateful
+    stage into the sized tasks, and with one partition the keep-latest
+    needs no exchange. The size is Catalyst's estimate of the batch (a
+    file source's compressed bytes). An upstream Catalyst cannot size
+    falls back to the batch's two entries of the checkpoint's offset
+    log (:func:`micro_batch_bytes`): the ``txtable`` source records
+    the estimated bytes its commits added in each offset, and Spark
+    writes the entry before it runs the batch, so a replay sizes the
+    batch the same way. Kafka, an offset log without those fields, or
+    a mix of sources leaves the batch as it is: its stateful stage and
+    keep-latest then run ``spark.sql.shuffle.partitions`` tasks.
+
+    For a batch of a few hundred KB, each job runs one task after its
     scan: the stateful stage, keep-latest and key set share one, the
     write has one, and so does a no-data batch. The commit stages one
     data file (plus one change file per change type), also when it is
     the first MERGE into a new table. ``TxTable.merge`` sizes the probe
-    and the write again from its filled cache. An upstream Catalyst cannot size (the ``txtable`` source, a
-    Python data source with no statistics, or Kafka) is left as it is:
-    its stateful stage and keep-latest run
-    ``spark.sql.shuffle.partitions`` tasks, and only the work after the
-    key-set job is sized.
+    and the write again from its filled cache.
 
     Keep-latest: rows of one key keep the one with the greatest
     ``precedence_col``; a tie is broken by the batch's other orderable
@@ -402,8 +425,9 @@ def run_merge_stream_versioned(
     one only when ``table_path`` holds nothing. For a partitioned
     target, create it first with ``TxTable.create(..., partition_by=
     [...])``: a batch rewrites only the files holding its keys, so
-    partitions it does not touch keep their files. A log-less directory of parquet files is adopted as
-    version 0 (:meth:`~..operators.txlog.TxTable.bootstrap`).
+    partitions it does not touch keep their files. A log-less directory
+    of parquet files is adopted as version 0
+    (:meth:`~..operators.txlog.TxTable.bootstrap`).
     """
     from ..operators.dedup import dedup_keep_latest
     from ..operators.txlog import TxTable
@@ -422,7 +446,8 @@ def run_merge_stream_versioned(
             if f.name not in keys and f.name != precedence_col
             and _orderable(f.dataType)
         ]
-        batch = dedup_keep_latest(sized_to_batch(batch_df), keys,
+        size, _ = micro_batch_bytes(batch_df, checkpoint_path, batch_id)
+        batch = dedup_keep_latest(sized_to_batch(batch_df, size), keys,
                                   precedence_col, tiebreak)
         params = {"txnAppId": app, "txnVersion": batch_id}
         if not TxTable.exists(spark, table_path):

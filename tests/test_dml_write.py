@@ -14,8 +14,10 @@
   ``advisoryPartitionSizeInBytes`` stages several. ``TxTable.write``
   keeps its frame's partitioning.
 * A streaming MERGE whose commit fails after staging, on the rewrite
-  and on the pure-append route, recovers from its checkpoint to the
-  row-identical table, and VACUUM collects the orphaned files.
+  and on the pure-append route, behind a file source's stateful dedup
+  and behind a ``txtable`` source's window aggregate, recovers from its
+  checkpoint to the row-identical table, and VACUUM collects the
+  orphaned files.
 """
 
 from __future__ import annotations
@@ -260,9 +262,18 @@ def test_merge_under_small_advisory_size_stages_several_files(spark,
 
 def test_unsized_plan_is_left_as_it_is(spark):
     """A plan Catalyst cannot size (an RDD's, Long.MaxValue bytes) is not
-    coalesced."""
-    df = spark.sparkContext.parallelize([(1,), (2,)], 3).toDF(["k"])
+    coalesced, unless the caller knows its size: then that size sizes
+    it, and 0 bytes (a no-data batch) is one partition."""
+    df = spark.sparkContext.parallelize([(1,), (2,)], 5).toDF(["k"])
     assert sized_to_batch(df) is df
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
+        .byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    assert sized_to_batch(df, 0).rdd.getNumPartitions() == 1
+    assert sized_to_batch(df, advisory + 1).rdd.getNumPartitions() == 2
+    # Catalyst's estimate wins over the fallback
+    known = spark.range(10).coalesce(5)
+    assert sized_to_batch(known, 10 * advisory).rdd.getNumPartitions() == 1
 
 
 def test_write_keeps_the_frame_partitioning(spark, tmp_path):
@@ -563,3 +574,100 @@ def test_streaming_merge_after_stateful_dedup_recovers_from_failed_commit(
     assert orphans <= set(tx.vacuum(retention_hours=0))
     assert _files_on_disk(tx.root) == set(tx.snapshot().files)
     assert sorted(tuple(r) for r in tx.read().collect()) == got
+
+
+def test_streaming_merge_after_window_aggregate_over_txtable_recovers(
+    spark, tmp_path, monkeypatch
+):
+    """Silver's shape: a ``txtable`` stream over a bronze table ->
+    ``user_activity_stream`` -> the sink, sized from the bytes its
+    offsets record. The commit of batch 1 fails after its files are
+    staged; the restart replays the batch from the same
+    ``offsets/1``, in the same task split, and rebuilds the table a run
+    with no fault builds."""
+    from real_time_video_streaming_analytics_lakehouse_spark.sources.txstream import (
+        TxTableDataSource,
+        offset_log_bytes,
+    )
+    from real_time_video_streaming_analytics_lakehouse_spark.streaming import (
+        run_merge_stream_versioned,
+        user_activity_stream,
+    )
+
+    from .conftest import job_stage_tasks
+
+    spark.dataSource.register(TxTableDataSource)
+    t0 = dt.datetime(2024, 1, 1, 12)
+    commits = [
+        [Row(event_id=i, ts=t0 + dt.timedelta(minutes=i), user_id=i % 3,
+             event_type="view" if i % 2 else "click", value=float(i))
+         for i in range(8)],
+        # updates both event types' first window, opens a later one
+        [Row(event_id=8, ts=t0 + dt.timedelta(minutes=1), user_id=1,
+             event_type="view", value=2.5),
+         Row(event_id=9, ts=t0 + dt.timedelta(minutes=3), user_id=2,
+             event_type="click", value=4.0),
+         Row(event_id=10, ts=t0 + dt.timedelta(minutes=30), user_id=2,
+             event_type="view", value=1.0)],
+    ]
+    bronze = TxTable.create(spark, str(tmp_path / "bronze"),
+                            spark.createDataFrame(commits[0]).schema)
+    ref = TxTable(spark, str(tmp_path / "ref"))
+    target, ckpt = str(tmp_path / "target"), str(tmp_path / "ckpt")
+
+    def drain(root, checkpoint):
+        src = (spark.readStream.format("txtable")
+               .option("path", bronze.root).load())
+        run_merge_stream_versioned(
+            user_activity_stream(src), root, checkpoint,
+            keys=["window_start", "event_type"], precedence_col="events_cnt",
+            output_mode="update", app_id="silver",
+        ).awaitTermination(120)
+
+    def feed(t: TxTable) -> list[tuple]:
+        return sorted((r._change_type, r._commit_version, r.window_start,
+                       r.event_type, r.events_cnt, r.total_value)
+                      for r in t.change_feed(1).collect())
+
+    bronze.write(spark.createDataFrame(commits[0]))
+    drain(ref.root, str(tmp_path / "ref_ckpt"))
+    drain(target, ckpt)
+    bronze.write(spark.createDataFrame(commits[1]))
+    drain(ref.root, str(tmp_path / "ref_ckpt"))
+
+    failed = _fail_publish_once(monkeypatch, 2)  # batch 1's commit
+
+    def crash():
+        with pytest.raises(Exception, match="injected failure"):
+            drain(target, ckpt)
+
+    crashed, _ = job_stage_tasks(spark, crash)
+    assert failed == [2]
+    with open(f"{ckpt}/offsets/1") as f:
+        entry = f.read()
+    replayed, _ = job_stage_tasks(spark, lambda: drain(target, ckpt))
+    with open(f"{ckpt}/offsets/1") as f:
+        assert f.read() == entry
+    assert offset_log_bytes(ckpt, 1) > 0
+    # sized, and the same split: the scan, then the state stage and the
+    # keep-latest in one task; the probe and the staged write
+    assert [s[1:] for s in crashed[:1]] == [[1]]
+    assert crashed[1:] == [[1], [1]]
+    assert replayed[:len(crashed)] == crashed
+
+    tx = TxTable(spark, target)
+    assert _rows(tx) == _rows(ref)
+    versions = _txn_versions(tx)
+    assert versions == sorted(set(versions)) == _txn_versions(ref)
+    assert feed(tx) == feed(ref)
+    assert len(feed(tx)) == len(set(feed(tx)))
+
+    orphans = _orphans(tx)
+    assert orphans
+    assert orphans <= set(tx.vacuum(retention_hours=0))
+    assert _files_on_disk(tx.root) == set(tx.snapshot().files)
+    assert _rows(tx) == _rows(ref)
+
+
+def _rows(tx: TxTable) -> list[tuple]:
+    return sorted(tuple(r) for r in tx.read().collect())

@@ -411,22 +411,74 @@ def _rows(tx) -> list[tuple]:
     return sorted(tuple(r) for r in tx.read().collect())
 
 
-def test_run_merge_stream_sizes_a_micro_batch_to_its_input(spark, dedup_sink,
-                                                           tmp_path):
-    """The sink sizes each micro-batch from Catalyst's estimate of its
-    input before the keep-latest: a batch of a few KB from a file source
-    runs its stateful dedup, the keep-latest and the key set in one
-    task after the scan, its no-data batch in one task, and each commit
-    stages one data file. An upstream Catalyst cannot size (the
-    ``txtable`` source) keeps its ``spark.sql.shuffle.partitions``-task
-    stages."""
-    from real_time_video_streaming_analytics_lakehouse_spark.operators import txlog
+def _silver_drains(spark, root, provider=None):
+    """Two drains of a ``txtable`` stream over ``root/bronze`` ->
+    ``user_activity_stream`` -> ``run_merge_stream_versioned`` into
+    ``root/silver``; bronze gains one commit before each. The second
+    commit updates a window of the first and opens one two hours later,
+    so its data batch is followed by a no-data batch. ``provider`` is
+    the state store provider class for the run (set for it, then
+    restored). Returns both drains' jobs
+    (:func:`~tests.conftest.job_stage_tasks`) and the silver table."""
     from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import TxTable
     from real_time_video_streaming_analytics_lakehouse_spark.sources.txstream import (
         TxTableDataSource,
     )
 
     from .conftest import job_stage_tasks
+
+    spark.dataSource.register(TxTableDataSource)
+    t = dt.datetime(2024, 1, 1, 12, 0, 0)
+    commits = [
+        [Row(event_id=i, ts=t, user_id=i, event_type="view", value=float(i))
+         for i in range(8)],
+        [Row(event_id=8, ts=t + dt.timedelta(minutes=2), user_id=1,
+             event_type="view", value=9.0),
+         Row(event_id=9, ts=t + dt.timedelta(hours=2), user_id=9,
+             event_type="click", value=8.0)],
+    ]
+    bronze = TxTable.create(spark, str(root / "bronze"),
+                            spark.createDataFrame(commits[0]).schema)
+    silver = str(root / "silver")
+    key = "spark.sql.streaming.stateStore.providerClass"
+    old = spark.conf.get(key)
+    if provider:
+        spark.conf.set(key, provider)
+    try:
+        def drain():
+            src = (spark.readStream.format("txtable")
+                   .option("path", bronze.root).load())
+            run_merge_stream_versioned(
+                user_activity_stream(src), silver, str(root / "ckpt"),
+                keys=["window_start", "event_type"],
+                precedence_col="events_cnt", output_mode="update",
+            ).awaitTermination(120)
+
+        drains = []
+        for rows in commits:
+            bronze.write(spark.createDataFrame(rows))
+            drains.append(job_stage_tasks(spark, drain)[0])
+    finally:
+        spark.conf.set(key, old)
+    return drains, TxTable(spark, silver)
+
+
+@pytest.fixture(scope="module")
+def silver_sink(spark, tmp_path_factory):
+    return _silver_drains(spark, tmp_path_factory.mktemp("silver_sink"))
+
+
+def test_run_merge_stream_sizes_a_micro_batch_to_its_input(dedup_sink,
+                                                           silver_sink):
+    """The sink sizes each micro-batch before the keep-latest: a batch
+    of a few KB from a file source, sized by Catalyst's estimate, runs
+    its stateful dedup, the keep-latest and the key set in one task
+    after the scan, its no-data batch in one task, and each commit
+    stages one data file. A ``txtable`` upstream, which Catalyst cannot
+    size, is sized from the bytes its offsets record: its window
+    aggregate's state stage and the keep-latest run in one task after
+    the scan too, and so does every later job of the drain."""
+    from real_time_video_streaming_analytics_lakehouse_spark.operators import txlog
 
     stages, bronze = dedup_sink
     # key set (scan, then one task), pure-append write, no-data batch
@@ -440,37 +492,37 @@ def test_run_merge_stream_sizes_a_micro_batch_to_its_input(spark, dedup_sink,
         assert len(txlog._read_commit(bronze.root, v)["add"]) == 1
     assert 9.0 not in {r.value for r in bronze.read().collect()}
 
-    spark.dataSource.register(TxTableDataSource)
-    silver = str(tmp_path / "silver")
-
-    def drain():
-        src = (spark.readStream.format("txtable")
-               .option("path", bronze.root).load())
-        run_merge_stream_versioned(
-            user_activity_stream(src), silver, str(tmp_path / "ckpt"),
-            keys=["window_start", "event_type"], precedence_col="events_cnt",
-            output_mode="update",
-        ).awaitTermination(120)
-
-    stages, _ = job_stage_tasks(spark, drain)
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # one job, the first MERGE: the scan, then the stateful aggregate
-    # and the keep-latest shuffle, unsized
-    assert [s[1:] for s in stages] == [[n, n]]
-    assert TxTable(spark, silver).read().count() > 0
+    (first, second), silver = silver_sink
+    # the first MERGE is one job: the scan, then the state stage and
+    # the keep-latest in one task
+    assert [s[1:] for s in first] == [[1]]
+    # the data batch's key set, probe and write, then the no-data batch
+    assert [s[1:] for s in second[:1]] == [[1]]
+    assert all(s == [1] for s in second[1:]) and len(second) > 1
+    assert silver.read().count() == 2
 
 
 def test_run_merge_stream_rocksdb_state_store_builds_the_same_table(
-    spark, dedup_sink, tmp_path
+    spark, dedup_sink, silver_sink, tmp_path
 ):
     """The sized micro-batch opens every state store partition in one
     task. Under the RocksDB state store provider the sink runs the same
-    jobs and builds the table the default provider builds."""
-    stages, tx = _dedup_sink_drains(spark, tmp_path, provider=_ROCKSDB)
-    with open(tmp_path / "ckpt" / "offsets" / "0") as f:
+    jobs and builds the table the default provider builds, behind a
+    file source's dedup and behind a ``txtable`` source's window
+    aggregate."""
+    stages, tx = _dedup_sink_drains(spark, tmp_path / "dedup",
+                                    provider=_ROCKSDB)
+    with open(tmp_path / "dedup" / "ckpt" / "offsets" / "0") as f:
         assert _ROCKSDB in f.read()  # the checkpoint records the provider
     assert stages == dedup_sink[0]
     assert _rows(tx) == _rows(dedup_sink[1])
+
+    drains, silver = _silver_drains(spark, tmp_path / "silver",
+                                    provider=_ROCKSDB)
+    with open(tmp_path / "silver" / "ckpt" / "offsets" / "1") as f:
+        assert _ROCKSDB in f.read()
+    assert drains == silver_sink[0]
+    assert _rows(silver) == _rows(silver_sink[1])
 
 
 def test_late_data_dropped_after_watermark(spark, tmp_path):

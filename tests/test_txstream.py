@@ -368,3 +368,213 @@ def test_stream_ignore_changes_redelivers_dv_commit(registered, tmp_path):
     got2 = _drain(spark, t.root, out, ckpt, ignoreChanges="true")
     assert got2 == sorted([(i, "a", i) for i in range(4)] * 2
                           + [(9, "b", 9)])
+
+
+# -- offsets that carry the batch's size ---------------------------------------
+
+_META = '{"batchWatermarkMs":0,"batchTimestampMs":0,"conf":{}}'
+
+
+def _entry(*sources) -> str:
+    """The text of an offset-log entry whose source lines are
+    ``sources`` (dicts as JSON, strings as they are)."""
+    import json
+
+    lines = [s if isinstance(s, str) else json.dumps(s) for s in sources]
+    return "\n".join(["v1", _META, *lines])
+
+
+def test_offset_range_bytes_is_the_difference_of_two_offsets():
+    from real_time_video_streaming_analytics_lakehouse_spark.sources.txstream import (
+        offset_range_bytes,
+    )
+
+    a = {"version": 3, "bytes": 600, "bytesFrom": 0}
+    b = {"version": 5, "bytes": 1000, "bytesFrom": 0}
+    assert offset_range_bytes(_entry(a), _entry(b)) == 400
+    # batch 0 starts at the initial offset's 0
+    assert offset_range_bytes(None, _entry(b)) == 1000
+    # a no-data batch: the same offsets, 0 bytes
+    assert offset_range_bytes(_entry(b), _entry(b)) == 0
+    # two txtable sources: the sum of their differences
+    c = {"version": 9, "bytes": 70, "bytesFrom": 2}
+    d = {"version": 9, "bytes": 90, "bytesFrom": 2}
+    assert offset_range_bytes(_entry(a, c), _entry(b, d)) == 420
+
+
+@pytest.mark.parametrize("start, end", [
+    # an offset the reader wrote before offsets carried a size
+    ({"version": 3}, {"version": 5, "bytes": 1000, "bytesFrom": 0}),
+    ({"version": 3}, {"version": 3}),
+    # a file source's line
+    ({"logOffset": 0}, {"logOffset": 1}),
+    # log retention moved the first counted version between the offsets
+    ({"version": 3, "bytes": 600, "bytesFrom": 0},
+     {"version": 5, "bytes": 200, "bytesFrom": 4}),
+    ({"version": 3, "bytes": 100, "bytesFrom": 0},
+     {"version": 5, "bytes": 900, "bytesFrom": 2}),
+    # a total that went down
+    ({"version": 3, "bytes": 600, "bytesFrom": 0},
+     {"version": 5, "bytes": 500, "bytesFrom": 0}),
+], ids=["old-start", "old-both", "file-source", "base-moved-down",
+        "base-moved-up", "shrunk"])
+def test_offset_range_bytes_leaves_a_batch_unsized(start, end):
+    from real_time_video_streaming_analytics_lakehouse_spark.sources.txstream import (
+        offset_range_bytes,
+    )
+
+    assert offset_range_bytes(_entry(start), _entry(end)) is None
+
+
+def test_offset_range_bytes_needs_every_source_sized():
+    from real_time_video_streaming_analytics_lakehouse_spark.sources.txstream import (
+        offset_range_bytes,
+    )
+
+    tx = {"version": 5, "bytes": 1000, "bytesFrom": 0}
+    # a txtable source next to a file source, a Kafka source, a source
+    # with no offset yet
+    for other in ({"logOffset": 1}, {"events": {"0": 12}}, "-"):
+        assert offset_range_bytes(_entry(tx, other), _entry(tx, other)) is None
+        assert offset_range_bytes(None, _entry(tx, other)) is None
+    # an old reader's offset in batch 0
+    assert offset_range_bytes(None, _entry({"version": 5})) is None
+    # the sources changed between the two entries
+    assert offset_range_bytes(_entry(tx), _entry(tx, tx)) is None
+
+
+def test_offset_log_bytes_reads_the_checkpoint(tmp_path):
+    from real_time_video_streaming_analytics_lakehouse_spark.sources.txstream import (
+        offset_log_bytes,
+    )
+
+    offsets = tmp_path / "offsets"
+    offsets.mkdir()
+    for i, total in enumerate([300, 300, 800]):
+        (offsets / str(i)).write_text(
+            _entry({"version": i, "bytes": total, "bytesFrom": 0}))
+    ckpt = str(tmp_path)
+    assert [offset_log_bytes(ckpt, i) for i in range(3)] == [300, 0, 500]
+    assert offset_log_bytes(f"file://{ckpt}", 2) == 500
+    assert offset_log_bytes(f"file:{ckpt}", 2) == 500
+    assert offset_log_bytes(ckpt, 3) is None  # no entry
+    assert offset_log_bytes("hdfs://nn/ckpt", 2) is None
+
+
+def test_row_width_is_catalysts(spark):
+    """The source's per-row estimate is Catalyst's: 8 bytes plus each
+    field's ``defaultSize``, read from the JVM."""
+    from pyspark.sql.types import StructType as ST
+
+    from real_time_video_streaming_analytics_lakehouse_spark.sources.txstream import (
+        row_width,
+    )
+
+    schema = ST.fromDDL(
+        "a TINYINT, b SMALLINT, c INT, d BIGINT, e FLOAT, f DOUBLE, "
+        "g DECIMAL(10,2), h DECIMAL(30,2), i STRING, j BINARY, k BOOLEAN, "
+        "l DATE, m TIMESTAMP, n TIMESTAMP_NTZ, o ARRAY<INT>, "
+        "p MAP<STRING,DOUBLE>, q STRUCT<x: INT, y: STRING>, "
+        "r INTERVAL DAY TO SECOND, s INTERVAL YEAR TO MONTH, t VARIANT")
+    jvm = spark._jvm.org.apache.spark.sql.types.DataType
+    assert row_width(schema) == \
+        8 + jvm.fromJson(schema.json()).defaultSize()
+
+
+def test_stream_offsets_count_the_bytes_commits_added(registered, tmp_path):
+    """``latestOffset`` records the estimated bytes the data-changing
+    commits added (rows times the row width) and the first version it
+    counts from; OPTIMIZE adds nothing, log retention moves the first
+    version."""
+    from real_time_video_streaming_analytics_lakehouse_spark.sources.txstream import (
+        TxTableStreamReader,
+        row_width,
+    )
+
+    spark = registered
+    t = TxTable.create(spark, str(tmp_path / "t"), SCHEMA)
+    t.checkpoint_interval = 3
+    w = row_width(SCHEMA)
+    reader = TxTableStreamReader(t.root, SCHEMA, {})
+    assert reader.initialOffset() == {"version": -1, "bytes": 0,
+                                      "bytesFrom": 0}
+    t.write(spark.createDataFrame([(1, "a", 1), (2, "b", 2)], SCHEMA))
+    t.write(spark.createDataFrame([(3, "a", 3)], SCHEMA))
+    assert reader.latestOffset() == {"version": 2, "bytes": 3 * w,
+                                     "bytesFrom": 0}
+    t.optimize()
+    assert reader.latestOffset() == {"version": 3, "bytes": 3 * w,
+                                     "bytesFrom": 0}
+    t.write(spark.createDataFrame([(4, "a", 4)], SCHEMA))
+    # a new reader (a restarted query) walks the log to the same total
+    assert TxTableStreamReader(t.root, SCHEMA, {}).latestOffset() == \
+        reader.latestOffset() == {"version": 4, "bytes": 4 * w,
+                                  "bytesFrom": 0}
+    assert t.cleanup_log(retention_hours=0.0) == [0, 1, 2]
+    assert reader.latestOffset() == {"version": 4, "bytes": 1 * w,
+                                     "bytesFrom": 3}
+    # startingVersion: the total counts from it
+    late = TxTableStreamReader(t.root, SCHEMA, {"startingVersion": "4"})
+    assert late.initialOffset() == {"version": 3, "bytes": 0,
+                                    "bytesFrom": 4}
+    assert late.latestOffset() == {"version": 4, "bytes": 1 * w,
+                                   "bytesFrom": 4}
+
+
+def test_parent_format_checkpoint_resumes_without_an_empty_version(
+    registered, tmp_path
+):
+    """A checkpoint whose offsets are the bare ``{"version": N}`` the
+    reader wrote before offsets carried a size resumes: the first batch
+    after it is unsized and commits no empty version, later batches are
+    sized, and no row is lost or doubled."""
+    import glob
+    import json
+    import os
+
+    from real_time_video_streaming_analytics_lakehouse_spark.sources.txstream import (
+        offset_log_bytes,
+        row_width,
+    )
+    from real_time_video_streaming_analytics_lakehouse_spark.streaming import (
+        run_merge_stream_versioned,
+    )
+
+    spark = registered
+    t = TxTable.create(spark, str(tmp_path / "t"), SCHEMA)
+    target, ckpt = str(tmp_path / "target"), str(tmp_path / "ckpt")
+
+    def drain():
+        src = spark.readStream.format("txtable").option("path", t.root).load()
+        run_merge_stream_versioned(src, target, ckpt, keys=["id"],
+                                   precedence_col="v").awaitTermination(120)
+        return sorted(tuple(r) for r in TxTable(spark, target).read()
+                      .select("id", "day", "v").collect())
+
+    t.write(spark.createDataFrame([(1, "a", 10), (2, "b", 20)], SCHEMA))
+    assert drain() == [(1, "a", 10), (2, "b", 20)]
+    # rewrite the offset log as the reader wrote it before
+    for path in glob.glob(f"{ckpt}/offsets/[0-9]*"):
+        with open(path) as f:
+            lines = f.read().split("\n")
+        lines[-1] = json.dumps({"version": json.loads(lines[-1])["version"]})
+        with open(path, "w") as f:
+            f.write("\n".join(lines))
+        crc = os.path.join(os.path.dirname(path),
+                           f".{os.path.basename(path)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+    def last() -> int:
+        return max(int(os.path.basename(p))
+                   for p in glob.glob(f"{ckpt}/offsets/[0-9]*"))
+
+    versions = TxTable(spark, target).snapshot().version
+    assert offset_log_bytes(ckpt, last()) is None
+
+    assert drain() == [(1, "a", 10), (2, "b", 20)]
+    assert TxTable(spark, target).snapshot().version == versions
+
+    t.write(spark.createDataFrame([(3, "a", 30), (1, "a", 11)], SCHEMA))
+    assert drain() == [(1, "a", 11), (2, "b", 20), (3, "a", 30)]
+    assert TxTable(spark, target).snapshot().version == versions + 1
+    assert offset_log_bytes(ckpt, last()) == 2 * row_width(SCHEMA)
