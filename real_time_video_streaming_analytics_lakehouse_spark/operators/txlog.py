@@ -135,7 +135,12 @@ from .manifest import (
     prune_columnar,
     unescape_partition_value,
 )
-from .util import local_relation, sized_to_batch
+from .util import (
+    _advisory_bytes,
+    catalyst_bytes,
+    local_relation,
+    sized_to_batch,
+)
 
 _LOG_DIR = "_txlog"
 _CDC_DIR = "_change_data"
@@ -879,6 +884,29 @@ def _key_range_predicates(key_set, key_schema: StructType) -> list[tuple]:
         preds += [(f_.name, ">=", mm["min"].as_py()),
                   (f_.name, "<=", mm["max"].as_py())]
     return preds
+
+
+def _staged_key_set(root: str, adds: list[dict], key_schema: StructType):
+    """The keys of a source staged as ``adds`` (files under ``root``
+    holding one row per key, keyed on no partition column), as the
+    pyarrow table a Spark ``toArrow`` of them gives, read on the driver
+    with no job: each file's key columns, cast to the key schema's
+    Arrow types."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(key_schema)
+    tables = []
+    for a in adds:
+        with pq.ParquetFile(os.path.join(root, a["path"])) as f:
+            data = f.read(columns=schema.names)
+        tables.append(pa.Table.from_arrays(
+            [data.column(n).cast(t) for n, t in zip(schema.names,
+                                                    schema.types)],
+            schema=schema,
+        ))
+    return pa.concat_tables(tables)
 
 
 # ---------------------------------------------------------------------------
@@ -1783,8 +1811,8 @@ class TxTable:
         # i.e. silent row loss (the same hazard the partitioned merge
         # sink pins for its target read).
         rows = (
-            self.spark.read.option("basePath", stage)
-            .schema(schema).parquet(stage)
+            self.spark.read.option("basePath", stage).schema(schema)
+            .parquet(*[os.path.join(stage, rel) for rel in out])
             .groupBy(F.input_file_name().alias("_f"))
             .agg(*aggs)
             .collect()  # bounded: one row per staged file
@@ -2499,9 +2527,9 @@ class TxTable:
 
         The write is sized to the commit
         (:func:`~.util.sized_to_batch`): ``rows`` reads only the touched
-        files and, for a MERGE, the persisted source, so a commit of a
-        few KB stages one data file and one change file per change type
-        in one task, not one file per shuffle partition."""
+        files and, for a MERGE, the source's staged files, so a commit
+        of a few KB stages one data file and one change file per change
+        type in one task, not one file per shuffle partition."""
         adds, cdc = self._stage_files(sized_to_batch(rows),
                                       snap.version + 1, snap.partition_by,
                                       None, snap.properties, changes=True)
@@ -2635,16 +2663,25 @@ class TxTable:
         tested :func:`..operators.merge.merge_upsert`, applied here at
         file granularity.
 
-        The source's distinct keys come to the driver as one Arrow
-        table (a ``limit(max_broadcast_keys + 1)`` job); its row count
-        is the size gate. At or below ``max_broadcast_keys`` keys — the
-        bounded-CDC-batch fast path:
+        The source, deduplicated by key and aligned to the table schema,
+        is evaluated once: the first job stages it as data files in the
+        table root (:meth:`_stage_files`) and every later step reads
+        those files. Their footers' ``numRecords`` sum to the source's key
+        count, exactly, since the source holds one row per key; that
+        count is the size gate. A source with no rows, or a table with
+        no live files, commits the staged files as a pure append
+        (:meth:`_append_files`), which runs no further job unless the
+        table has ``bloom.columns`` or Catalyst could not size the
+        source. At or below ``max_broadcast_keys`` keys — the
+        bounded-CDC-batch fast path — the key set is read on the driver
+        from the staged files' key columns (:func:`_staged_key_set`), or
+        by one Spark query over them when a key is a partition column:
 
         * the touched-file probe reads only the files that can hold a
           key: each integral or binary-collated string key column with
           no NULL among the batch's keys hands its ``[min, max]`` to
           :func:`_prune` (see :func:`_key_range_predicates`). When no
-          file survives, the merge is a pure append and runs no probe;
+          file survives, the staged files commit as a pure append;
         * the probe returns the matched ``(file, key)`` pairs, so the
           touched files and the matched keys come from one job, and
           every later split tests the matched keys alone;
@@ -2653,16 +2690,22 @@ class TxTable:
           a larger one by a broadcast join. No job broadcasts a small
           key set.
 
-        Above the gate the splits join against a checkpointed key set
+        Above the gate the splits join against the staged source's keys
         (shuffle hash/sort-merge) and the probe reads every live file,
         so an unbounded source can never OOM the driver or executors
         with a forced broadcast.
 
-        The commit's rows leave in one write (:meth:`_rewrite`): each
-        source row is exploded into its data row and its change row
-        (``update_postimage`` when its key matched, ``insert`` when
-        not), and each row of a rewritten file is a surviving data row
-        or, when its key matched, an ``update_preimage`` change row.
+        A commit that rewrites files leaves in one write
+        (:meth:`_rewrite`): each row of the staged source is exploded
+        into its data row and its change row (``update_postimage`` when
+        its key matched, ``insert`` when not), and each row of a
+        rewritten file is a surviving data row or, when its key matched,
+        an ``update_preimage`` change row. The staged files do not join
+        that commit, so it adds one data file per write task, as a
+        DELETE or UPDATE does; they are deleted once the rewrite has
+        returned or raised. A failure before a pure append's commit
+        deletes them too; once that commit may have published, they
+        stay.
 
         A source that changes nothing — no rows and no schema change —
         commits no version and returns the current one, as
@@ -2677,28 +2720,20 @@ class TxTable:
         semantics — the aligned source's null-fill applies only to
         inserted rows, never overwrites a matched row's data).
 
-        The deduplicated, aligned source is evaluated once: against a
-        table with live files it is persisted before the key-set job
-        (its first action, which fills the cache) and unpersisted when
-        the merge returns or raises, so the probe and the one write
-        scan the cache instead of re-running the source's plan — a
-        streaming batch's stateful upstream runs once per MERGE. A
-        merge into a table with no files reads the source once anyway
-        and is not cached.
-
-        The work after the key-set job is sized to the batch
-        (:func:`~.util.sized_to_batch`): the probe's scan, a pure append
-        of the persisted source and the one write run in
+        The staging write, the probe's scan and the rewrite are sized to
+        the batch (:func:`~.util.sized_to_batch`): each runs in
         ``ceil(estimate / spark.sql.adaptive.advisoryPartitionSizeInBytes)``
-        partitions, never more than they had. The estimate is the
-        filled cache's measured bytes plus the read files' sizes, so no
-        job runs to get it. A micro-batch of a few KB then probes in one
-        task with no exchange and stages one data file and one change
-        file per change type. It does not apply to the first merge into
-        a table with no files, nor to :meth:`write`: their upstream is
-        not materialized, and a coalesce would pull its work into fewer
-        tasks. A caller that wants that work sized too sizes the source
-        itself, as the streaming MERGE sink does with each micro-batch.
+        partitions, never more than it had, from Catalyst's estimate, so
+        no job runs to get it. For the staging write the coalesce sits
+        above the key dedup's aggregate, which has its input clustered
+        by the keys, so it pulls only the work after the last exchange
+        into the sized tasks; the probe and the rewrite read files. A
+        micro-batch of a few KB then stages one source file, probes in
+        one task with no exchange, and rewrites one data file and one
+        change file per change type. A source Catalyst cannot size
+        stages one file per non-empty shuffle partition of the dedup; a
+        pure append writes those files again, sized by their bytes
+        (:meth:`_append_files`), and a rewrite reads them.
         """
         src_cols = set(source.columns)
         src = _drop_duplicate_keys(source, keys)
@@ -2715,53 +2750,57 @@ class TxTable:
             _require_compatible(snap.schema, src.schema)
         src = _align(src, target_schema)
         self._last_merge_used_broadcast = None
-        if not snap.files:
-            return self._commit_insert_only(src, snap, params, schema_json,
-                                            target_schema)
+        unsized = catalyst_bytes(src) is None
+        # no bloom bitmaps yet: only a pure append commits these files
+        staged, _ = self._stage_files(sized_to_batch(src), snap.version + 1,
+                                      snap.partition_by, None)
+        kept = False  # the staged files joined a commit that may publish
 
-        # Every later query reads the source (key set, probe, the one
-        # write): evaluate it once. The key-set job is the first action
-        # and fills the cache.
-        src = src.persist()
+        def append() -> int:
+            nonlocal kept
+            adds = self._append_files(staged, snap, target_schema, unsized)
+            kept = True
+            return self._commit_append(adds, snap, params, schema_json,
+                                       target_schema)
+
         try:
+            n_keys = sum(a["numRecords"] for a in staged)
+            if not n_keys or not snap.files:
+                return append()
             return self._merge_into_files(
-                src, snap, keys, src_cols, params, schema_json,
-                target_schema, max_broadcast_keys,
+                staged, snap, keys, src_cols, params, schema_json,
+                target_schema, n_keys <= max_broadcast_keys, append,
             )
         finally:
-            src.unpersist()
+            if not kept:  # read by the rewrite, or left by a failure
+                for a in staged:
+                    pathlib.Path(self.root, a["path"]).unlink(missing_ok=True)
 
-    def _merge_into_files(self, src: DataFrame, snap: Snapshot,
+    def _merge_into_files(self, staged: list[dict], snap: Snapshot,
                           keys: list[str], src_cols: set,
                           params: dict | None, schema_json: str | None,
-                          target_schema: StructType,
-                          max_broadcast_keys: int) -> int:
-        """The body of :meth:`merge` for a target with live files, on
-        the aligned, deduplicated and persisted source ``src``."""
-        key_schema = StructType([target_schema[k] for k in keys])
-        key_set = (
-            src.select(*keys).distinct().limit(max_broadcast_keys + 1)
-            .toArrow()
-        )
-        if key_set.num_rows == 0:
-            return self._commit_insert_only(None, snap, params, schema_json,
-                                            target_schema)
-        bounded = key_set.num_rows <= max_broadcast_keys
+                          target_schema: StructType, bounded: bool,
+                          append) -> int:
+        """The body of :meth:`merge` for a target with live files and a
+        source with rows, staged as ``staged``; ``append()`` commits
+        those files as a pure append."""
         self._last_merge_used_broadcast = bounded
+        key_schema = StructType([target_schema[k] for k in keys])
+        src = self._read_entries(staged, target_schema, snap.partition_by)
         if bounded:
+            if set(keys) & set(snap.partition_by):
+                key_set = src.select(*keys).toArrow()
+            else:
+                key_set = _staged_key_set(self.root, staged, key_schema)
             preds = _key_range_predicates(key_set, key_schema)
             entries = _prune(snap, preds) if preds else list(
                 snap.files.values()
             )
             if not entries:
-                return self._commit_insert_only(sized_to_batch(src), snap,
-                                                params, schema_json,
-                                                target_schema)
+                return append()
             members = _key_members(self.spark, key_set, key_schema)
         else:
-            members = src.select(*keys).distinct().localCheckpoint(
-                eager=False
-            )
+            members = src.select(*keys)
             entries = list(snap.files.values())
 
         # Probe with the positional read (_dv_rel = the scan's
@@ -2797,9 +2836,7 @@ class TxTable:
                 counts[r["_dv_rel"]] = r["count"]
         touched = sorted(counts)
         if not touched:
-            return self._commit_insert_only(sized_to_batch(src), snap,
-                                            params, schema_json,
-                                            target_schema)
+            return append()
 
         # Merge-on-read split (see delete()): files under the DV
         # threshold get their MATCHED rows deletion-vectored and the
@@ -2864,8 +2901,8 @@ class TxTable:
             src = updates.unionByName(
                 src.where(~F.col(_MEMBER)).select(*fields, _MEMBER)
             )
-        # One scan of the source yields each row's data row (NULL type)
-        # and its change row.
+        # One scan of the staged source yields each row's data row (NULL
+        # type) and its change row.
         kind = F.when(F.col(_MEMBER), F.lit("update_postimage")) \
             .otherwise(F.lit("insert"))
         parts.append(src.select(*fields, F.explode(
@@ -2878,18 +2915,49 @@ class TxTable:
             dv_adds=dv_adds, dv_bundle=bundle,
         )
 
-    def _commit_insert_only(self, src: DataFrame | None, snap: Snapshot,
-                            params: dict | None, schema_json: str | None,
-                            target_schema: StructType) -> int:
-        """MERGE with zero matched keys: pure append of the source (plus
-        the schema evolution, if any) — no files rewritten. ``src=None``
-        is a source known to be empty. Nothing to add and no schema
-        change commits nothing: the current version is returned."""
-        adds = (
-            self._stage_files(src, snap.version + 1, snap.partition_by,
-                              None, snap.properties)[0]
-            if src is not None else []
-        )
+    def _append_files(self, adds: list[dict], snap: Snapshot,
+                      target_schema: StructType, unsized: bool
+                      ) -> list[dict]:
+        """The data files a MERGE's pure append commits: the source's
+        staged files ``adds``, with their bloom bitmaps on a
+        ``bloom.columns`` table (one aggregate over them). A source
+        Catalyst could not size (``unsized``: an RDD of Python rows, a
+        Kafka micro-batch) staged one file per non-empty shuffle
+        partition of its key dedup; when a partition directory holds
+        more of them than ``ceil(bytes / advisory)``, they are written
+        again in that many partitions (one job, which also collects the
+        bitmaps) and deleted."""
+        if not adds:
+            return adds
+        n = -(-sum(os.path.getsize(os.path.join(self.root, a["path"]))
+                   for a in adds) // _advisory_bytes(self.spark))
+        per_dir: dict[str, int] = {}
+        for a in adds:
+            d = os.path.dirname(a["path"])
+            per_dir[d] = per_dir.get(d, 0) + 1
+        if unsized and max(per_dir.values()) > max(1, n):
+            files = self._read_entries(adds, target_schema, snap.partition_by)
+            out, _ = self._stage_files(files.coalesce(max(1, n)),
+                                       snap.version + 1, snap.partition_by,
+                                       None, snap.properties)
+            for a in adds:
+                os.remove(os.path.join(self.root, a["path"]))
+            return out
+        stats = self._collect_stats(self.root, [a["path"] for a in adds],
+                                    target_schema, [], snap.properties,
+                                    snap.partition_by)
+        for a in adds:
+            if "bloom" in stats[a["path"]]:
+                a["bloom"] = stats[a["path"]]["bloom"]
+        return adds
+
+    def _commit_append(self, adds: list[dict], snap: Snapshot,
+                       params: dict | None, schema_json: str | None,
+                       target_schema: StructType) -> int:
+        """MERGE with no matched key: commit the source's staged files
+        ``adds`` as a pure append (plus the schema evolution, if any),
+        no file rewritten. Nothing to add and no schema change commits
+        nothing: the current version is returned."""
         if not adds and schema_json is None:
             return snap.version
 

@@ -54,8 +54,10 @@ def sized_to_batch(df: DataFrame, fallback_bytes: int | None = None
     count.
 
     The coalesce is narrow, so it pulls the work below it, up to the
-    last exchange, into the sized tasks. On a filled cache or a plain
-    file scan that is only the read. On a streaming micro-batch frame
+    last exchange, into the sized tasks. On a plain file scan that is
+    only the read. Above ``TxTable.merge``'s dedup of its source by key
+    it is the dedup's side after its shuffle, which adaptive execution
+    would coalesce in a batch query. On a streaming micro-batch frame
     (the ``LogicalRDD`` ``foreachBatch`` hands over, which keeps its
     source's stats) it is the point: the batch's stateful stage (a
     dedup or window aggregate over ``spark.sql.shuffle.partitions``

@@ -375,12 +375,15 @@ def run_merge_stream_versioned(
     can hold a batch key. So commit cost tracks batch size, not table
     size, only when the keys are range-clustered integral or string
     columns: a batch of new, increasing ids (an event id) reads no file
-    and commits as a pure append. Keys that span every file's range, or
-    floating-point/temporal keys, probe the whole table. A batch with a
-    small key set (a windowed aggregate's ``(window, key)`` pairs) runs
-    three Spark jobs per MERGE: the key set, the probe (the keys are a
-    literal predicate, not a broadcast) and one write that stages the
-    new data files and the change-feed rows together.
+    and commits as a pure append in one Spark job, the write that stages
+    the batch as the commit's data files. Keys that span every file's
+    range, or floating-point/temporal keys, probe the whole table. A
+    batch with a small key set (a windowed aggregate's ``(window, key)``
+    pairs) that matches live files runs three Spark jobs per MERGE: the
+    staged write, the probe (the keys, read from the staged files on the
+    driver, are a literal predicate, not a broadcast) and one rewrite
+    that writes the touched files' rows, the batch's rows and the
+    change-feed rows together.
 
     Partition counts: Structured Streaming turns adaptive execution off
     inside a micro-batch, so every shuffle of the batch's own queries
@@ -400,11 +403,13 @@ def run_merge_stream_versioned(
     keep-latest then run ``spark.sql.shuffle.partitions`` tasks.
 
     For a batch of a few hundred KB, each job runs one task after its
-    scan: the stateful stage, keep-latest and key set share one, the
-    write has one, and so does a no-data batch. The commit stages one
-    data file (plus one change file per change type), also when it is
-    the first MERGE into a new table. ``TxTable.merge`` sizes the probe
-    and the write again from its filled cache.
+    scan: the stateful stage, keep-latest and staged write share one,
+    the probe and the rewrite have one each, and so does a no-data
+    batch. The batch stages as one data file, also when it is the first
+    MERGE into a new table, which a pure append commits; a rewrite reads
+    it and commits one data file plus one change file per change type.
+    ``TxTable.merge`` sizes the probe and the rewrite again from the
+    sizes of the files they read.
 
     Keep-latest: rows of one key keep the one with the greatest
     ``precedence_col``; a tie is broken by the batch's other orderable

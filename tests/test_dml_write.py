@@ -9,10 +9,11 @@
   write; the change feed must equal the expected rows on a table
   partitioned by int, string and date, on the rewrite and the
   deletion-vector routes. Flat change files of older commits still read.
-* A small MERGE's probe and write run one task each and its commit
+* A small MERGE's probe and rewrite run one task each and its commit
   stages one data file and one change file per change type; a lowered
-  ``advisoryPartitionSizeInBytes`` stages several. ``TxTable.write``
-  keeps its frame's partitioning.
+  ``advisoryPartitionSizeInBytes`` stages several. A MERGE leaves no
+  file its commits do not log in the table root, also when it raises.
+  ``TxTable.write`` keeps its frame's partitioning.
 * A streaming MERGE whose commit fails after staging, on the rewrite
   and on the pure-append route, behind a file source's stateful dedup
   and behind a ``txtable`` source's window aggregate, recovers from its
@@ -152,6 +153,29 @@ def test_literal_route_two_column_key_with_null(spark, tmp_path,
     assert t.read().count() == 5
 
 
+def test_timestamp_partition_key_under_session_time_zone(spark, tmp_path):
+    """A timestamp partition directory holds its value in the session
+    time zone, so a MERGE on that key reads its key set from the staged
+    files with Spark, not from their ``partitionValues``; the rows are
+    those ``merge_upsert`` computes under a non-UTC time zone."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        ddl = "w TIMESTAMP, e STRING, n BIGINT"
+        base = dt.datetime(2024, 1, 1, 23, 30)
+        t = TxTable.create(spark, str(tmp_path / "tsp"),
+                           StructType.fromDDL(ddl), partition_by=["w"])
+        t.write(spark.createDataFrame(
+            [(base + dt.timedelta(minutes=45 * i), e, 1)
+             for i in range(3) for e in ("click", "view")], ddl))
+        _merge_matches_upsert(spark, t, spark.createDataFrame(
+            [(base + dt.timedelta(minutes=45), "click", 5),
+             (base + dt.timedelta(days=1), "view", 7)], ddl), ["w", "e"])
+        assert sorted(r.n for r in t.read().collect()) == [1] * 5 + [5, 7]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+
+
 @pytest.mark.parametrize("n, literal", [(_LITERAL_KEYS_MAX, True),
                                         (_LITERAL_KEYS_MAX + 1, False)])
 def test_literal_cutoff(spark, tmp_path, literal_calls, n, literal):
@@ -169,11 +193,12 @@ def test_literal_cutoff(spark, tmp_path, literal_calls, n, literal):
 
 
 def test_small_key_merge_runs_three_jobs(spark, tmp_path):
-    """Key set, probe, one write: a MERGE of a few keys into a table
-    with live files runs no broadcast job and writes its data and change
-    rows together. Adaptive execution is off, as in a streaming
-    micro-batch (with it on, each shuffle is a job of its own). The
-    jobs are counted by ``count_jobs``."""
+    """Staged source, probe, one rewrite: a MERGE of a few keys into a
+    table with live files runs no key-set or broadcast job, and writes
+    the touched files' rows, the source's rows and the change rows
+    together. Adaptive execution is off, as in a streaming micro-batch
+    (with it on, each shuffle is a job of its own). The jobs are counted
+    by ``count_jobs``."""
     ddl = "w TIMESTAMP, e STRING, n BIGINT"
     base = dt.datetime(2024, 1, 1)
     rows = [(base + dt.timedelta(minutes=5 * i), e, 1)
@@ -226,8 +251,11 @@ def _staged(t: TxTable, version: int) -> tuple[int, dict]:
 def test_small_merge_stages_one_file_per_kind_in_single_tasks(spark,
                                                               tmp_path):
     """A micro-batch-sized MERGE into a four-file table: its probe and
-    its write each run one task, and the commit stages one data file and
-    one change file per change type, not one per shuffle partition.
+    its rewrite each run one task, and the commit stages one data file
+    and one change file per change type, not one per shuffle partition,
+    although Catalyst cannot size the source (an RDD of Python rows), so
+    the write that stages it runs one task per shuffle partition of the
+    key dedup. The staged files are gone when the MERGE returns.
     Adaptive execution is off, as in a streaming micro-batch."""
     t = _four_file_table(spark, tmp_path / "small")
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -237,10 +265,11 @@ def test_small_merge_stages_one_file_per_kind_in_single_tasks(spark,
             spark, lambda: t.merge(_small_batch(spark), keys=["k"]))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    assert len(tasks) == 3  # key set, probe, write
+    assert len(tasks) == 3  # staged source, probe, rewrite
     assert tasks[1:] == [1, 1]
     assert _staged(t, v) == (1, {"insert": 1, "update_postimage": 1,
                                  "update_preimage": 1})
+    assert _orphans(t) == set()
 
 
 def test_merge_under_small_advisory_size_stages_several_files(spark,
@@ -283,6 +312,58 @@ def test_write_keeps_the_frame_partitioning(spark, tmp_path):
     t = TxTable.create(spark, str(tmp_path / "w"), df.schema)
     v = t.write(df)
     assert len(txlog._read_commit(t.root, v)["add"]) == 8
+
+
+def test_merge_leaves_no_uncommitted_file(spark, tmp_path, monkeypatch):
+    """Every file a MERGE leaves in the table root is logged by a commit,
+    with no VACUUM: an empty source, as in a no-data micro-batch,
+    commits and keeps nothing, into a table with no files and into one
+    with files; a ``merge_schema`` source that lacks a table column and
+    matches keys rewrites with the target's values of that column; a
+    source Catalyst cannot size appends one file; and a MERGE that
+    raises after its probe or in its rewrite leaves its staged files
+    behind neither."""
+    ddl = "id BIGINT, day STRING, v INT"
+    t = TxTable.create(spark, str(tmp_path / "t"), StructType.fromDDL(ddl))
+    empty = spark.createDataFrame([], ddl)
+    assert t.merge(empty, keys=["id"]) == 0
+    t.write(spark.createDataFrame([(1, "a", 10), (2, "b", 20)], ddl))
+    assert t.merge(empty, keys=["id"]) == 1
+    assert _orphans(t) == set()
+
+    narrow = spark.createDataFrame([(1, "a2"), (3, "c")],
+                                   "id BIGINT, day STRING")
+    v = t.merge(narrow, keys=["id"], merge_schema=True)
+    assert _orphans(t) == set()
+    assert {r.id: (r.day, r.v) for r in t.read().collect()} == {
+        1: ("a2", 10), 2: ("b", 20), 3: ("c", None)}
+    assert sorted((r._change_type, r.id, r.v)
+                  for r in t.change_feed(v, v).collect()) == [
+        ("insert", 3, None), ("update_postimage", 1, 10),
+        ("update_preimage", 1, 10)]
+
+    # keys above every file's range: a pure append
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        v = t.merge(spark.createDataFrame(
+            [(10 + i, "n", i) for i in range(6)], ddl), keys=["id"])
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert _staged(t, v) == (1, {})
+    assert _orphans(t) == set()
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("injected failure")
+
+    for step in ("_dv_split", "_rewrite"):  # after the probe, the rewrite
+        monkeypatch.setattr(TxTable, step, fail)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            t.merge(spark.createDataFrame([(2, "b2", 21)], ddl), keys=["id"])
+        monkeypatch.undo()
+        assert t.snapshot().version == v
+        assert _orphans(t) == set()
+    assert t.read().count() == 9
 
 
 # -- one write: data and change rows -------------------------------------------

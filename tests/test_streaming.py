@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import datetime as dt
 import glob
+import json
 import os
 
 import pytest
@@ -472,8 +473,8 @@ def test_run_merge_stream_sizes_a_micro_batch_to_its_input(dedup_sink,
                                                            silver_sink):
     """The sink sizes each micro-batch before the keep-latest: a batch
     of a few KB from a file source, sized by Catalyst's estimate, runs
-    its stateful dedup, the keep-latest and the key set in one task
-    after the scan, its no-data batch in one task, and each commit
+    its stateful dedup, the keep-latest and the staged write in one
+    task after the scan, its no-data batch in one task, and each commit
     stages one data file. A ``txtable`` upstream, which Catalyst cannot
     size, is sized from the bytes its offsets record: its window
     aggregate's state stage and the keep-latest run in one task after
@@ -481,10 +482,10 @@ def test_run_merge_stream_sizes_a_micro_batch_to_its_input(dedup_sink,
     from real_time_video_streaming_analytics_lakehouse_spark.operators import txlog
 
     stages, bronze = dedup_sink
-    # key set (scan, then one task), pure-append write, no-data batch
-    assert len(stages) == 3
+    # the staged write (scan, then one task), the no-data batch
+    assert len(stages) == 2
     assert len(stages[0]) == 2 and stages[0][1] == 1
-    assert stages[1:] == [[1], [1]]
+    assert stages[1:] == [[1]]
     merges = [r.version for r in bronze.history().collect()
               if r.operation == "MERGE"]
     assert len(merges) == 2
@@ -496,10 +497,37 @@ def test_run_merge_stream_sizes_a_micro_batch_to_its_input(dedup_sink,
     # the first MERGE is one job: the scan, then the state stage and
     # the keep-latest in one task
     assert [s[1:] for s in first] == [[1]]
-    # the data batch's key set, probe and write, then the no-data batch
+    # the data batch's staged write, probe and rewrite, then the no-data
+    # batch
     assert [s[1:] for s in second[:1]] == [[1]]
     assert all(s == [1] for s in second[1:]) and len(second) > 1
     assert silver.read().count() == 2
+
+
+def test_run_merge_stream_new_keys_commit_in_one_job(dedup_sink):
+    """Bronze's tick: a file source -> ``dedup_stream_within_watermark``
+    -> the sink. The second drain's data batch holds only keys above
+    every live file's range (its redelivery is dropped by the dedup), so
+    it commits in one job, the write that stages it, as a pure append;
+    the no-data batch its watermark advance triggers runs one job and
+    commits no version."""
+    from real_time_video_streaming_analytics_lakehouse_spark.operators import txlog
+
+    stages, bronze = dedup_sink
+    ckpt = os.path.join(os.path.dirname(bronze.root), "ckpt")
+    # each drain runs a data batch, then the no-data batch the
+    # watermark advance triggers, which commits no version
+    assert sorted(int(n) for n in os.listdir(f"{ckpt}/commits")
+                  if n.isdigit()) == [0, 1, 2, 3]
+    merges = {json.loads(r.operationParameters)["txnVersion"]: r.version
+              for r in bronze.history().collect() if r.operation == "MERGE"}
+    assert sorted(merges) == [0, 2]
+    # the second drain: batches 2 and 3, each runs at least one job
+    assert len(stages) == 2
+    c = txlog._read_commit(bronze.root, merges[2])
+    assert c["remove"] == [] and "cdc" not in c
+    assert c["operationParameters"]["mode"] == "append"
+    assert sum(a["numRecords"] for a in c["add"]) == 1  # id 8
 
 
 def test_run_merge_stream_rocksdb_state_store_builds_the_same_table(

@@ -26,6 +26,10 @@ from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import 
     TxTable,
     VacuumedFileError,
     _commit_path,
+    _read_commit,
+)
+from real_time_video_streaming_analytics_lakehouse_spark.operators.util import (
+    local_relation,
 )
 
 from .conftest import count_jobs
@@ -768,49 +772,55 @@ def test_merge_pruning_skips_nan_double_keys(spark, tmp_path):
 
 
 def test_merge_outside_every_file_range_runs_no_probe(spark, tmp_path):
-    """Keys above every file's max prune the whole probe: the MERGE runs
-    the key-set job on its persisted source plus a pure append of the
-    cached source, the jobs of the same two steps on a persisted
-    ``dropDuplicates`` frame (the key-set query, then a write of it to a
-    table with no files). The same MERGE into a table without stats runs
-    the probe and so more jobs."""
+    """Keys above every file's max prune the whole probe, and a table
+    with no files has no probe to run: each MERGE of a source Catalyst
+    sizes (a local relation, as the streaming sink's micro-batch) runs
+    one job, the write that stages its source, and commits the staged
+    file as a pure append. A source Catalyst cannot size (an RDD of
+    Python rows) stages one file per non-empty shuffle partition of the
+    key dedup, which the append writes again as one file: two jobs. The
+    same MERGE into a table without stats runs the probe and so more
+    jobs. Adaptive execution is off, as in a streaming micro-batch (with
+    it on, the key dedup's shuffle is a job of its own)."""
     ddl = "id BIGINT, v INT"
     schema = StructType.fromDDL(ddl)
     target = [(i, 0) for i in range(10)]
+    rows = [(i, i) for i in range(100, 105)]
+    sources = {"sized": lambda: local_relation(spark, rows, ddl),
+               "unsized": lambda: spark.createDataFrame(rows, ddl)}
 
-    def src():
-        return spark.createDataFrame([(i, i) for i in range(100, 105)], ddl)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    for name, src in sources.items():
+        pruned = TxTable.create(spark, str(tmp_path / name / "pr"), schema)
+        pruned.write(spark.createDataFrame(target, ddl))
+        unpruned = TxTable.create(spark, str(tmp_path / name / "np"), schema)
+        unpruned.write(spark.createDataFrame(target, ddl), stats_cols=[])
+        fileless = TxTable.create(spark, str(tmp_path / name / "fl"), schema)
 
-    def jobs(fn):
-        return count_jobs(spark, fn)[0]
-
-    pruned = TxTable.create(spark, str(tmp_path / "pr"), schema)
-    pruned.write(spark.createDataFrame(target, ddl))
-    unpruned = TxTable.create(spark, str(tmp_path / "np"), schema)
-    unpruned.write(spark.createDataFrame(target, ddl), stats_cols=[])
-    fileless = TxTable.create(spark, str(tmp_path / "fl"), schema)
-
-    cached = src().dropDuplicates(["id"]).persist()
-    try:
-        n_keys = jobs(lambda: cached.select("id").distinct()
-                      .limit(500_001).toArrow())
-        n_append = jobs(lambda: fileless.write(cached))
-    finally:
-        cached.unpersist()
-    n_pruned = jobs(lambda: pruned.merge(src(), ["id"]))
-    n_unpruned = jobs(lambda: unpruned.merge(src(), ["id"]))
-    assert n_pruned == n_keys + n_append
-    assert n_unpruned > n_pruned
-    for t in (pruned, unpruned):
-        assert t.read().count() == 15
-    assert fileless.read().count() == 5
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            jobs = {t: count_jobs(spark, lambda: t.merge(src(), ["id"]))
+                    for t in (pruned, fileless, unpruned)}
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        appended = 1 if name == "sized" else 2
+        assert jobs[pruned][0] == jobs[fileless][0] == appended, name
+        assert jobs[unpruned][0] > appended, name
+        for t in (pruned, fileless, unpruned):
+            c = _read_commit(t.root, jobs[t][1])
+            assert c["remove"] == []
+            assert c["operationParameters"]["mode"] == "append"
+            assert [a["numRecords"] for a in c["add"]] == [5], name
+        for t in (pruned, unpruned):
+            assert t.read().count() == 15
+        assert fileless.read().count() == 5
 
 
 def test_merge_evaluates_its_source_once(spark, tmp_path):
     """The source is computed once per MERGE: a Python UDF that counts
-    the rows it sees runs once per source row although the key set, the
-    probe-side joins and the data and change-file writes all read the
-    source."""
+    the rows it sees runs once per source row. The write that stages the
+    source as data files is its one evaluation; the key set, the
+    probe-side joins and the rewrite read the staged files."""
     ddl = "id BIGINT, v BIGINT"
     t = TxTable.create(spark, str(tmp_path / "once"), StructType.fromDDL(ddl),
                        properties={"delta.enableChangeDataFeed": "true"})
@@ -1632,6 +1642,45 @@ def test_bloom_never_indexes_partition_columns(spark, tmp_path):
         assert "day" not in f.get("bloom", {})
     assert t2.read(predicates=[("day", "=", "01")]).count() == 1
     assert t2.read(predicates=[("id", "=", 2)]).count() == 1
+
+
+def test_merge_collects_blooms_once_per_commit(spark, tmp_path):
+    """Every data file a MERGE commits to a ``bloom.columns`` table
+    carries its bitmaps, and each MERGE runs the bloom aggregate once:
+    a pure append (keys no file can hold) over its staged source, a
+    rewrite over its rewritten files alone, so it runs one job more
+    than the same MERGE into a table without bloom columns. The table is
+    partitioned, so the bitmaps are read back across partition
+    directories. Adaptive execution is off, as in a streaming
+    micro-batch."""
+    ddl = "id BIGINT, day STRING, v INT"
+
+    def table(name, properties):
+        t = TxTable.create(spark, str(tmp_path / name), SCHEMA,
+                           partition_by=["day"], properties=properties)
+        t.write(_df(spark, [(i, f"d{i % 2}", 0) for i in range(10)]))
+        return t
+
+    plain = table("plain", {})
+    bloom = table("bloom", {"bloom.columns": "id"})
+    batches = [[(20, "d0", 1), (21, "d1", 1)],  # a pure append
+               [(3, "d1", 2), (22, "d0", 2)]]  # a rewrite
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for rows in batches:
+            jobs = {t: count_jobs(spark, lambda: t.merge(
+                        local_relation(spark, rows, ddl), ["id"]))
+                    for t in (plain, bloom)}
+            assert jobs[bloom][0] == jobs[plain][0] + 1
+            adds = _read_commit(bloom.root, jobs[bloom][1])["add"]
+            assert adds and all(set(a["bloom"]) == {"id"} for a in adds)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert _read_commit(bloom.root, jobs[bloom][1])["remove"]
+    for i, v in [(21, 1), (3, 2), (22, 2), (4, 0)]:
+        assert [r.v for r in bloom.read(
+            predicates=[("id", "=", i)]).collect()] == [v]
 
 
 def test_bloom_bits_not_multiple_of_four(spark, tmp_path):

@@ -17,7 +17,10 @@ executor run time in seconds. Then, per micro-batch of the drain, the
 bytes the streaming MERGE sink sized it by and where they came from
 (``micro_batch_bytes``: Catalyst, the offset log, or unsized), and its
 state operators' rows, bytes and state-store cache hits and misses from
-the query progress. The last line per drain is its total. Jobs of the
+the query progress, and the route its MERGE took (``fileless append``,
+``pure append``, ``rewrite`` or ``no commit``) with the files its commit
+added and removed, read from the commit that carries the batch's
+``txnVersion``. The last line per drain is its total. Jobs of the
 set-up and the warm tick are left out.
 Then it runs perfbench's output checks on the tables (bronze against the
 generated events, silver against a batch recomputation, no row dropped
@@ -82,6 +85,32 @@ def state_line(progress) -> str:
     return "; ".join(parts)
 
 
+def merge_routes(root: str, app_id: str) -> dict[int, tuple[str, int, int]]:
+    """Per ``txnVersion`` that ``app_id`` committed to the table at
+    ``root``: the route of its MERGE and the files its commit added and
+    removed, read from the commit log on the driver. A commit that
+    removes files is a rewrite; one that only adds is a pure append, or
+    a fileless append when the table had no live file before it."""
+    from real_time_video_streaming_analytics_lakehouse_spark.operators.txlog import (
+        _list_versions,
+        _read_commit,
+    )
+
+    out: dict[int, tuple[str, int, int]] = {}
+    live: set[str] = set()
+    for v in _list_versions(root):
+        c = _read_commit(root, v)
+        p = c.get("operationParameters", {})
+        if c.get("operation") == "MERGE" and p.get("txnAppId") == app_id:
+            route = ("rewrite" if c["remove"] else
+                     "pure append" if live else "fileless append")
+            out[int(p["txnVersion"])] = (route, len(c["add"]),
+                                         len(c["remove"]))
+        live.difference_update(c.get("remove", []))
+        live.update(a["path"] for a in c.get("add", []))
+    return out
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--seed", type=int, default=1)
@@ -126,6 +155,9 @@ def main(argv=None) -> int:
                     for d in t.get("drains", []) for p in d["progress"]}
         jobs, stages = rest.jobs_and_stages()
         split = stage_split(jobs, stages)
+        # stream_work's sinks: table <run root>/<drain>, app id <drain>
+        routes = {d: merge_routes(os.path.join(wl.root, d), d)
+                  for d in ("bronze", "silver")}
         drains: dict[str, list[dict]] = {}
         for job in sorted(jobs, key=lambda j: j["jobId"]):
             tag = tag_of(job)
@@ -155,8 +187,11 @@ def main(argv=None) -> int:
                       f"{desc[:60]}")
             drain = tag.split(".")[1]
             for b in batches:
+                route, added, removed = routes.get(drain, {}).get(
+                    b, ("no commit", 0, 0))
                 size, origin = sizes.get((drain, b), (None, "not recorded"))
-                line = origin if size is None else \
+                line = f"{route}, {added} files added, {removed} removed; "
+                line += origin if size is None else \
                     f"sized by {size} bytes from {origin}"
                 p = progress.get((drain, b))
                 if p is not None and p.stateOperators:
